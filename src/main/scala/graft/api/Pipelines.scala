@@ -1,51 +1,51 @@
 package graft.api
 
-import graft.functions.{KMeans, TextFunctions}
+import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Num.round
 
-/** The library's user-facing, column-parameterized API: the same
-  * training-data pipeline operators the declared queries pin against the
-  * DuckDB oracle, generalized to ANY DataFrame and column names. The
-  * declared queries in `graft.operators` remain the oracle-verified
-  * ground truth; `PipelinesSpec` asserts these generic forms reproduce
-  * them exactly on the fixtures.
+/** The library's user-facing, column-parameterized API: the training-data
+  * and analytics operators of the declared queries, generalized to ANY
+  * DataFrame and column names. Each operator has one implementation: the
+  * declared query in `graft.operators` calls its wrapper here and keeps
+  * only its own input selection, output projection and ORDER BY, so the
+  * DuckDB oracle gate, PlanLint and the benchmark check exactly this code
+  * (`tools/wrapper_lint.py` fails on a public def no query reaches).
   *
-  * Everything here is lazy DataFrame composition over built-in functions
-  * — no UDFs, no collect (the connected-components loop drives O(1-row)
-  * convergence actions, documented there) — so each operator inherits
-  * the scaling notes of its underlying formulation.
+  * `round` is [[graft.functions.Num.round]] (`floor(x·10ⁿ+0.5)/10ⁿ`, the
+  * oracle's rounding), not Spark's decimal `round`.
   */
 object Pipelines {
 
-  /** Exact dedup: keep the lowest-id row per normalized text. One
-    * shuffle keyed by the text digest.
+  /** The portable multiplicative id hash (id mod P)·A mod P, P = 1e9+7:
+    * the mod-P before the multiply keeps the product inside Long at any
+    * id magnitude (a bare id·A wraps negative past ~3.47e9); the mod-P
+    * after it makes buckets depend on the whole product, not its low
+    * bits. The same on every engine, run and partitioning — the split,
+    * fold, sampling and mixture assignments all key on it.
     */
-  def dedupExact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val norm = lower(trim(col(textCol)))
-    df.withColumn("__norm", norm)
-      .groupBy(col("__norm"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_dups"))
-      .drop("__norm")
-  }
+  private def idHash(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    (pmod(id, lit(1000000007L)) * 2654435761L) % 1000000007L
 
-  /** MinHash+LSH candidate near-dup pairs: (id_a, id_b, n_shared_bands).
-    * Shuffles O(n·bands) band keys, never the O(n²) pair space.
+  /** Exact dedup: one row per normalized text (md5 of lower(trim)) with
+    * the surviving min id and the copy count. One shuffle keyed by the
+    * 16-byte digest. Returns (text_key, keep_id, n_copies).
     */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bands: Int = 4): DataFrame = {
-    val rows = k / bands
-    val sigs = df.select(col(idCol).as("__id"),
-      TextFunctions.minhashSignature(col(textCol), k).as("__sig"))
-    val banded = sigs
-      .select(col("__id"), explode(sequence(lit(0L), lit(bands - 1L))).as("__j"), col("__sig"))
-      .select(col("__id"), col("__j"),
-        md5(concat_ws("-", transform(
-          slice(col("__sig"), (col("__j") * rows + 1).cast("int"), lit(rows)),
-          _.cast("string")))).as("__bk"))
-    val a = banded.select(col("__id").as("id_a"), col("__j"), col("__bk"))
-    val b = banded.select(col("__id").as("id_b"), col("__j").as("__j2"), col("__bk").as("__bk2"))
-    a.join(b, col("__j") === col("__j2") && col("__bk") === col("__bk2") && col("id_a") < col("id_b"))
+  def dedupExact(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.groupBy(md5(lower(trim(col(textCol)))).as("text_key"))
+      .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_copies"))
+
+  /** MinHash(16)+LSH(4 bands × 4 rows) candidate near-dup pairs:
+    * (id_a, id_b, n_shared_bands) for every id pair agreeing on ≥1 band
+    * key. Shuffles O(n·bands) band keys, never the O(n²) pair space.
+    */
+  def minhashCandidates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val bands = graft.operators.TextOps.lshBandKeys(df, idCol, textCol)
+    val a = bands.select(col(idCol).as("id_a"), col("j"), col("band_key"))
+    val b = bands.select(col(idCol).as("id_b"), col("j").as("j2"), col("band_key").as("band_key2"))
+    a.join(b, col("j") === col("j2") && col("band_key") === col("band_key2") && col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared_bands"))
   }
 
@@ -357,755 +357,680 @@ object Pipelines {
         (col("n_failed") === 0).cast("long").as("pass"))
   }
 
-  /** Near-dup clusters straight from text: LSH candidates → connected
-    * components → (id, component, csize).
+  /** Near-dup clusters straight from text: distinct LSH candidate pairs
+    * → connected components → (id, component, csize).
     */
-  def nearDupComponents(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bands: Int = 4): DataFrame = {
-    val comp = connectedComponents(df, idCol,
-      minhashCandidates(df, idCol, textCol, k, bands), "id_a", "id_b")
-    comp.join(comp.groupBy("component").agg(count(lit(1)).as("csize")), "component")
+  def nearDupComponents(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val pairs = minhashCandidates(df, idCol, textCol).select("id_a", "id_b")
+    val labels = connectedComponents(df, idCol, pairs, "id_a", "id_b")
+    val sizes = labels.groupBy("component").agg(count(lit(1)).as("csize"))
+    labels.join(sizes, Seq("component"))
       .select(col(idCol), col("component"), col("csize"))
   }
 
-  /** Brute-force cosine top-k against one probe vector (broadcast the
-    * probe; the corpus streams — the exact-search baseline).
+  /** Brute-force cosine top-k of the probe row `probeId` against the
+    * rows sharing its label (the probe itself excluded): the probe is
+    * broadcast, the corpus streams, TakeOrderedAndProject keeps the
+    * top-k per partition. Returns (id, cos) — the exact-search baseline.
     */
-  def cosineKnn(corpus: DataFrame, idCol: String, vecCol: String,
-      probe: DataFrame, probeVecCol: String, topK: Int): DataFrame = {
-    // a multi-row probe would silently interleave top-k across probes
-    // (no probe id in the output) — reject it loudly; probes are tiny,
-    // the count is cheap
-    val nProbe = probe.limit(2).count()
-    require(nProbe == 1, s"cosineKnn expects exactly one probe row, got $nProbe" +
-      (if (nProbe > 1) "+" else ""))
-    val cos = graft.functions.VectorFunctions.cosine(col(vecCol), col("__pv"))
-    corpus.crossJoin(broadcast(probe.select(col(probeVecCol).as("__pv"))))
-      .select(col(idCol), cos.as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol)).limit(topK)
+  def cosineKnn(corpus: DataFrame, idCol: String, vecCol: String, labelCol: String,
+      probeId: Long, topK: Int): DataFrame = {
+    val probe = corpus.filter(col(idCol) === probeId)
+      .select(col(vecCol).as("pvec"), col(labelCol).as("plabel"))
+    corpus.join(broadcast(probe), col(labelCol) === col("plabel") && col(idCol) =!= probeId)
+      .select(col(idCol),
+        graft.functions.VectorFunctions.cosine(col(vecCol), col("pvec")).as("cos"))
+      .orderBy(col("cos").desc, col(idCol))
+      .limit(topK)
   }
 
-  /** IVF index: k-means-trained cells (one Lloyd round from the first k
-    * vectors by id) + per-vector cell assignment. Returns (id, cell).
+  /** IVF cell assignment: each row's nearest `seeds` vector (the cell
+    * centroids, e.g. k trained or fixed rows with the input's columns).
+    * The seeds are packed cid-sorted into ONE broadcast row and each
+    * row's cell is a single native `argmin_sqdist` projection — the input
+    * is never shuffled, windowed or self-joined. Returns
+    * (idCol, vecCol, cid).
     */
-  def ivfIndex(df: DataFrame, idCol: String, vecCol: String, cells: Int): DataFrame = {
-    val e = df.select(col(idCol).as("vec_id"), transform(col(vecCol), _.cast("double")).as("v"))
-    val initIds = e.select(col("vec_id")).orderBy("vec_id").limit(cells)
-    val init = e.join(initIds, "vec_id")
-      .select(col("vec_id").as("cid"), col("v").as("cvec"))
-    val cents = KMeans.update(KMeans.assign(e, init))
-    KMeans.assign(e, cents)
-      .select(col("vec_id").as(idCol), col("cid").as("cell"))
+  def ivfIndex(df: DataFrame, idCol: String, vecCol: String, seeds: DataFrame): DataFrame = {
+    graft.expressions.VectorExpressions.register(df.sparkSession)
+    val packed = seeds.select(col(idCol).as("cid"), col(vecCol).as("cvec"))
+      .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cs"))
+      .select(transform(col("cs"), _.getField("cid")).as("cids"),
+        transform(col("cs"), _.getField("cvec")).as("cvecs"))
+    df.crossJoin(broadcast(packed))
+      .withColumn("cid", element_at(col("cids"), expr(s"argmin_sqdist($vecCol, cvecs)") + 1))
+      .select(col(idCol), col(vecCol), col("cid"))
   }
 
-  /** Deterministic train/valid/test split by multiplicative hash of the
-    * id — reproducible across runs, engines, partitionings; membership
-    * computable from the id alone.
+  /** Deterministic train/valid/test split (80/10/10) by multiplicative
+    * hash of the id — reproducible across runs, engines, partitionings;
+    * membership computable from the id alone. Adds a `split` column.
     */
-  def deterministicSplit(df: DataFrame, idCol: String,
-      trainPct: Int = 80, validPct: Int = 10): DataFrame = {
+  def deterministicSplit(df: DataFrame, idCol: String): DataFrame = {
     // numeric ids only — a silent cast-to-null would classify every row
     // 'test'; fail loudly instead
     require(df.schema(idCol).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"deterministicSplit needs a numeric id column, got ${df.schema(idCol).dataType}")
-    // (id mod P)·A mod P mod 100: the mod-P before the multiply keeps the
-    // product inside Long at any id magnitude (a bare id·A wraps negative
-    // past ~3.47e9 and lands 100% 'train'); the mod-P AFTER the multiply
-    // makes the bucket depend on the whole product, not its low bits — a
-    // bare `· A mod 100` collapses any id stride divisible by 100 into
-    // one split
-    val bucket = (pmod(col(idCol).cast("long"), lit(1000000007L)) * 2654435761L) % 1000000007L % 100
-    df.withColumn("split",
-      when(bucket < trainPct, "train")
-        .when(bucket < trainPct + validPct, "valid")
-        .otherwise("test"))
+    // a bare `id · A mod 100` would collapse any id stride divisible by
+    // 100 into one split; [[idHash]] keeps the whole product
+    val bucket = idHash(col(idCol)) % 100
+    df.withColumn("split", when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test"))
   }
 
-  /** Inverse-frequency class weights: total / (k · class_count). */
+  /** Inverse-frequency class weights (sklearn's "balanced" formula:
+    * total / (k · class_count)), rounded 1e-6. Two tiny scalar
+    * aggregates broadcast back over the per-class counts.
+    */
   def classWeights(df: DataFrame, labelCol: String): DataFrame = {
-    val totals = df.agg(count(lit(1)).cast("double").as("__total"),
-      countDistinct(col(labelCol)).cast("double").as("__k"))
-    df.groupBy(col(labelCol)).agg(count(lit(1)).as("n"))
+    val totals = df.agg(count(lit(1)).cast("double").as("total"),
+      countDistinct(labelCol).cast("double").as("k"))
+    df.groupBy(labelCol).agg(count(lit(1)).as("n"))
       .crossJoin(broadcast(totals))
-      .select(col(labelCol), col("n"), (col("__total") / (col("__k") * col("n"))).as("weight"))
+      .select(col(labelCol), col("n"),
+        round(col("total") / (col("k") * col("n")), 6).as("weight"))
   }
 
-  /** Context-window chunking: one row per (id, chunk) of `window` tokens
-    * with stride `stride` (overlap = window − stride). Pure map stage —
-    * generalizes q_text_14_chunk.
+  /** Context-window chunking: one row per (id, chunk) of 32-token
+    * windows with stride 24 (8-token overlap) — the long-document →
+    * context-window preprocessing step. One explode per row, a pure map
+    * stage; the chunk text is emitted as its md5 so output stays
+    * bounded. Returns (idCol, chunk_id, n_toks, chunk_md5).
     */
-  def chunk(df: DataFrame, idCol: String, textCol: String,
-      window: Int = 32, stride: Int = 24): DataFrame = {
-    val toks = TextFunctions.tokens(col(textCol))
-    df.select(col(idCol), toks.as("__toks"),
-        explode(sequence(lit(0L), floor((size(toks) - 1) / lit(stride)))).as("chunk_id"))
+  def chunk(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), TextFunctions.tokens(col(textCol)).as("toks"))
+      .select(col(idCol), col("toks"),
+        explode(sequence(lit(0L), floor((size(col("toks")) - 1) / lit(24)))).as("chunk_id"))
       .select(col(idCol), col("chunk_id"),
-        slice(col("__toks"), (col("chunk_id") * stride + 1).cast("int"), lit(window)).as("chunk_tokens"))
-      .withColumn("n_toks", size(col("chunk_tokens")).cast("long"))
-  }
+        size(slice(col("toks"), (col("chunk_id") * 24 + 1).cast("int"), lit(32))).cast("long").as("n_toks"),
+        md5(array_join(slice(col("toks"), (col("chunk_id") * 24 + 1).cast("int"), lit(32)), " ")).as("chunk_md5"))
 
-  /** Deterministic sequence packing: assigns each row a `pack_id` such
-    * that rows stream into `capacity`-token packs in stable
-    * (group, id) order — generalizes q_text_15_pack's bucketing.
+  /** Deterministic sequence packing: rows stream in stable (group, id)
+    * order and a running token count assigns each row to the 512-token
+    * pack its prefix sum lands in — no rand, no greedy state, exact
+    * integer arithmetic; the declarative approximation of first-fit
+    * packing. The per-group prefix sum is the range-partitioned
+    * [[groupRankPrefix]] (a group-keyed cumulative window would be a
+    * |groups|-task sort). Returns (groupCol, pack_id, n_tok) per row.
     */
-  def pack(df: DataFrame, idCol: String, textCol: String,
-      groupCol: String, capacity: Int = 512): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol).orderBy(idCol)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    df.withColumn("__n_tok", size(TextFunctions.tokens(col(textCol))).cast("long"))
-      .withColumn("__cum", sum("__n_tok").over(w))
-      .withColumn("pack_id", floor((col("__cum") - col("__n_tok")) / lit(capacity)))
-      .drop("__cum")
-      .withColumnRenamed("__n_tok", "n_tok")
-  }
+  def pack(df: DataFrame, idCol: String, textCol: String, groupCol: String): DataFrame =
+    groupRankPrefix(
+        df.select(col(idCol), col(groupCol),
+          size(TextFunctions.tokens(col(textCol))).cast("long").as("n_tok")),
+        Seq(groupCol), Seq(col(idCol)), "__rk", "__ng", Seq(("n_tok", "cum", "")))
+      .select(col(groupCol), floor((col("cum") - col("n_tok")) / lit(512)).as("pack_id"), col("n_tok"))
 
-  /** Exact heavy hitters: tokens whose corpus share exceeds
-    * `minShare` — generalizes q_agg_18_heavyhitters.
+  /** Exact heavy hitters: tokens above 0.5% of the total token stream.
+    * Two-level aggregate (map-side partial combine → merge) and one tiny
+    * scalar broadcast for the threshold — the exact counterpart of a
+    * count-min/space-saving sketch, valid at any scale because the group
+    * count is vocabulary-bounded. Returns (tok, cnt, freq).
     */
-  def heavyHitters(df: DataFrame, textCol: String, minShare: Double = 0.005): DataFrame = {
-    val t = df.select(explode(TextFunctions.tokens(col(textCol))).as("token"))
-    val tot = t.agg(count(lit(1)).cast("double").as("__n"))
-    t.groupBy("token").agg(count(lit(1)).as("cnt"))
+  def heavyHitters(df: DataFrame, textCol: String): DataFrame = {
+    val t = df.select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
+    val tot = t.agg(count(lit(1)).cast("double").as("n"))
+    t.groupBy("tok").agg(count(lit(1)).as("cnt"))
       .crossJoin(broadcast(tot))
-      .filter(col("cnt") > col("__n") * minShare)
-      .select(col("token"), col("cnt"), (col("cnt") / col("__n")).as("share"))
+      .filter(col("cnt") > col("n") / 200)
+      .select(col("tok"), col("cnt"), round(col("cnt") / col("n"), 6).as("freq"))
   }
 
   /** Benchmark-contamination screen: fraction of each row's token
-    * n-gram shingles found in `benchmark`'s shingle set (broadcast).
-    * Returns (id, n_sh, n_hit, overlap). Documents with fewer than `n`
-    * tokens have no shingles and are kept with (n_sh=0, n_hit=0,
-    * overlap=0.0) — explode_outer + non-null counts — so corpus-wide
-    * contamination rates computed downstream see every input row.
+    * n-gram shingles found in `benchmark`'s shingle set (broadcast),
+    * with a `contaminated` flag past half. Returns (id, n_sh, n_hit,
+    * overlap, contaminated); rows with fewer than `n` tokens have no
+    * shingles and no output row. One pass over the exploded shingles:
+    * a LEFT join on a hit marker, total and hits in one aggregate.
     */
   def contaminationScreen(train: DataFrame, idCol: String, textCol: String,
-      benchmark: DataFrame, benchTextCol: String, n: Int = 3): DataFrame = {
+      benchmark: DataFrame, n: Int = 3): DataFrame = {
     val bench = benchmark
-      .select(explode(TextFunctions.tokenShingles(col(benchTextCol), n)).as("__sh"))
-      .distinct().withColumn("__hit", lit(1))
-    train.select(col(idCol), explode_outer(TextFunctions.tokenShingles(col(textCol), n)).as("__sh"))
-      .join(broadcast(bench), Seq("__sh"), "left")
-      .groupBy(col(idCol))
-      .agg(count(col("__sh")).as("n_sh"), count(col("__hit")).as("n_hit"))
+      .select(explode(TextFunctions.tokenShingles(col(textCol), n)).as("sh")).distinct()
+      .withColumn("is_hit", lit(1))
+    train.select(col(idCol), explode(TextFunctions.tokenShingles(col(textCol), n)).as("sh"))
+      .join(broadcast(bench), Seq("sh"), "left")
+      .groupBy(idCol)
+      .agg(count(lit(1)).as("n_sh"), count(col("is_hit")).as("n_hit"))
       .select(col(idCol), col("n_sh"), col("n_hit"),
-        when(col("n_sh") === 0, lit(0.0))
-          .otherwise(col("n_hit").cast("double") / col("n_sh")).as("overlap"))
+        round(col("n_hit").cast("double") / col("n_sh"), 6).as("overlap"),
+        (col("n_hit").cast("double") / col("n_sh") > 0.5).as("contaminated"))
   }
 
-  /** Per-row (id, w1, w2) token-bigram stream — the shared explode under
-    * the repetition/novelty screens.
-    */
+  /** (id, w1, w2): one row per adjacent token pair of `textCol`. */
   private def bigrams(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = TextFunctions.tokens(col(textCol))
     df.select(col(idCol),
         explode(arrays_zip(
           slice(toks, lit(1), size(toks) - 1).as("w1"),
-          slice(toks, lit(2), size(toks) - 1).as("w2"))).as("__p"))
-      .select(col(idCol), col("__p.w1").as("w1"), col("__p.w2").as("w2"))
+          slice(toks, lit(2), size(toks) - 1).as("w2"))).as("p"))
+      .select(col(idCol), col("p.w1").as("w1"), col("p.w2").as("w2"))
   }
 
   /** Gopher-style repetition screens: duplicate-token fraction and
-    * top-bigram share per row, with a flag at the given thresholds —
-    * generalizes q_text_17_repetition. Two per-row aggregates (map-side
+    * top-bigram share per row (rounded 1e-6), flagged past 0.2 / 0.18 —
+    * the SAME unrounded ratio feeds the flag, so a comparison cannot
+    * straddle the rounding. Two per-row aggregates (map-side
     * combinable) joined agg↔agg; no corpus self-join.
     */
-  def repetitionScores(df: DataFrame, idCol: String, textCol: String,
-      dupFracThresh: Double = 0.2, topBigramThresh: Double = 0.18): DataFrame = {
-    val toks = TextFunctions.tokens(col(textCol))
-    val ts = df.select(col(idCol), size(toks).cast("long").as("n_tok"),
-      size(array_distinct(toks)).cast("long").as("__n_uniq"))
+  def repetitionScores(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val ts = df.select(col(idCol), TextFunctions.tokens(col(textCol)).as("t"))
+      .select(col(idCol), size(col("t")).cast("long").as("n_tok"),
+        size(array_distinct(col("t"))).cast("long").as("n_uniq"))
     val bt = bigrams(df, idCol, textCol)
-      .groupBy(col(idCol), col("w1"), col("w2")).agg(count(lit(1)).as("__c"))
-      .groupBy(col(idCol)).agg(max("__c").as("__top_c"), sum("__c").as("__n_big"))
-    val dupF = (col("n_tok") - col("__n_uniq")).cast("double") / col("n_tok")
-    val topF = col("__top_c").cast("double") / col("__n_big")
+      .groupBy(idCol, "w1", "w2").agg(count(lit(1)).as("c"))
+      .groupBy(idCol).agg(max("c").as("top_c"), sum("c").as("n_big"))
+    val dupF = (col("n_tok") - col("n_uniq")).cast("double") / col("n_tok")
+    val topF = col("top_c").cast("double") / col("n_big")
     ts.join(bt, idCol)
       .select(col(idCol), col("n_tok"),
-        dupF.as("dup_token_frac"), topF.as("top_bigram_frac"),
-        when(dupF > dupFracThresh || topF > topBigramThresh, 1L).otherwise(0L).as("flagged"))
+        round(dupF, 6).as("dup_token_frac"),
+        round(topF, 6).as("top_bigram_frac"),
+        when(dupF > 0.2 || topF > 0.18, 1L).otherwise(0L).as("flagged"))
   }
 
   /** N-gram novelty: the share of a row's distinct bigrams with corpus
-    * document-frequency 1 (template/mirror detector) — generalizes
-    * q_text_18_novelty. The document-frequency table is bigram-vocab-
-    * sized and carries no broadcast hint (AQE sizes it).
+    * document-frequency 1 (template/mirror detector), rounded 1e-6.
+    * The document-frequency table is bigram-vocab-sized and carries no
+    * broadcast hint — AQE sizes it (a raw 100 TB corpus has an
+    * unbounded bigram "vocab").
     */
   def ngramNovelty(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val b = bigrams(df, idCol, textCol).distinct()
-    val dfreq = b.groupBy("w1", "w2").agg(count(lit(1)).as("__nd"))
+    val dfreq = b.groupBy("w1", "w2").agg(count(lit(1)).as("nd"))
     b.join(dfreq, Seq("w1", "w2"))
-      .groupBy(col(idCol))
+      .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"),
-        sum(when(col("__nd") === 1, 1L).otherwise(0L)).cast("long").as("n_novel"),
-        (sum(when(col("__nd") === 1, 1L).otherwise(0L)).cast("double") / count(lit(1)))
+        sum(when(col("nd") === 1, 1L).otherwise(0L)).cast("long").as("n_novel"),
+        round(sum(when(col("nd") === 1, 1L).otherwise(0L)).cast("double") / count(lit(1)), 6)
           .as("novel_frac"))
   }
 
-  /** SemDeDup: coarse-cluster rows to the nearest of the first `cells`
-    * vectors (by id), compare pairs ONLY within a cluster, and emit the
-    * keep-lowest-id drop list for pairs with cosine ≥ `tau` —
-    * generalizes q_sim_13_semdedup. Candidate pairs go from O(n²) to
-    * O(Σ cell²); assignment is one `argmin_sqdist` projection against a
-    * single broadcast packed-centroid row (the corpus never shuffles
-    * for assignment; the pair join shuffles on cell id only). Returns
-    * (drop_id, keep_id, cell, n_dups).
+  /** SemDeDup: assign each row to its [[ivfIndex]] cell over `seeds`,
+    * compare pairs ONLY within a cell, and emit the keep-lowest-id drop
+    * list for pairs with cosine ≥ `tau`. Candidate pairs go from O(n²) to
+    * O(Σ cell²); the pair join shuffles on cell id only. Returns
+    * (drop_id, keep_id, cid, n_dups).
     */
-  def semDedup(df: DataFrame, idCol: String, vecCol: String,
-      cells: Int, tau: Double): DataFrame = {
-    val s = df.sparkSession
-    graft.expressions.VectorExpressions.register(s)
-    val e = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val firstIds = e.select(col("__id")).orderBy("__id").limit(cells)
-    val packed = e.join(firstIds, "__id")
-      .select(col("__id").as("__cid"), col("__v").as("__cvec"))
-      .agg(array_sort(collect_list(struct(col("__cid"), col("__cvec")))).as("__cs"))
-      .select(transform(col("__cs"), _.getField("__cid")).as("__cids"),
-        transform(col("__cs"), _.getField("__cvec")).as("__cvecs"))
-    val withCell = e.crossJoin(broadcast(packed))
-      .withColumn("__cell", element_at(col("__cids"), expr("argmin_sqdist(__v, __cvecs)") + 1))
-      .select(col("__id"), col("__v"), col("__cell"))
-    val a = withCell.select(col("__cell"), col("__id").as("__ia"), col("__v").as("__va"))
-    val b = withCell.select(col("__cell").as("__cellb"), col("__id").as("__ib"), col("__v").as("__vb"))
-    a.join(b, col("__cell") === col("__cellb") && col("__ia") < col("__ib"))
-      .filter(expr("cosine_similarity(__va, __vb)") >= tau)
-      .groupBy(col("__ib").as("drop_id"))
-      .agg(min("__ia").as("keep_id"), min("__cell").as("cell"), count(lit(1)).as("n_dups"))
+  def semDedup(df: DataFrame, idCol: String, vecCol: String, seeds: DataFrame,
+      tau: Double): DataFrame = {
+    val withCell = ivfIndex(df, idCol, vecCol, seeds)
+    val a = withCell.select(col("cid"), col(idCol).as("ia"), col(vecCol).as("va"))
+    val b = withCell.select(col("cid").as("cidb"), col(idCol).as("ib"), col(vecCol).as("vb"))
+    a.join(b, col("cid") === col("cidb") && col("ia") < col("ib"))
+      .filter(expr("cosine_similarity(va, vb)") >= tau)
+      .groupBy(col("ib").as("drop_id"))
+      .agg(min("ia").as("keep_id"), min("cid").as("cid"), count(lit(1)).as("n_dups"))
   }
 
-  /** Temperature-flattened corpus mixture (generalizes
-    * q_text_19_mixture): per-group quota = min(n, ceil(√n · multiplier))
-    * — sampling rate ∝ n^(−1/2), i.e. the T=2 temperature reweighting a
-    * multilingual pretraining mix applies — filled with the
-    * deterministic bottom-quota-by-hash rows. The multiplier should be
-    * a power of two so the quota arithmetic is FP-exact across engines
-    * (sqrt is IEEE-correctly-rounded; ×2^k is exact). Returns the kept
-    * rows as (idCol, groupCol, rn, quota). One group-keyed aggregate +
-    * one window shuffle; the quota table broadcasts.
+  /** Temperature-flattened corpus mixture: per-group quota
+    * = min(n, ceil(√n · 8)) — sampling rate ∝ n^(−1/2), i.e. the T=2
+    * temperature reweighting a multilingual pretraining mix applies —
+    * filled with the deterministic bottom-quota-by-hash rows. The quota
+    * avoids cross-group normalization: sqrt is IEEE-correctly-rounded
+    * and ×8 is a power of two, so engines agree bit for bit. Returns the
+    * kept rows as (idCol, groupCol, rn, quota). One tiny aggregate plus
+    * one range-partitioned per-group rank ([[exactGroupRankCount]]: a
+    * group-keyed window would be a |groups|-task corpus sort, and the
+    * per-group quota defeats WindowGroupLimit); the quotas broadcast.
     */
-  def temperatureMixture(df: DataFrame, idCol: String, groupCol: String,
-      multiplier: Int = 8): DataFrame = {
-    val quotas = df.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
+  def temperatureMixture(df: DataFrame, idCol: String, groupCol: String): DataFrame = {
+    val quotas = df.groupBy(groupCol).agg(count(lit(1)).as("n_docs"))
       .select(col(groupCol),
-        least(col("__n"),
-          ceil(sqrt(col("__n").cast("double")) * multiplier).cast("long")).as("quota"))
-    val prio = (pmod(col(idCol), lit(1000000007L)) * 2654435761L) % 1000000007L
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol).orderBy(prio, col(idCol))
-    df.select(col(idCol), col(groupCol), row_number().over(w).cast("long").as("rn"))
+        least(col("n_docs"),
+          ceil(sqrt(col("n_docs").cast("double")) * 8).cast("long")).as("quota"))
+    val prio = idHash(col(idCol))
+    exactGroupRankCount(df.select(col(idCol), col(groupCol)),
+        Seq(groupCol), Seq(prio, col(idCol)), "rn", "__n")
       .join(broadcast(quotas), groupCol)
       .filter(col("rn") <= col("quota"))
       .select(col(idCol), col(groupCol), col("rn"), col("quota"))
   }
 
-  /** Group-wise top-k through the native mergeable aggregate
-    * (generalizes q_agg_23_topk_native): ranks the top `k` rows per
-    * group under (ordCol DESC, tie1 ASC, tie2 ASC) without ever sorting
-    * the corpus — map-side combine caps shuffle volume at O(groups·k).
-    * Returns (groupCols..., rnk, ord, tie1, tie2). The tie columns must
-    * uniquely identify rows (SURVEY §2.12 rule 1).
+  /** Group-wise top-k through the native mergeable `topk_by` aggregate:
+    * ranks the top `k` rows per group under (ordCol DESC, tie1 ASC,
+    * tie2 ASC) without ever sorting the input — map-side combine caps
+    * shuffle volume at O(groups·k) (plan contract: ObjectHashAggregate
+    * partial+final, no Window or Sort over the input). Returns
+    * (groupCol, rnk, ord, tie1, tie2). The tie columns must uniquely
+    * identify rows (SURVEY §2.12 rule 1).
     */
-  def topKBy(df: DataFrame, groupCols: Seq[String], ordCol: String,
+  def topKBy(df: DataFrame, groupCol: String, ordCol: String,
       tie1: String, tie2: String, k: Int): DataFrame = {
     graft.expressions.TopKByAgg.register(df.sparkSession)
-    df.groupBy(groupCols.map(col): _*)
-      .agg(expr(s"topk_by($ordCol, $tie1, $tie2, $k)").as("__top"))
-      .select(groupCols.map(col) :+ posexplode(col("__top")).as(Seq("__pos", "__r")): _*)
-      .select(groupCols.map(col) ++ Seq((col("__pos") + 1).cast("long").as("rnk"),
-        col("__r.ord").as(ordCol), col("__r.tie1").as(tie1), col("__r.tie2").as(tie2)): _*)
+    df.groupBy(groupCol)
+      .agg(expr(s"topk_by($ordCol, $tie1, $tie2, $k)").as("top"))
+      .select(col(groupCol), posexplode(col("top")))
+      .select(col(groupCol), (col("pos") + 1).cast("long").as("rnk"),
+        col("col.ord").as("ord"), col("col.tie1").as("tie1"), col("col.tie2").as("tie2"))
   }
 
-  /** Per-dimension z-score standardization of a vector column
-    * (generalizes q_sim_14_standardize): values quantize to 10^-6 units,
-    * per-dim sufficient statistics are exact integer sums (dim-bounded,
-    * broadcast back), z is one double division of exact integers —
-    * bit-identical under any partitioning. Returns the exploded
-    * (idCol, dim, z); dims with zero variance yield NULL z.
+  /** Per-dimension z-score standardization of a vector column: values
+    * quantize to 10^-6 units FIRST, per-dim sufficient statistics are
+    * exact integer sums (dim-bounded, broadcast back), z is one double
+    * division of exact integers rounded 1e-6 — bit-identical under any
+    * partitioning. Returns the exploded (idCol, dim, z) of the rows
+    * `probe` keeps (the statistics cover every row); dims with zero
+    * variance yield NULL z.
     */
-  def standardize(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+  def standardize(df: DataFrame, idCol: String, vecCol: String,
+      probe: org.apache.spark.sql.Column): DataFrame = {
     val el = df
-      .select(col(idCol), posexplode(col(vecCol)).as(Seq("__pos", "__v")))
-      .select(col(idCol), (col("__pos") + 1).cast("long").as("dim"),
-        floor(col("__v").cast("double") * 1000000 + 0.5).cast("long").as("__vi"))
+      .select(col(idCol), posexplode(col(vecCol)).as(Seq("pos", "v")))
+      .select(col(idCol), (col("pos") + 1).cast("long").as("dim"),
+        floor(col("v").cast("double") * 1000000 + 0.5).cast("long").as("vi"))
     val st = el.groupBy("dim").agg(
-      count(lit(1)).as("__n"), sum("__vi").as("__s1"),
-      sum(col("__vi") * col("__vi")).as("__s2"))
-    val dvar = col("__n") * col("__s2") - col("__s1") * col("__s1")
-    el.join(broadcast(st), "dim")
+      count(lit(1)).as("n"), sum("vi").as("s1"), sum(col("vi") * col("vi")).as("s2"))
+    val dvar = col("n") * col("s2") - col("s1") * col("s1")
+    el.filter(probe).join(broadcast(st), "dim")
       .select(col(idCol), col("dim"),
         when(dvar > 0,
-          (col("__n") * col("__vi") - col("__s1")).cast("double")
-            / sqrt(dvar.cast("double"))).as("z"))
+          round((col("n") * col("vi") - col("s1")).cast("double")
+            / sqrt(dvar.cast("double")), 6)).as("z"))
   }
 
-  /** Join-key skew profile (generalizes q_dq_15_skew_profile): the topN
-    * heaviest keys with row share and skew ratio (count ÷ mean rows per
-    * key) — run this BEFORE a big shuffle join to choose between plain,
-    * salted, and AQE skew-split plans. One map-side-combinable aggregate
-    * + a 1-row totals broadcast.
+  /** Join-key skew profile: the `topN` heaviest keys with their row
+    * share and skew ratio (count ÷ mean rows per key), rounded 1e-6 —
+    * run BEFORE a big shuffle join to choose between plain, salted and
+    * AQE skew-split plans. One map-side-combinable aggregate + a 1-row
+    * totals broadcast; ratios divide exact integers.
     */
   def skewProfile(df: DataFrame, keyCol: String, topN: Int = 10): DataFrame = {
-    val f = df.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
-    val t = f.agg(sum("n").as("__total"), count(lit(1)).as("__keys"))
+    val f = df.groupBy(keyCol).agg(count(lit(1)).as("n"))
+    val t = f.agg(sum("n").as("total"), count(lit(1)).as("n_keys"))
     f.crossJoin(broadcast(t))
       .select(col(keyCol), col("n"),
-        (col("n").cast("double") / col("__total").cast("double")).as("share"),
-        ((col("n") * col("__keys")).cast("double") / col("__total").cast("double")).as("skew_x"))
+        round(col("n").cast("double") / col("total").cast("double"), 6).as("share"),
+        round((col("n") * col("n_keys")).cast("double") / col("total").cast("double"), 6)
+          .as("skew_x"))
       .orderBy(col("n").desc, col(keyCol)).limit(topN)
   }
 
-  /** Two-sample Kolmogorov–Smirnov test (generalizes q_stat_3_ks): D
+  /** Two-sample Kolmogorov–Smirnov test: D = sup_x |F1(x) − F2(x)|
     * between the `valueCol` distributions of rows where `groupCol` ==
-    * groupA vs groupB. Returns one row (n1, n2, d_num, d_stat) with the
-    * integer core D·n1·n2 exact in BIGINT — bit-identical under any
-    * partitioning. The ECDF cumsum runs on the merged DISTINCT-value
-    * grid (bounded by measurement resolution, not corpus size).
+    * groupA vs groupB. The supremum is reached at a data point, so both
+    * ECDFs are evaluated on the merged DISTINCT-value grid; their two
+    * prefix sums share ONE range shuffle ([[prefixSumN]], no one-task
+    * window at any grid size) and the totals are the max of each
+    * monotone cumsum. Returns one row (n1, n2, d_num, d_stat): the
+    * integer core D·n1·n2 stays exact in BIGINT, d_stat rounds 1e-6.
     */
   def ksTest(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String): DataFrame = {
     val src = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(valueCol).as("__v"),
-        when(col(groupCol) === groupA, 1L).otherwise(0L).as("__ia"))
-    val pts = src.groupBy("__v")
-      .agg(sum("__ia").as("__c1"), (count(lit(1)) - sum("__ia")).as("__c2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy("__v").rowsBetween(Long.MinValue, 0)
-    val cum = pts.select(sum("__c1").over(w).as("__cum1"), sum("__c2").over(w).as("__cum2"))
-    val n = pts.agg(sum("__c1").as("n1"), sum("__c2").as("n2"))
-    cum.crossJoin(broadcast(n))
+      .select(col(valueCol).as("v"),
+        when(col(groupCol) === groupA, 1L).otherwise(0L).as("ia"))
+    val pts = src.groupBy("v")
+      .agg(sum("ia").as("c1"), (count(lit(1)) - sum("ia")).as("c2"))
+    val cum0 = prefixSumN(pts, Seq("v"), Seq("c1" -> "cum1", "c2" -> "cum2"))
+      .select(col("cum1"), col("cum2"))
+    val tot = cum0.agg(max("cum1").as("n1"), max("cum2").as("n2"))
+    cum0.crossJoin(broadcast(tot))
       .groupBy("n1", "n2")
-      .agg(max(abs(col("n2") * col("__cum1") - col("n1") * col("__cum2"))).as("d_num"))
+      .agg(max(abs(col("n2") * col("cum1") - col("n1") * col("cum2"))).as("d_num"))
       .select(col("n1"), col("n2"), col("d_num"),
-        (col("d_num").cast("double")
-          / (col("n1").cast("double") * col("n2").cast("double"))).as("d_stat"))
+        round(col("d_num").cast("double")
+          / (col("n1").cast("double") * col("n2").cast("double")), 6).as("d_stat"))
   }
 
-  /** BM25 ranking (generalizes q_text_22_bm25): top `k` documents for a
-    * bag-of-terms query under Lucene-style idf. Per-(doc,term) scores
-    * quantize to 1e-6 integers BEFORE the per-doc sum, so the multi-term
-    * reduction has no float-addition-order hazard. df/corpus stats are
-    * broadcast; the postings side is term-filtered before the
-    * doc-length join. Returns (idCol, score, rnk).
+  /** BM25 ranking (k1=1.2, b=0.75, Lucene-style idf): top `k` documents
+    * for a bag-of-terms query. Per-(doc,term) scores are fixed IEEE
+    * expressions over integer sufficient statistics (tf, df, dl, N, Σdl),
+    * QUANTIZED to 1e-6 BEFORE the per-doc sum, so the multi-term
+    * reduction has no float-addition-order hazard. df comes from the tf
+    * table (one row per (doc, term)), not a fourth scan+explode pass;
+    * df and corpus stats broadcast; tf is term-filtered BEFORE the
+    * doc-length join. TakeOrdered top-k, then the rank window over just
+    * k rows. Returns (idCol, score, rn).
     */
   def bm25(df: DataFrame, idCol: String, textCol: String, terms: Seq[String],
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tok = df.select(col(idCol), explode(split(col(textCol), " ")).as("__t"))
-    val dl = tok.groupBy(idCol).agg(count(lit(1)).as("__dl"))
-    val stats = dl.agg(count(lit(1)).as("__nd"), sum("__dl").as("__tot"))
-    val tf = tok.filter(col("__t").isin(terms: _*))
-      .groupBy(idCol, "__t").agg(count(lit(1)).as("__tf"))
-    // df from the tf table (one row per (doc, term)) — not a fourth
-    // corpus scan+explode pass
-    val dfq = tf.groupBy("__t").agg(count(lit(1)).as("__df"))
-    val avgdl = col("__tot").cast("double") / col("__nd").cast("double")
-    val idf = log(lit(1.0) + (col("__nd").cast("double") - col("__df").cast("double") + 0.5)
-      / (col("__df").cast("double") + 0.5))
+      k: Int = 10): DataFrame = {
+    val tok = df.select(col(idCol), explode(split(col(textCol), " ")).as("token"))
+    val dl = tok.groupBy(idCol).agg(count(lit(1)).as("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot"))
+    val tf = tok.filter(col("token").isin(terms: _*))
+      .groupBy(idCol, "token").agg(count(lit(1)).as("tf"))
+    val dfq = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    val avgdl = col("tot").cast("double") / col("n_docs").cast("double")
+    val idf = log(lit(1.0) + (col("n_docs").cast("double") - col("df").cast("double") + 0.5)
+      / (col("df").cast("double") + 0.5))
     val s6 = floor((idf
-      * (col("__tf").cast("double") * (k1 + 1.0))
-      / (col("__tf").cast("double") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl").cast("double") / avgdl)))
+      * (col("tf").cast("double") * 2.2)
+      / (col("tf").cast("double") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl)))
       * 1000000 + 0.5).cast("long")
-    val total = tf.join(broadcast(dfq), "__t")
+    val total = tf.join(broadcast(dfq), "token")
       .join(dl, idCol)
       .crossJoin(broadcast(stats))
-      .select(col(idCol), s6.as("__s6"))
-      .groupBy(idCol).agg(sum("__s6").as("__s6"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__s6").desc, col(idCol).asc)
-    total.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col(idCol), (col("__s6").cast("double") / 1000000).as("score"), col("rnk"))
+      .select(col(idCol), s6.as("s6"))
+      .groupBy(idCol).agg(sum("s6").as("s6"))
+    val w = Window.orderBy(col("s6").desc, col(idCol).asc)
+    total.orderBy(col("s6").desc, col(idCol).asc).limit(k)
+      .withColumn("rn", row_number().over(w))
+      .select(col(idCol), (col("s6").cast("double") / 1000000).as("score"),
+        col("rn").cast("long").as("rn"))
   }
 
-  /** Population Stability Index (generalizes q_dq_18_psi): `buckets`
-    * quantile bins from the REFERENCE group's distribution, per-bucket
-    * (p_ref − p_cur)·ln(p_ref/p_cur). Returns one row per populated
-    * bucket — threshold the parts (or their sum, driver-side) in an
-    * alerting rule; counts stay BIGINT, each part is one fixed IEEE
-    * expression. Boundaries are a 1-row broadcast; assignment is a
-    * per-row array scan (swap to width_bucket + approx boundaries at
-    * 100 TB).
+  /** Population Stability Index: decile buckets from the REFERENCE
+    * group's quantiles, per-bucket (p_ref − p_cur)·ln(p_ref/p_cur),
+    * rounded 1e-6. Emitted per bucket: a PSI total is a float sum whose
+    * accumulation order differs across engines, and per-bucket parts
+    * are what an alerting rule thresholds anyway. ONE array-percentile
+    * aggregate (each scalar `percentile` would buffer the full value set
+    * in its own map); the 9 boundaries are a 1-row broadcast and bucket
+    * assignment is nine codegen'd compares per row. Totals ride an
+    * unpartitioned window over the ≤10 bucket rows — re-aggregating
+    * would replay the percentile + bucket-assign subtree.
+    * Returns (bucket, n_a, n_b, psi_part).
     */
   def psi(df: DataFrame, valueCol: String, groupCol: String,
-      refGroup: String, curGroup: String, buckets: Int = 10): DataFrame = {
-    val a = df.filter(col(groupCol) === refGroup).select(col(valueCol).as("__v"))
-    val b = df.filter(col(groupCol) === curGroup).select(col(valueCol).as("__v"))
-    val qs = (1 until buckets).map(i => i.toDouble / buckets)
-    val bounds = a.agg(
-      expr(s"percentile(__v, array(${qs.mkString(", ")}))").as("__bounds"))
-    val ab = a.withColumn("__ia", lit(1L)).unionAll(b.withColumn("__ia", lit(0L)))
-    val g = ab.crossJoin(broadcast(bounds))
-      .select((lit(1L) + size(filter(col("__bounds"), bv => col("__v") > bv)).cast("long")).as("bucket"),
-        col("__ia"))
+      refGroup: String, curGroup: String): DataFrame = {
+    val a = df.filter(col(groupCol) === refGroup).select(col(valueCol).as("v"))
+    val b = df.filter(col(groupCol) === curGroup).select(col(valueCol).as("v"))
+    val q = a.agg(expr(
+        "percentile(v, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("bb"))
+      .select((1 to 9).map(i => element_at(col("bb"), i).as(s"b$i")): _*)
+    val ab = a.withColumn("ia", lit(1L)).unionAll(b.withColumn("ia", lit(0L)))
+    val bucket = (1 to 9).map(i => when(col("v") > col(s"b$i"), 1L).otherwise(0L))
+      .foldLeft(lit(1L): org.apache.spark.sql.Column)(_ + _)
+    val g = ab.crossJoin(broadcast(q))
+      .select(bucket.cast("long").as("bucket"), col("ia"))
       .groupBy("bucket")
-      .agg(sum("__ia").as("n_a"), (count(lit(1)) - sum("__ia")).as("n_b"))
-    // totals via an unpartitioned window over g's ≤buckets rows —
-    // re-aggregating g (or rescanning the source) would replay the
-    // quantile + bucket-assign subtree (see q_dq_18_psi)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .rowsBetween(Long.MinValue, Long.MaxValue)
-    val pa = col("n_a").cast("double") / col("__ta").cast("double")
-    val pb = col("n_b").cast("double") / col("__tb").cast("double")
-    g.withColumn("__ta", sum("n_a").over(wAll))
-      .withColumn("__tb", sum("n_b").over(wAll))
+      .agg(sum("ia").as("n_a"), (count(lit(1)) - sum("ia")).as("n_b"))
+    val wAll = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val pa = col("n_a").cast("double") / col("ta").cast("double")
+    val pb = col("n_b").cast("double") / col("tb").cast("double")
+    g.withColumn("ta", sum("n_a").over(wAll))
+      .withColumn("tb", sum("n_b").over(wAll))
       .select(col("bucket"), col("n_a"), col("n_b"),
-        ((pa - pb) * log(pa / pb)).as("psi_part"))
+        round((pa - pb) * log(pa / pb), 6).as("psi_part"))
   }
 
-  /** First-order Markov transition matrix (generalizes
-    * q_stream_13_markov): P(next = b | current = a) over each key's
-    * `stateCol` sequence ordered by `orderCols` (include a unique
-    * tiebreaker column — without one, equal order keys make the
-    * sequence, and thus the counts, nondeterministic). Row totals ride
-    * the |states|²-bounded transition table as a window.
+  /** First-order Markov transition matrix: P(next = b | current = a)
+    * over each key's `stateCol` sequence ordered by `orderCols` (include
+    * a unique tiebreaker column — without one, equal order keys make the
+    * sequence, and thus the counts, nondeterministic). ONE scan: a
+    * per-key lead window, a |states|²-bounded count aggregate, and row
+    * totals riding that table as a window. p is quantized to 1e-6.
     */
   def transitionMatrix(df: DataFrame, keyCol: String, stateCol: String,
       orderCols: Seq[String]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(orderCols.map(col): _*)
-    val tr = df
-      .select(col(stateCol).as("a"), lead(col(stateCol), 1).over(w).as("b"))
-      .filter(col("b").isNotNull)
+    val seq = df.select(col(stateCol).as("a"),
+      lead(col(stateCol), 1).over(
+        Window.partitionBy(keyCol).orderBy(orderCols.map(col): _*)).as("b"))
+    val tr = seq.filter(col("b").isNotNull)
       .groupBy("a", "b").agg(count(lit(1)).as("c"))
-    val wA = org.apache.spark.sql.expressions.Window.partitionBy("a")
-    tr.withColumn("c_a", sum("c").over(wA))
+    tr.withColumn("c_a", sum("c").over(Window.partitionBy("a")))
       .select(col("a"), col("b"), col("c"), col("c_a"),
-        (col("c").cast("double") / col("c_a").cast("double")).as("p"))
+        (floor(col("c").cast("double") / col("c_a").cast("double") * 1000000 + 0.5) / 1000000).as("p"))
   }
 
-  /** Weighted sampling without replacement (generalizes
-    * q_scan_16_weighted_sample; Efraimidis–Spirakis A-ES): the `n` rows
-    * with the largest key = ln(u)/w, where u ∈ (0,1] derives from the
-    * deterministic multiplicative hash of `idCol` — reproducible across
-    * runs, engines, and partitionings, unlike rand()-keyed sampling.
-    * P(row selected) ∝ `weightCol`; rows with weight ≤ 0 (or null) are
-    * excluded — a zero/negative A-ES weight has no sampling meaning and
-    * would otherwise silently dominate or vanish. Ids are folded
-    * through `pmod`, so negative ids hash correctly; note ids that
-    * collide mod 1e9+7 share u (same limitation as q_text_13's split
-    * hash) — pre-hash ids into [0, P) if the id space exceeds P. At
-    * 100 TB swap the rank for the mergeable top-k aggregate (q_agg_23).
+  /** Weighted sampling without replacement (Efraimidis–Spirakis A-ES):
+    * the `n` rows with the largest key = ln(u)/w, where u ∈ (0,1]
+    * derives from the overflow-safe multiplicative hash of `idCol`
+    * (q_text_13's split hash) — reproducible across runs, engines and
+    * partitionings, unlike rand()-keyed sampling. P(row selected) ∝
+    * `weightCol` (positive weights). Keys are 1e-9-quantized integers
+    * ranked (key9, id) — a total order. Returns (idCol, weightCol, key,
+    * rn). At 100 TB the global top-n becomes q_agg_23's mergeable heap
+    * rather than a full sort.
     */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
       n: Int): DataFrame = {
-    val hv = pmod(pmod(col(idCol), lit(1000000007L)) * 2654435761L, lit(1000000007L))
-    val key = log((hv + 1).cast("double") / 1000000008.0) / col(weightCol).cast("double")
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__key").desc, col(idCol))
-    df.filter(col(weightCol) > 0)
-      .withColumn("__key", key)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n)
-      .drop("__key", "__rn")
+    val h = df.select(col(idCol), col(weightCol),
+      (((col(idCol) % 1000000007L) * 2654435761L) % 1000000007L).as("hv"))
+    val k = h.select(col(idCol), col(weightCol),
+      floor(log((col("hv") + 1).cast("double") / 1000000008.0)
+        / col(weightCol).cast("double") * 1000000000 + 0.5).cast("long").as("key9"))
+    k.withColumn("rn", row_number().over(Window.orderBy(col("key9").desc, col(idCol))))
+      .filter(col("rn") <= n)
+      .select(col(idCol), col(weightCol),
+        (col("key9").cast("double") / 1000000000).as("key"), col("rn").cast("long").as("rn"))
   }
 
-  /** Welch's unequal-variance t-test (generalizes q_stat_8_welch):
-    * t-statistic and Welch–Satterthwaite df between `groupA` and
-    * `groupB`'s `valueCol` samples. Sufficient statistics are summed as
-    * DOUBLE here (the generic form can't assume a quantization for
-    * arbitrary value columns — the declared query shows the exact-cents
-    * discipline); one map-side-combinable aggregate, t/df as a 1-row
-    * projection.
+  /** Welch's unequal-variance t-test with the Welch–Satterthwaite df
+    * between `groupA` and `groupB`'s `valueCol` samples. Values are
+    * cents-quantized (`floor(v·100+0.5)`), so the six sufficient
+    * statistics (n, Σv, Σv² per arm) are exact BIGINT sums from ONE
+    * map-side-combinable aggregate on any engine or partitioning; t and
+    * df are fixed IEEE expressions over them (squares written x·x —
+    * libm pow() is not guaranteed correctly rounded), quantized to 1e-6.
+    * Σv² must stay within int64: |v·100| up to ~3e9 rows (DECIMAL(38)
+    * beyond).
     */
   def welchTTest(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String): DataFrame = {
     val st = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
-      .groupBy("__g")
-      .agg(count(lit(1)).as("n"), sum("__v").as("sv"), sum(col("__v") * col("__v")).as("sv2"))
+      .select(col(groupCol).as("g"),
+        floor(col(valueCol) * 100 + 0.5).cast("long").as("v"))
+      .groupBy("g")
+      .agg(count(lit(1)).as("n"), sum("v").as("sv"), sum(col("v") * col("v")).as("sv2"))
     val p = st.agg(
-      max(when(col("__g") === groupA, col("n"))).as("n1"),
-      max(when(col("__g") === groupA, col("sv"))).as("sv1"),
-      max(when(col("__g") === groupA, col("sv2"))).as("sq1"),
-      max(when(col("__g") === groupB, col("n"))).as("n2"),
-      max(when(col("__g") === groupB, col("sv"))).as("svb"),
-      max(when(col("__g") === groupB, col("sv2"))).as("sq2"))
-    val n1 = col("n1").cast("double"); val n2 = col("n2").cast("double")
-    val e1 = (n1 * col("sq1") - col("sv1") * col("sv1")) / (n1 * (n1 - 1) * n1)
-    val e2 = (n2 * col("sq2") - col("svb") * col("svb")) / (n2 * (n2 - 1) * n2)
-    p.withColumn("__e1", e1).withColumn("__e2", e2)
-      .select(col("n1"), col("n2"),
-        ((col("sv1") / n1 - col("svb") / n2) / sqrt(col("__e1") + col("__e2"))).as("t"),
-        ((col("__e1") + col("__e2")) * (col("__e1") + col("__e2"))
-          / (col("__e1") * col("__e1") / (n1 - 1) + col("__e2") * col("__e2") / (n2 - 1))).as("df"))
-  }
-
-  /** Engine-exact Welch t-test: pre-quantizes `valueCol` to integer
-    * units (`floor(v * scale + 0.5)`, scale=100 = cents) so the six
-    * sufficient statistics are exact BIGINT sums on ANY engine or
-    * partitioning, and t/df are emitted quantized to 1e-6 — the
-    * deterministic path of the declared q_stat_8_welch, exposed as the
-    * API default discipline. Use [[welchTTest]] only when no
-    * quantization of the value domain is acceptable.
-    * Σv² must stay within int64: |v·scale| up to ~3e9 rows at cents
-    * scale (the declared query's bound analysis).
-    */
-  def welchTTestQuantized(df: DataFrame, valueCol: String, groupCol: String,
-      groupA: String, groupB: String, scale: Long = 100L): DataFrame = {
-    val st = df.filter(col(groupCol).isin(groupA, groupB))
-      .select(col(groupCol).as("__g"),
-        floor(col(valueCol) * scale + 0.5).cast("long").as("__v"))
-      .groupBy("__g")
-      .agg(count(lit(1)).as("n"), sum("__v").as("sv"), sum(col("__v") * col("__v")).as("sv2"))
-    val p = st.agg(
-      max(when(col("__g") === groupA, col("n"))).as("n1"),
-      max(when(col("__g") === groupA, col("sv"))).as("sv1"),
-      max(when(col("__g") === groupA, col("sv2"))).as("sq1"),
-      max(when(col("__g") === groupB, col("n"))).as("n2"),
-      max(when(col("__g") === groupB, col("sv"))).as("svb"),
-      max(when(col("__g") === groupB, col("sv2"))).as("sq2"))
+      max(when(col("g") === groupA, col("n"))).as("n1"),
+      max(when(col("g") === groupA, col("sv"))).as("sv1"),
+      max(when(col("g") === groupA, col("sv2"))).as("sq1"),
+      max(when(col("g") === groupB, col("n"))).as("n2"),
+      max(when(col("g") === groupB, col("sv"))).as("svb"),
+      max(when(col("g") === groupB, col("sv2"))).as("sq2"))
     val n1 = col("n1").cast("double"); val n2 = col("n2").cast("double")
     val e1 = (n1 * col("sq1").cast("double") - col("sv1").cast("double") * col("sv1").cast("double")) / (n1 * (n1 - 1) * n1)
     val e2 = (n2 * col("sq2").cast("double") - col("svb").cast("double") * col("svb").cast("double")) / (n2 * (n2 - 1) * n2)
-    p.withColumn("__e1", e1).withColumn("__e2", e2)
+    p.withColumn("e1", e1).withColumn("e2", e2)
       .select(col("n1"), col("n2"),
         (floor((col("sv1").cast("double") / n1 - col("svb").cast("double") / n2)
-          / sqrt(col("__e1") + col("__e2")) * 1000000 + 0.5) / 1000000).as("t"),
-        (floor((col("__e1") + col("__e2")) * (col("__e1") + col("__e2"))
-          / (col("__e1") * col("__e1") / (n1 - 1) + col("__e2") * col("__e2") / (n2 - 1)) * 1000000 + 0.5) / 1000000).as("df"))
+          / sqrt(col("e1") + col("e2")) * 1000000 + 0.5) / 1000000).as("t"),
+        (floor((col("e1") + col("e2")) * (col("e1") + col("e2"))
+          / (col("e1") * col("e1") / (n1 - 1) + col("e2") * col("e2") / (n2 - 1)) * 1000000 + 0.5) / 1000000).as("df"))
   }
 
-  /** Engine-exact winsorized mean: clamp values are pre-quantized to
-    * integer units (`scale`=100 = cents) BEFORE summation, so the group
-    * sum is an exact BIGINT and the emitted mean (rounded to 2 dp of
-    * the original unit) is deterministic under any partitioning — the
-    * declared q_agg_32_winsorize discipline as the API default. The
-    * exact-percentile pass is the only wide exchange; its per-group
-    * boundary table broadcasts back. Use [[winsorizedMean]] only when
-    * the value domain has no natural quantization.
-    */
-  def winsorizedMeanQuantized(df: DataFrame, groupCol: String, valueCol: String,
-      lo: Double = 0.05, hi: Double = 0.95, scale: Long = 100L): DataFrame = {
-    val p = df.groupBy(groupCol).agg(
-      expr(s"percentile($valueCol, $lo)").as("__plo"),
-      expr(s"percentile($valueCol, $hi)").as("__phi"))
-    val q = when(col(valueCol) < col("__plo"), floor(col("__plo") * scale + 0.5).cast("long"))
-      .when(col(valueCol) > col("__phi"), floor(col("__phi") * scale + 0.5).cast("long"))
-      .otherwise(floor(col(valueCol) * scale + 0.5).cast("long"))
-    df.join(broadcast(p), groupCol)
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n"),
-        round(sum(q).cast("double") / (count(lit(1)).cast("double") * scale), 2)
-          .as("winsor_mean"))
-  }
-
-  /** nDCG@k per query group (generalizes q_ret_1_ndcg): rank by
-    * `scoreCol` DESC with `idCol` tiebreak, binary relevance from
-    * `relCol` (boolean). Discount weights 1/log₂(r+1) are quantized at
-    * plan-build time (no runtime transcendental — the declared query's
-    * cross-engine-determinism trick, kept here for replayability).
-    * Groups with no relevant rows report ndcg 0.
+  /** nDCG@10 per query group: rank by (`scoreCol` DESC, `idCol`), binary
+    * relevance from the predicate `relevant`. DCG and ideal DCG are
+    * BIGINT sums of the 1e6-quantized discount weights
+    * ([[graft.operators.Round4Ops.ndcgW]], log2 evaluated at plan-build
+    * time only) — one division at the end; groups with no relevant rows
+    * report 0. Two ranking windows + one agg, all partitioned by the
+    * group key. Returns (groupCol, n_docs, n_rel, ndcg).
     */
   def ndcgAtK(df: DataFrame, groupCol: String, scoreCol: String, idCol: String,
-      relCol: String, k: Int = 10): DataFrame = {
-    val w = (1 to k).map(r => math.floor(1e6 * math.log(2) / math.log(r + 1.0) + 0.5).toLong)
-    val wArr = array(w.map(lit): _*)
-    val byRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol).orderBy(col(scoreCol).desc, col(idCol))
-    val byIdeal = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol).orderBy(col("__rel").desc, col("__rn"))
-    df.select(col(groupCol), when(col(relCol), 1).otherwise(0).as("__rel"),
-        row_number().over(byRank).cast("long").as("__rn"))
-      .withColumn("__irn", row_number().over(byIdeal).cast("long"))
+      relevant: org.apache.spark.sql.Column): DataFrame = {
+    val wArr = array(graft.operators.Round4Ops.ndcgW.map(lit): _*)
+    val byRank = Window.partitionBy(groupCol).orderBy(col(scoreCol).desc, col(idCol))
+    val byIdeal = Window.partitionBy(groupCol).orderBy(col("rel").desc, col("rn"))
+    df.select(col(groupCol), when(relevant, 1).otherwise(0).as("rel"),
+        row_number().over(byRank).cast("long").as("rn"))
+      .withColumn("irn", row_number().over(byIdeal).cast("long"))
       .groupBy(groupCol)
       .agg(
-        sum(when(col("__rel") === 1 && col("__rn") <= k,
-          element_at(wArr, col("__rn").cast("int"))).otherwise(0L)).as("__dcgq"),
-        sum(when(col("__rel") === 1 && col("__irn") <= k,
-          element_at(wArr, col("__irn").cast("int"))).otherwise(0L)).as("__idcgq"),
-        count(lit(1)).as("n"), sum("__rel").cast("long").as("n_rel"))
-      .select(col(groupCol), col("n"), col("n_rel"),
-        when(col("__idcgq") > 0,
-          graft.functions.Num.round(
-            col("__dcgq").cast("double") / col("__idcgq").cast("double"), 6))
+        sum(when(col("rel") === 1 && col("rn") <= 10,
+          element_at(wArr, col("rn").cast("int"))).otherwise(0L)).as("dcgq"),
+        sum(when(col("rel") === 1 && col("irn") <= 10,
+          element_at(wArr, col("irn").cast("int"))).otherwise(0L)).as("idcgq"),
+        count(lit(1)).as("n_docs"), sum("rel").cast("long").as("n_rel"))
+      .select(col(groupCol), col("n_docs"), col("n_rel"),
+        when(col("idcgq") > 0,
+          round(col("dcgq").cast("double") / col("idcgq").cast("double"), 6))
           .otherwise(0.0).as("ndcg"))
   }
 
-  /** Deterministic k-fold assignment (generalizes q_ml_1_kfold):
-    * appends `fold` ∈ [0, k) as a pure function of the stable id —
-    * the q_text_13/deterministicSplit hash chain, so membership is
-    * engine/partitioning/run-independent and stable under corpus growth.
+  /** Deterministic 5-fold assignment: `fold` ∈ [0, 5) as a pure function
+    * of the stable id — q_text_13's mod-P multiplicative hash, so
+    * membership is run/engine/partitioning-independent and stable under
+    * corpus growth (old rows never change fold).
     */
-  def kfold(df: DataFrame, idCol: String, k: Int = 5): DataFrame =
-    df.withColumn("fold",
-      (pmod(col(idCol), lit(1000000007L)) * 2654435761L) % 1000000007L % k)
+  def kfold(idCol: String): org.apache.spark.sql.Column =
+    idHash(col(idCol)) % 5
 
-  /** Per-group document cap (generalizes q_text_29_source_caps): keep
-    * the top `cap` rows per `groupCol` by (`qualityCol` DESC, `idCol`)
-    * — the "max N pages per domain" rule. Returns the kept rows; the
-    * rank filter sits directly on the window so WindowGroupLimit prunes
-    * past the cap inside each partition.
+  /** Per-group cap: keep the top `cap` rows per `groupCol` by
+    * (`qualityCol` DESC, `idCol`) — the "max N pages per domain" rule,
+    * or top-N per group. The rank filter sits directly on the window, so
+    * WindowGroupLimit prunes past the cap inside each partition.
+    * Returns the kept rows.
     */
   def capPerGroup(df: DataFrame, groupCol: String, qualityCol: String,
       idCol: String, cap: Int): DataFrame = {
-    val byRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol).orderBy(col(qualityCol).desc, col(idCol))
-    df.withColumn("__rn", row_number().over(byRank))
+    val w = Window.partitionBy(groupCol).orderBy(col(qualityCol).desc, col(idCol).asc)
+    df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= cap).drop("__rn")
   }
 
-  /** Last-touch attribution (generalizes q_stream_17_attribution):
-    * credit each `convType` event to the actor's most recent preceding
-    * event of a different type via one `last(..., ignoreNulls)`
-    * carry-forward window — no predecessor self-join. Returns
-    * (channel, n, share, mean_gap_min) with an explicit 'none' bucket.
-    * Gap sums ride as exact BIGINT microseconds.
+  /** Last-touch attribution: credit each `convType` event to the actor's
+    * most recent PRECEDING event of a different type via one
+    * `last(..., ignoreNulls) ROWS UNBOUNDED PRECEDING..-1` carry-forward
+    * window (q_time_2_ffill's primitive) — no predecessor self-join.
+    * Conversions with no prior touch land in an explicit 'none' bucket.
+    * Gap sums ride as exact BIGINT microseconds; the mean is one
+    * closed-form division. One actor-keyed window, then a
+    * channel-bounded aggregate. Returns (channel, n, share, mean_gap_min).
     */
   def lastTouchAttribution(df: DataFrame, userCol: String, tsCol: String,
       typeCol: String, convType: String, idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(userCol).orderBy(tsCol, idCol)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val e = df.select(col(userCol), col(tsCol), col(typeCol), col(idCol),
+    val e = df.select(col(idCol), col(userCol), col(tsCol), col(typeCol),
       last(when(col(typeCol) =!= convType, col(typeCol)), ignoreNulls = true)
-        .over(w).as("__src_type"),
+        .over(w).as("src_type"),
       last(when(col(typeCol) =!= convType, unix_micros(col(tsCol))), ignoreNulls = true)
-        .over(w).as("__src_us"))
+        .over(w).as("src_us"))
     val p = e.filter(col(typeCol) === convType)
-      .select(coalesce(col("__src_type"), lit("none")).as("channel"),
-        when(col("__src_us").isNotNull, unix_micros(col(tsCol)) - col("__src_us")).as("__gap_us"))
+      .select(coalesce(col("src_type"), lit("none")).as("channel"),
+        when(col("src_us").isNotNull, unix_micros(col(tsCol)) - col("src_us")).as("gap_us"))
     val g = p.groupBy("channel").agg(count(lit(1)).as("n"),
-      sum("__gap_us").cast("long").as("__gsum"), count("__gap_us").as("__gn"))
-    g.withColumn("__tot", sum("n").over(
-        org.apache.spark.sql.expressions.Window.partitionBy()))
+      sum("gap_us").cast("long").as("gsum"), count("gap_us").as("gn"))
+    g.withColumn("tot", sum("n").over(Window.partitionBy()))
       .select(col("channel"), col("n"),
-        graft.functions.Num.round(col("n").cast("double") / col("__tot"), 6).as("share"),
-        when(col("__gn") > 0,
-          graft.functions.Num.round(col("__gsum").cast("double") / col("__gn") / 60000000L, 2))
+        round(col("n").cast("double") / col("tot"), 6).as("share"),
+        when(col("gn") > 0,
+          round(col("gsum").cast("double") / col("gn") / 60000000L, 2))
           .otherwise(0.0).as("mean_gap_min"))
   }
 
-  /** DAU / trailing-7-day WAU / stickiness per day (generalizes
-    * q_stream_20_dau_wau). WAU uses the contribution-explode reshape:
-    * each (user, day) feeds the 7 days it keeps the user weekly-active
-    * — O(7·|user-days|) linear, no windowed COUNT DISTINCT and no
-    * days×users join. Warm-up days (first 6) are excluded.
+  /** DAU / trailing-7-day WAU / stickiness per day. WAU avoids both a
+    * windowed COUNT DISTINCT (not expressible as a window) and a
+    * days×users join: each (user, active-day) row CONTRIBUTES itself to
+    * the 7 calendar days it keeps the user weekly-active (explode of a
+    * 7-element sequence), and a plain distinct count per day finishes —
+    * O(7·|user-days|). Warm-up days (first 6) are excluded. Two
+    * (user, day)-keyed distincts + one day-keyed agg; all counts exact.
     */
   def dauWau(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
-    val ud = df.select(col(userCol).as("__u"),
-      expr(s"unix_micros($tsCol) div 86400000000").as("day")).distinct()
-    val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
-    val wau = ud.select(col("__u"), explode(sequence(col("day"), col("day") + 6)).as("__wday"))
+    val ud = df.select(col(userCol), expr(s"unix_micros($tsCol) div 86400000000").as("day"))
       .distinct()
-      .groupBy(col("__wday").as("day")).agg(count(lit(1)).as("wau"))
-    val d0 = ud.agg(min("day").as("__d0"))
+    val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
+    val contrib = ud.select(col(userCol),
+        explode(sequence(col("day"), col("day") + 6)).as("wday"))
+      .distinct()
+    val wau = contrib.groupBy(col("wday").as("day")).agg(count(lit(1)).as("wau"))
+    val d0 = ud.agg(min("day").as("d0"))
     dau.join(wau, "day").crossJoin(broadcast(d0))
-      .filter(col("day") >= col("__d0") + 6)
+      .filter(col("day") >= col("d0") + 6)
       .select(col("day").cast("long").as("day"), col("dau"), col("wau"),
-        graft.functions.Num.round(col("dau").cast("double") / col("wau"), 6).as("stickiness"))
+        round(col("dau").cast("double") / col("wau"), 6).as("stickiness"))
   }
 
-  /** Bollinger bands over a per-period integer series (generalizes
-    * q_win_12_bollinger): rolling mean ± k·(rolling sample std) with an
-    * outside flag, from exact BIGINT window sums of `valueCol` and its
-    * square. `unitDiv` converts the integer unit to the emitted scale
-    * (100 for cents→dollars). Warm-up rows (fewer than `window`
-    * periods) are excluded.
+  /** Bollinger bands over a per-period integer (cents) series: 7-period
+    * rolling mean ± 2 rolling sample std with an outside flag. The
+    * rolling moments are exact BIGINT window sums of `valueCol` and its
+    * square; mean/band/flag are fixed IEEE expressions in cents,
+    * divided to dollars only at emission. Warm-up rows (fewer than 7
+    * periods) are excluded. Period-table windows (repartitionByRange at
+    * 100 TB).
     */
-  def bollingerBands(daily: DataFrame, dayCol: String, valueCol: String,
-      window: Int = 7, k: Double = 2.0, unitDiv: Double = 100.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val win = Window.orderBy(dayCol).rowsBetween(-(window - 1), 0)
+  def bollingerBands(daily: DataFrame, dayCol: String, valueCol: String): DataFrame = {
+    val win = Window.orderBy(dayCol).rowsBetween(-6, 0)
     val w = daily.select(col(dayCol), col(valueCol),
-      count(lit(1)).over(win).as("__k"),
-      sum(valueCol).over(win).as("__s"),
-      sum(col(valueCol) * col(valueCol)).over(win).as("__ss"))
-    val mean = col("__s").cast("double") / col("__k")
-    val band = lit(k) * sqrt((col("__k").cast("double") * col("__ss")
-      - col("__s").cast("double") * col("__s"))
-      / (col("__k").cast("double") * col("__k") * (col("__k") - 1)))
-    w.filter(col("__k") === window)
+      count(lit(1)).over(win).as("k"),
+      sum(valueCol).over(win).as("s"),
+      sum(col(valueCol) * col(valueCol)).over(win).as("ss"))
+    val mean = col("s").cast("double") / col("k")
+    val band = lit(2) * sqrt((col("k").cast("double") * col("ss")
+      - col("s").cast("double") * col("s"))
+      / (col("k").cast("double") * col("k") * (col("k") - 1)))
+    w.filter(col("k") === 7)
       .select(col(dayCol).cast("long").as(dayCol),
-        graft.functions.Num.round(col(valueCol).cast("double") / unitDiv, 2).as("daily_value"),
-        graft.functions.Num.round(mean / unitDiv, 2).as("mid"),
-        graft.functions.Num.round((mean - band) / unitDiv, 2).as("lower_band"),
-        graft.functions.Num.round((mean + band) / unitDiv, 2).as("upper_band"),
+        round(col(valueCol).cast("double") / 100, 2).as("daily_value"),
+        round(mean / 100, 2).as("mid"),
+        round((mean - band) / 100, 2).as("lower_band"),
+        round((mean + band) / 100, 2).as("upper_band"),
         when(col(valueCol).cast("double") < mean - band
           || col(valueCol).cast("double") > mean + band, 1L).otherwise(0L).as("outside"))
   }
 
-  /** Maximum drawdown of a per-period integer net series (generalizes
-    * q_win_13_drawdown): cumulative sum, running peak (two stacked
-    * exact-BIGINT prefix windows), and the deepest peak-minus-current
-    * with earliest-period tiebreak. One-row result.
+  /** Maximum drawdown of a per-period integer (cents) net series:
+    * cumulative sum and running peak via two stacked exact-BIGINT prefix
+    * windows (sum then max — composable because both are ROWS UNBOUNDED
+    * PRECEDING), then the deepest peak-minus-current with
+    * earliest-period tiebreak. One-row result (trough_day, n_days,
+    * cum_at_trough, peak_before, max_drawdown, dd_frac).
     */
-  def maxDrawdown(daily: DataFrame, dayCol: String, netCol: String,
-      unitDiv: Double = 100.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def maxDrawdown(daily: DataFrame, dayCol: String, netCol: String): DataFrame = {
     val prefix = Window.orderBy(dayCol).rowsBetween(Window.unboundedPreceding, 0)
     val r = daily
-      .withColumn("__cum", sum(netCol).over(prefix))
-      .withColumn("__peak", max("__cum").over(prefix))
-    val x = r.withColumn("__dd", col("__peak") - col("__cum"))
-      .withColumn("__rn", row_number().over(Window.orderBy(col("__dd").desc, col(dayCol))))
-      .withColumn("__nd", count(lit(1)).over(Window.partitionBy()))
-    x.filter(col("__rn") === 1)
-      .select(col(dayCol).cast("long").as("trough_day"), col("__nd").as("n_days"),
-        graft.functions.Num.round(col("__cum").cast("double") / unitDiv, 2).as("cum_at_trough"),
-        graft.functions.Num.round(col("__peak").cast("double") / unitDiv, 2).as("peak_before"),
-        graft.functions.Num.round(col("__dd").cast("double") / unitDiv, 2).as("max_drawdown"),
-        graft.functions.Num.round(col("__dd").cast("double") / col("__peak"), 6).as("dd_frac"))
+      .withColumn("cum", sum(netCol).over(prefix))
+      .withColumn("peak", max("cum").over(prefix))
+    val x = r.withColumn("dd", col("peak") - col("cum"))
+      .withColumn("rn", row_number().over(Window.orderBy(col("dd").desc, col(dayCol))))
+      .withColumn("nd", count(lit(1)).over(Window.partitionBy()))
+    x.filter(col("rn") === 1)
+      .select(col(dayCol).cast("long").as("trough_day"), col("nd").as("n_days"),
+        round(col("cum").cast("double") / 100, 2).as("cum_at_trough"),
+        round(col("peak").cast("double") / 100, 2).as("peak_before"),
+        round(col("dd").cast("double") / 100, 2).as("max_drawdown"),
+        round(col("dd").cast("double") / col("peak"), 6).as("dd_frac"))
   }
 
   /** Herfindahl–Hirschman concentration of `valueCol` over `keyCol`
-    * within each `groupCol` (generalizes q_agg_34_hhi): HHI = Σ(sᵢ/S)²
-    * plus the top-key share. Pure rational off exact integer values;
-    * per-key squares accumulate in DECIMAL(38,0). Returns
-    * (group, n_keys, total, hhi, top_share).
+    * within each `groupCol`: HHI = Σ(sᵢ/S)² (1 = monopoly, 1/n = even
+    * split) plus the top-key share. A pure rational off exact integer
+    * values: per-key squares accumulate in DECIMAL(38,0) (sᵢ² nears
+    * int64 quickly), one closed-form division per group. Returns
+    * (groupCol, n_keys, total, hhi, top_share).
     */
   def hhi(df: DataFrame, groupCol: String, keyCol: String, valueCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val su = df.groupBy(col(groupCol), col(keyCol)).agg(sum(valueCol).as("__s"))
-    su.groupBy(groupCol).agg(count(lit(1)).as("n_keys"), sum("__s").as("total"),
-        sum(col("__s").cast(DecimalType(38, 0)) * col("__s")).as("__sumsq"),
-        max("__s").as("__mx"))
+    val su = df.groupBy(groupCol, keyCol).agg(sum(valueCol).as("s"))
+    su.groupBy(groupCol).agg(count(lit(1)).as("n_keys"), sum("s").as("total"),
+        sum(col("s").cast(DecimalType(38, 0)) * col("s")).as("sumsq"), max("s").as("mx"))
       .select(col(groupCol), col("n_keys"), col("total"),
-        graft.functions.Num.round(col("__sumsq").cast("double")
+        round(col("sumsq").cast("double")
           / (col("total").cast("double") * col("total").cast("double")), 6).as("hhi"),
-        graft.functions.Num.round(col("__mx").cast("double") / col("total"), 6).as("top_share"))
+        round(col("mx").cast("double") / col("total"), 6).as("top_share"))
   }
 
-  /** Lorenz curve of `valueCol` by `buckets` quantile buckets
-    * (generalizes q_agg_35_lorenz): per-bucket share and cumulative
-    * share, engine-deterministic ntile over the total (value, id)
-    * order. The curve whose area deficit is the Gini coefficient.
+  /** Lorenz curve of `valueCol` by decile: each decile's share and the
+    * cumulative share — the curve whose area deficit is the Gini
+    * coefficient. Deciles are the builtin-identical ntile(10) over the
+    * totally ordered (value, id) stream, computed as
+    * [[exactGlobalRankByN]] + [[ntileOfRank]] (range-partitioned — no
+    * one-task window; the row count comes off the rank helper's
+    * histogram pass); shares are exact BIGINT rationals off the 10-row
+    * table. `df` holds exactly (valueCol, idCol).
     */
-  def lorenzCurve(df: DataFrame, idCol: String, valueCol: String,
-      buckets: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ntile via the range-partitioned exact rank — identical bucket
-    // assignment to the builtin, no single-partition window; the total
-    // row count comes free off the rank helper's histogram pass (no
-    // separate df.count() scan)
-    val (n, ranked) = exactGlobalRankByN(df.select(col(valueCol), col(idCol)),
-      Seq(col(valueCol), col(idCol)), "__rk")
-    val b = ranked.select(col(valueCol), ntileOfRank(col("__rk"), n, buckets).as("decile"))
-    val g = b.groupBy("decile").agg(count(lit(1)).as("n"), sum(valueCol).as("__s"))
-    g.withColumn("__cum", sum("__s").over(
-        Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("__tot", sum("__s").over(Window.partitionBy()))
+  def lorenzCurve(df: DataFrame, idCol: String, valueCol: String): DataFrame = {
+    val (nE, ranked) = exactGlobalRankByN(df, Seq(col(valueCol), col(idCol)), "__rk")
+    val b = ranked.select(col(valueCol), ntileOfRank(col("__rk"), nE, 10).as("decile"))
+    val g = b.groupBy("decile").agg(count(lit(1)).as("n"), sum(valueCol).as("s"))
+    g.withColumn("cum", sum("s").over(Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("tot", sum("s").over(Window.partitionBy()))
       .select(col("decile"), col("n"),
-        graft.functions.Num.round(col("__s").cast("double") / col("__tot"), 6).as("share"),
-        graft.functions.Num.round(col("__cum").cast("double") / col("__tot"), 6).as("cum_share"))
+        round(col("s").cast("double") / col("tot"), 6).as("share"),
+        round(col("cum").cast("double") / col("tot"), 6).as("cum_share"))
   }
 
-  /** Cohen's d + Hedges' g between two groups of an integer value
-    * column (generalizes q_stat_19_cohen_d): pooled-std effect size
-    * from one-scan exact (n, Σ, Σ²) per group; `unitDiv` scales the
-    * emitted means. Returns (n1, n0, mean_1, mean_0, cohen_d, hedges_g).
+  /** Cohen's d on the pooled std plus the small-sample-corrected Hedges'
+    * g = d·(1 − 3/(4N−9)) between groups `g1` and `g0` of an integer
+    * (cents) value column. Both groups' (n, Σ, Σ²) are exact BIGINTs from
+    * one map-side-combinable scan; d and g are single IEEE closed forms.
+    * Returns (n1, n0, mean_1, mean_0, cohen_d, hedges_g), means in units
+    * of 1/100.
     */
   def effectSize(df: DataFrame, valueCol: String, groupCol: String,
-      g1: String, g0: String, unitDiv: Double = 100.0): DataFrame = {
-    val e = df.filter(col(groupCol).isin(g1, g0))
-      .select(col(groupCol), col(valueCol).as("__x"))
-    val g = e.groupBy(groupCol).agg(count(lit(1)).as("__n"), sum("__x").as("__s"),
-      sum(col("__x") * col("__x")).as("__ss"))
+      g1: String, g0: String): DataFrame = {
+    val g = df.groupBy(groupCol).agg(count(lit(1)).as("n"), sum(valueCol).as("s"),
+      sum(col(valueCol) * col(valueCol)).as("ss"))
     val p = g.agg(
-      max(when(col(groupCol) === g1, col("__n"))).as("n1"),
-      max(when(col(groupCol) === g1, col("__s"))).as("s1"),
-      max(when(col(groupCol) === g1, col("__ss"))).as("ss1"),
-      max(when(col(groupCol) === g0, col("__n"))).as("n0"),
-      max(when(col(groupCol) === g0, col("__s"))).as("s0"),
-      max(when(col(groupCol) === g0, col("__ss"))).as("ss0"))
+      max(when(col(groupCol) === g1, col("n"))).as("n1"),
+      max(when(col(groupCol) === g1, col("s"))).as("s1"),
+      max(when(col(groupCol) === g1, col("ss"))).as("ss1"),
+      max(when(col(groupCol) === g0, col("n"))).as("n0"),
+      max(when(col(groupCol) === g0, col("s"))).as("s0"),
+      max(when(col(groupCol) === g0, col("ss"))).as("ss0"))
     val m1 = col("s1").cast("double") / col("n1")
     val m0 = col("s0").cast("double") / col("n0")
     val pooled = sqrt(((col("ss1").cast("double") - col("s1").cast("double") * col("s1") / col("n1"))
@@ -1113,1039 +1038,958 @@ object Pipelines {
       / (col("n1") + col("n0") - 2))
     val dEff = (m1 - m0) / pooled
     p.select(col("n1"), col("n0"),
-      graft.functions.Num.round(m1 / unitDiv, 2).as("mean_1"),
-      graft.functions.Num.round(m0 / unitDiv, 2).as("mean_0"),
-      graft.functions.Num.round(dEff, 6).as("cohen_d"),
-      graft.functions.Num.round(dEff * (lit(1) - lit(3.0)
-        / (lit(4.0) * (col("n1") + col("n0")) - 9)), 6).as("hedges_g"))
+      round(m1 / 100, 2).as("mean_1"),
+      round(m0 / 100, 2).as("mean_0"),
+      round(dEff, 6).as("cohen_d"),
+      round(dEff * (lit(1) - lit(3.0) / (lit(4.0) * (col("n1") + col("n0")) - 9)), 6).as("hedges_g"))
   }
 
   /** Per-label cosine between the centroids of two deterministic halves
-    * of a vector set (generalizes q_sim_20_centroid_shift) — the
-    * batch-over-batch embedding-drift check. The per-half mean
-    * normalizations cancel in the cosine, so it is computed entirely
-    * from exact integer sums of 1e-6-quantized components (products in
-    * DECIMAL(38,0)). Returns (label, n_a, n_b, centroid_cosine).
+    * of a vector set (the house stable-id hash) — the batch-over-batch
+    * embedding-drift check run after every model refresh (near 1 ⇒
+    * stable geometry). The per-half mean normalizations CANCEL inside
+    * the cosine, so it is computed ENTIRELY from exact integer sums of
+    * 1e-6-quantized components, products in DECIMAL(38,0) — no float
+    * accumulates across rows or dims. posexplode is a projection; the
+    * only shuffle is the (label, dim)-keyed agg. Returns
+    * (labelCol, n_a, n_b, centroid_cosine).
     */
   def centroidShift(df: DataFrame, idCol: String, vecCol: String,
       labelCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val h = df.select(col(idCol), col(labelCol).as("label"), col(vecCol).as("__v"),
-      (col(idCol) % 1000000007L * 2654435761L % 1000000007L % 2).as("__half"))
-    val x = h.select(col("label"), col("__half"),
-        posexplode(col("__v")).as(Seq("__dim", "__c")))
-      .select(col("label"), col("__half"), col("__dim"),
-        floor(col("__c").cast("double") * 1000000L + 0.5).cast("long").as("__q"))
-    val c = x.groupBy("label", "__dim").agg(
-      sum(when(col("__half") === 0, col("__q")).otherwise(0L)).as("__sa"),
-      sum(when(col("__half") === 1, col("__q")).otherwise(0L)).as("__sb"))
-    val n = h.groupBy("label").agg(
-      sum(when(col("__half") === 0, 1L).otherwise(0L)).as("n_a"),
-      sum(when(col("__half") === 1, 1L).otherwise(0L)).as("n_b"))
-    val dd = c.groupBy("label").agg(
-      sum(col("__sa").cast(DecimalType(38, 0)) * col("__sb")).as("__dot"),
-      sum(col("__sa").cast(DecimalType(38, 0)) * col("__sa")).as("__qa"),
-      sum(col("__sb").cast(DecimalType(38, 0)) * col("__sb")).as("__qb"))
-    dd.join(n, "label")
-      .select(col("label").cast("long").as("label"), col("n_a"), col("n_b"),
-        graft.functions.Num.round(col("__dot").cast("double")
-          / (sqrt(col("__qa").cast("double")) * sqrt(col("__qb").cast("double"))), 6)
+    val h = df.select(col(idCol), col(labelCol), col(vecCol),
+      (col(idCol) % 1000000007L * 2654435761L % 1000000007L % 2).as("half"))
+    val x = h.select(col(labelCol), col("half"),
+        posexplode(col(vecCol)).as(Seq("dim", "v")))
+      .select(col(labelCol), col("half"), col("dim"),
+        floor(col("v").cast("double") * 1000000L + 0.5).cast("long").as("q"))
+    val c = x.groupBy(labelCol, "dim").agg(
+      sum(when(col("half") === 0, col("q")).otherwise(0L)).as("sa"),
+      sum(when(col("half") === 1, col("q")).otherwise(0L)).as("sb"))
+    val n = h.groupBy(labelCol).agg(
+      sum(when(col("half") === 0, 1L).otherwise(0L)).as("na"),
+      sum(when(col("half") === 1, 1L).otherwise(0L)).as("nb"))
+    val dd = c.groupBy(labelCol).agg(
+      sum(col("sa").cast(DecimalType(38, 0)) * col("sb")).as("dot"),
+      sum(col("sa").cast(DecimalType(38, 0)) * col("sa")).as("qa"),
+      sum(col("sb").cast(DecimalType(38, 0)) * col("sb")).as("qb"))
+    dd.join(n, labelCol)
+      .select(col(labelCol).cast("long").as(labelCol), col("na").as("n_a"), col("nb").as("n_b"),
+        round(col("dot").cast("double")
+          / (sqrt(col("qa").cast("double")) * sqrt(col("qb").cast("double"))), 6)
           .as("centroid_cosine"))
   }
 
-  /** Winsorized mean per group (generalizes q_agg_32_winsorize): clamp
-    * `valueCol` into [p_lo, p_hi] exact percentiles and average. Keeps
-    * tail rows at the boundary (contrast a trimmed mean, which drops
-    * them); the percentile pass is the only wide exchange and its
-    * per-group boundary table broadcasts back.
-    *
-    * Precision contract (like [[welchTTest]], unlike the declared
-    * query): this generic form averages raw doubles, an IEEE sum whose
-    * low bits depend on partition/merge order — NOT engine-exact.
-    * q_agg_32 itself pre-quantizes to cents and can differ from this
-    * convenience by up to one cent; pre-quantize `valueCol` yourself
-    * if you need deterministic output.
+  /** Winsorized mean per group: clamp `valueCol` into its exact 5th/95th
+    * group percentiles and average — keeps tail rows at the boundary
+    * (contrast a trimmed mean, which drops them). The clamped value is
+    * cents-quantized BEFORE summation, so the mean (rounded to 2 dp) is
+    * an exact-integer sum under any partitioning. ONE array-percentile
+    * buffer per group is the only wide exchange; the boundary table
+    * broadcasts back. Returns (groupCol, n, winsor_mean).
     */
-  def winsorizedMean(df: DataFrame, groupCol: String, valueCol: String,
-      lo: Double = 0.05, hi: Double = 0.95): DataFrame = {
-    val p = df.groupBy(groupCol).agg(
-      expr(s"percentile($valueCol, $lo)").as("__plo"),
-      expr(s"percentile($valueCol, $hi)").as("__phi"))
+  def winsorizedMean(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
+    val p = df.groupBy(groupCol)
+      .agg(expr(s"percentile($valueCol, array(0.05, 0.95))").as("pp"))
+      .select(col(groupCol),
+        element_at(col("pp"), 1).as("p05"), element_at(col("pp"), 2).as("p95"))
+    val cents = when(col(valueCol) < col("p05"),
+        floor(col("p05") * 100 + 0.5).cast("long"))
+      .when(col(valueCol) > col("p95"),
+        floor(col("p95") * 100 + 0.5).cast("long"))
+      .otherwise(floor(col(valueCol) * 100 + 0.5).cast("long"))
     df.join(broadcast(p), groupCol)
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n"),
-        avg(when(col(valueCol) < col("__plo"), col("__plo"))
-          .when(col(valueCol) > col("__phi"), col("__phi"))
-          .otherwise(col(valueCol))).as("winsor_mean"))
+        round(sum(cents).cast("double") / (count(lit(1)).cast("double") * 100), 2)
+          .as("winsor_mean"))
   }
 
-  /** RFM quintile segmentation (generalizes q_stream_27_rfm): per-id
-    * recency/frequency/monetary scores by exact ntile over exact
-    * integers (`tsCol` in micros, `valueCol` pre-quantized) with the id
-    * as tie-break, then segment populations. Score 1 = best.
-    *
-    * Stays distributed at any id cardinality: each score is a
-    * range-partitioned sort + per-partition zipWithIndex (global rank =
-    * partition offset + local index — the partition-count prefix sum is
-    * the only driver-side state), then the ntile bucket is computed
-    * arithmetically from the 0-based rank. Identical output to
-    * `ntile(q) OVER (ORDER BY key DESC, id)` without funnelling every
-    * distinct id through one window partition.
+  /** RFM quintile segmentation over a per-id aggregate table
+    * (idCol, recency, frequency, monetary — exact integers, e.g. last
+    * micros, counts, cents): builtin-identical ntile(5) per axis, DESC
+    * with the id as total-order tie-break (score 1 = best), then the
+    * population of each (r, f, m) segment. Each ntile is
+    * [[exactGlobalRankByN]]/[[exactGlobalRankBy]] + [[ntileOfRank]] —
+    * three range shuffles of the checkpointed table, no one-task window
+    * even when ids scale with the fact; n rides the first rank's count
+    * pass. Returns (r, f, m, n_users).
     */
-  def rfmSegments(df: DataFrame, idCol: String, tsCol: String, valueCol: String,
-      quantiles: Int = 5): DataFrame = {
-    val u = df.groupBy(idCol).agg(max(tsCol).as("__last"),
-      count(lit(1)).as("__freq"), sum(valueCol).as("__mon"))
-      .localCheckpoint()
-    // exact ntile(q) per axis off the shared range-partitioned rank
-    // machinery (exactGlobalRankByN — n rides the count pass, ranks
-    // never cross one task); ntileOfRank is the builtin-identical
-    // bucket assignment
-    val (n, lastRank) = exactGlobalRankByN(u.select(col(idCol), col("__last")),
-      Seq(col("__last").desc, col(idCol)), "__rk")
-    def score(ranked: DataFrame, out: String): DataFrame =
-      ranked.select(col(idCol), ntileOfRank(col("__rk"), n, quantiles).as(out))
-    def rankOf(keyCol: String): DataFrame =
-      exactGlobalRankBy(u.select(col(idCol), col(keyCol)),
-        Seq(col(keyCol).desc, col(idCol)), "__rk")
-    score(lastRank, "r")
-      .join(score(rankOf("__freq"), "f"), idCol)
-      .join(score(rankOf("__mon"), "m"), idCol)
+  def rfmSegments(df: DataFrame, idCol: String, recencyCol: String, freqCol: String,
+      monetaryCol: String): DataFrame = {
+    val u = df.localCheckpoint()
+    val (nU, rRank) = exactGlobalRankByN(u, Seq(col(recencyCol).desc, col(idCol)), "__rk")
+    def score(ranked: DataFrame, out: String) =
+      ranked.select(col(idCol), ntileOfRank(col("__rk"), nU, 5).as(out))
+    score(rRank, "r")
+      .join(score(exactGlobalRankBy(u, Seq(col(freqCol).desc, col(idCol)), "__rk"), "f"), idCol)
+      .join(score(exactGlobalRankBy(u, Seq(col(monetaryCol).desc, col(idCol)), "__rk"), "m"), idCol)
       .groupBy(col("r").cast("long").as("r"), col("f").cast("long").as("f"),
         col("m").cast("long").as("m"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("r", "f", "m")
+      .agg(count(lit(1)).as("n_users"))
   }
 
-  /** HITS hubs/authorities (generalizes q_graph_13_hits) with a
-    * CONFIGURABLE iteration count — the declared query unrolls 2. Each
-    * half-step L1-normalizes through an exact integer-sum ratio
-    * quantized to 1e-6 (so every iteration consumes exact integers);
-    * iteration-invariant edges localCheckpoint once. Returns
-    * (node, authority, hub) for every node with an authority score.
+  /** HITS hubs/authorities, two unrolled iterations: who FEEDS the
+    * important nodes (hub) vs who IS fed by them (authority). Each
+    * half-step is one edge join + integer sum; the L1 normalization is
+    * int/int quantized 1e-6, so the next half-step consumes exact
+    * integers again. Score tables are |V|-sized, so the half-step joins
+    * carry NO broadcast hint (a forced broadcast of a node-scaled table
+    * is a hard failure at 10⁸⁺ nodes; AQE sizes it at runtime) — only
+    * the 1-row L1 total is hinted. `edges` must be distinct (and is read
+    * four times: pass a materialized list). Returns (node, authority,
+    * hub) for every node with an authority score.
     */
-  def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int = 2): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .distinct().localCheckpoint()
-    def l1(df: DataFrame): DataFrame = {
-      val tot = df.agg(sum("__v").as("__tot"))
+  def hits(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    def l1norm(df: DataFrame): DataFrame = {
+      val tot = df.agg(sum("v").as("tot"))
       df.crossJoin(broadcast(tot))
-        .select(col("__n"),
-          floor(col("__v").cast("double") / col("__tot") * 1000000 + 0.5).cast("long").as("__v"))
+        .select(col("node"),
+          floor(col("v").cast("double") / col("tot") * 1000000 + 0.5).cast("long").as("v"))
     }
-    // Score tables are node-scaled — never force-broadcast them (hard
-    // failure at 10⁸⁺ nodes); AQE picks broadcast vs shuffle per join.
-    var hub = l1(e.groupBy(col("__src").as("__n")).agg(count(lit(1)).as("__v")))
-    var auth = l1(e.join(hub, col("__src") === col("__n"))
-      .groupBy(col("__dst").as("__n2")).agg(sum("__v").as("__v"))
-      .withColumnRenamed("__n2", "__n"))
-    for (_ <- 2 to iters) {
-      hub = l1(e.join(auth, col("__dst") === col("__n"))
-        .groupBy(col("__src").as("__n2")).agg(sum("__v").as("__v"))
-        .withColumnRenamed("__n2", "__n")).localCheckpoint()
-      auth = l1(e.join(hub, col("__src") === col("__n"))
-        .groupBy(col("__dst").as("__n2")).agg(sum("__v").as("__v"))
-        .withColumnRenamed("__n2", "__n")).localCheckpoint()
-    }
-    auth.select(col("__n").as("node"), (col("__v") / 1000000.0).as("authority"))
-      .join(hub.select(col("__n").as("__hn"), (col("__v") / 1000000.0).as("hub")),
-        col("node") === col("__hn"), "left_outer")
-      .select(col("node"), col("authority"), coalesce(col("hub"), lit(0.0)).as("hub"))
-  }
-
-  /** k-core: the maximal subgraph where every node has degree >= k
-    * (generalizes q_graph_12_kcore, which reports a fixed 3-round peel
-    * trajectory — this peels to the FIXPOINT). Pure integer set
-    * algebra: degree-filter -> semi-join both endpoints per round, the
-    * surviving edge list localCheckpointed between rounds. Throws if
-    * the peel hasn't converged within `maxIters` (degeneracy peels
-    * remove >= 1 node per round, so |V| rounds always suffice).
-    * Returns the surviving undirected edge list (both directions).
-    */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIters: Int = 100): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct()
-    var cur = e0.union(e0.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .distinct().localCheckpoint()
-    var n = cur.count()
-    var it = 0
-    var converged = false
-    while (!converged) {
-      it += 1
-      if (it > maxIters)
-        throw new IllegalStateException(s"kCore($k) did not converge in $maxIters peels")
-      val keep = cur.groupBy(col("__src").as("__node")).agg(count(lit(1)).as("__dg"))
-        .filter(col("__dg") >= k).select("__node")
-      // keep is node-scaled — no broadcast hint (AQE sizes the semi-joins)
-      val next = cur
-        .join(keep, col("__src") === col("__node"), "left_semi")
-        .join(keep.withColumnRenamed("__node", "__node2"),
-          col("__dst") === col("__node2"), "left_semi")
-        .localCheckpoint()
-      val n2 = next.count()
-      if (n2 == n) converged = true
-      cur = next
-      n = n2
-    }
-    cur.select(col("__src").as(srcCol), col("__dst").as(dstCol))
+    def step(scores: DataFrame, from: String, to: String): DataFrame =
+      l1norm(edges.join(scores, col(from) === col("node"))
+        .groupBy(col(to).as("node2")).agg(sum("v").as("v"))
+        .withColumnRenamed("node2", "node"))
+    val h1 = l1norm(edges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("v")))
+    val a1 = step(h1, srcCol, dstCol)
+    val h2 = step(a1, dstCol, srcCol)
+    val a2 = step(h2, srcCol, dstCol)
+    a2.select(col("node"), col("v"))
+      .join(h2.select(col("node").as("hn"), col("v").as("hv")),
+        col("node") === col("hn"), "left_outer")
+      .select(col("node"), (col("v") / 1000000.0).as("authority"),
+        (coalesce(col("hv"), lit(0L)) / 1000000.0).as("hub"))
   }
 
   /** Deterministic half-sample bootstrap CI for the mean of an exact
-    * integer column (generalizes q_stat_28_bootstrap_ci): `replicates`
-    * resample means, membership by the overflow-safe multiplicative
-    * hash salted with the replicate id (no RNG — reproducible on any
-    * partitioning), CI = the (lo, hi) order statistics of the replicate
-    * means. Returns one row (mean, ci_lo, ci_hi) in integer units.
+    * integer (cents) column: 32 replicates, each the mean over a
+    * hash-selected half of the rows — membership is the overflow-safe
+    * multiplicative hash (q_scan_13 family) salted by replicate id, so
+    * no RNG and any partitioning reproduces it. Each replicate mean
+    * rounds to integer cents BEFORE the sort, so the 2nd/31st picks
+    * compare integers. The input explodes ×32 but aggregates map-side
+    * to 32 groups — one 32-row shuffle at any scale. Returns one row
+    * (mean_all, ci_lo, ci_hi) in units of 1/100, rounded 2 dp.
     */
-  def bootstrapMeanCI(df: DataFrame, idCol: String, valueCol: String,
-      replicates: Int = 32, loRank: Int = 2, hiRank: Int = 31): DataFrame = {
-    require(loRank >= 1 && hiRank <= replicates && loRank < hiRank,
-      s"ranks ($loRank, $hiRank) must sit inside 1..$replicates")
+  def bootstrapMeanCI(df: DataFrame, idCol: String, valueCol: String): DataFrame = {
     val P = 1000000007L
-    val o = df.select(col(idCol).as("__id"), col(valueCol).as("__v")).localCheckpoint()
-    val reps = o.withColumn("__b", explode(expr(s"sequence(1, $replicates)")))
-      .filter(((col("__id") + col("__b") * 131) % P) * 2654435761L % P < P / 2)
-      .groupBy("__b").agg(count(lit(1)).as("__n"), sum("__v").as("__s"))
-    val means = reps.select(floor(col("__s").cast("double") / col("__n") + 0.5)
-      .cast("long").as("__m"))
-    val srt = means.agg(sort_array(collect_list("__m")).as("__ms"))
-    val pt = o.agg((sum("__v").cast("double") / count(lit(1))).as("mean"))
+    val o = df.select(col(idCol), col(valueCol)).localCheckpoint()
+    val reps = o.withColumn("b", explode(expr("sequence(1, 32)")))
+      .filter(((col(idCol) + col("b") * 131) % P) * 2654435761L % P < P / 2)
+      .groupBy("b").agg(count(lit(1)).as("n"), sum(valueCol).as("s"))
+    val means = reps.select(
+      floor(col("s").cast("double") / col("n") + 0.5).cast("long").as("mean_c"))
+    val srt = means.agg(sort_array(collect_list("mean_c")).as("ms"))
+    val pt = o.agg(round(sum(valueCol).cast("double") / count(lit(1)) / 100, 2).as("mean_all"))
     pt.crossJoin(broadcast(srt))
-      // loud-failure contract: a replicate that selects zero rows
-      // produces no group, so the means array shrinks and element_at
-      // would yield a silent null ci bound (or throw under ANSI).
-      // assert_true inside the filter can't be pruned by the optimizer.
-      .filter(assert_true(size(col("__ms")) === replicates,
-        concat(lit(s"bootstrapMeanCI: expected $replicates replicate means, got "),
-          size(col("__ms")),
-          lit(" — at least one replicate selected zero rows"))).isNull)
-      .select(col("mean"),
-        element_at(col("__ms"), loRank).cast("double").as("ci_lo"),
-        element_at(col("__ms"), hiRank).cast("double").as("ci_hi"))
+      .select(col("mean_all"),
+        round(element_at(col("ms"), 2).cast("double") / 100, 2).as("ci_lo"),
+        round(element_at(col("ms"), 31).cast("double") / 100, 2).as("ci_hi"))
   }
 
-  /** MACD over a per-period integer series (generalizes q_win_19_macd):
-    * fast/slow EMAs fold the same materialized prefix list in frame
-    * order; the MACD series re-quantizes to 1e-6 of the emitted unit
-    * BEFORE the signal fold so the second recursion is deterministic.
-    * Returns (period, macd, signal, histogram) for ALL periods.
+  /** MACD(12, 26, 9) over a per-period integer (cents) series: fast EMA
+    * − slow EMA, then an EMA of that difference as the signal line, for
+    * the last `lastN` periods. Both EMAs fold the SAME materialized
+    * prefix list in frame order (seedless DuckDB list_reduce semantics
+    * mirrored with slice+element_at); α = 2/13, 2/27, 0.2 are IEEE
+    * divisions of exact integers, bit-identical across engines. The
+    * MACD series quantizes to 1e-6 of the emitted unit BEFORE the signal
+    * fold, so the second recursion consumes identical doubles. The
+    * prefix lists total O(periods²/2) elements — bounded by the
+    * calendar, not the fact table. Returns (day, macd, signal, histogram).
     */
-  def macd(daily: DataFrame, dayCol: String, valueCol: String,
-      fast: Int = 12, slow: Int = 26, signalSpan: Int = 9,
-      unitDiv: Double = 100.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def macd(daily: DataFrame, dayCol: String, valueCol: String, lastN: Int): DataFrame = {
     val w = Window.orderBy(dayCol).rowsBetween(Window.unboundedPreceding, 0)
     def ema(vals: org.apache.spark.sql.Column, alpha: org.apache.spark.sql.Column) =
       aggregate(slice(vals, lit(2), size(vals) - 1), element_at(vals, 1),
         (a, x) => (lit(1) - alpha) * a + alpha * x)
     val m = daily
-      .select(col(dayCol), collect_list(col(valueCol).cast("double")).over(w).as("__vals"))
+      .select(col(dayCol), collect_list(col(valueCol).cast("double")).over(w).as("vals"))
       .select(col(dayCol),
-        floor((ema(col("__vals"), lit(2.0) / (fast + 1)) - ema(col("__vals"), lit(2.0) / (slow + 1)))
-          / unitDiv * 1000000 + 0.5).cast("long").as("__macd6"))
-    val sig = m.select(col(dayCol), col("__macd6"),
-      collect_list(col("__macd6").cast("double") / 1000000).over(w).as("__ms"))
-    sig.select(col(dayCol).cast("long").as(dayCol),
-      (col("__macd6") / 1000000.0).as("macd"),
-      (floor(aggregate(slice(col("__ms"), lit(2), size(col("__ms")) - 1),
-        element_at(col("__ms"), 1),
-        (a, x) => (lit(1) - lit(2.0) / (signalSpan + 1)) * a + lit(2.0) / (signalSpan + 1) * x)
-        * 10000 + 0.5).cast("long") / 10000.0).as("signal"))
-      .withColumn("histogram",
-        graft.functions.Num.round(col("macd") - col("signal"), 4))
+        floor((ema(col("vals"), lit(2.0) / 13) - ema(col("vals"), lit(2.0) / 27))
+          / 100 * 1000000 + 0.5).cast("long").as("macd6"))
+    val sig = m.select(col(dayCol), col("macd6"),
+      collect_list(col("macd6").cast("double") / 1000000).over(w).as("ms"))
+    val f = sig.select(col(dayCol), col("macd6"),
+        floor(aggregate(slice(col("ms"), lit(2), size(col("ms")) - 1), element_at(col("ms"), 1),
+          (a, x) => lit(0.8) * a + lit(0.2) * x) * 10000 + 0.5).cast("long").as("sig4"))
+      .withColumn("rn", row_number().over(Window.orderBy(col(dayCol).desc)))
+      .filter(col("rn") <= lastN)
+    f.select(col(dayCol).cast("long").as("day"),
+      (col("macd6") / 1000000.0).as("macd"),
+      (col("sig4") / 10000.0).as("signal"),
+      round(col("macd6") / 1000000.0 - col("sig4") / 10000.0, 4).as("histogram"))
   }
 
-  /** Benjamini–Hochberg step-up over ANY p-value table (generalizes
-    * q_stat_25_bh_fdr): ranks ascending p (id tie-break), rejects the
-    * prefix up to the largest k with p_(k) <= k·alpha/m — evaluated as
-    * the exact integer comparison p6·denom <= k·1e6·num where
-    * alpha = num/denom. Returns (id, p, k, rejected).
+  /** Benjamini–Hochberg step-up over a small p-value table: `p6Col` holds
+    * p-values quantized to 1e-6 integers; rank ascending (id tie-break)
+    * and reject the prefix up to the largest k with
+    * p6·m/α ≤ k·1e6 — an exact integer comparison, `mOverAlpha` = m/α
+    * (e.g. 25 tests at α = 0.1 → 250). The rank is one global window:
+    * keep the table test-count-sized. Returns the input plus
+    * (k, rejected).
     */
-  def benjaminiHochberg(df: DataFrame, idCol: String, pCol: String,
-      alphaNum: Int = 1, alphaDenom: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = df.count()
-    // ascending-p rank via the range-partitioned exact rank — no
-    // single-partition window even when the p-value table is large
-    val rk = exactGlobalRank(
-      df.select(col(idCol), col(pCol),
-        floor(col(pCol) * 1000000 + 0.5).cast("long").as("__p6")),
-      Seq("__p6", idCol), "__k")
-    val km = rk.agg(max(when(
-      col("__p6") * m * alphaDenom <= col("__k").cast("long") * 1000000L * alphaNum,
-      col("__k")).otherwise(0)).as("__kmax"))
+  def benjaminiHochberg(df: DataFrame, idCol: String, p6Col: String,
+      mOverAlpha: Long): DataFrame = {
+    val rk = df.withColumn("k", row_number().over(Window.orderBy(col(p6Col), col(idCol))))
+    val km = rk.agg(max(when(col(p6Col) * mOverAlpha <= col("k") * 1000000L, col("k")).otherwise(0L))
+      .as("kmax"))
     rk.crossJoin(broadcast(km))
-      .select(col(idCol), col(pCol), col("__k").cast("long").as("k"),
-        when(col("__k") <= col("__kmax"), 1L).otherwise(0L).as("rejected"))
-      .orderBy("k")
+      .withColumn("rejected", when(col("k") <= col("kmax"), 1L).otherwise(0L))
+      .drop("kmax")
   }
 
-  /** Frequency-weighted mean/variance of `valueCol` with integer
-    * weights (generalizes q_agg_38_weighted_var): three exact BIGINT
-    * weighted power sums, single IEEE expressions out.
+  /** Frequency-weighted mean/variance of an integer `valueCol` with
+    * integer weights: three weighted power sums as exact BIGINTs, mean
+    * and variance single IEEE expressions per group, rounded 1e-4.
+    * Returns (groupCol, w_mean, w_var).
     */
   def weightedVariance(df: DataFrame, groupCol: String, valueCol: String,
       weightCol: String): DataFrame = {
     val m = df.groupBy(groupCol)
-      .agg(sum(weightCol).as("__ws"),
-        sum(col(weightCol) * col(valueCol)).as("__swx"),
-        sum(col(weightCol) * col(valueCol) * col(valueCol)).as("__swxx"))
-    val mean = col("__swx").cast("double") / col("__ws")
+      .agg(sum(weightCol).as("ws"), sum(col(weightCol) * col(valueCol)).as("swx"),
+        sum(col(weightCol) * col(valueCol) * col(valueCol)).as("swxx"))
+    def D(c0: String) = col(c0).cast("double")
     m.select(col(groupCol),
-      graft.functions.Num.round(mean, 4).as("w_mean"),
-      graft.functions.Num.round(col("__swxx").cast("double") / col("__ws") - mean * mean, 4)
+      round(D("swx") / col("ws"), 4).as("w_mean"),
+      round(D("swxx") / col("ws") - (D("swx") / col("ws")) * (D("swx") / col("ws")), 4)
         .as("w_var"))
   }
 
-  /** Duplicate-downweighting (generalizes q_dedup_20_soft_weight):
-    * every row keeps weight floor(1e6/k) where k = its exact-dup
-    * cluster size on `textCol`'s digest — the training-mix alternative
-    * to dropping duplicates. Returns the input plus (w6, cluster_size);
-    * Σ w6/1e6 is the effective corpus size.
+  /** Duplicate downweighting: every row keeps weight floor(1e6/k), k =
+    * its exact-dup cluster size on `textCol`'s md5 digest — the
+    * training-mix alternative to dropping duplicates (it keeps the
+    * distribution while bounding any one text's influence). The weight
+    * is an exact integer, so Σ w6/1e6 (the effective size) is an exact
+    * sum; the digest groupBy is a 16-byte-key shuffle and the weight
+    * join rides the same digest partitioning. Returns (groupCol, w6).
     */
-  def softDedupWeights(df: DataFrame, textCol: String): DataFrame = {
-    val withDigest = df.withColumn("__dg", md5(col(textCol)))
-    val k = withDigest.groupBy("__dg").agg(count(lit(1)).as("cluster_size"))
-    withDigest.join(k, Seq("__dg"))
-      .withColumn("w6", (lit(1000000L) / col("cluster_size")).cast("long"))
-      .drop("__dg")
+  def softDedupWeights(df: DataFrame, groupCol: String, textCol: String): DataFrame = {
+    val c = df.select(col(groupCol), md5(col(textCol)).as("dg"))
+    val k = c.groupBy("dg").agg(count(lit(1)).as("k"))
+    c.join(k, Seq("dg")).select(col(groupCol), (lit(1000000L) / col("k")).cast("long").as("w6"))
   }
 
-  /** FK containment (generalizes one row of q_dq_28_inclusion): the
-    * share of `fact`'s distinct `fkCol` values present in `dim`'s
-    * `keyCol`. Distinct-count + left_semi against the broadcast
-    * dimension key; one row (n_distinct, n_contained, containment).
+  /** FK containment: the share of `fact`'s distinct `fkCol` values
+    * present in `dim`'s (unique) `keyCol`. One distinct on the fact side
+    * + ONE left-outer broadcast join against the dimension key, then a
+    * single aggregate reading both counts off the same pass —
+    * n_contained = count(matched key) IS the semi-join cardinality since
+    * the key is unique. The FK side never carries payload columns into
+    * the shuffle. One row (n_distinct, n_contained, containment).
     */
-  def containment(fact: DataFrame, fkCol: String, dim: DataFrame, keyCol: String): DataFrame = {
-    val f = fact.select(col(fkCol)).distinct().localCheckpoint()
-    val c = f.join(broadcast(dim.select(col(keyCol))), col(fkCol) === col(keyCol), "left_semi")
-    f.agg(count(lit(1)).as("n_distinct"))
-      .crossJoin(c.agg(count(lit(1)).as("n_contained")))
+  def containment(fact: DataFrame, fkCol: String, dim: DataFrame, keyCol: String): DataFrame =
+    fact.select(col(fkCol)).distinct()
+      .join(broadcast(dim.select(col(keyCol))), col(fkCol) === col(keyCol), "left")
+      .agg(count(lit(1)).as("n_distinct"), count(col(keyCol)).as("n_contained"))
       .select(col("n_distinct"), col("n_contained"),
-        graft.functions.Num.round(
-          col("n_contained").cast("double") / col("n_distinct"), 6).as("containment"))
-  }
+        (floor(col("n_contained").cast("double") / col("n_distinct") * 1000000 + 0.5)
+          / 1000000).as("containment"))
 
-  /** Pareto concentration (generalizes q_win_25_pareto): per group, the
-    * smallest number of ids covering `num/denom` of the total integer
-    * `valueCol` — the crossing decided by the exact integer comparison
-    * denom·cum >= num·tot. Returns (group, n_ids, top_n, id_share).
+  /** Pareto concentration: per group, the smallest number of ids
+    * covering 80% of the group's integer `valueCol` total — the inverse
+    * readout of a Lorenz curve. `df` holds one row per (group, id). The
+    * threshold is the exact integer comparison 5·cum ≥ 4·tot (no float
+    * decides the crossing row); the ranking orders on the exact value
+    * with id tie-break. Returns (groupCol, n_ids, top_n, id_share).
     */
-  def pareto(df: DataFrame, groupCol: String, idCol: String, valueCol: String,
-      num: Int = 4, denom: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(num > 0 && denom > 0 && num < denom, s"fraction $num/$denom must sit in (0, 1)")
-    val per = df.groupBy(col(groupCol), col(idCol)).agg(sum(valueCol).as("__v"))
-    val wOrd = Window.partitionBy(groupCol).orderBy(col("__v").desc, col(idCol))
+  def pareto(df: DataFrame, groupCol: String, idCol: String, valueCol: String): DataFrame = {
+    val wOrd = Window.partitionBy(groupCol).orderBy(col(valueCol).desc, col(idCol))
     val wAll = Window.partitionBy(groupCol)
-    val rk = per.select(col(groupCol),
-      sum("__v").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)).as("__cum"),
-      sum("__v").over(wAll).as("__tot"),
-      row_number().over(wOrd).as("__rn"),
-      count(lit(1)).over(wAll).as("__n"))
+    val rk = df.select(col(groupCol), col(valueCol),
+      sum(valueCol).over(wOrd.rowsBetween(Window.unboundedPreceding, 0)).as("cum"),
+      sum(valueCol).over(wAll).as("tot"),
+      row_number().over(wOrd).as("rn"),
+      count(lit(1)).over(wAll).as("n"))
     rk.groupBy(groupCol)
-      .agg(min("__n").as("n_ids"),
-        min(when(lit(denom) * col("__cum") >= lit(num) * col("__tot"), col("__rn")))
-          .cast("long").as("top_n"),
-        graft.functions.Num.round(
-          min(when(lit(denom) * col("__cum") >= lit(num) * col("__tot"), col("__rn")))
-            .cast("double") / min("__n"), 6).as("id_share"))
+      .agg(min("n").as("n_ids"),
+        min(when(lit(5) * col("cum") >= lit(4) * col("tot"), col("rn"))).cast("long")
+          .as("top_n"),
+        (floor(min(when(lit(5) * col("cum") >= lit(4) * col("tot"), col("rn"))).cast("double")
+          / min("n") * 1000000 + 0.5) / 1000000).as("id_share"))
   }
 
-  /** Ratio-to-parent (generalizes q_agg_40_share_of_parent): per
-    * (parent, child), the integer `valueCol` total plus its share of
-    * the parent and of the grand total — both derived from the
-    * aggregate via window sums, never re-scanning the input.
+  /** Ratio-to-parent: for rows of an integer `valueCol` keyed under
+    * `parentCol`, each row's share of its parent and of the grand total — the
+    * ratio-to-parent column every OLAP report adds to a rollup. Both
+    * totals derive from the aggregate via window sums, never
+    * re-scanning the input. Returns the input columns plus
+    * share_of_parent and share_of_total.
     */
-  def shareOfParent(df: DataFrame, parentCol: String, childCol: String,
-      valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val agg = df.groupBy(col(parentCol), col(childCol)).agg(sum(valueCol).as("__v"))
-    agg.select(col(parentCol), col(childCol), col("__v").as("total"),
-      graft.functions.Num.round(col("__v").cast("double")
-        / sum("__v").over(Window.partitionBy(parentCol)), 6).as("share_of_parent"),
-      graft.functions.Num.round(col("__v").cast("double")
-        / sum("__v").over(Window.partitionBy()), 6).as("share_of_total"))
+  def shareOfParent(df: DataFrame, parentCol: String, valueCol: String): DataFrame = {
+    val wr = Window.partitionBy(parentCol)
+    val wt = Window.partitionBy()
+    df.select(col("*"),
+      (floor(col(valueCol).cast("double") / sum(valueCol).over(wr) * 1000000 + 0.5) / 1000000)
+        .as("share_of_parent"),
+      (floor(col(valueCol).cast("double") / sum(valueCol).over(wt) * 1000000 + 0.5) / 1000000)
+        .as("share_of_total"))
   }
 
-  /** Moving-average crossovers (generalizes q_time_18_sma_cross): days
-    * where SMA(fast) crosses SMA(slow) on an integer series, the sign
-    * decided by the exact integer slow·sFast − fast·sSlow (the LCM
-    * form). direction +1 = golden cross (fast moves above slow).
+  /** Moving-average crossovers: periods where SMA(5) of an integer series
+    * crosses SMA(20) — the golden/death-cross regime-change signal.
+    * Complete windows only; the crossing is a sign change of the exact
+    * integer 4·s5 − s20 (the ×20 LCM form, so no float division decides
+    * a crossing) between consecutive periods. Returns (day, direction),
+    * direction +1 = golden cross (fast moves above slow).
     */
-  def smaCrossovers(daily: DataFrame, dayCol: String, valueCol: String,
-      fast: Int = 5, slow: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(fast < slow, s"fast ($fast) must be shorter than slow ($slow)")
-    val wf = Window.orderBy(dayCol).rowsBetween(-(fast - 1), 0)
-    val ws = Window.orderBy(dayCol).rowsBetween(-(slow - 1), 0)
+  def smaCrossovers(daily: DataFrame, dayCol: String, valueCol: String): DataFrame = {
+    val w5 = Window.orderBy(dayCol).rowsBetween(-4, 0)
+    val w20 = Window.orderBy(dayCol).rowsBetween(-19, 0)
     val w = daily.select(col(dayCol),
-      sum(valueCol).over(wf).as("__sf"), count(lit(1)).over(wf).as("__kf"),
-      sum(valueCol).over(ws).as("__ss"), count(lit(1)).over(ws).as("__ks"))
-    val sig = w.filter(col("__kf") === fast && col("__ks") === slow)
-      .select(col(dayCol),
-        (lit(slow) * col("__sf") - lit(fast) * col("__ss")).as("__diff"))
-      .withColumn("__prev", lag("__diff", 1).over(Window.orderBy(dayCol)))
-    sig.filter((col("__prev") <= 0 && col("__diff") > 0)
-        || (col("__prev") > 0 && col("__diff") <= 0))
-      .select(col(dayCol).cast("long").as(dayCol),
-        when(col("__prev") <= 0 && col("__diff") > 0, 1L).otherwise(-1L).as("direction"))
+      sum(valueCol).over(w5).as("s5"), count(lit(1)).over(w5).as("k5"),
+      sum(valueCol).over(w20).as("s20"), count(lit(1)).over(w20).as("k20"))
+    val sig = w.filter(col("k5") === 5 && col("k20") === 20)
+      .select(col(dayCol), (lit(4) * col("s5") - col("s20")).as("diff"))
+      .withColumn("prev", lag("diff", 1).over(Window.orderBy(dayCol)))
+    sig.filter((col("prev") <= 0 && col("diff") > 0) || (col("prev") > 0 && col("diff") <= 0))
+      .select(col(dayCol).cast("long").as("day"),
+        when(col("prev") <= 0 && col("diff") > 0, 1L).otherwise(-1L).as("direction"))
   }
 
-  /** Day-offset retention (generalizes q_stream_32_retention_curve):
-    * for each offset k, the count of ids active exactly k days after
-    * their first day. Activity dedups once; each probe is one semi
-    * join. Returns (offset, n_ids, n_retained, rate).
+  /** D1/D7/D30 retention: of all ids, the share active again exactly
+    * 1/7/30 days after their FIRST day. `df` holds (idCol, dayCol) rows;
+    * the activity dedups once, and each probe is one left_semi join
+    * against it keyed on (id, d0+k); all counts exact integers. One row
+    * (n_users, d1, d7, d30, d1_rate, d7_rate).
     */
-  def retentionCurve(df: DataFrame, idCol: String, tsCol: String,
-      offsets: Seq[Int] = Seq(1, 7, 30)): DataFrame = {
-    require(offsets.nonEmpty && offsets.forall(_ > 0), "offsets must be positive")
-    val ud = df.select(col(idCol), (col(tsCol) / 86400000000L).cast("long").as("__day"))
-      .distinct().localCheckpoint()
-    val f = ud.groupBy(idCol).agg(min("__day").as("__d0")).localCheckpoint()
-    val base = f.count()
-    offsets.map { k =>
-      val probe = ud.select(col(idCol).as("__pid"), col("__day").as("__pday"))
-      val retained = f.join(probe, col(idCol) === col("__pid")
-          && col("__pday") === col("__d0") + k, "left_semi")
-        .count()
-      (k.toLong, base, retained,
-        math.floor(retained.toDouble / base * 1e6 + 0.5) / 1e6)
-    }.foldLeft(Option.empty[DataFrame]) { (acc, row) =>
-      val one = df.sparkSession.createDataFrame(Seq(row))
-        .toDF("offset", "n_ids", "n_retained", "rate")
-      Some(acc.map(_.union(one)).getOrElse(one))
-    }.get
+  def retentionCurve(df: DataFrame, idCol: String, dayCol: String): DataFrame = {
+    val ud = df.distinct().localCheckpoint()
+    val f = ud.groupBy(idCol).agg(min(dayCol).as("d0"))
+    def activeAt(offset: Int) = {
+      val probe = ud.select(col(idCol).as(s"u$offset"), col(dayCol).as(s"day$offset"))
+      f.join(probe, col(idCol) === col(s"u$offset")
+          && col(s"day$offset") === col("d0") + offset, "left_semi")
+        .select(col(idCol).as(s"r$offset"))
+    }
+    val d1 = activeAt(1)
+    val d7 = activeAt(7)
+    val d30 = activeAt(30)
+    f.agg(count(lit(1)).as("n_users"))
+      .crossJoin(d1.agg(count(lit(1)).as("d1")))
+      .crossJoin(d7.agg(count(lit(1)).as("d7")))
+      .crossJoin(d30.agg(count(lit(1)).as("d30")))
+      .select(col("n_users"), col("d1"), col("d7"), col("d30"),
+        (floor(col("d1").cast("double") / col("n_users") * 1000000 + 0.5) / 1000000)
+          .as("d1_rate"),
+        (floor(col("d7").cast("double") / col("n_users") * 1000000 + 0.5) / 1000000)
+          .as("d7_rate"))
   }
 
-  /** Exact distinct via fixed-width bitmaps (generalizes
-    * q_agg_42_bitmap_distinct): non-negative integer `idCol` values
-    * pack into 63-bit words keyed (group, id div 63), OR-aggregated
-    * and popcount-summed. Per-group state is |domain|/63 words
-    * regardless of row count and fully map-side combinable — use when
-    * the id domain is bounded (count(DISTINCT) shuffles every value).
+  /** Exact distinct via fixed-width bitmaps: non-negative integer
+    * `idCol` values pack into 63-bit words keyed (group, id div 63) —
+    * 63 bits keep every mask positive — OR-aggregated and
+    * popcount-summed. Per-group state is |domain|/63 words regardless of
+    * row count and fully map-side combinable: the roaring-bitmap idea in
+    * pure relational algebra (count DISTINCT shuffles every distinct
+    * value; the bitmap shuffles fixed-size words). Returns
+    * (groupCol, n_distinct).
     */
   def bitmapDistinct(df: DataFrame, groupCol: String, idCol: String): DataFrame =
     df.select(col(groupCol),
-        expr(s"$idCol div 63").as("__wd"),
-        expr(s"shiftleft(cast(1 as bigint), cast($idCol % 63 as int))").as("__mask"))
-      .groupBy(groupCol, "__wd")
-      .agg(expr("bit_or(__mask)").as("__bits"))
+        expr(s"$idCol div 63").as("wd"),
+        expr(s"shiftleft(cast(1 as bigint), cast($idCol % 63 as int))").as("mask"))
+      .groupBy(groupCol, "wd")
+      .agg(expr("bit_or(mask)").as("bits"))
       .groupBy(groupCol)
-      .agg(sum(bit_count(col("__bits")).cast("long")).as("n_distinct"))
+      .agg(sum(bit_count(col("bits")).cast("long")).as("n_distinct"))
 
   /** Durbin–Watson statistic of the OLS residual walk over an integer
-    * series (generalizes q_stat_31): fits y ~ a + b·x from five exact
-    * integer sums, quantizes residuals to 1e-3 and differences them
-    * under one lag window. Returns (n, slope, dw); dw << 2 means the
-    * series' trend residuals are positively autocorrelated.
+    * series (x, y): slope/intercept are fixed IEEE expressions over five
+    * exact integer sums; residuals quantize to 1e-3 BEFORE the DW sums,
+    * so engines difference identical integers; one lag window over the
+    * (small, checkpointed) series. Returns (n, slope, dw); dw ≈ 2 means
+    * independent residuals, << 2 positive autocorrelation.
     */
   def durbinWatson(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dly = df.select(col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-      .localCheckpoint()
-    val m = dly.agg(count(lit(1)).as("__k"), sum("__x").as("__sx"), sum("__y").as("__sy"),
-      sum(col("__x") * col("__x")).as("__sxx"), sum(col("__x") * col("__y")).as("__sxy"))
+    val dly = df.localCheckpoint()
+    val m = dly.agg(count(lit(1)).as("k"), sum(xCol).as("sx"), sum(yCol).as("sy"),
+      sum(col(xCol) * col(xCol)).as("sxx"), sum(col(xCol) * col(yCol)).as("sxy"))
     def D(c0: String) = col(c0).cast("double")
-    val ab = m.select(col("__k"),
-        ((D("__k") * col("__sxy") - D("__sx") * col("__sy"))
-          / (D("__k") * col("__sxx") - D("__sx") * col("__sx"))).as("__b"),
-        col("__sx"), col("__sy"))
-      .select(col("__k"), col("__b"),
-        (D("__sy") / col("__k") - col("__b") * (D("__sx") / col("__k"))).as("__a"))
-    val e3 = floor((D("__y") - col("__a") - col("__b") * col("__x")) * 1000 + 0.5).cast("long")
+    val ab = m.select(col("k"), col("sx"), col("sy"),
+        ((D("k") * col("sxy") - D("sx") * col("sy"))
+          / (D("k") * col("sxx") - D("sx") * col("sx"))).as("b"))
+      .select(col("k"), col("b"),
+        (D("sy") / col("k") - col("b") * (D("sx") / col("k"))).as("a"))
+    val e3 = floor((D(yCol) - col("a") - col("b") * col(xCol)) * 1000 + 0.5).cast("long")
     val e = dly.crossJoin(broadcast(ab))
-      .select(col("__x"), col("__b"), e3.as("__e3"))
-      .withColumn("__p3", lag("__e3", 1).over(Window.orderBy("__x")))
-    e.groupBy("__b")
-      .agg(sum(when(col("__p3").isNotNull,
-          (col("__e3") - col("__p3")) * (col("__e3") - col("__p3"))).otherwise(0L)).as("__sd"),
-        sum(col("__e3") * col("__e3")).as("__se"), count(lit(1)).as("n"))
+      .select(col(xCol), col("k"), col("b"), e3.as("e3"))
+      .withColumn("p3", lag(col("e3"), 1).over(Window.orderBy(xCol)))
+    e.groupBy("k", "b")
+      .agg(sum(when(col("p3").isNotNull, (col("e3") - col("p3")) * (col("e3") - col("p3")))
+          .otherwise(0L)).as("sd"),
+        sum(col("e3") * col("e3")).as("se"),
+        count(lit(1)).as("n"))
       .select(col("n"),
-        graft.functions.Num.round(col("__b"), 6).as("slope"),
-        graft.functions.Num.round(col("__sd").cast("double") / col("__se"), 6).as("dw"))
+        (floor(col("b") * 1000000 + 0.5) / 1000000).as("slope"),
+        (floor(col("sd").cast("double") / col("se") * 1000000 + 0.5) / 1000000).as("dw"))
   }
 
-  /** Stochastic oscillator %K/%D (generalizes q_win_27): trailing
-    * `lookback`-row high-low range position of an integer series,
-    * smoothed over `smooth` rows. %K quantizes to 1e-6 BEFORE the %D
-    * average so the second window folds exact integers. Warm-up rows
-    * of both windows are excluded.
+  /** Stochastic oscillator %K/%D of an integer series: where each
+    * period's value sits inside the trailing 14-period high-low envelope
+    * (%K), smoothed by a 3-period SMA (%D). %K quantizes to 1e-6 of the
+    * range position BEFORE the smoothing, so the second window averages
+    * exact integers (the MACD re-quantize-between-recursions rule);
+    * flat windows pin %K to 50. Warm-up rows of BOTH windows are
+    * excluded. Returns (day, pct_k, pct_d).
     */
-  def stochasticOscillator(daily: DataFrame, dayCol: String, valueCol: String,
-      lookback: Int = 14, smooth: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(lookback >= 2 && smooth >= 1, s"bad params ($lookback, $smooth)")
-    val win = Window.orderBy(dayCol).rowsBetween(-(lookback - 1), 0)
-    val w = daily.select(col(dayCol), col(valueCol).as("__v"),
-      count(lit(1)).over(win).as("__k"),
-      min(valueCol).over(win).as("__ll"), max(valueCol).over(win).as("__hh"))
-    val pk = w.filter(col("__k") === lookback)
+  def stochasticOscillator(daily: DataFrame, dayCol: String, valueCol: String): DataFrame = {
+    val win = Window.orderBy(dayCol).rowsBetween(-13, 0)
+    val w = daily.select(col(dayCol), col(valueCol),
+      count(lit(1)).over(win).as("k"),
+      min(valueCol).over(win).as("ll"),
+      max(valueCol).over(win).as("hh"))
+    val pk = w.filter(col("k") === 14)
       .select(col(dayCol),
-        when(col("__hh") === col("__ll"), lit(500000L))
-          .otherwise(floor((col("__v") - col("__ll")).cast("double") * 1000000
-            / (col("__hh") - col("__ll")) + 0.5).cast("long")).as("__k6"))
-    val ws = Window.orderBy(dayCol).rowsBetween(-(smooth - 1), 0)
-    pk.select(col(dayCol), col("__k6"),
-        count(lit(1)).over(ws).as("__m"), sum("__k6").over(ws).as("__s"))
-      .filter(col("__m") === smooth)
-      .select(col(dayCol),
-        (floor(col("__k6").cast("double") / 10000 * 100 + 0.5) / 100).as("pct_k"),
-        (floor(floor(col("__s").cast("double") / smooth + 0.5) / 10000 * 100 + 0.5) / 100)
-          .as("pct_d"))
+        when(col("hh") === col("ll"), lit(500000L))
+          .otherwise(floor((col(valueCol) - col("ll")).cast("double") * 1000000
+            / (col("hh") - col("ll")) + 0.5).cast("long")).as("k6"))
+    val w3 = Window.orderBy(dayCol).rowsBetween(-2, 0)
+    pk.select(col(dayCol), col("k6"),
+        count(lit(1)).over(w3).as("m"), sum("k6").over(w3).as("s3"))
+      .filter(col("m") === 3)
+      .select(col(dayCol).cast("long").as("day"),
+        (floor(col("k6").cast("double") / 10000 * 100 + 0.5) / 100).as("pct_k"),
+        (floor(floor(col("s3").cast("double") / 3 + 0.5) / 10000 * 100 + 0.5) / 100).as("pct_d"))
   }
 
-  /** Consecutive-index set similarity (generalizes q_set_8): Jaccard
-    * between the member sets at index i and i+1 for every i. The
-    * (index, member) relation dedups once; intersections are one
-    * (i+1, member)-keyed self-join.
+  /** Consecutive-index set similarity: Jaccard between the member sets
+    * at index i and i+1 for every i (e.g. month-over-month carry-over).
+    * `df` holds (indexCol: long, memberCol) rows; the relation dedups
+    * once (two-key shuffle) and intersections are one self-join keyed
+    * (i+1, member) — sizes and overlaps are exact integers, Jaccard the
+    * only division. Returns (indexCol, n_prev, n_next, n_common, jaccard).
     */
   def adjacentSetJaccard(df: DataFrame, indexCol: String, memberCol: String): DataFrame = {
-    val ms = df.select(col(indexCol).cast("long").as("__i"), col(memberCol).as("__m"))
-      .distinct().localCheckpoint()
-    val sz = ms.groupBy("__i").agg(count(lit(1)).as("__n"))
+    val ms = df.distinct().localCheckpoint()
+    val sz = ms.groupBy(indexCol).agg(count(lit(1)).as("n"))
     val ix = ms.as("a")
-      .join(ms.as("b"), col("b.__i") === col("a.__i") + 1 && col("b.__m") === col("a.__m"))
-      .groupBy(col("a.__i").as("__i")).agg(count(lit(1)).as("__both"))
+      .join(ms.as("b"),
+        col(s"b.$indexCol") === col(s"a.$indexCol") + 1 && col(s"b.$memberCol") === col(s"a.$memberCol"))
+      .groupBy(col(s"a.$indexCol").as(indexCol)).agg(count(lit(1)).as("both"))
     sz.as("p")
-      .join(sz.as("nx"), col("nx.__i") === col("p.__i") + 1)
-      .join(ix.as("ix"), col("ix.__i") === col("p.__i"), "left_outer")
-      .select(col("p.__i").as(indexCol), col("p.__n").as("n_prev"),
-        col("nx.__n").as("n_next"), coalesce(col("__both"), lit(0L)).as("n_common"),
-        graft.functions.Num.round(coalesce(col("__both"), lit(0L)).cast("double")
-          / (col("p.__n") + col("nx.__n") - coalesce(col("__both"), lit(0L))), 6)
-          .as("jaccard"))
+      .join(sz.as("nx"), col(s"nx.$indexCol") === col(s"p.$indexCol") + 1)
+      .join(ix.as("ix"), col(s"ix.$indexCol") === col(s"p.$indexCol"), "left_outer")
+      .select(col(s"p.$indexCol").as(indexCol), col("p.n").as("n_prev"),
+        col("nx.n").as("n_next"),
+        coalesce(col("both"), lit(0L)).as("n_common"),
+        (floor(coalesce(col("both"), lit(0L)).cast("double")
+          / (col("p.n") + col("nx.n") - coalesce(col("both"), lit(0L))) * 1000000 + 0.5)
+          / 1000000).as("jaccard"))
   }
 
-  /** Character-class quality profile (generalizes q_text_49):
-    * upper/digit/space shares per group via exact length-difference
-    * counting — three codegen'd regex replaces in one scan.
+  /** Character-class quality profile: upper/digit/space shares per group
+    * — the cheap formatting-quality signal that catches shouting,
+    * serial-number dumps and whitespace-padded text before any
+    * tokenization. Length-difference counting (len − len(strip(class)))
+    * keeps the profile in exact integers: three codegen'd regex replaces
+    * in ONE scan, aggregated map-side to |groups| rows.
     */
   def charClassProfile(df: DataFrame, groupCol: String, textCol: String): DataFrame = {
     def cnt(cls: String) =
       (length(col(textCol)) - length(regexp_replace(col(textCol), cls, ""))).cast("long")
-    df.select(col(groupCol), length(col(textCol)).cast("long").as("__n"),
-        cnt("[A-Z]").as("__up"), cnt("[0-9]").as("__dg"), cnt(" ").as("__sp"))
+    df.select(col(groupCol), length(col(textCol)).cast("long").as("n"),
+        cnt("[A-Z]").as("up"), cnt("[0-9]").as("dg"), cnt(" ").as("sp"))
       .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_docs"), sum("__n").as("n_chars"),
-        graft.functions.Num.round(sum("__up").cast("double") / sum("__n"), 6).as("upper_ratio"),
-        graft.functions.Num.round(sum("__dg").cast("double") / sum("__n"), 6).as("digit_ratio"),
-        graft.functions.Num.round(sum("__sp").cast("double") / sum("__n"), 6).as("space_ratio"))
+      .agg(count(lit(1)).as("n_docs"), sum("n").as("n_chars"),
+        round(sum("up").cast("double") / sum("n"), 6).as("upper_ratio"),
+        round(sum("dg").cast("double") / sum("n"), 6).as("digit_ratio"),
+        round(sum("sp").cast("double") / sum("n"), 6).as("space_ratio"))
   }
 
-  /** Cross-document boilerplate share (generalizes q_text_50):
-    * sentences (split on ". ", trimmed, length >= minLen) occurring in
-    * 2+ distinct documents, counted per group. At corpus scale key the
-    * frequency join on xxhash64(sentence) instead of the raw string.
+  /** Cross-document boilerplate: sentences (split on ". ", trimmed,
+    * ≥ 20 chars) occurring verbatim in 2+ DISTINCT documents, and each
+    * group's share of such occurrences — the C4-style template/footer
+    * screen, the corpus-level complement of the intra-document
+    * repetition score. One explode pass; the sentence-frequency table
+    * is sentence-vocabulary-bounded and joins back by sentence text (at
+    * 100 TB join on xxhash64(sentence) digests — same plan, 8-byte keys).
     */
   def boilerplateShare(df: DataFrame, idCol: String, groupCol: String,
-      textCol: String, minLen: Int = 20): DataFrame = {
-    val sen = df.select(col(idCol).as("__id"), col(groupCol),
-        explode(split(col(textCol), "\\. ")).as("__s0"))
-      .select(col("__id"), col(groupCol), trim(col("__s0")).as("__s"))
-      .filter(length(col("__s")) >= minLen)
+      textCol: String): DataFrame = {
+    val sen = df.select(col(idCol), col(groupCol),
+        explode(split(col(textCol), "\\. ")).as("s0"))
+      .select(col(idCol), col(groupCol), trim(col("s0")).as("s"))
+      .filter(length(col("s")) >= 20)
       .localCheckpoint()
-    val freq = sen.groupBy("__s").agg(countDistinct("__id").as("__nd"))
-    sen.join(freq, "__s")
+    val freq = sen.groupBy("s").agg(countDistinct(idCol).as("nd"))
+    sen.join(freq, "s")
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n_sentences"),
-        sum(when(col("__nd") >= 2, 1L).otherwise(0L)).as("n_boiler"),
-        graft.functions.Num.round(sum(when(col("__nd") >= 2, 1L).otherwise(0L)).cast("double")
+        sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_boiler"),
+        round(sum(when(col("nd") >= 2, 1L).otherwise(0L)).cast("double")
           / count(lit(1)), 6).as("boiler_ratio"))
   }
 
-  /** Prefix-fingerprint dup summary (generalizes q_dedup_26): cluster
-    * by the first `prefixLen` characters, report the corpus-level dup
-    * profile in one row.
+  /** Prefix-fingerprint dup summary: cluster by the first 40 characters
+    * — the cheapest near-dup candidate generator (catches re-posts with
+    * edited tails, truncation variants and templated intros that
+    * full-digest exact dedup misses) — and report the corpus-level dup
+    * profile in one row. At 100 TB the group key becomes
+    * xxhash64(prefix), a fixed 8-byte shuffle.
     */
-  def prefixClusters(df: DataFrame, textCol: String, prefixLen: Int = 40): DataFrame =
-    df.groupBy(substring(col(textCol), 1, prefixLen).as("__pfx"))
-      .agg(count(lit(1)).as("__n"))
-      .agg(sum("__n").as("n_docs"), count(lit(1)).as("n_groups"),
-        sum(when(col("__n") >= 2, 1L).otherwise(0L)).as("n_multi_groups"),
-        sum(when(col("__n") >= 2, col("__n") - 1).otherwise(0L)).as("n_dup_docs"),
-        graft.functions.Num.round(
-          sum(when(col("__n") >= 2, col("__n") - 1).otherwise(0L)).cast("double")
-            / sum("__n"), 6).as("dup_ratio"))
+  def prefixClusters(df: DataFrame, textCol: String): DataFrame =
+    df.groupBy(substring(col(textCol), 1, 40).as("pfx"))
+      .agg(count(lit(1)).as("n"))
+      .agg(sum("n").as("n_docs"), count(lit(1)).as("n_groups"),
+        sum(when(col("n") >= 2, 1L).otherwise(0L)).as("n_multi_groups"),
+        sum(when(col("n") >= 2, col("n") - 1).otherwise(0L)).as("n_dup_docs"),
+        round(sum(when(col("n") >= 2, col("n") - 1).otherwise(0L)).cast("double")
+          / sum("n"), 6).as("dup_ratio"))
 
-  /** Ridge shrinkage path (generalizes q_ml_10): two-regressor ridge
-    * coefficients at each λ, solved in closed form on the centered
-    * normal equations from nine exact integer power sums (`xCol`,
-    * `zCol`, `yCol` must already be integer-quantized). One scan for
-    * any number of λs.
+  /** Ridge shrinkage path: two-regressor ridge coefficients at each λ,
+    * solved in closed form on the CENTERED normal equations from nine
+    * exact integer power sums (`xCol`, `zCol`, `yCol` integer-quantized)
+    * in ONE scan — the λ sweep costs 1-row projections, not scans. How
+    * fast each coefficient shrinks is the collinearity readout.
+    * Returns (lam, b_x, b_z).
     */
   def ridgePath(df: DataFrame, xCol: String, zCol: String, yCol: String,
       lambdas: Seq[Long]): DataFrame = {
-    require(lambdas.nonEmpty, "need at least one lambda")
-    val m = df.select(col(xCol).cast("long").as("__x"), col(zCol).cast("long").as("__z"),
-        col(yCol).cast("long").as("__y"))
-      .agg(count(lit(1)).as("__n"), sum("__x").as("__sx"), sum("__z").as("__sz"),
-        sum("__y").as("__sy"),
-        sum(col("__x") * col("__x")).as("__sxx"), sum(col("__x") * col("__z")).as("__sxz"),
-        sum(col("__z") * col("__z")).as("__szz"), sum(col("__x") * col("__y")).as("__sxy"),
-        sum(col("__z") * col("__y")).as("__szy"))
+    val m = df.agg(count(lit(1)).as("n"), sum(xCol).as("sx"), sum(zCol).as("sz"),
+      sum(yCol).as("sy"),
+      sum(col(xCol) * col(xCol)).as("sxx"), sum(col(xCol) * col(zCol)).as("sxz"),
+      sum(col(zCol) * col(zCol)).as("szz"), sum(col(xCol) * col(yCol)).as("sxy"),
+      sum(col(zCol) * col(yCol)).as("szy"))
     def D(c0: String) = col(c0).cast("double")
-    val c = m.select(
-      (D("__sxx") - D("__sx") * col("__sx") / col("__n")).as("__cxx"),
-      (D("__sxz") - D("__sx") * col("__sz") / col("__n")).as("__cxz"),
-      (D("__szz") - D("__sz") * col("__sz") / col("__n")).as("__czz"),
-      (D("__sxy") - D("__sx") * col("__sy") / col("__n")).as("__cxy"),
-      (D("__szy") - D("__sz") * col("__sy") / col("__n")).as("__czy"))
-    val withLam = c.withColumn("lambda", explode(array(lambdas.map(lit): _*)))
-    val det = ((col("__cxx") + col("lambda")) * (col("__czz") + col("lambda"))
-      - col("__cxz") * col("__cxz"))
-    withLam.select(col("lambda"),
-      graft.functions.Num.round((col("__cxy") * (col("__czz") + col("lambda"))
-        - col("__cxz") * col("__czy")) / det, 6).as("b_x"),
-      graft.functions.Num.round(((col("__cxx") + col("lambda")) * col("__czy")
-        - col("__cxz") * col("__cxy")) / det, 6).as("b_z"))
+    val c = m.select(col("n"),
+      (D("sxx") - D("sx") * col("sx") / col("n")).as("cxx"),
+      (D("sxz") - D("sx") * col("sz") / col("n")).as("cxz"),
+      (D("szz") - D("sz") * col("sz") / col("n")).as("czz"),
+      (D("sxy") - D("sx") * col("sy") / col("n")).as("cxy"),
+      (D("szy") - D("sz") * col("sy") / col("n")).as("czy"))
+    val withLam = c.withColumn("lam", explode(array(lambdas.map(lit): _*)))
+    val det = (col("cxx") + col("lam")) * (col("czz") + col("lam")) - col("cxz") * col("cxz")
+    withLam.select(col("lam"),
+      (floor((col("cxy") * (col("czz") + col("lam")) - col("cxz") * col("czy"))
+        / det * 1000000 + 0.5) / 1000000).as("b_x"),
+      (floor(((col("cxx") + col("lam")) * col("czy") - col("cxz") * col("cxy"))
+        / det * 1000000 + 0.5) / 1000000).as("b_z"))
   }
 
-  /** Token-budget water-filling (generalizes q_pipe_4): allocate
-    * `budgetNum/budgetDen` of the total integer weight across groups —
-    * equal shares first, then one redistribution of the slack left by
-    * groups below the fair share. Pure integer division end to end.
-    * Returns (group, available, alloc1, alloc_final, exhausted).
+  /** Budget water-filling: allocate HALF the total integer `weight`
+    * across groups — equal shares first, then one redistribution of the
+    * slack that capped (small) groups couldn't use (a proportional
+    * rebalance never reclaims slack). Pure integer division end to end;
+    * two aggregate barriers (totals, slack), both 1-row broadcasts.
+    * Returns (groupCol, available, alloc1, alloc_final, exhausted).
     */
-  def waterfillBudget(df: DataFrame, groupCol: String, weightCol: String,
-      budgetNum: Long = 1L, budgetDen: Long = 2L): DataFrame = {
-    require(budgetNum > 0 && budgetDen > 0 && budgetNum <= budgetDen,
-      s"budget fraction $budgetNum/$budgetDen must sit in (0, 1]")
-    val src = df.groupBy(groupCol).agg(sum(col(weightCol).cast("long")).as("__t"))
+  def waterfillBudget(df: DataFrame, groupCol: String,
+      weight: org.apache.spark.sql.Column): DataFrame = {
+    val src = df.groupBy(groupCol).agg(sum(weight).as("toks"))
       .localCheckpoint()
-    val tot = src.agg(expr(s"sum(__t) * $budgetNum div $budgetDen").as("__budget"),
-      count(lit(1)).as("__ng"))
+    val tot = src.agg(expr("sum(toks) div 2").as("budget"), count(lit(1)).as("n"))
     val r1 = src.crossJoin(broadcast(tot))
-      .select(col(groupCol), col("__t"), col("__budget"),
-        expr("__budget div __ng").as("__fair"),
-        least(col("__t"), expr("__budget div __ng")).as("__a1"))
+      .select(col(groupCol), col("toks"), col("budget"),
+        expr("budget div n").as("fair"),
+        least(col("toks"), expr("budget div n")).as("alloc1"))
       .localCheckpoint()
-    val slack = r1.agg((min("__budget") - sum("__a1")).as("__left"),
-      sum(when(col("__t") > col("__fair"), 1L).otherwise(0L)).as("__m"))
+    val slack = r1.agg((min("budget") - sum("alloc1")).as("leftover"),
+      sum(when(col("toks") > col("fair"), 1L).otherwise(0L)).as("m"))
     r1.crossJoin(broadcast(slack))
-      .select(col(groupCol), col("__t").as("available"), col("__a1").as("alloc1"),
-        when(col("__t") > col("__fair"),
-          least(col("__t"), col("__fair")
-            + when(col("__m") > 0, expr("__left div __m")).otherwise(lit(0L))))
-          .otherwise(col("__a1")).cast("long").as("alloc_final"),
-        when(col("__t") <= col("__fair"), 1L).otherwise(0L).as("exhausted"))
+      .select(col(groupCol), col("toks").as("available"), col("alloc1"),
+        when(col("toks") > col("fair"),
+          least(col("toks"), col("fair")
+            + when(col("m") > 0, expr("leftover div m")).otherwise(lit(0L))))
+          .otherwise(col("alloc1")).cast("long").as("alloc_final"),
+        when(col("toks") <= col("fair"), 1L).otherwise(0L).as("exhausted"))
   }
 
-  /** Retrieval exposure share (generalizes q_ret_9): per item-label
-    * share of the 1e6-quantized DCG mass across every query group's
-    * top-`k` ranking (rank by `scoreCol` DESC, `idCol` tie-break).
+  /** Retrieval exposure share: per item label, its share of the
+    * 1e6-quantized DCG mass across every query group's top-10 ranking
+    * (rank by `scoreCol` DESC, `idCol` tie-break) — the fairness/bias
+    * audit of a retrieval stack (nDCG scores one ranking's quality; this
+    * measures who GETS RANKED across many). Per-group ranking windows
+    * (per-partition heaps at scale); the discount weights are q_ret_1's
+    * plan-time integers ([[graft.operators.Round4Ops.ndcgW]]), so the
+    * shares divide exact BIGINTs. Returns (labelCol, n_slots,
+    * exposure_share).
     */
   def exposureShare(df: DataFrame, queryCol: String, labelCol: String,
-      scoreCol: String, idCol: String, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 1 && k <= 1000, s"k=$k out of range")
-    val wts = (1 to k).map(r => math.floor(1e6 * math.log(2) / math.log(r + 1.0) + 0.5).toLong)
-    val wArr = array(wts.map(lit): _*)
+      scoreCol: String, idCol: String): DataFrame = {
     val w = Window.partitionBy(queryCol).orderBy(col(scoreCol).desc, col(idCol))
-    val mass = df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
+    val wArr = array(graft.operators.Round4Ops.ndcgW.map(lit): _*)
+    df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 10)
       .groupBy(labelCol)
       .agg(count(lit(1)).as("n_slots"),
-        sum(element_at(wArr, col("__rn").cast("int"))).as("__w6"))
-    mass.withColumn("__tot", sum("__w6").over(Window.partitionBy()))
+        sum(element_at(wArr, col("rn").cast("int"))).as("w6"))
+      .withColumn("tot", sum("w6").over(Window.partitionBy()))
       .select(col(labelCol), col("n_slots"),
-        graft.functions.Num.round(col("__w6").cast("double") / col("__tot"), 6)
+        (floor(col("w6").cast("double") / col("tot") * 1000000 + 0.5) / 1000000)
           .as("exposure_share"))
   }
 
-  /** k-truss fixpoint (generalizes q_graph_16's two-round trajectory):
-    * repeatedly drop edges in fewer than `k − 2` triangles until the
-    * edge set stabilizes. Support is one canonical-orientation wedge
-    * join per round; edge lists localCheckpoint between rounds.
-    * Returns the surviving canonical (src < dst) edge list.
-    */
-  def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIters: Int = 100): DataFrame = {
-    require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val e0 = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct()
-    val b0 = e0.union(e0.select(col("__d").as("__s"), col("__s").as("__d")))
-      .distinct().localCheckpoint()
-    var canon = b0.filter(col("__s") < col("__d"))
-      .select(col("__s").as("__u"), col("__d").as("__v")).localCheckpoint()
-    var n = canon.count()
-    var it = 0
-    var converged = n == 0
-    while (!converged) {
-      it += 1
-      if (it > maxIters)
-        throw new IllegalStateException(s"kTruss($k) did not converge in $maxIters peels")
-      val bi = canon.select(col("__u").as("__s"), col("__v").as("__d"))
-        .union(canon.select(col("__v").as("__s"), col("__u").as("__d")))
-        .localCheckpoint()
-      val next = canon
-        .join(bi.select(col("__s").as("__u"), col("__d").as("__w")), Seq("__u"))
-        .join(bi.select(col("__s").as("__v"), col("__d").as("__w")), Seq("__v", "__w"))
-        .groupBy("__u", "__v").agg(count(lit(1)).as("__sup"))
-        .filter(col("__sup") >= k - 2)
-        .select("__u", "__v").localCheckpoint()
-      val n2 = next.count()
-      if (n2 == n || n2 == 0) converged = true
-      canon = next
-      n = n2
-    }
-    canon.select(col("__u").as(srcCol), col("__v").as(dstCol))
-  }
-
-  /** Top event-type n-gram paths (generalizes q_stream_34's trigrams):
-    * the most common `n`-step sequences per id stream, ranked. One
-    * window pass with `n − 1` leads; the aggregate is |types|ⁿ-bounded.
+  /** Top event-type trigram paths: the 10 most common 3-step sequences
+    * per id stream (ordered by `tsCol`, `tieCol`), ranked by count with
+    * ties broken on the path string — funnel DISCOVERY. Two leads in
+    * ONE window pass (same frame), then a |types|³-bounded aggregate.
+    * Returns (path, n).
     */
   def pathNgrams(df: DataFrame, idCol: String, tsCol: String, typeCol: String,
-      tieCol: String, n: Int = 3, topK: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(n >= 2 && n <= 6, s"n=$n out of range")
+      tieCol: String): DataFrame = {
     val w = Window.partitionBy(idCol).orderBy(tsCol, tieCol)
-    val withLeads = (1 until n).foldLeft(
-      df.select(col(idCol), col(tsCol), col(tieCol), col(typeCol).as("__e0"))) {
-      (acc, i) => acc.withColumn(s"__e$i", lead(col("__e0"), i).over(w))
-    }
-    val parts = (0 until n).map(i => col(s"__e$i"))
-    withLeads.filter(parts.drop(1).map(_.isNotNull).reduce(_ && _))
-      .groupBy(concat_ws(">", parts: _*).as("path"))
+    df.select(col(idCol), col(typeCol),
+        lead(col(typeCol), 1).over(w).as("e2"),
+        lead(col(typeCol), 2).over(w).as("e3"))
+      .filter(col("e2").isNotNull && col("e3").isNotNull)
+      .groupBy(concat_ws(">", col(typeCol), col("e2"), col("e3")).as("path"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("path")).limit(topK)
+      .orderBy(col("n").desc, col("path")).limit(10)
   }
 
-  /** Churn counts at inactivity horizons (generalizes q_stream_35):
-    * ids whose last activity is `h`+ days before the corpus's last
-    * day, for each horizon. Returns (horizon, n_ids, n_churned, rate).
+  /** Churn counts at 3/7/14-day inactivity horizons, measured against
+    * the input's last observed day: one per-id max + one scalar max
+    * broadcast; the horizons are CASE sums over the same per-id row —
+    * integer day arithmetic throughout. One row (n_users, churn_3d,
+    * churn_7d, churn_14d, churn_7d_rate).
     */
-  def churnHorizons(df: DataFrame, idCol: String, tsCol: String,
-      horizons: Seq[Int] = Seq(3, 7, 14)): DataFrame = {
-    require(horizons.nonEmpty && horizons.forall(_ >= 0), "horizons must be >= 0")
-    val u = df.groupBy(idCol)
-      .agg(max((col(tsCol) / 86400000000L).cast("long")).as("__last"))
-      .localCheckpoint()
-    val mx = u.agg(max("__last").as("__maxd"))
-    // all horizons fold into ONE aggregation pass / ONE driver action
-    // (per-horizon conditional sums) instead of one collect per horizon
-    val aggCols = count(lit(1)).as("__n") +: horizons.map(h =>
-      sum(when(col("__last") <= col("__maxd") - h, 1L).otherwise(0L)).as(s"__c$h"))
-    val row = u.crossJoin(broadcast(mx))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect().head
-    val n = row.getLong(0)
-    val rows = horizons.zipWithIndex.map { case (h, i) =>
-      val c = row.getLong(i + 1)
-      (h.toLong, n, c, math.floor(c.toDouble / n * 1e6 + 0.5) / 1e6)
-    }
-    df.sparkSession.createDataFrame(rows)
-      .toDF("horizon", "n_ids", "n_churned", "rate")
+  def churnHorizons(df: DataFrame, idCol: String, day: org.apache.spark.sql.Column): DataFrame = {
+    val u = df.groupBy(idCol).agg(max(day).as("last_day")).localCheckpoint()
+    val mx = u.agg(max("last_day").as("maxd"))
+    u.crossJoin(broadcast(mx))
+      .agg(count(lit(1)).as("n_users"),
+        sum(when(col("last_day") <= col("maxd") - 3, 1L).otherwise(0L)).as("churn_3d"),
+        sum(when(col("last_day") <= col("maxd") - 7, 1L).otherwise(0L)).as("churn_7d"),
+        sum(when(col("last_day") <= col("maxd") - 14, 1L).otherwise(0L)).as("churn_14d"),
+        round(sum(when(col("last_day") <= col("maxd") - 7, 1L).otherwise(0L)).cast("double")
+          / count(lit(1)), 6).as("churn_7d_rate"))
   }
 
-  /** Pairwise label-centroid cosine matrix (generalizes q_sim_33):
-    * components quantize to 1e8 integers, centroids to rounded integer
-    * means, the pair dots/norms are exact BIGINT sums — the corpus is
-    * touched once, the |labels|² join runs over broadcast-sized rows.
+  /** Pairwise label-centroid cosine matrix: every label pair's centroid
+    * cosine — the inter-class geometry table, the confusion-risk map of
+    * an embedding space. Components quantize to 1e8 integers, centroids
+    * to rounded integer means, and the pair dots/norms are exact BIGINT
+    * sums: the corpus is touched once, the |labels|² join runs over
+    * broadcast-sized centroid rows. Returns (label_a, label_b, cos_ab).
     */
   def centroidMatrix(df: DataFrame, labelCol: String, vecCol: String): DataFrame = {
-    val e = df.select(col(labelCol).as("__l"), posexplode(col(vecCol)).as(Seq("__p", "__v")))
-      .select(col("__l"), col("__p"),
-        floor(col("__v").cast("double") * 100000000L + 0.5).cast("long").as("__vi"))
-    val cl = e.groupBy("__l", "__p")
-      .agg(floor(sum("__vi").cast("double") / count(lit(1)) + 0.5).cast("long").as("__c"))
+    val e = df.select(col(labelCol), posexplode(col(vecCol)).as(Seq("pos", "v")))
+      .select(col(labelCol), col("pos"),
+        floor(col("v").cast("double") * 100000000L + 0.5).cast("long").as("vi"))
+    val cl = e.groupBy(labelCol, "pos")
+      .agg(floor(sum("vi").cast("double") / count(lit(1)) + 0.5).cast("long").as("c"))
       .localCheckpoint()
-    val a = cl.select(col("__l").as("__la"), col("__p"), col("__c").as("__ca"))
-    val b = cl.select(col("__l").as("__lb"), col("__p"), col("__c").as("__cb"))
-    a.join(b, Seq("__p")).filter(col("__la") < col("__lb"))
-      .groupBy(col("__la").as("label_a"), col("__lb").as("label_b"))
-      .agg(sum(col("__ca") * col("__cb")).as("__dot"),
-        sum(col("__ca") * col("__ca")).as("__qa"),
-        sum(col("__cb") * col("__cb")).as("__qb"))
+    val a = cl.select(col(labelCol).as("la"), col("pos"), col("c").as("ca"))
+    val b = cl.select(col(labelCol).as("lb"), col("pos"), col("c").as("cb"))
+    a.join(b, Seq("pos")).filter(col("la") < col("lb"))
+      .groupBy(col("la").as("label_a"), col("lb").as("label_b"))
+      .agg(sum(col("ca") * col("cb")).as("dot"),
+        sum(col("ca") * col("ca")).as("qa"),
+        sum(col("cb") * col("cb")).as("qb"))
       .select(col("label_a"), col("label_b"),
-        graft.functions.Num.round(col("__dot").cast("double")
-          / (sqrt(col("__qa").cast("double")) * sqrt(col("__qb").cast("double"))), 6)
-          .as("cos_ab"))
+        (floor(col("dot").cast("double")
+          / (sqrt(col("qa").cast("double")) * sqrt(col("qb").cast("double")))
+          * 1000000 + 0.5) / 1000000).as("cos_ab"))
   }
 
-  /** Directed k-NN cosine graph (generalizes the q_sim_35/36 base):
-    * (src, dst, rank, cos) for each row's k nearest neighbors, ranked
-    * (cos DESC, dst ASC) with the bit-exact float-fold cosine. Brute
-    * force — bound the input or feed LSH/IVF candidates at corpus
+  /** Directed k-NN cosine graph: (src, dst, cos, rk) for each row's k
+    * nearest neighbors, ranked (cos DESC, dst ASC) with the bit-exact
+    * cosine fold. Brute force over a broadcast copy — bound the input
+    * (a constant-size eval slice) or feed LSH/IVF candidates at corpus
     * scale; the per-src rank window is the only shuffle.
     */
   def knnGraph(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val pairs = v.as("a").join(broadcast(v.as("b")), col("a.__id") =!= col("b.__id"))
-      .select(col("a.__id").as("src"), col("b.__id").as("dst"),
-        graft.functions.VectorFunctions.cosine(col("a.__v"), col("b.__v")).as("cos"))
-    pairs.withColumn("rank",
-        row_number().over(Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))).cast("long"))
-      .filter(col("rank") <= k)
+    val pairs = df.as("a").join(broadcast(df.as("b")), col(s"a.$idCol") =!= col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("src"), col(s"b.$idCol").as("dst"),
+        graft.functions.VectorFunctions.cosine(col(s"a.$vecCol"), col(s"b.$vecCol")).as("cos"))
+    pairs.withColumn("rk",
+        row_number().over(Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))))
+      .filter(col("rk") <= k)
   }
 
-  /** In-degree histogram of a directed edge list (the hubness readout
-    * of q_sim_35 over any kNN graph): (indeg, n_nodes), zero bin
-    * included via the node universe. O(E) aggregate.
+  /** In-degree histogram of a directed edge list over a node universe
+    * (the hubness readout of a kNN graph): (indeg, n_nodes), the zero
+    * bin included via `nodes`. O(E) aggregate; a heavy right tail means
+    * a few hub vectors sit in a disproportionate share of neighbor lists.
     */
-  def hubnessHistogram(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val nodes = edges.select(col(srcCol).as("__n")).distinct()
-    val ind = edges.groupBy(col(dstCol).as("__n")).agg(count(lit(1)).as("__indeg"))
-    nodes.join(ind, Seq("__n"), "left")
-      .select(coalesce(col("__indeg"), lit(0L)).as("indeg"))
+  def hubnessHistogram(nodes: DataFrame, idCol: String, edges: DataFrame,
+      dstCol: String): DataFrame = {
+    val ind = edges.groupBy(col(dstCol).as(idCol)).agg(count(lit(1)).as("indeg"))
+    nodes.select(idCol).join(ind, Seq(idCol), "left")
+      .select(coalesce(col("indeg"), lit(0L)).as("indeg"))
       .groupBy("indeg").agg(count(lit(1)).as("n_nodes"))
   }
 
-  /** Mean pairwise cosine per group + global (-1 key) WITHOUT the pair
-    * space, via the centroid-sum identity (‖Σu‖²−Σ‖uᵢ‖²)/(n(n−1)) on
-    * 1e-3-quantized unit vectors (generalizes q_sim_38). One O(n·dim)
-    * pass; all cross-row arithmetic is exact BIGINT keyed (group, dim).
+  /** Anisotropy WITHOUT the pair space: mean pairwise cosine of unit
+    * vectors per group and globally (group -1) via the centroid-sum
+    * identity mean_{i≠j} uᵢ·uⱼ = (‖Σu‖² − Σ‖uᵢ‖²) / (n(n−1)) — a high
+    * value means vectors crowd a narrow cone and cosine loses contrast.
+    * One O(n·dim) pass: unit components quantize to 1e-3 integers per
+    * row, all cross-row sums are exact BIGINT keyed (group, dim).
+    * Returns (groupCol, n, mean_cos).
     */
   def anisotropy(df: DataFrame, groupCol: String, vecCol: String): DataFrame = {
-    val u = df.select(col(groupCol).cast("long").as("__g"), col(vecCol).as("__v"))
-      .withColumn("__nrm", graft.functions.VectorFunctions.l2norm(col("__v")))
-      .filter(col("__nrm") > 0)
-    val ex = u.select(col("__g"), col("__nrm"), posexplode(col("__v")).as(Seq("__d", "__x")))
-      .select(col("__g"), col("__d"),
-        floor(col("__x").cast("double") / col("__nrm") * 1000 + 0.5).cast("long").as("__uq"))
-    val grp = ex.groupBy("__g", "__d")
-      .agg(sum("__uq").as("__sd"), sum(col("__uq") * col("__uq")).as("__ssq"),
-        count(lit(1)).as("__n"))
+    val u = df.withColumn("nrm", graft.functions.VectorFunctions.l2norm(col(vecCol)))
+      .filter(col("nrm") > 0)
+    val ex = u.select(col(groupCol), col("nrm"), posexplode(col(vecCol)).as(Seq("d", "x")))
+      .select(col(groupCol), col("d"),
+        floor(col("x").cast("double") / col("nrm") * 1000 + 0.5).cast("long").as("uq"))
+    val grp = ex.groupBy(groupCol, "d")
+      .agg(sum("uq").as("sd"), sum(col("uq") * col("uq")).as("ssq"),
+        count(lit(1)).as("n"))
       .localCheckpoint()
-    val lab = grp.groupBy("__g")
-      .agg(sum(col("__sd") * col("__sd")).as("__num"), sum("__ssq").as("__selfsum"),
-        max("__n").as("__n"))
-    val gl = grp.groupBy("__d").agg(sum("__sd").as("__sd"), sum("__ssq").as("__ssq"))
-    val glr = gl.agg(sum(col("__sd") * col("__sd")).as("__num"), sum("__ssq").as("__selfsum"))
-      .crossJoin(u.agg(count(lit(1)).as("__n")))
-      .select(lit(-1L).as("__g"), col("__num"), col("__selfsum"), col("__n"))
-    lab.select(col("__g"), col("__num"), col("__selfsum"), col("__n")).union(glr)
-      .select(col("__g").as(groupCol), col("__n").as("n"),
-        (floor((col("__num") - col("__selfsum")).cast("double")
-          / (lit(1000000.0) * col("__n") * (col("__n") - 1)) * 1000000 + 0.5) / 1000000)
+    val lab = grp.groupBy(groupCol)
+      .agg(sum(col("sd") * col("sd")).as("num"), sum("ssq").as("selfsum"),
+        max("n").as("n"))
+    val gl = grp.groupBy("d")
+      .agg(sum("sd").as("sd"), sum("ssq").as("ssq"))
+    val glr = gl.agg(sum(col("sd") * col("sd")).as("num"), sum("ssq").as("selfsum"))
+      .crossJoin(u.agg(count(lit(1)).as("n")))
+      .select(lit(-1).as(groupCol), col("num"), col("selfsum"), col("n"))
+    lab.select(col(groupCol), col("num"), col("selfsum"), col("n")).union(glr)
+      .select(col(groupCol), col("n"),
+        (floor(
+          (col("num") - col("selfsum")).cast("double")
+            / (lit(1000000.0) * col("n") * (col("n") - 1)) * 1000000 + 0.5) / 1000000)
           .as("mean_cos"))
   }
 
-  /** Synchronous label propagation (generalizes q_graph_18): `rounds`
-    * supersteps of "adopt the most frequent neighbor label, ties →
-    * smallest", from label = node id, over the symmetrized edge list.
-    * Returns (node, label). Each superstep is one join + one window;
-    * labels localCheckpoint per round so lineage stays O(1).
+  /** Synchronous label propagation: `rounds` supersteps of "adopt the
+    * most frequent neighbor label, ties → smallest", from label = node
+    * id, over a symmetrized distinct edge list. Each superstep is one
+    * (edges ⋈ labels) shuffle + a per-node window — the Pregel
+    * superstep as declarative joins; labels localCheckpoint per round so
+    * lineage stays O(1). Synchronous + deterministic tie-break ⇒ the
+    * trajectory is reproducible across any partitioning. Returns
+    * (node, lab).
     */
-  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
+  def labelPropagation(bidirEdges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct()
-    val b = e0.union(e0.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .distinct().localCheckpoint()
-    var labels = b.select(col("__src").as("__node")).distinct()
-      .withColumn("__lab", col("__node")).localCheckpoint()
+    var labels = bidirEdges.select(col(srcCol).as("node")).distinct()
+      .withColumn("lab", col("node")).localCheckpoint()
     for (_ <- 1 to rounds) {
-      val cnt = b.join(labels.withColumnRenamed("__node", "__nbr"), col("__dst") === col("__nbr"))
-        .groupBy(col("__src").as("__node"), col("__lab")).agg(count(lit(1)).as("__c"))
-      val w = Window.partitionBy("__node").orderBy(col("__c").desc, col("__lab"))
-      labels = cnt.withColumn("__rk", row_number().over(w)).filter(col("__rk") === 1)
-        .select("__node", "__lab").localCheckpoint()
+      val cnt = bidirEdges.join(labels.withColumnRenamed("node", "nbr"), col(dstCol) === col("nbr"))
+        .groupBy(col(srcCol).as("node"), col("lab")).agg(count(lit(1)).as("c"))
+      val w = Window.partitionBy("node").orderBy(col("c").desc, col("lab"))
+      labels = cnt.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+        .select("node", "lab").localCheckpoint()
     }
-    labels.select(col("__node").as("node"), col("__lab").as("label"))
+    labels
   }
 
-  /** Adamic–Adar link prediction (generalizes q_graph_19): non-adjacent
-    * pairs sharing ≥1 neighbor scored Σ 1/ln(deg(z)), weights quantized
-    * to 1e-6 ints per neighbor BEFORE the pair sum. Candidates come
-    * from the wedge join (O(Σ deg²), never all-pairs). Returns
-    * (a, b, n_common, score).
+  /** Adamic–Adar link prediction over a symmetrized distinct edge list:
+    * non-adjacent pairs (a < b) sharing ≥1 neighbor, scored Σ 1/ln(deg(z))
+    * — a shared rare neighbor says more than a shared hub. Candidates
+    * come from the wedge join (O(Σ deg²), never all-pairs); the weight
+    * quantizes to a 1e-6 integer PER NEIGHBOR so the pair sum is exact
+    * in any shuffle order (the dg ≥ 2 guard keeps ln(1) = 0 out of the
+    * divisor). Adjacent pairs drop via an anti join; the node-scaled
+    * weight table carries no broadcast hint (AQE sizes it). Returns
+    * (a, b, n_common, score6).
     */
-  def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct()
-    val b = e0.union(e0.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .distinct().localCheckpoint()
-    val w = b.groupBy(col("__src").as("__node")).agg(count(lit(1)).as("__dg"))
-      .filter(col("__dg") >= 2)
-      .select(col("__node"),
-        floor(lit(1000000) / log(col("__dg").cast("double")) + 0.5).cast("long").as("__wz"))
-    b.as("x").join(b.as("y"), col("x.__dst") === col("y.__dst") && col("x.__src") < col("y.__src"))
-      .select(col("x.__src").as("a"), col("y.__src").as("b"), col("x.__dst").as("__z"))
-      .join(b.select(col("__src").as("__ea"), col("__dst").as("__eb")),
-        col("a") === col("__ea") && col("b") === col("__eb"), "left_anti")
-      .join(broadcast(w), col("__z") === col("__node"))
+  def adamicAdar(bidirEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val w = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("dg"))
+      .filter(col("dg") >= 2)
+      .select(col("node"),
+        floor(lit(1000000) / log(col("dg").cast("double")) + 0.5).cast("long").as("wz"))
+    bidirEdges.as("x").join(bidirEdges.as("y"),
+        col(s"x.$dstCol") === col(s"y.$dstCol") && col(s"x.$srcCol") < col(s"y.$srcCol"))
+      .select(col(s"x.$srcCol").as("a"), col(s"y.$srcCol").as("b"), col(s"x.$dstCol").as("z"))
+      .join(bidirEdges.select(col(srcCol).as("ea"), col(dstCol).as("eb")),
+        col("a") === col("ea") && col("b") === col("eb"), "left_anti")
+      .join(w, col("z") === col("node"))
       .groupBy("a", "b")
-      .agg(count(lit(1)).as("n_common"), sum("__wz").as("__s6"))
-      .select(col("a"), col("b"), col("n_common"),
-        (col("__s6").cast("double") / 1000000).as("score"))
+      .agg(count(lit(1)).as("n_common"), sum("wz").as("score6"))
   }
 
-  /** Per-community modularity contribution (generalizes q_graph_20):
-    * (m2·dir_within − deg_sum²)/m2² for a node→community assignment —
-    * the halving-free exact-BIGINT form. Returns (community,
-    * dir_within, deg_sum, contribution); Σ contribution = modularity Q.
+  /** Per-community modularity contribution of a node → community
+    * assignment over a symmetrized distinct edge list:
+    * Q_c = (m2·dir_c − d_c²) / m2², m2 = directed edges, dir_c = directed
+    * edges inside c, d_c = degree sum of c — the halving-free form of
+    * e_c/m − (d_c/2m)²; positive = denser inside than chance. Exact
+    * BIGINT end to end (m2² ≤ 8e18 up to m2 ≈ 2.8e9), one correctly
+    * rounded division. `com` has (node, c), one row per node —
+    * never force-broadcast it (AQE sizes these joins). Returns
+    * (community, dir_within, deg_sum, contribution); Σ = modularity Q.
     */
-  def modularity(edges: DataFrame, srcCol: String, dstCol: String,
-      communities: DataFrame, nodeCol: String, comCol: String): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct()
-    val b = e0.union(e0.select(col("__dst").as("__src"), col("__src").as("__dst")))
-      .distinct().localCheckpoint()
-    val com = communities.select(col(nodeCol).as("__node"), col(comCol).as("__c"))
-    val m2 = b.agg(count(lit(1)).as("__m2"))
-    val within = b
-      .join(broadcast(com.select(col("__node").as("__na"), col("__c").as("__ca"))),
-        col("__src") === col("__na"))
-      .join(broadcast(com.select(col("__node").as("__nb"), col("__c").as("__cb"))),
-        col("__dst") === col("__nb"))
-      .filter(col("__ca") === col("__cb"))
-      .groupBy(col("__ca").as("__c")).agg(count(lit(1)).as("__dw"))
-    val degsum = b.join(broadcast(com), col("__src") === col("__node"))
-      .groupBy("__c").agg(count(lit(1)).as("__ds"))
-    degsum.join(within, Seq("__c"), "left").crossJoin(broadcast(m2))
-      .select(col("__c").as("community"),
-        coalesce(col("__dw"), lit(0L)).as("dir_within"), col("__ds").as("deg_sum"),
-        (floor((col("__m2") * coalesce(col("__dw"), lit(0L)) - col("__ds") * col("__ds"))
-          .cast("double") / (col("__m2") * col("__m2")).cast("double") * 1000000000 + 0.5)
-          / 1000000000).as("contribution"))
+  def modularity(bidirEdges: DataFrame, srcCol: String, dstCol: String,
+      com: DataFrame): DataFrame = {
+    val m2 = bidirEdges.agg(count(lit(1)).as("m2"))
+    val within = bidirEdges
+      .join(com.select(col("node").as("na"), col("c").as("ca")), col(srcCol) === col("na"))
+      .join(com.select(col("node").as("nb"), col("c").as("cb")), col(dstCol) === col("nb"))
+      .filter(col("ca") === col("cb"))
+      .groupBy(col("ca").as("c")).agg(count(lit(1)).as("dir_within"))
+    val degsum = bidirEdges.join(com, col(srcCol) === col("node"))
+      .groupBy("c").agg(count(lit(1)).as("deg_sum"))
+    degsum.join(within, Seq("c"), "left")
+      .crossJoin(broadcast(m2))
+      .select(col("c").as("community"),
+        coalesce(col("dir_within"), lit(0L)).as("dir_within"), col("deg_sum"),
+        (floor(
+          (col("m2") * coalesce(col("dir_within"), lit(0L))
+            - col("deg_sum") * col("deg_sum")).cast("double")
+            / (col("m2") * col("m2")).cast("double") * 1000000000 + 0.5) / 1000000000)
+          .as("contribution"))
   }
 
-  /** Train/test near-dup leakage audit (generalizes q_pipe_7): split by
-    * the overflow-safe multiplicative id hash (`trainPct` of 100 goes
-    * to train), then per-group count of test rows whose `keyCol` value
-    * also appears in train. Only key digests shuffle.
+  /** Train/test near-dup leakage audit: deterministic 90/10 split by
+    * q_text_13's overflow-safe multiplicative id hash, then per group the
+    * count of test rows whose near-dup `key` also appears in train —
+    * the contamination a random split silently ships when the corpus
+    * has near-duplicates. Membership comes from the id alone; the leak
+    * test is test ⋉ train on the key, so only digests shuffle. Returns
+    * (groupCol, n_test, n_leaked, leak_share).
     */
-  def splitLeakage(df: DataFrame, idCol: String, keyCol: String, groupCol: String,
-      trainPct: Int = 90): DataFrame = {
-    val bucket = (pmod(col(idCol), lit(1000000007L)) * 2654435761L) % 1000000007L % 100
-    val keyed = df.select(col(groupCol).as("__g"), col(keyCol).as("__k"),
-      when(bucket < trainPct, lit("train")).otherwise(lit("test")).as("__split"))
+  def splitLeakage(df: DataFrame, idCol: String, key: org.apache.spark.sql.Column,
+      groupCol: String): DataFrame = {
+    val bucket = idHash(col(idCol)) % 100
+    val keyed = df.select(col(idCol), col(groupCol), key.as("set_key"),
+        when(bucket < 90, "train").otherwise("test").as("split"))
       .localCheckpoint()
-    val tr = keyed.filter(col("__split") === "train").select(col("__k").as("__trk")).distinct()
-    keyed.filter(col("__split") === "test")
-      .join(tr, col("__k") === col("__trk"), "left")
-      .groupBy(col("__g").as(groupCol))
+    val tr = keyed.filter(col("split") === "train").select("set_key").distinct()
+      .withColumnRenamed("set_key", "tr_key")
+    keyed.filter(col("split") === "test")
+      .join(tr, col("set_key") === col("tr_key"), "left")
+      .groupBy(groupCol)
       .agg(count(lit(1)).as("n_test"),
-        sum(when(col("__trk").isNotNull, 1).otherwise(0)).cast("long").as("n_leaked"))
+        sum(when(col("tr_key").isNotNull, 1).otherwise(0)).cast("long").as("n_leaked"))
       .select(col(groupCol), col("n_test"), col("n_leaked"),
         (floor(col("n_leaked").cast("double") / col("n_test") * 1000000 + 0.5) / 1000000)
           .as("leak_share"))
   }
 
-  /** Concat-and-split packing audit (generalizes q_pipe_8): for each
-    * context size, sequences cut, documents straddling a cut, split
-    * share, and tail pad — off ONE windowed cumulative token sum. The
-    * global-order window range-partitions at scale.
+  /** Concat-and-split packing audit: concatenate rows in `orderCol`
+    * order, cut every ctx tokens (the zero-padding GPT pretraining
+    * layout), and per context size report sequences, rows straddling a
+    * cut, their share, and the single tail pad — the shred-rate vs
+    * padding tradeoff that picks ctx. One cumulative token sum
+    * ([[prefixSum]]: contiguous order ranges per partition +
+    * per-partition integer offsets, no one-task window) feeds every
+    * size; a row is split iff its first and last token land in
+    * different blocks — pure integer floor division, no per-token
+    * explosion. `tokCol` must be a long.
     */
   def ctxBoundarySweep(df: DataFrame, orderCol: String, tokCol: String,
       ctxs: Seq[Long]): DataFrame = {
-    require(ctxs.nonEmpty, "ctxBoundarySweep needs at least one context size")
     val spark = df.sparkSession
     import spark.implicits._
-    // the global cumulative token sum runs through prefixSum — exact
-    // integer running sum off range partitions, no one-task window
-    val cum = prefixSum(df.select(col(orderCol), col(tokCol).cast("long").as("__tok")),
-      Seq(orderCol), "__tok", "__c")
+    val cum = prefixSum(df, Seq(orderCol), tokCol, "c")
     cum.crossJoin(broadcast(ctxs.toDF("ctx")))
-      .select(col("ctx"), col("__tok"), col("__c"),
-        when(expr("(__c - 1) div ctx") > expr("(__c - __tok) div ctx"), 1).otherwise(0)
-          .as("__crossed"))
+      .select(col("ctx"), col(tokCol), col("c"),
+        when(expr("(c - 1) div ctx") > expr(s"(c - $tokCol) div ctx"), 1).otherwise(0).as("crossed"))
       .groupBy("ctx")
-      .agg(max("__c").as("__total"), sum("__crossed").cast("long").as("n_docs_split"),
-        count(lit(1)).as("__n"))
-      .select(col("ctx"), expr("(__total + ctx - 1) div ctx").as("n_seqs"),
+      .agg(max("c").as("total"), sum("crossed").cast("long").as("n_docs_split"),
+        count(lit(1)).as("n_docs"))
+      .select(col("ctx"),
+        expr("(total + ctx - 1) div ctx").as("n_seqs"),
         col("n_docs_split"),
-        (floor(col("n_docs_split").cast("double") / col("__n") * 1000000 + 0.5) / 1000000)
+        (floor(col("n_docs_split").cast("double") / col("n_docs") * 1000000 + 0.5) / 1000000)
           .as("split_share"),
-        (expr("(__total + ctx - 1) div ctx") * col("ctx") - col("__total")).as("tail_pad"))
+        (expr("(total + ctx - 1) div ctx") * col("ctx") - col("total")).as("tail_pad"))
   }
 
-  /** Truncation pricing (generalizes q_text_52): tokens lost and docs
-    * touched when every row's `tokCol` is capped at each max length.
-    * Map-only + one aggregate.
+  /** Truncation pricing — the no-packing alternative to
+    * [[ctxBoundarySweep]]: tokens lost and rows touched when every row's
+    * long `tokCol` is cut at each max length. Map-only + a broadcast of
+    * caps; one aggregate. Returns (cap, total_tokens, tokens_lost,
+    * docs_truncated, loss_share).
     */
   def truncationLoss(df: DataFrame, tokCol: String, caps: Seq[Long]): DataFrame = {
-    require(caps.nonEmpty, "truncationLoss needs at least one cap")
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(tokCol).cast("long").as("__tok"))
-      .crossJoin(broadcast(caps.toDF("cap")))
-      .select(col("cap"), col("__tok"),
-        when(col("__tok") > col("cap"), col("__tok") - col("cap")).otherwise(0L).as("__lost"))
+    df.crossJoin(broadcast(caps.toDF("cap")))
+      .select(col("cap"), col(tokCol),
+        when(col(tokCol) > col("cap"), col(tokCol) - col("cap")).otherwise(0L).as("lost"))
       .groupBy("cap")
-      .agg(sum("__tok").as("total_tokens"), sum("__lost").as("tokens_lost"),
-        sum(when(col("__tok") > col("cap"), 1).otherwise(0)).cast("long").as("docs_truncated"))
+      .agg(sum(tokCol).as("total_tokens"), sum("lost").as("tokens_lost"),
+        sum(when(col(tokCol) > col("cap"), 1).otherwise(0)).cast("long").as("docs_truncated"))
       .select(col("cap"), col("total_tokens"), col("tokens_lost"), col("docs_truncated"),
         (floor(col("tokens_lost").cast("double") / col("total_tokens") * 1000000 + 0.5) / 1000000)
           .as("loss_share"))
   }
-  // ─── Round-7 wrappers ──────────────────────────────────────────────
 
-  /** k-anonymity summary of `df` under the given quasi-identifier
-    * columns (generalizes q_priv_1): group count, k, max group, rows in
-    * groups under `riskK` and their share. One QI-bounded groupBy.
+  /** k-anonymity summary under the given quasi-identifier columns: the
+    * minimum group size IS the k; rows in groups under 5 and their share
+    * are the headline re-identification risk. One QI-bounded groupBy
+    * (map-side combine does almost all the work), then a 1-row fold.
+    * Returns (n_groups, k_anonymity, max_group, n_rows, n_at_risk,
+    * risk_share).
     */
-  def kAnonymity(df: DataFrame, qiCols: Seq[String], riskK: Int = 5): DataFrame =
-    df.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("__n"))
-      .agg(count(lit(1)).as("n_groups"), min("__n").as("k_anonymity"),
-        max("__n").as("max_group"), sum("__n").as("n_rows"),
-        sum(when(col("__n") < riskK, col("__n")).otherwise(0L)).as("n_at_risk"),
-        graft.functions.Num.round(
-          sum(when(col("__n") < riskK, col("__n")).otherwise(0L)).cast("double")
-            / sum("__n"), 6).as("risk_share"))
+  def kAnonymity(df: DataFrame, qiCols: Seq[String]): DataFrame =
+    df.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n_groups"), min("n").as("k_anonymity"),
+        max("n").as("max_group"), sum("n").as("n_rows"),
+        sum(when(col("n") < 5, col("n")).otherwise(0L)).as("n_at_risk"),
+        round(sum(when(col("n") < 5, col("n")).otherwise(0L)).cast("double")
+          / sum("n"), 6).as("risk_share"))
 
-  /** l-diversity of the QI groups against a sensitive column
-    * (generalizes q_priv_2). `sensitive` may be any expression column
-    * (e.g. a pre-bucketed band).
+  /** l-diversity of the QI groups against a `sensitive` expression (e.g.
+    * a pre-bucketed band): a k-anonymous group where everyone shares one
+    * sensitive value still leaks it — min_l and the rows inside groups
+    * with l < 3 are the readout. count + countDistinct in one grouped
+    * pass. Returns (n_groups, min_l, mean_l, n_low_div_groups, n_exposed).
     */
   def lDiversity(df: DataFrame, qiCols: Seq[String],
-      sensitive: org.apache.spark.sql.Column, minL: Int = 3): DataFrame =
+      sensitive: org.apache.spark.sql.Column): DataFrame =
     df.groupBy(qiCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"), countDistinct(sensitive).as("__l"))
-      .agg(count(lit(1)).as("n_groups"), min("__l").as("min_l"),
-        graft.functions.Num.round(sum("__l").cast("double") / count(lit(1)), 6)
-          .as("mean_l"),
-        sum(when(col("__l") < minL, 1L).otherwise(0L)).as("n_low_div_groups"),
-        sum(when(col("__l") < minL, col("__n")).otherwise(0L)).as("n_exposed"))
+      .agg(count(lit(1)).as("n"), countDistinct(sensitive).as("l"))
+      .agg(count(lit(1)).as("n_groups"), min("l").as("min_l"),
+        round(sum("l").cast("double") / count(lit(1)), 6).as("mean_l"),
+        sum(when(col("l") < 3, 1L).otherwise(0L)).as("n_low_div_groups"),
+        sum(when(col("l") < 3, col("n")).otherwise(0L)).as("n_exposed"))
 
-  /** Intra-document duplicate n-gram share per group (generalizes
-    * q_text_55): positions − distinct as two array sizes, no explode.
+  /** Intra-document duplicate n-gram share per group: n-gram positions
+    * minus distinct n-grams, summed — the Rae/Gopher "duplicate n-gram
+    * fraction" repetition screen, computed WITHOUT exploding
+    * occurrences: per row two array sizes off one split (positions =
+    * n_tokens − (n−1), distinct = |shingle set| via the guarded slice
+    * transform). One scan, zero joins. Returns (groupCol, n_docs,
+    * n_{n}grams, n_dup_{n}grams, dup_share).
     */
-  def dupNgramShare(df: DataFrame, groupCol: String, textCol: String,
-      n: Int = 5): DataFrame = {
+  def dupNgramShare(df: DataFrame, groupCol: String, textCol: String, n: Int): DataFrame = {
     val tk = split(col(textCol), " ")
     val pos = greatest(size(tk) - (n - 1), lit(0)).cast("long")
     val dst = size(when(size(tk) < n, array().cast("array<string>"))
       .otherwise(array_distinct(transform(sequence(lit(1), size(tk) - (n - 1)),
         i => concat_ws(" ", slice(tk, i, lit(n))))))).cast("long")
-    df.select(col(groupCol), pos.as("__n"), dst.as("__d"))
+    df.select(col(groupCol), pos.as(s"n$n"), dst.as("nd"))
       .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_docs"), sum("__n").as("n_ngrams"),
-        sum(col("__n") - col("__d")).as("n_dup_ngrams"),
-        graft.functions.Num.round(sum(col("__n") - col("__d")).cast("double")
-          / greatest(sum("__n"), lit(1L)), 6).as("dup_share"))
+      .agg(count(lit(1)).as("n_docs"), sum(s"n$n").as(s"n_${n}grams"),
+        sum(col(s"n$n") - col("nd")).as(s"n_dup_${n}grams"),
+        round(sum(col(s"n$n") - col("nd")).cast("double")
+          / greatest(sum(s"n$n"), lit(1L)), 6).as("dup_share"))
   }
 
-  /** Gopher-style rule incidence matrix per group (generalizes
-    * q_text_57): all four rules as exact integer predicates.
+  /** Gopher-style rule incidence matrix per group: four quality rules
+    * as EXACT integer predicates in one scan — too short (<15 tokens),
+    * word-length shape off (mean outside [3,10], cross-multiplied: the
+    * token-length sum of single-space-joined text is nc − (nt − 1)),
+    * digit-heavy (>20%), repetitive (type-token ratio <0.4) — with
+    * per-rule prevalence, the multi-fail count and the clean share.
+    * Zero float in the flags.
     */
   def qualityRuleMatrix(df: DataFrame, groupCol: String, textCol: String): DataFrame = {
     val tk = split(col(textCol), " ")
     val m = df.select(col(groupCol),
-      size(tk).cast("long").as("__nt"),
-      size(array_distinct(tk)).cast("long").as("__nu"),
-      length(col(textCol)).cast("long").as("__nc"),
+      size(tk).cast("long").as("nt"),
+      size(array_distinct(tk)).cast("long").as("nu"),
+      length(col(textCol)).cast("long").as("nc"),
       (length(col(textCol)) - length(regexp_replace(col(textCol), "[0-9]", "")))
-        .cast("long").as("__dg"))
+        .cast("long").as("dg"))
     val f = m.select(col(groupCol),
-      when(col("__nt") < 15, 1L).otherwise(0L).as("__r1"),
-      when(col("__nc") - col("__nt") + 1 < col("__nt") * 3
-        || col("__nc") - col("__nt") + 1 > col("__nt") * 10, 1L).otherwise(0L).as("__r2"),
-      when(col("__dg") * 5 > col("__nc"), 1L).otherwise(0L).as("__r3"),
-      when(col("__nu") * 5 < col("__nt") * 2, 1L).otherwise(0L).as("__r4"))
-    val fails = col("__r1") + col("__r2") + col("__r3") + col("__r4")
+      when(col("nt") < 15, 1L).otherwise(0L).as("r_short"),
+      when(col("nc") - col("nt") + 1 < col("nt") * 3
+        || col("nc") - col("nt") + 1 > col("nt") * 10, 1L).otherwise(0L).as("r_wordlen"),
+      when(col("dg") * 5 > col("nc"), 1L).otherwise(0L).as("r_digit"),
+      when(col("nu") * 5 < col("nt") * 2, 1L).otherwise(0L).as("r_repeat"))
+    val fails = col("r_short") + col("r_wordlen") + col("r_digit") + col("r_repeat")
     f.groupBy(groupCol)
       .agg(count(lit(1)).as("n_docs"),
-        sum("__r1").as("n_short"), sum("__r2").as("n_wordlen"),
-        sum("__r3").as("n_digit"), sum("__r4").as("n_repeat"),
+        sum("r_short").as("n_short"), sum("r_wordlen").as("n_wordlen"),
+        sum("r_digit").as("n_digit"), sum("r_repeat").as("n_repeat"),
         sum(when(fails >= 2, 1L).otherwise(0L)).as("n_multi_fail"),
-        graft.functions.Num.round(sum(when(fails === 0, 1L).otherwise(0L)).cast("double")
+        round(sum(when(fails === 0, 1L).otherwise(0L)).cast("double")
           / count(lit(1)), 6).as("clean_share"))
   }
 
-  /** Cohen's kappa between two binary rater columns (0/1 longs)
-    * (generalizes q_stat_33). Returns the 2×2 plus p_observed and κ.
+  /** Cohen's kappa between two binary rater columns (0/1 longs): raw
+    * agreement overstates consensus when both raters flag a minority
+    * class; kappa subtracts the chance floor. One scan to the 2×2 table
+    * (four exact counts); κ is a fixed IEEE expression of those BIGINTs.
+    * Returns (n, n11, n10, n01, n00, p_observed, kappa).
     */
   def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val m = df.agg(count(lit(1)).as("n"),
@@ -2158,150 +2002,205 @@ object Pipelines {
       + D(col("n01") + col("n00")) * (col("n10") + col("n00"))) / col("n") / col("n")
     val po = D(col("n11") + col("n00")) / col("n")
     m.select(col("n"), col("n11"), col("n10"), col("n01"), col("n00"),
-      graft.functions.Num.round(po, 6).as("p_observed"),
-      graft.functions.Num.round((po - pe) / (lit(1) - pe), 6).as("kappa"))
+      round(po, 6).as("p_observed"),
+      round((po - pe) / (lit(1) - pe), 6).as("kappa"))
   }
 
-  /** Fano overdispersion factor per group from a pre-bucketed event
-    * frame (generalizes q_stream_38): var/mean of per-bucket counts.
+  /** Fano factor of per-bucket arrival counts per group: var_pop/mean =
+    * (m·Σc² − (Σc)²)/(m·Σc) from three exact sums — 1 = Poisson, ≫1 =
+    * bursty clustering; one double division at emission. Buckets with
+    * zero events are excluded. Returns (groupCol, n_buckets, n_events,
+    * fano).
     */
-  def fanoFactor(df: DataFrame, groupCol: String, bucketCol: String): DataFrame =
-    df.groupBy(col(groupCol), col(bucketCol)).agg(count(lit(1)).as("__c"))
+  def fanoFactor(df: DataFrame, groupCol: String, bucket: org.apache.spark.sql.Column): DataFrame =
+    df.groupBy(col(groupCol), bucket)
+      .agg(count(lit(1)).as("c"))
       .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_buckets"), sum("__c").as("n_events"),
-        sum(col("__c") * col("__c")).as("__scc"))
-      .select(col(groupCol), col("n_buckets"), col("n_events"),
-        graft.functions.Num.round((col("n_buckets").cast("double") * col("__scc")
-          - col("n_events").cast("double") * col("n_events"))
-          / (col("n_buckets").cast("double") * col("n_events")), 6).as("fano"))
+      .agg(count(lit(1)).as("m"), sum("c").as("sc"),
+        sum(col("c") * col("c")).as("scc"))
+      .select(col(groupCol), col("m").as("n_buckets"), col("sc").as("n_events"),
+        round((col("m").cast("double") * col("scc")
+          - col("sc").cast("double") * col("sc"))
+          / (col("m").cast("double") * col("sc")), 6).as("fano"))
 
-  /** Degree-sequence Gini of an undirected edge list (generalizes
-    * q_graph_23). Edges must already be symmetrized+distinct.
+  /** Degree-sequence Gini of a symmetrized distinct edge list — whether
+    * the degree distribution is egalitarian or hub-dominated — from the
+    * exact rank-weighted sum G = (2·Σi·dᵢ − (n+1)·Σd) / (n·Σd) over
+    * degrees ranked ascending with node tie-break (no sorting of
+    * floats). The degree table is node-scaled, so the rank is the
+    * range-partitioned [[exactGlobalRankBy]], not a single-partition
+    * window; then one fold. Returns (n_nodes, total_degree, max_degree,
+    * gini).
     */
-  def degreeGini(bidirEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val deg = bidirEdges.groupBy(col(srcCol).as("__node")).agg(count(lit(1)).as("__deg"))
-    deg.select(col("__deg"),
-        row_number().over(Window.orderBy(col("__deg"), col("__node")))
-          .cast("long").as("__i"))
-      .agg(count(lit(1)).as("n_nodes"), sum("__deg").as("total_degree"),
-        sum(col("__i") * col("__deg")).as("__sid"), max("__deg").as("max_degree"))
-      .select(col("n_nodes"), col("total_degree"), col("max_degree"),
-        graft.functions.Num.round((col("__sid").cast("double") * 2
-          - (col("n_nodes") + 1).cast("double") * col("total_degree"))
-          / (col("n_nodes").cast("double") * col("total_degree")), 6).as("gini"))
+  def degreeGini(bidirEdges: DataFrame, srcCol: String): DataFrame = {
+    val deg = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("deg"))
+    val r = exactGlobalRankBy(deg.select(col("deg"), col("node")),
+      Seq(col("deg"), col("node")), "i")
+    r.agg(count(lit(1)).as("n"), sum("deg").as("sd"),
+        sum(col("i") * col("deg")).as("sid"), max("deg").as("maxd"))
+      .select(col("n").as("n_nodes"), col("sd").as("total_degree"),
+        col("maxd").as("max_degree"),
+        round((col("sid").cast("double") * 2 - (col("n") + 1).cast("double") * col("sd"))
+          / (col("n").cast("double") * col("sd")), 6).as("gini"))
   }
 
-  /** Deterministic token-balanced shard summary (generalizes q_pipe_9):
-    * portable multiplicative hash of `idCol` into `nShards` shards.
+  /** Deterministic token-balanced shard summary: the portable
+    * multiplicative hash of `idCol` IS the shard assignment a pipeline
+    * would ship (reproducible years later, unlike engine RNG) — 16
+    * shards — and the max−min token spread over the mean is the
+    * straggler readout. One scan to a 16-row table, then a 1-row fold.
+    * Returns (n_shards, n_docs, min_tokens, max_tokens, mean_tokens,
+    * imbalance).
     */
-  def shardBalance(df: DataFrame, idCol: String, tokCol: String,
-      nShards: Int = 16): DataFrame = {
+  def shardBalance(df: DataFrame, idCol: String, tokens: org.apache.spark.sql.Column): DataFrame = {
     val P = 1000000007L
-    df.select((((col(idCol) % P) * 2654435761L % P) % nShards).as("__shard"),
-        col(tokCol).cast("long").as("__tok"))
-      .groupBy("__shard")
-      .agg(count(lit(1)).as("__nd"), sum("__tok").as("__toks"))
-      .agg(count(lit(1)).as("n_shards"), sum("__nd").as("n_rows"),
-        min("__toks").as("min_tokens"), max("__toks").as("max_tokens"),
-        graft.functions.Num.round(sum("__toks").cast("double") / count(lit(1)), 2)
-          .as("mean_tokens"),
-        graft.functions.Num.round((max("__toks").cast("double") - min("__toks"))
-          / (sum("__toks").cast("double") / count(lit(1))), 6).as("imbalance"))
+    df.select((((col(idCol) % P) * 2654435761L % P) % 16).as("shard"), tokens.as("toks"))
+      .groupBy("shard")
+      .agg(count(lit(1)).as("n_docs"), sum("toks").as("toks"))
+      .agg(count(lit(1)).as("n_shards"), sum("n_docs").as("n_docs"),
+        min("toks").as("min_tokens"), max("toks").as("max_tokens"),
+        round(sum("toks").cast("double") / count(lit(1)), 2).as("mean_tokens"),
+        round((max("toks").cast("double") - min("toks"))
+          / (sum("toks").cast("double") / count(lit(1))), 6).as("imbalance"))
   }
 
-  /** One Newton step of logistic regression from β=0 for a binary
-    * 0/1 label vs one regressor (generalizes q_ml_12): closed form
-    * 4·(XᵀX)⁻¹Xᵀ(y−½) over five exact sums.
+  /** One Newton step of logistic regression P(positive | x) from β=0: at
+    * the zero init the update is the CLOSED FORM 4·(XᵀX)⁻¹Xᵀ(y−½) — no
+    * sigmoid, no iteration, everything rational in five exact sums from
+    * one map-side-combined aggregate; the 2×2 solve is a fixed IEEE
+    * expression. `x` is a long expression, `positive` the label
+    * predicate. Returns (n, n_positive, base_rate, beta0, beta1).
     */
-  def logitStep(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val x = col(xCol).cast("long")
-    val y = col(yCol).cast("long")
+  def logitStep(df: DataFrame, x: org.apache.spark.sql.Column,
+      positive: org.apache.spark.sql.Column): DataFrame = {
+    val y = when(positive, 1L).otherwise(0L)
     val m = df.agg(count(lit(1)).as("n"), sum(x).as("sx"), sum(x * x).as("sxx"),
-      sum(y).as("sy"), sum(when(y === 1, x).otherwise(0L)).as("sxy"))
+      sum(y).as("sy"), sum(when(positive, x).otherwise(0L)).as("sxy"))
     def D(c: org.apache.spark.sql.Column) = c.cast("double")
     val den = D(col("n")) * col("sxx") - D(col("sx")) * col("sx")
     val gy = D(col("sy")) - D(col("n")) / 2
     val gxy = D(col("sxy")) - D(col("sx")) / 2
     m.select(col("n"), col("sy").as("n_positive"),
-      graft.functions.Num.round(D(col("sy")) / col("n"), 6).as("base_rate"),
-      graft.functions.Num.round(lit(4.0) * (D(col("sxx")) * gy - D(col("sx")) * gxy) / den, 6)
-        .as("beta0"),
-      graft.functions.Num.round(lit(4.0) * (D(col("n")) * gxy - D(col("sx")) * gy) / den, 6)
-        .as("beta1"))
+      round(D(col("sy")) / col("n"), 6).as("base_rate"),
+      round(lit(4.0) * (D(col("sxx")) * gy - D(col("sx")) * gxy) / den, 6).as("beta0"),
+      round(lit(4.0) * (D(col("n")) * gxy - D(col("sx")) * gy) / den, 6).as("beta1"))
   }
 
-  /** Quantization bit-width error sweep over a float-array column
-    * (generalizes q_sim_40): RMSE + max abs error per width.
+  /** Quantization bit-width sweep over a float-array column: RMSE and
+    * worst-case error of symmetric round-to-nearest at 2/4/8 bits — the
+    * storage-precision curve ("how many bits does this table need?").
+    * Dequantized error is floor-based round, IEEE-identical across
+    * engines; each ROW's squared-error fold quantizes to a 1e-9 BIGINT
+    * before the cross-row sum (fixed order within the row, exact ints
+    * across rows). The widths ride one scan via an array fan-out.
+    * Returns (bits, n_values, rmse, max_abs_err).
     */
-  def bitwidthSweep(df: DataFrame, vecCol: String,
-      bits: Seq[Long] = Seq(2L, 4L, 8L)): DataFrame = {
-    val e = df.select(col(vecCol).as("__v"),
-        explode(array(bits.map(lit): _*)).as("bits"))
-      .withColumn("__s", (pow(lit(2.0), col("bits") - 1) - 1).cast("double"))
+  def bitwidthSweep(df: DataFrame, vecCol: String): DataFrame = {
+    val bitsArr = array(Seq(2L, 4L, 8L).map(lit): _*)
+    val e = df.select(col(vecCol), explode(bitsArr).as("bits"))
+      .withColumn("s", (pow(lit(2.0), col("bits") - 1) - 1).cast("double"))
     def err(x: org.apache.spark.sql.Column, sc: org.apache.spark.sql.Column) = {
-      val xd = x.cast("double"); xd - floor(xd * sc + 0.5) / sc
+      val xd = x.cast("double")
+      xd - floor(xd * sc + 0.5) / sc
     }
     e.select(col("bits"),
-        floor(aggregate(transform(col("__v"), x => {
-          val ev = err(x, col("__s")); ev * ev
+        floor(aggregate(transform(col(vecCol), x => {
+          val ev = err(x, col("s")); ev * ev
         }), lit(0.0), (acc, v) => acc + v) * 1000000000L + 0.5)
-          .cast("long").as("__sq9"),
-        floor(array_max(transform(col("__v"), x => abs(err(x, col("__s")))))
-          * 1000000 + 0.5).cast("long").as("__mx6"),
-        size(col("__v")).cast("long").as("__dim"))
+          .cast("long").as("row_sq9"),
+        floor(array_max(transform(col(vecCol), x => abs(err(x, col("s")))))
+          * 1000000 + 0.5).cast("long").as("row_max6"),
+        size(col(vecCol)).cast("long").as("dim"))
       .groupBy("bits")
-      .agg(sum("__dim").as("n_values"),
-        graft.functions.Num.round(
-          sqrt(sum("__sq9").cast("double") / 1e9 / sum("__dim")), 6).as("rmse"),
-        graft.functions.Num.round(max("__mx6").cast("double") / 1000000, 6)
-          .as("max_abs_err"))
+      .agg(sum("dim").as("n_values"),
+        round(sqrt(sum("row_sq9").cast("double") / 1e9 / sum("dim")), 6).as("rmse"),
+        round(max("row_max6").cast("double") / 1000000, 6).as("max_abs_err"))
   }
 
-  /** TwoNN intrinsic-dimension estimate over a sampled vector frame
-    * (generalizes q_sim_39). The sample should be broadcast-sized; at
-    * corpus scale feed IVF/LSH candidate pairs instead.
+  /** TwoNN intrinsic dimension (Facco et al. 2017) of a sampled vector
+    * frame: each point's ratio μ = d2/d1 of its two nearest neighbors
+    * estimates the local manifold dimension as d ≈ N / Σ ln μ — no
+    * density assumption, no PCA. Per-point ln μ quantizes 1e-6 BEFORE
+    * the global sum (order-independent). All pairs over a broadcast
+    * copy, one ranking window: keep the sample broadcast-sized; at
+    * corpus scale the 2-NN search runs through IVF/LSH candidates.
+    * Returns (n_points, sum_ln_mu6, dim_est).
     */
   def twoNNDimension(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val a = df.select(col(idCol).as("__i"), col(vecCol).as("__ea"))
-    val b = df.select(col(idCol).as("__j"), col(vecCol).as("__eb"))
-    val w = Window.partitionBy("__i").orderBy(col("__d2"), col("__j"))
-    a.join(broadcast(b), col("__i") =!= col("__j"))
-      .select(col("__i"), col("__j"),
-        graft.functions.VectorFunctions.sqDist(col("__ea"), col("__eb")).as("__d2"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 2)
-      .groupBy("__i")
-      .agg(max(when(col("__rn") === 1, col("__d2"))).as("__d1"),
-        max(when(col("__rn") === 2, col("__d2"))).as("__d2nd"))
-      .filter(col("__d1") > 0)
-      .select(floor(log(col("__d2nd") / col("__d1")) * 0.5 * 1000000 + 0.5)
-        .cast("long").as("__ln6"))
-      .agg(count(lit(1)).as("n_points"), sum("__ln6").as("sum_ln_mu6"))
+    val a = df.select(col(idCol).as("i"), col(vecCol).as("ea"))
+    val b = df.select(col(idCol).as("j"), col(vecCol).as("eb"))
+    val w = Window.partitionBy("i").orderBy(col("d2"), col("j"))
+    a.join(broadcast(b), col("i") =!= col("j"))
+      .select(col("i"), col("j"),
+        graft.functions.VectorFunctions.sqDist(col("ea"), col("eb")).as("d2"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 2)
+      .groupBy("i")
+      .agg(max(when(col("rn") === 1, col("d2"))).as("d1sq"),
+        max(when(col("rn") === 2, col("d2"))).as("d2sq"))
+      .filter(col("d1sq") > 0)
+      .select(floor(log(col("d2sq") / col("d1sq")) * 0.5 * 1000000 + 0.5)
+        .cast("long").as("ln6"))
+      .agg(count(lit(1)).as("n_points"), sum("ln6").as("sum_ln_mu6"))
       .select(col("n_points"), col("sum_ln_mu6"),
-        graft.functions.Num.round(
-          col("n_points").cast("double") * 1000000 / col("sum_ln_mu6"), 4).as("dim_est"))
+        round(col("n_points").cast("double") * 1000000 / col("sum_ln_mu6"), 4)
+          .as("dim_est"))
   }
-  /** Rich-club coefficient of an undirected (symmetrized+distinct)
-    * edge list (generalizes q_graph_21): density among the top-decile
-    * (min 2) degree nodes vs global density.
+  /** One k-core peel round over a symmetrized distinct edge list: keep
+    * the nodes of degree ≥ k, then left_semi BOTH endpoints against them
+    * — pure integer set algebra. The survivor set is node-scaled, so the
+    * semi-joins carry NO broadcast hint (a forced broadcast fails at
+    * 10⁸⁺ nodes; AQE picks the strategy from the measured size).
+    * Iterating to a fixpoint (checkpointing between rounds) yields the
+    * k-core. Returns (kept nodes `node`, surviving edges).
+    */
+  def kCorePeel(bidirEdges: DataFrame, srcCol: String, dstCol: String,
+      k: Int): (DataFrame, DataFrame) = {
+    val keep = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("dg"))
+      .filter(col("dg") >= k).select("node")
+    val e2 = bidirEdges
+      .join(keep, col(srcCol) === col("node"), "left_semi")
+      .join(keep.withColumnRenamed("node", "node2"), col(dstCol) === col("node2"), "left_semi")
+    (keep, e2)
+  }
+
+  /** One k-truss peel round: the canonical (u < v) edges of `canon`
+    * supported by ≥ k − 2 triangles of the symmetrized adjacency `bidir`
+    * (src, dst). Support is one wedge join per canonical edge (every
+    * triangle counted exactly once per edge); counts are exact integer
+    * set sizes. Iterating (re-deriving `bidir` from the survivors and
+    * checkpointing between rounds) to a fixpoint yields the k-truss.
+    * Returns the surviving (u, v).
+    */
+  def kTrussPeel(canon: DataFrame, bidir: DataFrame, k: Int): DataFrame =
+    canon.join(bidir.select(col("src").as("u"), col("dst").as("w")), Seq("u"))
+      .join(bidir.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
+      .groupBy("u", "v").agg(count(lit(1)).as("sup"))
+      .filter(col("sup") >= k - 2).select("u", "v")
+
+  /** Rich-club coefficient of a symmetrized distinct edge list: edge
+    * density among the top-decile-degree nodes (min 2) vs the whole
+    * graph's density — φ ≫ 1 means the hubs form a tightly-wired elite.
+    * The degree table is built once; the hub pick is the
+    * range-partitioned [[exactGlobalRankBy]] (a global rank window over
+    * the entity-scaled degree table would plan Exchange
+    * SinglePartition); the hub set is a broadcast semi-join on BOTH
+    * endpoints and the densities divide exact directed-edge counts.
+    * `bidirEdges` is read three times: pass a materialized list.
+    * Returns one row (n_nodes, n_hubs, n_edges, n_hub_edges,
+    * hub_density, density, rich_club_ratio).
     */
   def richClub(bidirEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val b = bidirEdges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .localCheckpoint()
-    val deg = b.groupBy(col("__src").as("__node")).agg(count(lit(1)).as("__deg"))
+    val deg = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     val n = deg.count()
     val nHubs = math.max(n / 10, 2L)
-    val hubs = deg.select(col("__node"), row_number()
-        .over(Window.orderBy(col("__deg").desc, col("__node"))).as("__rn"))
-      .filter(col("__rn") <= nHubs).select("__node").localCheckpoint()
-    val e2 = b.count()
-    val eh2 = b.join(broadcast(hubs), b("__src") === hubs("__node"), "left_semi")
-      .join(broadcast(hubs.withColumnRenamed("__node", "__node2")),
-        col("__dst") === col("__node2"), "left_semi")
+    val hubs = exactGlobalRankBy(deg, Seq(col("deg").desc, col("node")), "rn")
+      .filter(col("rn") <= nHubs).select("node").localCheckpoint()
+    val e2 = bidirEdges.count()
+    val eh2 = bidirEdges.join(broadcast(hubs), bidirEdges(srcCol) === hubs("node"), "left_semi")
+      .join(broadcast(hubs.withColumnRenamed("node", "node2")),
+        col(dstCol) === col("node2"), "left_semi")
       .count()
     val hubDen = eh2.toDouble / (nHubs * (nHubs - 1))
     val den = e2.toDouble / (n * (n - 1))
@@ -2315,115 +2214,124 @@ object Pipelines {
         "hub_density", "density", "rich_club_ratio")
   }
 
-  /** Year-over-year growth of a (yyyymm, long value) series
-    * (generalizes q_time_23): calendar self-join on ym−100, robust to
-    * missing months.
+  /** Year-over-year growth of a (yyyymm, cents) series: each month
+    * joined to the SAME month one year earlier — a calendar self-join on
+    * ym−100 (Catalyst plans a tiny hash join), robust to missing months
+    * where a 12-row lag is not. The |months|-bounded input is
+    * checkpointed once. Returns (ym, revenue, prev_revenue, yoy_growth).
     */
   def yoyGrowth(df: DataFrame, ymCol: String, valueCol: String): DataFrame = {
-    val m = df.select(col(ymCol).cast("long").as("ym"),
-      col(valueCol).cast("long").as("__v")).localCheckpoint()
-    val b = m.select((col("ym") + 100).as("__ym2"), col("__v").as("__pv"))
-    m.join(b, col("ym") === col("__ym2"))
-      .select(col("ym"),
-        graft.functions.Num.round(col("__v").cast("double") / 100, 2).as("revenue"),
-        graft.functions.Num.round(col("__pv").cast("double") / 100, 2).as("prev_revenue"),
-        graft.functions.Num.round((col("__v").cast("double") - col("__pv")) / col("__pv"), 6)
+    val m = df.localCheckpoint()
+    val b = m.select((col(ymCol) + 100).as("ym2"), col(valueCol).as("pcents"))
+    m.join(b, col(ymCol) === col("ym2"))
+      .select(col(ymCol),
+        round(col(valueCol).cast("double") / 100, 2).as("revenue"),
+        round(col("pcents").cast("double") / 100, 2).as("prev_revenue"),
+        round((col(valueCol).cast("double") - col("pcents")) / col("pcents"), 6)
           .as("yoy_growth"))
   }
 
   /** Ulcer index + max drawdown per group over an ordered integer
-    * value series (generalizes q_win_28): RMS of 1e-8-quantized
-    * relative drawdowns against the running peak.
+    * series: RMS drawdown depth against the running peak — penalizes
+    * DEEP-AND-LONG slumps where max drawdown only sees the deepest
+    * instant. One ordered window per group; depths quantize 1e-8 before
+    * the RMS fold (d8² ≤ 1e16, so sums stay inside BIGINT for ~900 rows
+    * per group) and the cross-row RMS is order-independent. Returns
+    * (groupCol, n_rows, ulcer_pct, max_dd_pct).
     */
   def ulcerIndex(df: DataFrame, groupCol: String, orderCol: String,
       valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(groupCol).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.select(col(groupCol), col(orderCol), col(valueCol).cast("long").as("__v"))
-      .withColumn("__peak", max("__v").over(w))
+    df.withColumn("peak", max(valueCol).over(w))
       .select(col(groupCol),
-        floor((col("__peak") - col("__v")).cast("double") / col("__peak")
-          * 100000000L + 0.5).cast("long").as("__d8"))
+        floor((col("peak") - col(valueCol)).cast("double") / col("peak")
+          * 100000000L + 0.5).cast("long").as("d8"))
       .groupBy(groupCol)
       .agg(count(lit(1)).as("n_rows"),
-        graft.functions.Num.round(sqrt(sum(col("__d8") * col("__d8")).cast("double")
+        round(sqrt(sum(col("d8") * col("d8")).cast("double")
           / 1e16 / count(lit(1))) * 100, 4).as("ulcer_pct"),
-        graft.functions.Num.round(max("__d8").cast("double") / 1e8 * 100, 4)
-          .as("max_dd_pct"))
+        round(max("d8").cast("double") / 1e8 * 100, 4).as("max_dd_pct"))
   }
 
-  /** Decontamination cost (generalizes q_pipe_10): per group, rows and
-    * token mass lost when dropping rows whose distinct token-n-gram
-    * overlap with `bench`'s shingle set exceeds `threshold`.
+  /** Decontamination cost: prices REMOVING the training rows whose
+    * distinct token-trigram overlap with `bench`'s shingle set exceeds
+    * 5% — rows and token mass lost per group. The benchmark shingle set
+    * is eval-suite-sized, so it broadcasts; the flag joins back to the
+    * group/token metadata by id. `train` is read twice (pass a
+    * materialized frame). Returns (groupCol, n_docs, n_flagged,
+    * tokens_total, tokens_lost, loss_share).
     */
   def decontaminationCost(train: DataFrame, idCol: String, groupCol: String,
-      textCol: String, tokCol: String, bench: DataFrame, benchTextCol: String,
-      n: Int = 3, threshold: Double = 0.05): DataFrame = {
-    val bsh = bench.select(explode(
-        TextFunctions.tokenShingles(col(benchTextCol), n)).as("__sh")).distinct()
-    val dsh = train.select(col(idCol).as("__id"),
-      explode(TextFunctions.tokenShingles(col(textCol), n)).as("__sh"))
-    val tot = dsh.groupBy("__id").agg(count(lit(1)).as("__n_sh"))
-    val hit = dsh.join(broadcast(bsh), "__sh")
-      .groupBy("__id").agg(count(lit(1)).as("__n_hit"))
-    val fl = tot.join(hit, Seq("__id"), "left_outer")
-      .select(col("__id"),
-        when(coalesce(col("__n_hit"), lit(0L)).cast("double") / col("__n_sh") > threshold,
-          1L).otherwise(0L).as("__bad"))
-    train.select(col(idCol).as("__id"), col(groupCol), col(tokCol).cast("long").as("__tok"))
-      .join(fl, "__id")
+      textCol: String, tokens: org.apache.spark.sql.Column, bench: DataFrame): DataFrame = {
+    val shing = (t: org.apache.spark.sql.Column) => TextFunctions.tokenShingles(t, 3)
+    val bsh = bench.select(explode(shing(col(textCol))).as("sh")).distinct()
+    val docsh = train.select(col(idCol), explode(shing(col(textCol))).as("sh"))
+    val tot = docsh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
+    val hit = docsh.join(broadcast(bsh), "sh")
+      .groupBy(idCol).agg(count(lit(1)).as("n_hit"))
+    val fl = tot.join(hit, Seq(idCol), "left_outer")
+      .select(col(idCol),
+        when(coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_sh") > 0.05, 1L)
+          .otherwise(0L).as("bad"))
+    train.select(col(idCol), col(groupCol), tokens.as("toks"))
+      .join(fl, idCol)
       .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_docs"), sum("__bad").as("n_flagged"),
-        sum("__tok").as("tokens_total"),
-        sum(when(col("__bad") === 1, col("__tok")).otherwise(0L)).as("tokens_lost"),
-        graft.functions.Num.round(
-          sum(when(col("__bad") === 1, col("__tok")).otherwise(0L)).cast("double")
-            / sum("__tok"), 6).as("loss_share"))
+      .agg(count(lit(1)).as("n_docs"), sum("bad").as("n_flagged"),
+        sum("toks").as("tokens_total"),
+        sum(when(col("bad") === 1, col("toks")).otherwise(0L)).as("tokens_lost"),
+        round(sum(when(col("bad") === 1, col("toks")).otherwise(0L)).cast("double")
+          / sum("toks"), 6).as("loss_share"))
   }
 
-  /** k-suppression cost curve (generalizes q_priv_5): rows/groups lost
-    * publishing only QI groups of size ≥ k, for each k.
+  /** k-suppression cost curve: rows lost, groups dropped and the cost
+    * share when publishing only QI groups of size ≥ k, for k ∈
+    * {2, 5, 10, 20} — the other arm of the anonymization tradeoff
+    * (coarsening the QI is the first). The group-size table computes
+    * ONCE (checkpointed); the thresholds ride a fan-out over it
+    * (QI-bounded, not row-bounded). Returns (k, n_published,
+    * n_suppressed, groups_suppressed, suppression_cost).
     */
-  def suppressionCost(df: DataFrame, qiCols: Seq[String],
-      ks: Seq[Long] = Seq(2L, 5L, 10L, 20L)): DataFrame = {
-    val g = df.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("__n"))
+  def suppressionCost(df: DataFrame, qiCols: Seq[String]): DataFrame = {
+    val g = df.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("n"))
       .localCheckpoint()
+    val ks = Seq(2L, 5L, 10L, 20L)
     g.withColumn("k", explode(array(ks.map(lit): _*)))
       .groupBy("k")
-      .agg(sum(when(col("__n") >= col("k"), col("__n")).otherwise(0L)).as("n_published"),
-        sum(when(col("__n") < col("k"), col("__n")).otherwise(0L)).as("n_suppressed"),
-        sum(when(col("__n") < col("k"), 1L).otherwise(0L)).as("groups_suppressed"),
-        graft.functions.Num.round(
-          sum(when(col("__n") < col("k"), col("__n")).otherwise(0L)).cast("double")
-            / sum("__n"), 6).as("suppression_cost"))
+      .agg(sum(when(col("n") >= col("k"), col("n")).otherwise(0L)).as("n_published"),
+        sum(when(col("n") < col("k"), col("n")).otherwise(0L)).as("n_suppressed"),
+        sum(when(col("n") < col("k"), 1L).otherwise(0L)).as("groups_suppressed"),
+        round(sum(when(col("n") < col("k"), col("n")).otherwise(0L)).cast("double")
+          / sum("n"), 6).as("suppression_cost"))
   }
 
-  /** Per-group token-accounting ledger (generalizes q_pipe_11): raw →
-    * quality gate (≥ minTokens) → multiset-digest dedup (first id wins)
-    * → truncation cap. One scan; the md5 digest is the only wide
-    * shuffle key.
+  /** Per-group token-accounting ledger — "where did my tokens go": raw →
+    * quality gate (≥ 20 tokens) → near-dup removal (normalized
+    * token-multiset md5 digest, first id wins) → context truncation (cap
+    * 96). One scan derives every stage (each is a filter +
+    * re-aggregation of the SAME scanned columns); the 16-byte digest is
+    * the only wide shuffle key. Returns (groupCol, docs_raw, toks_raw,
+    * docs_quality, toks_quality, docs_dedup, toks_dedup, toks_packed).
     */
-  def tokenLedger(df: DataFrame, idCol: String, textCol: String,
-      groupCol: String, minTokens: Long = 20L, cap: Long = 96L): DataFrame = {
-    val t = df.select(col(idCol).as("__id"), col(groupCol).as("__g"),
-      size(split(col(textCol), " ")).cast("long").as("__ntok"),
-      md5(concat_ws(" ", sort_array(split(col(textCol), " ")))).as("__dg"))
-    val s0 = t.groupBy("__g")
-      .agg(count(lit(1)).as("docs_raw"), sum("__ntok").as("toks_raw"))
-    val q = t.filter(col("__ntok") >= minTokens)
-    val s1 = q.groupBy("__g")
-      .agg(count(lit(1)).as("docs_quality"), sum("__ntok").as("toks_quality"))
-      .withColumnRenamed("__g", "__g1")
-    val k = q.withColumn("__rk", row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("__dg")).orderBy(col("__id"))))
-    val s2 = k.filter(col("__rk") === 1).groupBy("__g")
-      .agg(count(lit(1)).as("docs_dedup"), sum("__ntok").as("toks_dedup"),
-        sum(least(col("__ntok"), lit(cap))).as("toks_packed"))
-      .withColumnRenamed("__g", "__g2")
-    s0.join(s1, col("__g") === col("__g1"), "left")
-      .join(s2, col("__g") === col("__g2"), "left")
-      .select(col("__g").as(groupCol), col("docs_raw"), col("toks_raw"),
+  def tokenLedger(df: DataFrame, idCol: String, textCol: String, groupCol: String): DataFrame = {
+    val t = df.select(col(idCol), col(groupCol),
+      size(split(col(textCol), " ")).cast("long").as("ntok"),
+      md5(concat_ws(" ", sort_array(split(col(textCol), " ")))).as("dg"))
+    val s0 = t.groupBy(groupCol)
+      .agg(count(lit(1)).as("docs_raw"), sum("ntok").as("toks_raw"))
+    val q = t.filter(col("ntok") >= 20)
+    val s1 = q.groupBy(groupCol)
+      .agg(count(lit(1)).as("docs_quality"), sum("ntok").as("toks_quality"))
+      .withColumnRenamed(groupCol, "src1")
+    val k = q.withColumn("rk",
+      row_number().over(Window.partitionBy(col("dg")).orderBy(col(idCol))))
+    val s2 = k.filter(col("rk") === 1).groupBy(groupCol)
+      .agg(count(lit(1)).as("docs_dedup"), sum("ntok").as("toks_dedup"),
+        sum(least(col("ntok"), lit(96L))).as("toks_packed"))
+      .withColumnRenamed(groupCol, "src2")
+    s0.join(s1, col(groupCol) === col("src1"), "left")
+      .join(s2, col(groupCol) === col("src2"), "left")
+      .select(col(groupCol), col("docs_raw"), col("toks_raw"),
         coalesce(col("docs_quality"), lit(0L)).as("docs_quality"),
         coalesce(col("toks_quality"), lit(0L)).as("toks_quality"),
         coalesce(col("docs_dedup"), lit(0L)).as("docs_dedup"),
@@ -2431,45 +2339,53 @@ object Pipelines {
         coalesce(col("toks_packed"), lit(0L)).as("toks_packed"))
   }
 
-  /** Prosecutor re-identification risk of a QI release, reported per
-    * `byCol` (generalizes q_priv_8). Risk rationals are integer
-    * divisions so the fold is exact.
+  /** Prosecutor re-identification risk of a QI release, per `byCol`:
+    * QI groups, singletons (k=1 → certain re-id), the expected risk
+    * Σ 1/k and the max 1/k. Risk rationals are integer divisions
+    * (1e9 div k, 1e6 div k) so the sum is an exact BIGINT fold. Returns
+    * (byCol as long, n_groups, n_singletons, exp_reid, max_risk).
     */
   def reidRisk(df: DataFrame, qiCols: Seq[String], byCol: String): DataFrame =
-    df.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("__k"))
+    df.groupBy(qiCols.map(col): _*)
+      .agg(count(lit(1)).as("k"))
       .groupBy(col(byCol).cast("long").as(byCol))
       .agg(count(lit(1)).as("n_groups"),
-        sum(when(col("__k") === 1, 1L).otherwise(0L)).as("n_singletons"),
-        (floor(sum(expr("1000000000 div __k")).cast("double") / 1000 + 0.5) / 1000000)
-          .as("exp_reid"),
-        (expr("1000000 div min(__k)").cast("double") / 1000000).as("max_risk"))
+        sum(when(col("k") === 1, 1L).otherwise(0L)).as("n_singletons"),
+        (floor(sum(expr("1000000000 div k")).cast("double") / 1000 + 0.5) / 1000000)
+          .as("__tmp"),
+        (expr("1000000 div min(k)").cast("double") / 1000000).as("max_risk"))
+      .select(col(byCol), col("n_groups"), col("n_singletons"),
+        col("__tmp").as("exp_reid"), col("max_risk"))
 
-  /** Rank-biased precision per query group (generalizes q_ret_11):
-    * ranking = ORDER BY rankCol DESC, idCol; relevance = relCol ≠ 0.
-    * Discounts (1-p)·p^(r-1) for ranks 1..depth are quantized to 1e8
-    * BIGINTs at plan time so the fold is exact for ANY p.
+  /** Rank-biased precision (p = 0.8, depth 20) per query group: the
+    * user-model retrieval metric whose discount is a geometric "keep
+    * reading" probability (complements nDCG's log discount). Ranking =
+    * ORDER BY rankCol DESC, idCol; relevance is the predicate
+    * `relevant`. Discounts (1−p)·p^(r−1) are plan-time 1e8-quantized
+    * BIGINTs ([[graft.operators.Round7oOps.rbpW]]), one division at
+    * emission. Returns (queryCol, n_rel_top20, rbp).
     */
   def rbp(df: DataFrame, queryCol: String, rankCol: String, idCol: String,
-      rel: org.apache.spark.sql.Column, p: Double = 0.8, depth: Int = 20): DataFrame = {
-    val w = (1 to depth).map(r =>
-      math.floor(1e8 * (1 - p) * math.pow(p, r - 1) + 0.5).toLong)
-    val wArr = array(w.map(lit): _*)
-    val byRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(queryCol).orderBy(col(rankCol).desc, col(idCol))
-    df.select(col(queryCol), when(rel, 1).otherwise(0).as("__rel"),
-        row_number().over(byRank).cast("long").as("__rn"))
+      relevant: org.apache.spark.sql.Column): DataFrame = {
+    val wArr = array(graft.operators.Round7oOps.rbpW.map(lit): _*)
+    val byRank = Window.partitionBy(queryCol).orderBy(col(rankCol).desc, col(idCol))
+    df.select(col(queryCol), when(relevant, 1).otherwise(0).as("rel"),
+        row_number().over(byRank).cast("long").as("rn"))
       .groupBy(queryCol)
-      .agg(sum(when(col("__rel") === 1 && col("__rn") <= depth, 1L).otherwise(0L))
-          .as(s"n_rel_top$depth"),
-        sum(when(col("__rel") === 1 && col("__rn") <= depth,
-          element_at(wArr, col("__rn").cast("int"))).otherwise(0L)).as("__w"))
-      .select(col(queryCol), col(s"n_rel_top$depth"),
-        (floor(col("__w").cast("double") / 100 + 0.5) / 1000000).as("rbp"))
+      .agg(sum(when(col("rel") === 1 && col("rn") <= 20, 1L).otherwise(0L)).as("n_rel_top20"),
+        sum(when(col("rel") === 1 && col("rn") <= 20,
+          element_at(wArr, col("rn").cast("int"))).otherwise(0L)).as("wsum"))
+      .select(col(queryCol), col("n_rel_top20"),
+        (floor(col("wsum").cast("double") / 100 + 0.5) / 1000000).as("rbp"))
   }
 
   /** Signed business-day (weekday) distance between two date/timestamp
-    * columns as closed-form epoch-day algebra (generalizes
-    * q_time_23). Antisymmetric: negative when `end` precedes `start`.
+    * columns as closed-form epoch-day algebra: W(e) = 5·⌊(e+3)/7⌋ +
+    * min((e+3) mod 7, 5) counts weekdays in [epoch, e) (1970-01-01 was a
+    * Thursday → the +3 shift anchors Monday at 0), so the distance is
+    * W(end) − W(start) — pure integer arithmetic, identical on any
+    * engine, no calendar-walking UDF. Antisymmetric: negative when `end`
+    * precedes `start`; floor/pmod keep it right before 1970 too.
     */
   def weekdaysBetween(start: org.apache.spark.sql.Column,
       end: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
@@ -2479,207 +2395,219 @@ object Pipelines {
       wk(datediff(start, lit("1970-01-01")).cast("long"))
   }
 
-  /** Token-vocabulary drift between two groups via map HOFs
-    * (generalizes q_map_6): shared keys, asymmetric key counts, L1
-    * distance over shared counts.
+  /** Token-vocabulary drift between groups `a` and `b` via map HOFs:
+    * each group's token→count map is built once (one aggregation — the
+    * vocabulary is corpus-bounded), then map_filter / map_contains_key /
+    * map_zip_with compute the shared-key overlap and the L1 count
+    * distance over shared keys; every lambda is single-level, inside
+    * codegen. One row (n_shared, n_only_a, n_only_b, l1_shared).
     */
   def vocabDrift(df: DataFrame, groupCol: String, textCol: String,
       a: String, b: String): DataFrame = {
     def vmap(v: String, out: String) =
       df.filter(col(groupCol) === v)
-        .select(explode(split(col(textCol), " ")).as("__t"))
-        .groupBy("__t").agg(count(lit(1)).as("__n"))
-        .agg(map_from_entries(sort_array(collect_list(struct(col("__t"), col("__n")))))
+        .select(explode(split(col(textCol), " ")).as("t"))
+        .groupBy("t").agg(count(lit(1)).as("n"))
+        .agg(map_from_entries(sort_array(collect_list(struct(col("t"), col("n")))))
           .as(out))
-    val m = vmap(a, "__m0").crossJoin(broadcast(vmap(b, "__m1")))
-    val shared0 = map_filter(col("__m0"), (k, _) => map_contains_key(col("__m1"), k))
-    val zip = map_zip_with(shared0, col("__m1"), (_, x, y) =>
+    val m = vmap(a, "m0").crossJoin(vmap(b, "m1"))
+    val shared0 = map_filter(col("m0"), (k, _) => map_contains_key(col("m1"), k))
+    val zip = map_zip_with(shared0, col("m1"), (_, x, y) =>
       when(x.isNotNull && y.isNotNull, abs(x - y)).otherwise(0L))
     m.select(
       size(shared0).cast("long").as("n_shared"),
-      (size(col("__m0")) - size(shared0)).cast("long").as("n_only_a"),
-      (size(col("__m1")) - size(map_filter(col("__m1"),
-        (k, _) => map_contains_key(col("__m0"), k)))).cast("long").as("n_only_b"),
+      (size(col("m0")) - size(shared0)).cast("long").as("n_only_a"),
+      (size(col("m1")) - size(map_filter(col("m1"),
+        (k, _) => map_contains_key(col("m0"), k)))).cast("long").as("n_only_b"),
       aggregate(map_values(zip), lit(0L), (acc, x) => acc + x).as("l1_shared"))
   }
 
-  /** Pinball-loss quantile-forecast evaluation (generalizes q_ml_13):
-    * portable-hash split (3 train shards : 1 test), per-group exact
-    * type-1 q50/q90 on train, τ∈{.5,.9} losses on test. `centsCol`
-    * must already be an exact integer unit.
+  /** Pinball-loss quantile-forecast evaluation per group: the portable
+    * `keyCol` hash splits 3 train shards : 1 test (never an engine RNG);
+    * the train split's exact type-1 q50/q90 of the integer (cents)
+    * `centsCol` — a per-group rank pick, not percentile(): type-1 is the
+    * cross-engine-stable choice — score the test split under pinball
+    * loss (τ-scaled one-sided errors; τ=0.5 gives MAE/2). Loss terms stay
+    * exact BIGINT deci-cents until the ONE division at emission.
+    * Returns (groupCol, n_test, q50, q90, pinball50, pinball90).
     */
   def pinballEval(df: DataFrame, groupCol: String, centsCol: String,
       keyCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    def DD(c: org.apache.spark.sql.Column) = c.cast("double")
-    val h = (pmod(col(keyCol), lit(1000000007L)) * 2654435761L) % 1000000007L % 4
-    val j = df.select(col(groupCol).as("__g"), col(centsCol).as("__t2"),
-      col(keyCol).as("__k"), h.as("__h"))
-    val wOrd = W.partitionBy(col("__g")).orderBy(col("__t2"), col("__k"))
-    val wAll = W.partitionBy(col("__g"))
-    val tr = j.filter(col("__h") < 3)
-      .select(col("__g"), col("__t2"),
-        row_number().over(wOrd).as("__rn"), count(lit(1)).over(wAll).as("__n"))
-    val qq = tr.groupBy("__g")
-      .agg(max(when(col("__rn") === expr("(__n + 1) div 2"), col("__t2"))).as("q50"),
-        max(when(col("__rn") === expr("(9 * __n + 9) div 10"), col("__t2"))).as("q90"))
-    val te = j.filter(col("__h") === 3).select(col("__g").as("__tg"), col("__t2"))
-    te.join(qq, col("__tg") === col("__g"))
-      .groupBy(col("__g"), col("q50"), col("q90"))
+    def D(c: org.apache.spark.sql.Column) = c.cast("double")
+    val h = idHash(col(keyCol)) % 4
+    val j = df.select(col(keyCol), col(centsCol), h.as("h"), col(groupCol))
+    val wOrd = Window.partitionBy(col(groupCol)).orderBy(col(centsCol), col(keyCol))
+    val wAll = Window.partitionBy(col(groupCol))
+    val tr = j.filter(col("h") < 3)
+      .select(col(groupCol), col(centsCol),
+        row_number().over(wOrd).as("rn"), count(lit(1)).over(wAll).as("n"))
+    val qq = tr.groupBy(groupCol)
+      .agg(max(when(col("rn") === expr("(n + 1) div 2"), col(centsCol))).as("q50"),
+        max(when(col("rn") === expr("(9 * n + 9) div 10"), col(centsCol))).as("q90"))
+    val te = j.filter(col("h") === 3).select(col(groupCol).as("tseg"), col(centsCol))
+    te.join(qq, col("tseg") === col(groupCol))
+      .groupBy(col(groupCol), col("q50"), col("q90"))
       .agg(count(lit(1)).as("n_test"),
-        sum(greatest(lit(5) * (col("__t2") - col("q50")),
-          lit(-5) * (col("__t2") - col("q50")))).as("__l50"),
-        sum(greatest(lit(9) * (col("__t2") - col("q90")),
-          -(col("__t2") - col("q90")))).as("__l90"))
-      .select(col("__g").as(groupCol), col("n_test"),
-        (DD(col("q50")) / 100).as("q50"), (DD(col("q90")) / 100).as("q90"),
-        graft.functions.Num.round(DD(col("__l50")) / 1000 / col("n_test"), 6).as("pinball50"),
-        graft.functions.Num.round(DD(col("__l90")) / 1000 / col("n_test"), 6).as("pinball90"))
+        sum(greatest(lit(5) * (col(centsCol) - col("q50")),
+          lit(-5) * (col(centsCol) - col("q50")))).as("l50"),
+        sum(greatest(lit(9) * (col(centsCol) - col("q90")),
+          -(col(centsCol) - col("q90")))).as("l90"))
+      .select(col(groupCol), col("n_test"),
+        (D(col("q50")) / 100).as("q50"), (D(col("q90")) / 100).as("q90"),
+        round(D(col("l50")) / 1000 / col("n_test"), 6).as("pinball50"),
+        round(D(col("l90")) / 1000 / col("n_test"), 6).as("pinball90"))
   }
 
-  /** MASE of a w-step moving-average forecast vs the one-step naive
-    * baseline over an ordered series (generalizes q_ml_14, w=3).
-    * Integer values stay exact: errors are ×w-scaled.
+  /** MASE — mean absolute scaled error — of a 3-step moving-average
+    * forecast over an ordered integer series, scaled by the one-step
+    * naive baseline: THE unit-free forecast-accuracy metric. The 3-step
+    * mean is kept as a ×3 integer, so both absolute-error sums stay
+    * exact until the final ratio. Returns (n_scored, sum_err3x,
+    * sum_naive3x, mase).
     */
   def mase(series: DataFrame, tCol: String, xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window.orderBy(col(tCol))
-    val l = series.select(col(xCol).as("__x"),
-      lag(col(xCol), 1).over(W).as("__x1"), lag(col(xCol), 2).over(W).as("__x2"),
-      lag(col(xCol), 3).over(W).as("__x3"))
-    l.filter(col("__x3").isNotNull)
-      .select(abs(lit(3) * col("__x") - (col("__x1") + col("__x2") + col("__x3"))).as("__e3"),
-        abs(lit(3) * col("__x") - lit(3) * col("__x1")).as("__e1"))
+    val w = Window.orderBy(col(tCol))
+    val l = series.select(col(xCol),
+      lag(col(xCol), 1).over(w).as("x1"), lag(col(xCol), 2).over(w).as("x2"),
+      lag(col(xCol), 3).over(w).as("x3"))
+    l.filter(col("x3").isNotNull)
+      .select(abs(lit(3) * col(xCol) - (col("x1") + col("x2") + col("x3"))).as("e3"),
+        abs(lit(3) * col(xCol) - lit(3) * col("x1")).as("e1"))
       .agg(count(lit(1)).as("n_scored"),
-        sum("__e3").as("sum_err3x"), sum("__e1").as("sum_naive3x"))
+        sum("e3").as("sum_err3x"), sum("e1").as("sum_naive3x"))
       .select(col("n_scored"), col("sum_err3x"), col("sum_naive3x"),
-        graft.functions.Num.round(
-          col("sum_err3x").cast("double") / col("sum_naive3x"), 6).as("mase"))
+        round(col("sum_err3x").cast("double") / col("sum_naive3x"), 6).as("mase"))
   }
 
-  /** Hodges–Lehmann pseudo-median per group over an ordered series
-    * (generalizes q_stat_44): median of Walsh averages (x_i+x_j)/2,
-    * i ≤ j. For an EVEN Walsh count the two middle Walsh sums are
-    * averaged (the standard HL pseudo-median, not the lower median).
-    * `tCol` must be UNIQUE within each group — the i ≤ j pairing keys
-    * on it, so duplicate t values would double-count pairs.
+  /** Hodges–Lehmann pseudo-median per group over an ordered series: the
+    * median of all Walsh averages (x_i + x_j)/2, i ≤ j — the robust
+    * location estimator paired with the Wilcoxon test. Walsh sums stay
+    * INTEGER; the rank pick halves only at emission. An EVEN Walsh
+    * count averages the two middle Walsh sums (the standard HL
+    * pseudo-median, not the lower median). `tCol` must be UNIQUE within
+    * each group — the i ≤ j pairing keys on it. The pair space is
+    * |series|² per group: bound the series (e.g. by the calendar).
+    * Returns (groupCol, hl_estimate, n_walsh).
     */
   def hodgesLehmann(series: DataFrame, groupCol: String, tCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val a = series.select(col(groupCol).as("__g"), col(tCol).as("__t1"), col(xCol).as("__x1"))
-    val b = series.select(col(groupCol).as("__g2"), col(tCol).as("__t2"), col(xCol).as("__x2"))
-    val w = a.join(b, col("__g") === col("__g2") && col("__t1") <= col("__t2"))
-      .select(col("__g"), col("__t1"), col("__t2"), (col("__x1") + col("__x2")).as("__s"))
-    val wRn = W.partitionBy(col("__g")).orderBy(col("__s"), col("__t1"), col("__t2"))
-    val wAll = W.partitionBy(col("__g"))
-    w.select(col("__g"), col("__s"),
-        row_number().over(wRn).as("__rn"), count(lit(1)).over(wAll).as("__nw"))
-      .groupBy("__g")
-      .agg(((max(when(col("__rn") === expr("(__nw + 1) div 2"), col("__s")))
-          + max(when(col("__rn") === expr("(__nw + 2) div 2"), col("__s"))))
-          .cast("double") / 4).as("hl_estimate"),
-        max(col("__nw")).cast("long").as("n_walsh"))
-      .withColumnRenamed("__g", groupCol)
+    val a = series.select(col(groupCol), col(tCol).as("y1"), col(xCol).as("x1"))
+    val b = series.select(col(groupCol).as("pr2"), col(tCol).as("y2"), col(xCol).as("x2"))
+    val w = a.join(b, col(groupCol) === col("pr2") && col("y1") <= col("y2"))
+      .select(col(groupCol), col("y1"), col("y2"), (col("x1") + col("x2")).as("s"))
+    val wRn = Window.partitionBy(col(groupCol)).orderBy(col("s"), col("y1"), col("y2"))
+    val wAll = Window.partitionBy(col(groupCol))
+    w.select(col(groupCol), col("s"),
+        row_number().over(wRn).as("rn"), count(lit(1)).over(wAll).as("nw"))
+      .groupBy(groupCol)
+      .agg(((max(when(col("rn") === expr("(nw + 1) div 2"), col("s")))
+          + max(when(col("rn") === expr("(nw + 2) div 2"), col("s"))))
+          .cast("double") / 4)
+          .as("hl_estimate"),
+        max(col("nw")).cast("long").as("n_walsh"))
   }
 
-  /** Kendall τ-b with tie corrections over an ordered series
-    * (generalizes q_stat_46). x/y must be exact integers so tie
+  /** Kendall τ-b with tie corrections over an ordered series (the
+    * tie-corrected twin of τ-a). x/y must be exact integers so tie
     * detection is never a float comparison. Tie counts follow the
     * canonical (scipy/R) convention: `tx` counts ALL x-tied pairs and
-    * `ty` ALL y-tied pairs — a pair tied in BOTH x and y counts in
-    * both — so τ-b = (nc − nd)/√((n0 − tx)(n0 − ty)) matches the
-    * standard statistic even with duplicate (x, y) pairs.
+    * `ty` ALL y-tied pairs — a pair tied in BOTH counts in both — so
+    * τ-b = (nc − nd)/√((n0 − tx)(n0 − ty)) matches the standard
+    * statistic even with duplicate (x, y) pairs. Counts are exact off
+    * the |series|² self-join; τ-b divides once at emission. Returns
+    * (nc, nd, tx, ty, n0, tau_b).
     */
   def kendallTauB(series: DataFrame, tCol: String, xCol: String,
       yCol: String): DataFrame = {
-    def DD(c: org.apache.spark.sql.Column) = c.cast("double")
-    val a = series.select(col(tCol).as("__t1"), col(xCol).as("__x1"), col(yCol).as("__y1"))
-    val b = series.select(col(tCol).as("__t2"), col(xCol).as("__x2"), col(yCol).as("__y2"))
-    val p = a.join(b, col("__t1") < col("__t2"))
+    def D(c: org.apache.spark.sql.Column) = c.cast("double")
+    val a = series.select(col(tCol).as("ym1"), col(xCol).as("x1"), col(yCol).as("y1"))
+    val b = series.select(col(tCol).as("ym2"), col(xCol).as("x2"), col(yCol).as("y2"))
+    val p = a.join(b, col("ym1") < col("ym2"))
     p.agg(
-        sum(when((col("__x1") < col("__x2") && col("__y1") < col("__y2")) ||
-          (col("__x1") > col("__x2") && col("__y1") > col("__y2")), 1L).otherwise(0L)).as("nc"),
-        sum(when((col("__x1") < col("__x2") && col("__y1") > col("__y2")) ||
-          (col("__x1") > col("__x2") && col("__y1") < col("__y2")), 1L).otherwise(0L)).as("nd"),
-        sum(when(col("__x1") === col("__x2"), 1L).otherwise(0L)).as("tx"),
-        sum(when(col("__y1") === col("__y2"), 1L).otherwise(0L)).as("ty"),
+        sum(when((col("x1") < col("x2") && col("y1") < col("y2")) ||
+          (col("x1") > col("x2") && col("y1") > col("y2")), 1L).otherwise(0L)).as("nc"),
+        sum(when((col("x1") < col("x2") && col("y1") > col("y2")) ||
+          (col("x1") > col("x2") && col("y1") < col("y2")), 1L).otherwise(0L)).as("nd"),
+        sum(when(col("x1") === col("x2"), 1L).otherwise(0L)).as("tx"),
+        sum(when(col("y1") === col("y2"), 1L).otherwise(0L)).as("ty"),
         count(lit(1)).as("n0"))
       .select(col("nc"), col("nd"), col("tx"), col("ty"), col("n0"),
-        graft.functions.Num.round(DD(col("nc") - col("nd"))
-          / sqrt(DD(col("n0") - col("tx")) * (col("n0") - col("ty"))), 6).as("tau_b"))
+        round(D(col("nc") - col("nd"))
+          / sqrt(D(col("n0") - col("tx")) * (col("n0") - col("ty"))), 6).as("tau_b"))
   }
 
-  /** Brier score with the Murphy decomposition (generalizes q_ml_15):
-    * `pmCol` = integral milli-unit forecasts 0..999, `yCol` = 0/1
-    * outcomes; 10 equal bins. `brier` is the TRUE mean (p − y)²
-    * (computed from the exact integer Σ(pm − 1000y)², NOT the binned
-    * identity — with many distinct forecasts per bin rel − res + unc
-    * is only an approximation); `resid` reports the decomposition gap
-    * the binning leaves.
+  /** Brier score with the Murphy decomposition (reliability /
+    * resolution / uncertainty): `pmCol` = integral milli-unit forecasts
+    * 0..999, `yCol` = 0/1 outcomes, 10 equal bins. Every bin statistic
+    * is an exact integer sum; the three terms are single IEEE
+    * expressions of those sums, 1e-6 quantized. `brier` is the TRUE
+    * mean (p − y)² off the exact integer Σ(pm − 1000y)² (with many
+    * distinct forecasts per bin rel − res + unc is only an
+    * approximation); `resid` reports the gap the binning leaves.
     */
   def brierDecomposition(df: DataFrame, pmCol: String, yCol: String): DataFrame = {
-    def DD(c: org.apache.spark.sql.Column) = c.cast("double")
-    val f = df.select(col(pmCol).as("__pm"), col(yCol).as("__y"))
-    val b = f.groupBy(expr("__pm div 100").as("__bin"))
-      .agg(count(lit(1)).as("__n"), sum("__pm").as("__sp"), sum("__y").as("__sy"))
-    val t = f.agg(count(lit(1)).as("__nn"), sum("__y").as("__syy"),
-      sum((col("__pm") - lit(1000L) * col("__y"))
-        * (col("__pm") - lit(1000L) * col("__y"))).as("__bq"))
-    val pbar = DD(col("__sp")) / col("__n") / 1000
-    val ybar = DD(col("__sy")) / col("__n")
-    val gbar = DD(col("__syy")) / col("__nn")
+    def D(c: org.apache.spark.sql.Column) = c.cast("double")
+    val b = df.groupBy(expr(s"$pmCol div 100").as("bin"))
+      .agg(count(lit(1)).as("n"), sum(pmCol).as("sp"), sum(yCol).as("sy"))
+    val t = df.agg(count(lit(1)).as("nn"), sum(yCol).as("syy"),
+      sum((col(pmCol) - lit(1000L) * col(yCol)) * (col(pmCol) - lit(1000L) * col(yCol)))
+        .as("bq"))
+    val pbar = D(col("sp")) / col("n") / 1000
+    val ybar = D(col("sy")) / col("n")
+    val gbar = D(col("syy")) / col("nn")
     b.crossJoin(broadcast(t))
       .agg(
-        (sum(DD(col("__n")) * (pbar - ybar) * (pbar - ybar)) / max(col("__nn"))).as("__rel"),
-        (sum(DD(col("__n")) * (ybar - gbar) * (ybar - gbar)) / max(col("__nn"))).as("__res"),
-        max(gbar * (lit(1) - gbar)).as("__unc"),
-        max(DD(col("__bq")) / 1000000 / col("__nn")).as("__bt"),
-        max(col("__nn")).as("__nn2"))
-      .select(col("__nn2").as("n_scored"),
-        graft.functions.Num.round(col("__rel"), 6).as("reliability"),
-        graft.functions.Num.round(col("__res"), 6).as("resolution"),
-        graft.functions.Num.round(col("__unc"), 6).as("uncertainty"),
-        graft.functions.Num.round(col("__bt"), 6).as("brier"),
-        graft.functions.Num.round(col("__bt")
-          - (col("__rel") - col("__res") + col("__unc")), 6).as("resid"))
+        (sum(D(col("n")) * (pbar - ybar) * (pbar - ybar)) / max(col("nn"))).as("rel"),
+        (sum(D(col("n")) * (ybar - gbar) * (ybar - gbar)) / max(col("nn"))).as("res"),
+        max(gbar * (lit(1) - gbar)).as("unc"),
+        max(D(col("bq")) / 1000000 / col("nn")).as("bt"),
+        max(col("nn")).as("nn"))
+      .select(col("nn").as("n_scored"),
+        round(col("rel"), 6).as("reliability"),
+        round(col("res"), 6).as("resolution"),
+        round(col("unc"), 6).as("uncertainty"),
+        round(col("bt"), 6).as("brier"),
+        round(col("bt") - (col("rel") - col("res") + col("unc")), 6).as("resid"))
   }
 
-  /** √-scaled mixture quotas to an EXACT total via largest-remainder
-    * rounding (generalizes q_pipe_12).
+  /** √-scaled mixture quotas allocated to an EXACT total of 100 rows via
+    * largest-remainder rounding — the standard LLM data-mixing rule
+    * (sample ∝ √size flattens the long tail). Weights are 1e6-quantized
+    * √counts; floor quotas plus the largest integer remainders make
+    * Σquota = 100 — pure integer arithmetic after the one
+    * correctly-rounded sqrt. Returns (groupCol, n_docs, weight6, quota).
     */
-  def sqrtQuota(df: DataFrame, groupCol: String, total: Long = 100L): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val l = df.groupBy(col(groupCol).as("__g")).agg(count(lit(1)).as("__n"))
-    val w = l.select(col("__g"), col("__n"),
-      floor(sqrt(col("__n").cast("double")) * 1000000).cast("long").as("__w6"))
-    val wAll = W.partitionBy()
-    val t = w.select(col("__g"), col("__n"), col("__w6"),
-        (lit(total) * col("__w6")).as("__p"), sum(col("__w6")).over(wAll).as("__tw"))
-      .select(col("__g"), col("__n"), col("__w6"),
-        expr("__p div __tw").as("__q0"), (col("__p") % col("__tw")).as("__rem"))
-    t.select(col("__g"), col("__n"), col("__w6"), col("__q0"), col("__rem"),
-        row_number().over(W.orderBy(col("__rem").desc, col("__g"))).as("__rk"),
-        (lit(total) - sum(col("__q0")).over(wAll)).as("__left"))
-      .select(col("__g").as(groupCol), col("__n").as("n_docs"),
-        col("__w6").as("weight6"),
-        (col("__q0") + when(col("__rk") <= col("__left"), 1L).otherwise(0L))
+  def sqrtQuota(df: DataFrame, groupCol: String): DataFrame = {
+    val l = df.groupBy(groupCol).agg(count(lit(1)).as("n"))
+    val w = l.select(col(groupCol), col("n"),
+      floor(sqrt(col("n").cast("double")) * 1000000).cast("long").as("w6"))
+    val wAll = Window.partitionBy()
+    val t = w.select(col(groupCol), col("n"), col("w6"),
+      expr("100 * w6").as("p"), sum(col("w6")).over(wAll).as("tw"))
+      .select(col(groupCol), col("n"), col("w6"),
+        expr("p div tw").as("q0"), (col("p") % col("tw")).as("rem"))
+    t.select(col(groupCol), col("n"), col("w6"), col("q0"), col("rem"),
+        row_number().over(Window.orderBy(col("rem").desc, col(groupCol))).as("rk"),
+        (lit(100) - sum(col("q0")).over(wAll)).as("leftover"))
+      .select(col(groupCol), col("n").as("n_docs"), col("w6").as("weight6"),
+        (col("q0") + when(col("rk") <= col("leftover"), 1L).otherwise(0L))
           .cast("long").as("quota"))
   }
 
-  /** Keyed pseudonymization Column: sha2-256 of salt ‖ key — the same
-    * token on every engine/run, referentially consistent across tables
-    * (generalizes q_priv_10).
+  /** Keyed pseudonymization Column: sha2-256 of salt ‖ "|" ‖ key — the
+    * same token on every engine/run, so pseudonymized tables stay
+    * joinable exactly where the raw keys were.
     */
   def pseudonymize(key: org.apache.spark.sql.Column,
       salt: String): org.apache.spark.sql.Column =
-    sha2(concat(lit(salt), lit("|"), key.cast("string")), 256)
+    sha2(concat(lit(salt + "|"), key.cast("string")), 256)
 
   /** Canonicalize a URL Column: scheme-preserving (http stays http —
     * the prefix length is derived from the scheme, not hard-coded),
     * lowercase host, strip www., drop EVERY utm_* query param wherever
     * it sits (leading `?`, middle `&`, or trailing — no dangling
-    * separators left behind), trim the trailing slash (generalizes
-    * q_dedup_31_url_canonical's cleanup).
+    * separators left behind), trim the trailing slash — the first
+    * dedup stage of a crawl pipeline (q_dedup_31_url_canonical).
     */
   def canonicalizeUrl(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val scheme = lower(substring_index(url, "://", 1))
@@ -2699,18 +2627,18 @@ object Pipelines {
       rtrim(noUtm, "/"))
   }
 
-  /** The same K rows from every group on any cluster size or engine:
-    * bottom-k by the portable multiplicative hash, as a typed
-    * Aggregator whose K-bounded buffer partial-aggregates map-side
-    * (generalizes q_udaf_4). Output: (group, rn 1..k, key).
+  /** The same k rows from every group on any cluster size or engine:
+    * bottom-k by the portable multiplicative hash of the long `keyCol`,
+    * as the typed Aggregator [[graft.operators.Round7nOps.BottomKAgg]]
+    * whose k-bounded buffer partial-aggregates map-side (O(k) state per
+    * group per task). Returns (groupCol, rn 1..k, keyCol).
     */
-  def bottomKSample(df: DataFrame, groupCol: String, keyCol: String,
-      k: Int = 5): DataFrame = {
-    val agg = udaf(new graft.operators.Round7nOps.BottomKAgg(k))
+  def bottomKSample(df: DataFrame, groupCol: String, keyCol: String, k: Int): DataFrame = {
+    val bk = udaf(new graft.operators.Round7nOps.BottomKAgg(k))
     df.groupBy(groupCol)
-      .agg(agg(col(keyCol)).as("__bk"))
-      .select(col(groupCol), posexplode(col("__bk.ks")).as(Seq("__pos", keyCol)))
-      .select(col(groupCol), (col("__pos") + 1).cast("long").as("rn"), col(keyCol))
+      .agg(bk(col(keyCol)).as("bk"))
+      .select(col(groupCol), posexplode(col("bk.ks")).as(Seq("pos", keyCol)))
+      .select(col(groupCol), (col("pos") + 1).cast("long").as("rn"), col(keyCol))
   }
 
   /** Exact order statistics of a LONG column WITHOUT a single-partition
@@ -3120,7 +3048,7 @@ object Pipelines {
   /** Multi-column form of [[prefixSum]]: all running sums share ONE
     * range shuffle and one P-row offset exchange.
     */
-  def prefixSumN(df: DataFrame, orderCols: Seq[String],
+  private[graft] def prefixSumN(df: DataFrame, orderCols: Seq[String],
       valueOutCols: Seq[(String, String)], partitions: Int = 0): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}

@@ -73,19 +73,11 @@ object TextFunctions {
 
   /** MinHash signature over distinct n-token shingle hashes — same
     * universal-hash family as [[minhashSignature]]; native expression
-    * (see there), with the declarative twin kept below for the pin. */
+    * (see there), pinned against its declarative twin in the tests. */
   def shingleMinhashSignature(text: Column, n: Int, k: Int): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       graft.expressions.MinhashSig(ColumnBridge.expression(text), k, n))
-  }
-
-  /** Declarative HOF twin of [[shingleMinhashSignature]] — test pin
-    * only, same rationale as [[minhashSignatureDeclarative]]. */
-  def shingleMinhashSignatureDeclarative(text: Column, n: Int, k: Int): Column = {
-    val hs = transform(shingles(text, n), charHash _)
-    transform(sequence(lit(0L), lit(k - 1L)), i =>
-      array_min(transform(hs, h => (h * (i * 2 + 3) + (i * 5 + 7)) % P)))
   }
 
   /** MinHash signature of `text` with `k` universal-hash functions
@@ -99,23 +91,13 @@ object TextFunctions {
   def minhashSignature(text: Column, k: Int): Column = {
     // native single-pass expression (graft.expressions.MinhashSig) —
     // the r9 SimHash30 conversion applied to the minhash signature
-    // (r14): the declarative chain below is a per-character interpreted
+    // (r14): the declarative chain is a per-character interpreted
     // fold per token plus k interpreted min-passes, and dominated every
     // MinHash corpus scan. Long mod-P arithmetic — exact equality with
     // the declarative twin, pinned by OperatorUnitSpec.
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       graft.expressions.MinhashSig(ColumnBridge.expression(text), k))
-  }
-
-  /** The declarative higher-order-function formulation of
-    * [[minhashSignature]] (the original form, mirrored 1:1 by the
-    * DuckDB oracle SQL): kept as the independent cross-check the unit
-    * test pins the native expression against. */
-  def minhashSignatureDeclarative(text: Column, k: Int): Column = {
-    val hs = tokenHashes(text)
-    transform(sequence(lit(0L), lit(k - 1L)), i =>
-      array_min(transform(hs, h => (h * (i * 2 + 3) + (i * 5 + 7)) % P)))
   }
 
   /** 30-bit SimHash over the distinct-token hashes: bit j of the result is
@@ -126,29 +108,13 @@ object TextFunctions {
     */
   def simhash32(text: Column): Column = {
     // native single-pass expression (graft.expressions.SimHash30) —
-    // same function as the declarative nested-aggregate form below,
-    // which was fully interpreted (lambda expressions never codegen)
-    // and dominated every corpus-scan simhash query (r9 measurement;
-    // the declarative form is kept in simhash32Declarative as the
-    // cross-implementation pin TextFunctionsSpec asserts against)
+    // same function as the declarative nested-aggregate form, which was
+    // fully interpreted (lambda expressions never codegen) and dominated
+    // every corpus-scan simhash query (r9 measurement; the declarative
+    // form is the test-source twin OperatorUnitSpec pins against)
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       graft.expressions.SimHash30(ColumnBridge.expression(text)))
-  }
-
-  /** The declarative higher-order-function formulation of [[simhash32]]
-    * (the original form, mirrored 1:1 by the DuckDB oracle SQL): kept
-    * as the independent cross-check the unit test pins the native
-    * expression against.
-    */
-  def simhash32Declarative(text: Column): Column = {
-    val hs = tokenHashes(text)
-    aggregate(sequence(lit(0L), lit(29L)), lit(0L), (acc, j) => {
-      val pw = pow(lit(2.0), j).cast("long")
-      val votes = aggregate(hs, lit(0L),
-        (a, h) => a + (h.cast("double") / pw).cast("long") % 2 * 2 - 1)
-      acc + when(votes > 0, pw).otherwise(0L)
-    })
   }
 
   /** Token n-gram shingles (n consecutive tokens joined by one space).
@@ -157,7 +123,7 @@ object TextFunctions {
     */
   def tokenShingles(text: Column, n: Int): Column = {
     // native single-pass expression (graft.expressions.TokenShingles) —
-    // the declarative form below paid an interpreted slice+concat_ws
+    // the declarative form paid an interpreted slice+concat_ws
     // lambda per shingle (r14; measured 1.92 s vs 0.28 s for a plain
     // exploded split over the sf0.1 corpus). Pure string mechanics —
     // exact equality with the declarative twin, pinned by
@@ -165,16 +131,5 @@ object TextFunctions {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       graft.expressions.TokenShingles(ColumnBridge.expression(text), n))
-  }
-
-  /** The declarative higher-order-function formulation of
-    * [[tokenShingles]] — test pin only, same rationale as
-    * [[minhashSignatureDeclarative]]. */
-  def tokenShinglesDeclarative(text: Column, n: Int): Column = {
-    val ts = tokens(text)
-    when(size(ts) >= n,
-      array_distinct(transform(sequence(lit(1), size(ts) - (n - 1)), i =>
-        concat_ws(" ", slice(ts, i, lit(n))))))
-      .otherwise(array().cast("array<string>"))
   }
 }

@@ -30,12 +30,6 @@ object VectorFunctions {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
 
-  /** HOF reference twin of [[dot]] — test/microbench comparison only,
-    * same rationale as [[cosineHof]] (which composes it). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x * y).cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Σ aᵢ² as double. */
   def norm2(a: Column): Column =
     aggregate(transform(a, x => (x * x).cast("double")), lit(0.0), (acc, x) => acc + x)
@@ -59,21 +53,14 @@ object VectorFunctions {
     * q_sim_41's rank window, the sort + WindowGroupLimit path paid the
     * three-lambda cosine several times per row (1.99 s vs 0.35 s for
     * the 90k-pair window). CosineSimilarity is contract-identical
-    * (float multiply, widen to double, left-fold from 0.0 — the
-    * Microbench tool asserts bit-equality against the HOF form), so no
+    * (float multiply, widen to double, left-fold from 0.0 —
+    * OperatorUnitSpec asserts bit-equality against the HOF form), so no
     * result can move. */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.expressions.CosineSimilarity(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** The original HOF cosine — kept as the independent reference twin
-    * the bit-equality tests and Microbench compare the native
-    * expression against (using [[cosine]] there would compare native
-    * with itself). Not for query paths. */
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (l2norm(a) * l2norm(b))
 
   /** Squared euclidean distance Σ (aᵢ-bᵢ)² — native codegen expression
     * (r14), same recompute argument and bit-identical numerical
@@ -85,13 +72,6 @@ object VectorFunctions {
     ColumnBridge.column(graft.expressions.SqDist(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** HOF reference twin of [[sqDist]] — test/microbench comparison
-    * only, same rationale as [[cosineHof]]. */
-  def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val diff = (x - y).cast("double"); diff * diff
-    }), lit(0.0), (acc, x) => acc + x)
 
   /** DuckDB mirrors of the above, for oracle construction. */
   object Duck {

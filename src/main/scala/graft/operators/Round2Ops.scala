@@ -113,19 +113,7 @@ object Round2Ops {
         |  unnest(range(0, (len(string_split(text, ' ')) - 1) // 24 + 1)) AS chunk_id
         | FROM documents)
         |ORDER BY doc_id, chunk_id""".stripMargin) { (s, d) =>
-      // Training-data chunking: fixed 32-token windows with stride 24
-      // (8-token overlap) — the standard long-document → context-window
-      // preprocessing step. One explode per document (no shuffle until
-      // the final sort); chunk text is emitted as its md5 so declared
-      // output stays bounded. At 100 TB this is a pure map stage.
-      val docs = Tables(s, d, "documents")
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-      docs
-        .select(col("doc_id"), col("toks"),
-          explode(sequence(lit(0L), floor((size(col("toks")) - 1) / lit(24)))).as("chunk_id"))
-        .select(col("doc_id"), col("chunk_id"),
-          size(slice(col("toks"), (col("chunk_id") * 24 + 1).cast("int"), lit(32))).cast("long").as("n_toks"),
-          md5(array_join(slice(col("toks"), (col("chunk_id") * 24 + 1).cast("int"), lit(32)), " ")).as("chunk_md5"))
+      graft.api.Pipelines.chunk(Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id", "chunk_id")
     },
 
@@ -137,20 +125,8 @@ object Round2Ops {
         |SELECT lang, CAST((cum - n_tok) // 512 AS BIGINT) AS pack_id, count(*) AS n_docs,
         | CAST(sum(n_tok) AS BIGINT) AS pack_tokens
         |FROM c GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin) { (s, d) =>
-      // Sequence packing for training batches: documents stream in stable
-      // (lang, doc_id) order; a running token count assigns each doc to
-      // the 512-token pack its prefix sum lands in. Deterministic (no
-      // rand, no greedy state), exact integer arithmetic, one
-      // range-partitioned per-lang prefix sum (Pipelines.groupRankPrefix,
-      // r13 — the lang-keyed cumulative window was a |langs|-task corpus
-      // sort; integer sums over the total (lang, doc_id) order reproduce
-      // it bit-exactly) — the declarative approximation of first-fit
-      // packing.
-      graft.api.Pipelines.groupRankPrefix(
-          Tables(s, d, "documents")
-            .select(col("doc_id"), col("lang"), size(tokens(col("text"))).cast("long").as("n_tok")),
-          Seq("lang"), Seq(col("doc_id")), "__rk", "__ng", Seq(("n_tok", "cum", "")))
-        .select(col("lang"), floor((col("cum") - col("n_tok")) / lit(512)).as("pack_id"), col("n_tok"))
+      // Sequence packing for training batches: pack sizes per language.
+      graft.api.Pipelines.pack(Tables(s, d, "documents"), "doc_id", "text", "lang")
         .groupBy("lang", "pack_id")
         .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("pack_tokens"))
         .orderBy("lang", "pack_id")
@@ -163,17 +139,7 @@ object Round2Ops {
         | floor((count(*) / (SELECT n FROM tot)) * 1000000 + 0.5) / 1000000 AS freq
         |FROM t GROUP BY tok HAVING count(*) > (SELECT n FROM tot) / 200
         |ORDER BY cnt DESC, tok""".stripMargin) { (s, d) =>
-      // Exact heavy hitters: tokens above 0.5% of the total token stream.
-      // Two-level aggregate (map-side partial combine → merge), one tiny
-      // scalar broadcast for the threshold — the exact counterpart of a
-      // count-min/space-saving sketch, valid at any scale because the
-      // group count is vocabulary-bounded, not corpus-bounded.
-      val t = Tables(s, d, "documents").select(explode(tokens(col("text"))).as("tok"))
-      val tot = t.agg(count(lit(1)).cast("double").as("n"))
-      t.groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .crossJoin(broadcast(tot))
-        .filter(col("cnt") > col("n") / 200)
-        .select(col("tok"), col("cnt"), round(col("cnt") / col("n"), 6).as("freq"))
+      graft.api.Pipelines.heavyHitters(Tables(s, d, "documents"), "text")
         .orderBy(col("cnt").desc, col("tok"))
     },
 

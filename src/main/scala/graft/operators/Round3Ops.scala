@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.Q
-import graft.expressions.{BloomRuntime, VectorExpressions}
+import graft.expressions.BloomRuntime
 import graft.functions.Num.round
-import graft.functions.TextFunctions.tokens
 import graft.sources.Tables
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -32,16 +31,6 @@ object Round3Ops {
       |    list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1),
       |    list_slice(string_split(text, ' '), 2, len(string_split(text, ' '))))) AS p
       |  FROM documents)""".stripMargin
-
-  /** Spark-side (doc_id, w1, w2) bigram stream. */
-  private def bigramsOf(docs: org.apache.spark.sql.DataFrame) = {
-    val toks = tokens(col("text"))
-    docs.select(col("doc_id"),
-      explode(arrays_zip(
-        slice(toks, lit(1), size(toks) - 1).as("w1"),
-        slice(toks, lit(2), size(toks) - 1).as("w2"))).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-  }
 
   /** Morton (z-order) interleave of the low 16 bits of two keys — the
     * Scala and DuckDB forms are generated from the same loop so the two
@@ -75,28 +64,9 @@ object Round3Ops {
       // Gopher-style repetition quality filters: fraction of repeated
       // token occurrences and the most-frequent-bigram share, per doc —
       // the cheap screens that catch boilerplate/keyword-stuffed pages
-      // before tokenization. Two per-doc aggregates over the exploded
-      // token/bigram streams (map-side combinable, no corpus self-join);
-      // the doc_id↔doc_id join is between two already-aggregated,
-      // corpus-row-count-sized tables. Thresholds (0.2 / 0.18) are
-      // calibrated to split the fixture corpus; the SAME unrounded ratio
-      // feeds the flag in both engines so the comparison cannot straddle
-      // the rounding.
-      val docs = Tables(s, d, "documents")
-      val toks = tokens(col("text"))
-      val ts = docs.select(col("doc_id"), toks.as("t"))
-        .select(col("doc_id"), size(col("t")).cast("long").as("n_tok"),
-          size(array_distinct(col("t"))).cast("long").as("n_uniq"))
-      val bt = bigramsOf(docs)
-        .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id").agg(max("c").as("top_c"), sum("c").as("n_big"))
-      val dupF = (col("n_tok") - col("n_uniq")).cast("double") / col("n_tok")
-      val topF = col("top_c").cast("double") / col("n_big")
-      ts.join(bt, "doc_id")
-        .select(col("doc_id"), col("n_tok"),
-          round(dupF, 6).as("dup_token_frac"),
-          round(topF, 6).as("top_bigram_frac"),
-          when(dupF > 0.2 || topF > 0.18, 1L).otherwise(0L).as("flagged"))
+      // before tokenization. Thresholds (0.2 / 0.18) are calibrated to
+      // split the fixture corpus.
+      graft.api.Pipelines.repetitionScores(Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     },
 
@@ -111,19 +81,8 @@ object Round3Ops {
       // N-gram novelty: the share of a doc's distinct bigrams that occur
       // in NO other document — high novelty marks fresh prose, low marks
       // template/mirror text (the document-frequency complement of the
-      // contamination screen). Same two-aggregate + re-join shape as the
-      // bigram LM: the document-frequency table is bigram-vocab-sized,
-      // NOT corpus-sized, and carries no broadcast hint — AQE picks the
-      // join strategy from its measured size (q_text_16's lesson: a raw
-      // 100 TB corpus has an unbounded bigram "vocab").
-      val b = bigramsOf(Tables(s, d, "documents")).distinct()
-      val dfreq = b.groupBy("w1", "w2").agg(count(lit(1)).as("nd"))
-      b.join(dfreq, Seq("w1", "w2"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(when(col("nd") === 1, 1L).otherwise(0L)).cast("long").as("n_novel"),
-          round(sum(when(col("nd") === 1, 1L).otherwise(0L)).cast("double") / count(lit(1)), 6)
-            .as("novel_frac"))
+      // contamination screen).
+      graft.api.Pipelines.ngramNovelty(Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     },
 
@@ -142,33 +101,13 @@ object Round3Ops {
          | WHERE ${graft.functions.VectorFunctions.Duck.cosine("a.embedding", "b.embedding")} >= 0.35)
          |SELECT ib AS drop_id, min(ia) AS keep_id, min(cid) AS cid, count(*) AS n_dups
          |FROM pairs GROUP BY ib ORDER BY drop_id""".stripMargin) { (s, d) =>
-      // SemDeDup (semantic dedup): coarse-cluster the embeddings, then
-      // compare pairs ONLY within a cluster and drop the higher id of
-      // every pair above the similarity threshold. The cluster bucketing
-      // is what scales: candidate pairs go from O(n²) to O(Σ cell²) —
-      // same argmin_sqdist-vs-one-broadcast-packed-centroid-row cell
-      // assignment as the IVF index (corpus never shuffles for
-      // assignment; the pair join shuffles on cell id only). Fixture
-      // embeddings are i.i.d.-random (no true near-dups), so the demo
-      // threshold 0.35 sits at the pair-cos 99.5th percentile to
-      // exercise the path; production sets ~0.95+ and k ≈ √n cells with
-      // a per-cell size cap.
-      VectorExpressions.register(s)
+      // SemDeDup (semantic dedup) over 8 seed cells. Fixture embeddings
+      // are i.i.d.-random (no true near-dups), so the demo threshold
+      // 0.35 sits at the pair-cos 99.5th percentile to exercise the
+      // path; production sets ~0.95+ and k ≈ √n cells with a per-cell
+      // size cap.
       val e = Tables(s, d, "embeddings")
-      val packed = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-        .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cs"))
-        .select(transform(col("cs"), _.getField("cid")).as("cids"),
-          transform(col("cs"), _.getField("cvec")).as("cvecs"))
-      val withCell = e.crossJoin(broadcast(packed))
-        .withColumn("cid", element_at(col("cids"), expr("argmin_sqdist(embedding, cvecs)") + 1))
-        .select(col("vec_id"), col("embedding"), col("cid"))
-      val a = withCell.select(col("cid"), col("vec_id").as("ia"), col("embedding").as("va"))
-      val b = withCell.select(col("cid").as("cidb"), col("vec_id").as("ib"), col("embedding").as("vb"))
-      a.join(b, col("cid") === col("cidb") && col("ia") < col("ib"))
-        .filter(expr("cosine_similarity(va, vb)") >= 0.35)
-        .groupBy(col("ib").as("drop_id"))
-        .agg(min("ia").as("keep_id"), min("cid").as("cid"), count(lit(1)).as("n_dups"))
+      graft.api.Pipelines.semDedup(e, "vec_id", "embedding", e.filter(col("vec_id") < 8), 0.35)
         .orderBy("drop_id")
     },
 

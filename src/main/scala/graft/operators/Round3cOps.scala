@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Q
-import graft.expressions.{CountMinAgg, TopKByAgg}
+import graft.expressions.CountMinAgg
 import graft.functions.Num.round
 import graft.functions.TextFunctions.tokens
 import graft.sources.Tables
@@ -204,31 +204,9 @@ object Round3cOps {
         |FROM r JOIN q ON r.lang = q.lang WHERE r.rn <= q.quota
         |ORDER BY r.lang, r.rn""".stripMargin) { (s, d) =>
       // Temperature-flattened corpus mixture: per-language quota
-      // ∝ sqrt(n_lang) (the T=2 "temperature sampling" a multilingual
-      // pretraining mix uses to up-weight tail languages), filled with the
-      // deterministic bottom-quota-by-hash docs (q_scan_13's reproducible
-      // order statistic — re-derivable years later, unlike seeded
-      // sample()). The quota formula deliberately avoids cross-language
-      // normalization: sqrt is IEEE-correctly-rounded and ×8 is a
-      // power of two, so both engines compute bit-identical quotas — a
-      // normalized Σ√n would put a float SUM on the quota boundary
-      // (standing determinism caution). Shape: one tiny agg + one
-      // range-partitioned per-lang rank (Pipelines.exactGroupRankCount,
-      // r13 — the lang-keyed window was a |langs|-task corpus sort and
-      // the dynamic per-group quota defeats WindowGroupLimit; every
-      // task is ~N/P now); the quota table broadcasts.
-      val docs = Tables(s, d, "documents")
-      val quotas = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .select(col("lang"),
-          least(col("n_docs"),
-            ceil(sqrt(col("n_docs").cast("double")) * 8).cast("long")).as("quota"))
-      val prio = (pmod(col("doc_id"), lit(1000000007L)) * 2654435761L) % 1000000007L
-      graft.api.Pipelines.exactGroupRankCount(
-          docs.select(col("doc_id"), col("lang")),
-          Seq("lang"), Seq(prio, col("doc_id")), "rn", "__n")
-        .join(broadcast(quotas), "lang")
-        .filter(col("rn") <= col("quota"))
-        .select(col("doc_id"), col("lang"), col("rn"), col("quota"))
+      // ∝ sqrt(n_lang) filled with q_scan_13's reproducible
+      // bottom-by-hash order statistic.
+      graft.api.Pipelines.temperatureMixture(Tables(s, d, "documents"), "doc_id", "lang")
         .orderBy("lang", "rn")
     },
 
@@ -241,24 +219,14 @@ object Round3cOps {
         |  CAST(l_linenumber AS BIGINT) AS lnum
         | FROM lineitem) WHERE rnk <= 3
         |ORDER BY l_suppkey, rnk""".stripMargin) { (s, d) =>
-      // Group-wise top-k via the native `topk_by` TypedImperativeAggregate
-      // (expressions/TopKAgg.scala) — the scale-first alternative to
-      // q_sort_3's row_number window. The window form shuffles and SORTS
-      // the whole fact per group; topk_by keeps k-element mergeable
-      // buffers, so map-side combine caps each partition's contribution at
-      // k rows per group and shuffle volume is O(groups · k) — at 100 TB
-      // that is the difference between sorting the corpus and sorting
-      // nothing. Plan contract (Round3cOpsSpec): ObjectHashAggregate
-      // partial+final, ZERO Window/Sort over the fact. The oracle is the
-      // window formulation — same total order (price DESC, key ASC),
-      // identical rows.
-      TopKByAgg.register(s)
-      Tables(s, d, "lineitem")
-        .groupBy("l_suppkey")
-        .agg(expr("topk_by(l_extendedprice, l_orderkey, l_linenumber, 3)").as("top"))
-        .select(col("l_suppkey"), posexplode(col("top")))
-        .select(col("l_suppkey"), (col("pos") + 1).cast("long").as("rnk"),
-          col("col.ord").as("price"), col("col.tie1").as("okey"), col("col.tie2").as("lnum"))
+      // Group-wise top-k via the native `topk_by` aggregate — the
+      // scale-first alternative to q_sort_3's row_number window (which
+      // shuffles and SORTS the whole fact per group). The oracle is the
+      // window formulation — same total order (price DESC, key ASC).
+      graft.api.Pipelines.topKBy(Tables(s, d, "lineitem"), "l_suppkey",
+          "l_extendedprice", "l_orderkey", "l_linenumber", 3)
+        .select(col("l_suppkey"), col("rnk"),
+          col("ord").as("price"), col("tie1").as("okey"), col("tie2").as("lnum"))
         .orderBy("l_suppkey", "rnk")
     },
 
@@ -457,29 +425,12 @@ object Round3cOps {
         |FROM el JOIN st ON el.dim = st.dim WHERE el.vec_id < 5
         |ORDER BY el.vec_id, el.dim""".stripMargin) { (s, d) =>
       // Per-dimension feature standardization (z-score) of the embedding
-      // corpus — the preprocessing step before distance-based ops
-      // (k-means/IVF assume comparable dimension scales). Determinism
-      // discipline: values quantize to 1e-6 units FIRST, the per-dim
-      // sufficient statistics are exact integer sums (float-sum order
-      // never matters), and z is one double division of exact integers —
-      // same pattern as q_win_11. The stats table is dim-bounded
-      // (64 rows): it broadcasts back to the corpus, so z-scoring 100 TB
-      // of vectors is a map stage after one dim-keyed aggregate.
+      // corpus — the preprocessing step before distance-based ops.
       // Output is the exploded (vec_id, dim, z) form for a bounded probe
       // set (array-typed output columns are representation-fragile
       // across the two engines' pandas paths — standing caution).
-      val el = Tables(s, d, "embeddings")
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
-          floor(col("v").cast("double") * 1000000 + 0.5).cast("long").as("vi"))
-      val st = el.groupBy("dim").agg(
-        count(lit(1)).as("n"), sum("vi").as("s1"), sum(col("vi") * col("vi")).as("s2"))
-      val dvar = col("n") * col("s2") - col("s1") * col("s1")
-      el.filter(col("vec_id") < 5).join(broadcast(st), "dim")
-        .select(col("vec_id"), col("dim"),
-          when(dvar > 0,
-            round((col("n") * col("vi") - col("s1")).cast("double")
-              / sqrt(dvar.cast("double")), 6)).as("z"))
+      graft.api.Pipelines.standardize(Tables(s, d, "embeddings"), "vec_id", "embedding",
+          col("vec_id") < 5)
         .orderBy("vec_id", "dim")
     },
 
@@ -611,20 +562,10 @@ object Round3cOps {
         | floor((CAST(n AS DOUBLE) / CAST(total AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS share,
         | floor((CAST(n * n_keys AS DOUBLE) / CAST(total AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS skew_x
         |FROM f, t ORDER BY n DESC, l_partkey LIMIT 10""".stripMargin) { (s, d) =>
-      // Join-key skew profile: the top-10 heaviest keys with their share
-      // of rows and skew ratio (count ÷ mean-per-key) — the diagnostic a
-      // 100 TB job runs BEFORE a shuffle join to decide between plain,
-      // salted (q_join_14), and AQE skew-split plans. One map-side-
-      // combinable aggregate + a 1-row totals broadcast; ratios are
-      // double divisions of exact integers, so engines agree bit-for-bit.
-      val f = Tables(s, d, "lineitem").groupBy("l_partkey").agg(count(lit(1)).as("n"))
-      val t = f.agg(sum("n").as("total"), count(lit(1)).as("n_keys"))
-      f.crossJoin(broadcast(t))
-        .select(col("l_partkey"), col("n"),
-          round(col("n").cast("double") / col("total").cast("double"), 6).as("share"),
-          round((col("n") * col("n_keys")).cast("double") / col("total").cast("double"), 6)
-            .as("skew_x"))
-        .orderBy(col("n").desc, col("l_partkey")).limit(10)
+      // Join-key skew profile: the diagnostic a 100 TB job runs BEFORE a
+      // shuffle join to decide between plain, salted (q_join_14), and
+      // AQE skew-split plans.
+      graft.api.Pipelines.skewProfile(Tables(s, d, "lineitem"), "l_partkey")
     },
 
     Q("q_agg_25_weighted_median",

@@ -39,37 +39,9 @@ object Round3dOps {
         | floor(CAST(max(abs(n.n2 * cum.cum1 - n.n1 * cum.cum2)) AS DOUBLE)
         |       / (CAST(n.n1 AS DOUBLE) * CAST(n.n2 AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS d_stat
         |FROM cum, n GROUP BY n.n1, n.n2""".stripMargin) { (s, d) =>
-      // Two-sample Kolmogorov–Smirnov: D = sup_x |F1(x) − F2(x)| between
-      // the click and view `value` distributions. The supremum is reached
-      // at a data point, so evaluating both ECDFs on the merged
-      // distinct-value grid is exact. Integer core: D·n1·n2 =
-      // max|n2·cum1 − n1·cum2| never leaves BIGINT; the one division
-      // happens in a 1-row projection. The ECDF prefix sums run over the
-      // DISTINCT-value grid via the two-pass range-partitioned cumsum
-      // (Pipelines.prefixSumN) — exact integers, no one-task stage at
-      // any grid size.
-      val src = Tables(s, d, "events")
-        .filter(col("event_type").isin("click", "view"))
-        .select(col("value").as("v"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("ia"))
-      val pts = src.groupBy("v")
-        .agg(sum("ia").as("c1"), (count(lit(1)) - sum("ia")).as("c2"))
-      // both ECDF prefix sums share ONE range shuffle
-      // (Pipelines.prefixSumN — exact integer cumsums, no one-task
-      // window even when the distinct-value grid is large); totals =
-      // the max of each (monotone) cumsum, a 1-row broadcast off the
-      // same shuffle — the corpus still aggregates exactly once
-      val cum0 = graft.api.Pipelines
-        .prefixSumN(pts, Seq("v"), Seq("c1" -> "cum1", "c2" -> "cum2"))
-        .select(col("cum1"), col("cum2"))
-      val tot = cum0.agg(max("cum1").as("n1"), max("cum2").as("n2"))
-      val cum = cum0.crossJoin(broadcast(tot))
-      cum
-        .groupBy("n1", "n2")
-        .agg(max(abs(col("n2") * col("cum1") - col("n1") * col("cum2"))).as("d_num"))
-        .select(col("n1"), col("n2"), col("d_num"),
-          round(col("d_num").cast("double")
-            / (col("n1").cast("double") * col("n2").cast("double")), 6).as("d_stat"))
+      // Two-sample Kolmogorov–Smirnov between the click and view `value`
+      // distributions.
+      graft.api.Pipelines.ksTest(Tables(s, d, "events"), "value", "event_type", "click", "view")
     },
 
     Q("q_stat_4_mannwhitney",
@@ -162,47 +134,11 @@ object Round3dOps {
         |SELECT doc_id, CAST(s6 AS DOUBLE) / 1000000 AS score, CAST(rn AS BIGINT) AS rn FROM (
         | SELECT doc_id, s6, row_number() OVER (ORDER BY s6 DESC, doc_id ASC) AS rn FROM total)
         |WHERE rn <= 10 ORDER BY rn""".stripMargin) { (s, d) =>
-      // BM25 (k1=1.2, b=0.75, Lucene-style idf) top-10 documents for the
-      // query {vector, merge, filter}. Per-(doc,term) scores are fixed
-      // IEEE expressions over integer sufficient statistics (tf, df, dl,
-      // N, Σdl) — then QUANTIZED to 1e-6 BEFORE the per-doc sum, so the
-      // multi-term reduction is an integer sum with no float-addition-
-      // order hazard (the q_stream_12 lesson applied to retrieval).
-      // Scale shape: df and corpus stats are vocab/1-row broadcasts; tf
-      // is term-filtered BEFORE the doc-length join, so the joined side
-      // is |matching postings|, not the corpus; top-10 is one row_number
-      // over a doc-count-bounded aggregate (at 100 TB: per-partition
-      // top-k then merge, the q_agg_23 native aggregate).
-      val docs = Tables(s, d, "documents")
-      val terms = Seq("vector", "merge", "filter")
-      val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot"))
-      val tf = tok.filter(col("token").isin(terms: _*))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      // df(t) = rows per token in the tf table (one row per (doc, term))
-      // — deriving it from tok again would cost a fourth full
-      // scan+explode pass over the corpus
-      val dfq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val avgdl = col("tot").cast("double") / col("n_docs").cast("double")
-      val idf = log(lit(1.0) + (col("n_docs").cast("double") - col("df").cast("double") + 0.5)
-        / (col("df").cast("double") + 0.5))
-      val s6 = floor((idf
-        * (col("tf").cast("double") * 2.2)
-        / (col("tf").cast("double") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl").cast("double") / avgdl)))
-        * 1000000 + 0.5).cast("long")
-      val scored = tf.join(broadcast(dfq), "token")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .select(col("doc_id"), s6.as("s6"))
-      val total = scored.groupBy("doc_id").agg(sum("s6").as("s6"))
-      // TakeOrdered top-10 over the doc-scale score table, then the
-      // rank window over just 10 rows
-      val w = Window.orderBy(col("s6").desc, col("doc_id").asc)
-      total.orderBy(col("s6").desc, col("doc_id").asc).limit(10)
-        .withColumn("rn", row_number().over(w))
-        .select(col("doc_id"), (col("s6").cast("double") / 1000000).as("score"),
-          col("rn").cast("long").as("rn"))
+      // BM25 top-10 documents for the query {vector, merge, filter}
+      // (at 100 TB the top-k goes per-partition then merges, the
+      // q_agg_23 native aggregate).
+      graft.api.Pipelines.bm25(Tables(s, d, "documents"), "doc_id", "text",
+          Seq("vector", "merge", "filter"))
         .orderBy("rn")
     },
 
@@ -467,46 +403,9 @@ object Round3dOps {
         |   * ln((CAST(n_a AS DOUBLE) / CAST(ta AS DOUBLE)) / (CAST(n_b AS DOUBLE) / CAST(tb AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS psi_part
         |FROM g, t ORDER BY bucket""".stripMargin) { (s, d) =>
       // Population Stability Index — the industry-standard monitoring
-      // metric for "has this score/feature distribution drifted": decile
-      // buckets from the REFERENCE sample's quantiles, per-bucket
-      // (p_a − p_b)·ln(p_a/p_b). Emitted per bucket (the q_stat_1
-      // per-cell discipline): a PSI total is a float sum whose
-      // accumulation order differs across engines, and per-bucket parts
-      // are what an alerting rule thresholds anyway. Counts stay BIGINT;
-      // each part is one fixed IEEE expression. The 9 boundaries are a
-      // 1-row broadcast; bucket assignment is nine codegen'd compares
-      // per row (no sort, no shuffle beyond the 10-group agg —
-      // `width_bucket` at 100 TB with approx_percentile boundaries).
-      // TV-distance twin: q_dq_7_drift.
-      val ev = Tables(s, d, "events")
-      val a = ev.filter(col("event_type") === "click").select(col("value").as("v"))
-      val b = ev.filter(col("event_type") === "view").select(col("value").as("v"))
-      // ONE array-percentile aggregate instead of nine scalar ones
-      // (r14, guide §4): percentile is a TypedImperativeAggregate and
-      // each scalar call buffered the full value set in its own
-      // ObjectHashAggregate map — 9x the non-codegen buffering for the
-      // identical interpolated order statistics.
-      val q = a.agg(expr(
-          "percentile(v, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))").as("bb"))
-        .select((1 to 9).map(i => element_at(col("bb"), i).as(s"b$i")): _*)
-      val ab = a.withColumn("ia", lit(1L)).unionAll(b.withColumn("ia", lit(0L)))
-      val bucket = (1 to 9).map(i => when(col("v") > col(s"b$i"), 1L).otherwise(0L))
-        .foldLeft(lit(1L): org.apache.spark.sql.Column)(_ + _)
-      val g = ab.crossJoin(broadcast(q))
-        .select(bucket.cast("long").as("bucket"), col("ia"))
-        .groupBy("bucket")
-        .agg(sum("ia").as("n_a"), (count(lit(1)) - sum("ia")).as("n_b"))
-      // totals via an unpartitioned window over g's ≤buckets rows —
-      // re-aggregating g (or rescanning events) would replay the
-      // percentile + bucket-assign subtree: 6 parquet scans → 3. The
-      // single-partition window is 10 rows, not the corpus.
-      val wAll = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val pa = col("n_a").cast("double") / col("ta").cast("double")
-      val pb = col("n_b").cast("double") / col("tb").cast("double")
-      g.withColumn("ta", sum("n_a").over(wAll))
-        .withColumn("tb", sum("n_b").over(wAll))
-        .select(col("bucket"), col("n_a"), col("n_b"),
-          round((pa - pb) * log(pa / pb), 6).as("psi_part"))
+      // metric for "has this score/feature distribution drifted" —
+      // clicks as the reference sample. TV-distance twin: q_dq_7_drift.
+      graft.api.Pipelines.psi(Tables(s, d, "events"), "value", "event_type", "click", "view")
         .orderBy("bucket")
     },
 

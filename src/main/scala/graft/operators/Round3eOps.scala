@@ -231,22 +231,11 @@ object Round3eOps {
         |       floor(CAST(c AS DOUBLE)/CAST(sum(c) OVER (PARTITION BY a) AS DOUBLE)*1000000+0.5)/1000000 AS p
         |FROM tr ORDER BY a, b""".stripMargin) { (s, d) =>
       // First-order Markov transition matrix over each user's event
-      // sequence: P(next = b | current = a) — the session-behavior
-      // model behind next-event prediction and anomaly scoring (and
-      // q_text_16's bigram LM lifted from tokens to events). ONE scan:
-      // a per-user lead window (ordered by (ts, event_id) — event_id
-      // breaks timestamp ties deterministically), a |types|²-bounded
-      // count aggregate, and row totals riding that table as a window
-      // (no re-aggregation branch). Probabilities quantized to 1e-6.
-      val seq = Tables(s, d, "events")
-        .select(col("event_type").as("a"),
-          lead(col("event_type"), 1).over(
-            Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))).as("b"))
-      val tr = seq.filter(col("b").isNotNull)
-        .groupBy("a", "b").agg(count(lit(1)).as("c"))
-      tr.withColumn("c_a", sum("c").over(Window.partitionBy("a")))
-        .select(col("a"), col("b"), col("c"), col("c_a"),
-          (floor(col("c").cast("double") / col("c_a").cast("double") * 1000000 + 0.5) / 1000000).as("p"))
+      // sequence — the session-behavior model behind next-event
+      // prediction and anomaly scoring (q_text_16's bigram LM lifted
+      // from tokens to events); event_id breaks timestamp ties.
+      graft.api.Pipelines.transitionMatrix(Tables(s, d, "events"), "user_id", "event_type",
+          Seq("ts", "event_id"))
         .orderBy("a", "b")
     },
 
@@ -495,26 +484,9 @@ object Round3eOps {
         |SELECT doc_id, n_chars, CAST(key9 AS DOUBLE)/1000000000 AS key, CAST(rn AS BIGINT) AS rn
         |FROM (SELECT *, row_number() OVER (ORDER BY key9 DESC, doc_id) AS rn FROM k)
         |WHERE rn <= 20 ORDER BY rn""".stripMargin) { (s, d) =>
-      // Weighted sampling without replacement (Efraimidis–Spirakis
-      // A-ES): P(doc selected) ∝ n_chars, via key = ln(u)/w with
-      // u ∈ (0,1] from the SAME overflow-safe multiplicative hash as
-      // q_text_13's split — so the sample is reproducible across runs,
-      // engines, and partitionings, where rand()-weighted sampling is
-      // not. (Length-weighted doc sampling is how corpus audits sample
-      // by token mass rather than doc count.) Keys are 1e-9-quantized
-      // integers ranked (key9, doc_id) — total order. ONE scan; at
-      // 100 TB the global top-20 becomes q_agg_23's mergeable heap
-      // rather than a full sort.
-      val h = Tables(s, d, "documents")
-        .select(col("doc_id"), col("n_chars"),
-          (((col("doc_id") % 1000000007L) * 2654435761L) % 1000000007L).as("hv"))
-      val k = h.select(col("doc_id"), col("n_chars"),
-        floor(log((col("hv") + 1).cast("double") / 1000000008.0)
-          / col("n_chars").cast("double") * 1000000000 + 0.5).cast("long").as("key9"))
-      k.withColumn("rn", row_number().over(Window.orderBy(col("key9").desc, col("doc_id"))))
-        .filter(col("rn") <= 20)
-        .select(col("doc_id"), col("n_chars"),
-          (col("key9").cast("double") / 1000000000).as("key"), col("rn").cast("long").as("rn"))
+      // Weighted sampling without replacement, P(doc) ∝ n_chars — how
+      // corpus audits sample by token mass rather than doc count.
+      graft.api.Pipelines.weightedSample(Tables(s, d, "documents"), "doc_id", "n_chars", 20)
         .orderBy("rn")
     },
 
@@ -604,36 +576,11 @@ object Round3eOps {
         | floor((e1 + e2)*(e1 + e2) / (e1*e1/(CAST(n1 AS DOUBLE)-1) + e2*e2/(CAST(n2 AS DOUBLE)-1)) * 1000000 + 0.5) / 1000000 AS df
         |FROM sem""".stripMargin) { (s, d) =>
       // Welch's unequal-variance t-test between the purchase and view
-      // `value` samples, with the Welch–Satterthwaite df — the
-      // continuous-outcome A/B readout completing q_stat_2's
-      // proportion z-test. Six exact BIGINT sufficient statistics
-      // (n, Σv, Σv² per arm, cents-quantized) from ONE
-      // map-side-combinable aggregate; t and df are fixed IEEE
-      // expressions over them (squares written x·x on both engines —
-      // libm pow() is not guaranteed correctly rounded). Σv² ≈ 9e13 at
-      // sf0.1, ~9e16 at sf100 — exact; DECIMAL(38) beyond.
-      val st = Tables(s, d, "events")
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(col("event_type").as("g"),
-          floor(col("value") * 100 + 0.5).cast("long").as("v"))
-        .groupBy("g")
-        .agg(count(lit(1)).as("n"), sum("v").as("sv"), sum(col("v") * col("v")).as("sv2"))
-      val p = st.agg(
-        max(when(col("g") === "purchase", col("n"))).as("n1"),
-        max(when(col("g") === "purchase", col("sv"))).as("sv1"),
-        max(when(col("g") === "purchase", col("sv2"))).as("sq1"),
-        max(when(col("g") === "view", col("n"))).as("n2"),
-        max(when(col("g") === "view", col("sv"))).as("svb"),
-        max(when(col("g") === "view", col("sv2"))).as("sq2"))
-      val n1 = col("n1").cast("double"); val n2 = col("n2").cast("double")
-      val e1 = (n1 * col("sq1").cast("double") - col("sv1").cast("double") * col("sv1").cast("double")) / (n1 * (n1 - 1) * n1)
-      val e2 = (n2 * col("sq2").cast("double") - col("svb").cast("double") * col("svb").cast("double")) / (n2 * (n2 - 1) * n2)
-      p.withColumn("e1", e1).withColumn("e2", e2)
-        .select(col("n1"), col("n2"),
-          (floor((col("sv1").cast("double") / n1 - col("svb").cast("double") / n2)
-            / sqrt(col("e1") + col("e2")) * 1000000 + 0.5) / 1000000).as("t"),
-          (floor((col("e1") + col("e2")) * (col("e1") + col("e2"))
-            / (col("e1") * col("e1") / (n1 - 1) + col("e2") * col("e2") / (n2 - 1)) * 1000000 + 0.5) / 1000000).as("df"))
+      // `value` samples — the continuous-outcome A/B readout completing
+      // q_stat_2's proportion z-test. Σv² ≈ 9e13 at sf0.1, ~9e16 at
+      // sf100 — exact.
+      graft.api.Pipelines.welchTTest(Tables(s, d, "events"), "value", "event_type",
+        "purchase", "view")
     },
 
     Q("q_stat_9_theilsen",

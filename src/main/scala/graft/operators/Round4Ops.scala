@@ -29,7 +29,7 @@ object Round4Ops {
     * Spark and DuckDB sides (log2 evaluated at plan-build time only —
     * cross-engine libm drift is impossible by construction).
     */
-  private val ndcgW: Seq[Long] =
+  private[graft] val ndcgW: Seq[Long] =
     (1 to 10).map(r => math.floor(1e6 * math.log(2) / math.log(r + 1.0) + 0.5).toLong)
   private val ndcgWSql = ndcgW.mkString("[", ", ", "]")
 
@@ -49,31 +49,11 @@ object Round4Ops {
          |SELECT source, n_docs, n_rel,
          | CASE WHEN idcgq > 0 THEN floor(CAST(dcgq AS DOUBLE) / CAST(idcgq AS DOUBLE) * 1000000 + 0.5) / 1000000 ELSE 0.0 END AS ndcg
          |FROM s ORDER BY source""".stripMargin) { (s, d) =>
-      // Ranking-quality evaluation: treat each `source` as a query
-      // group, its docs ranked by (n_chars DESC, doc_id) as the system
-      // ranking, lang='en' as binary relevance; emit nDCG@10 per group.
-      // Both DCG and ideal-DCG are BIGINT sums of the precomputed
-      // 1e6-quantized discount weights — one division at the end.
-      // Scale: two ranking windows + one agg, all partitioned by the
-      // query-group key; no global shuffle beyond the group hash.
-      val wArr = array(ndcgW.map(lit): _*)
-      val byRank = Window.partitionBy("source").orderBy(col("n_chars").desc, col("doc_id"))
-      val byIdeal = Window.partitionBy("source").orderBy(col("rel").desc, col("rn"))
-      Tables(s, d, "documents")
-        .select(col("source"), when(col("lang") === "en", 1).otherwise(0).as("rel"),
-          row_number().over(byRank).cast("long").as("rn"))
-        .withColumn("irn", row_number().over(byIdeal).cast("long"))
-        .groupBy("source")
-        .agg(
-          sum(when(col("rel") === 1 && col("rn") <= 10,
-            element_at(wArr, col("rn").cast("int"))).otherwise(0L)).as("dcgq"),
-          sum(when(col("rel") === 1 && col("irn") <= 10,
-            element_at(wArr, col("irn").cast("int"))).otherwise(0L)).as("idcgq"),
-          count(lit(1)).as("n_docs"), sum("rel").cast("long").as("n_rel"))
-        .select(col("source"), col("n_docs"), col("n_rel"),
-          when(col("idcgq") > 0,
-            round(col("dcgq").cast("double") / col("idcgq").cast("double"), 6))
-            .otherwise(0.0).as("ndcg"))
+      // Ranking-quality evaluation: each `source` is a query group, its
+      // docs ranked by (n_chars DESC, doc_id) as the system ranking,
+      // lang='en' as binary relevance.
+      graft.api.Pipelines.ndcgAtK(Tables(s, d, "documents"), "source", "n_chars", "doc_id",
+          col("lang") === "en")
         .orderBy("source")
     },
 
@@ -176,13 +156,9 @@ object Round4Ops {
         | floor(CAST(sum(CAST(n_chars AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) * 100 + 0.5) / 100 AS avg_chars
         |FROM documents GROUP BY 1 ORDER BY fold""".stripMargin) { (s, d) =>
       // Deterministic k-fold (k=5) cross-validation assignment by the
-      // same mod-P multiplicative id hash as the train/valid/test split
-      // (q_text_13) — membership is a pure function of the stable id,
-      // so folds are reproducible across runs, engines, partitionings,
-      // and incremental corpus growth (old docs never change fold).
-      val fold = (pmod(col("doc_id"), lit(1000000007L)) * 2654435761L) % 1000000007L % 5
+      // same mod-P multiplicative id hash as the train/valid/test split.
       Tables(s, d, "documents")
-        .groupBy(fold.as("fold"))
+        .groupBy(graft.api.Pipelines.kfold("doc_id").as("fold"))
         .agg(count(lit(1)).as("n_docs"), countDistinct("lang").as("n_langs"),
           round(sum(col("n_chars").cast("long")).cast("double") / count(lit(1)).cast("double"), 2)
             .as("avg_chars"))
@@ -200,29 +176,10 @@ object Round4Ops {
         |FROM lineitem l JOIN p ON l.l_returnflag = p.l_returnflag
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       // Winsorized mean (5%/95% clamp) — the robust location estimate
-      // that KEEPS the tail rows at the boundary value instead of
-      // dropping them (contrast q_agg_27's trimmed mean). Same percentile
-      // parity and boundary-safety argument as q_agg_27; the clamp value
-      // itself is cents-quantized before summation so the mean is an
-      // exact-integer sum on both engines. The percentile pass is the
-      // only wide exchange; the 3-row boundary table broadcasts back.
-      val li = Tables(s, d, "lineitem")
-      // one array-percentile buffer instead of two scalar ones (r14,
-      // guide §4 — the q_agg_27 conversion; identical cut points)
-      val p = li.groupBy("l_returnflag")
-        .agg(expr("percentile(l_extendedprice, array(0.05, 0.95))").as("pp"))
-        .select(col("l_returnflag"),
-          element_at(col("pp"), 1).as("p05"), element_at(col("pp"), 2).as("p95"))
-      val cents = when(col("l_extendedprice") < col("p05"),
-          floor(col("p05") * 100 + 0.5).cast("long"))
-        .when(col("l_extendedprice") > col("p95"),
-          floor(col("p95") * 100 + 0.5).cast("long"))
-        .otherwise(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
-      li.join(broadcast(p), "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          round(sum(cents).cast("double") / (count(lit(1)).cast("double") * 100), 2)
-            .as("winsor_mean"))
+      // that KEEPS the tail rows at the boundary value (contrast
+      // q_agg_27's trimmed mean); same percentile parity and
+      // boundary-safety argument as q_agg_27.
+      graft.api.Pipelines.winsorizedMean(Tables(s, d, "lineitem"), "l_returnflag", "l_extendedprice")
         .orderBy("l_returnflag")
     },
 

@@ -3,7 +3,6 @@ package graft.operators
 import graft.Q
 import graft.functions.Num.round
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-5 continuation (SURVEY §2.11al): reporting ratios and
@@ -39,8 +38,7 @@ object Round5acOps {
         |FROM rev, reg, tot WHERE rev.region = reg.region
         |ORDER BY rev.region, rev.nation""".stripMargin) { (s, d) =>
       // One fact aggregation; the region and grand totals derive from
-      // the AGGREGATE (25 rows) via window sums — the fact is never
-      // re-scanned per level.
+      // the AGGREGATE (25 rows) — the fact is never re-scanned per level.
       val rev = Tables(s, d, "orders")
         .join(broadcast(Tables(s, d, "customer").select("c_custkey", "c_nationkey")),
           col("o_custkey") === col("c_custkey"))
@@ -48,14 +46,12 @@ object Round5acOps {
         .join(broadcast(Tables(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("cents"))
-      val wr = Window.partitionBy("region")
-      val wt = Window.partitionBy()
-      rev.select(col("region"), col("nation"),
-          round(col("cents").cast("double") / 100, 2).as("revenue"),
-          (floor(col("cents").cast("double") / sum("cents").over(wr) * 1000000 + 0.5) / 1000000)
-            .as("share_of_region"),
-          (floor(col("cents").cast("double") / sum("cents").over(wt) * 1000000 + 0.5) / 1000000)
-            .as("share_of_total"))
+      graft.api.Pipelines.shareOfParent(
+          rev.select(col("region"), col("nation"),
+            round(col("cents").cast("double") / 100, 2).as("revenue"), col("cents")),
+          "region", "cents")
+        .select(col("region"), col("nation"), col("revenue"),
+          col("share_of_parent").as("share_of_region"), col("share_of_total"))
         .orderBy("region", "nation")
     },
 
@@ -80,9 +76,6 @@ object Round5acOps {
         | CAST(min(CASE WHEN 5 * cum >= 4 * tot THEN rn END) AS BIGINT) AS top_n_for_80pct,
         | floor(CAST(min(CASE WHEN 5 * cum >= 4 * tot THEN rn END) AS DOUBLE) / min(n) * 1000000 + 0.5) / 1000000 AS customer_share
         |FROM rk GROUP BY region ORDER BY region""".stripMargin) { (s, d) =>
-      // The 80% threshold is the exact integer comparison 5·cum ≥ 4·tot
-      // (no float decides the crossing row); the ranking orders on
-      // exact cents with custkey tie-break.
       val cust = Tables(s, d, "orders")
         .join(broadcast(Tables(s, d, "customer").select("c_custkey", "c_nationkey")),
           col("o_custkey") === col("c_custkey"))
@@ -90,19 +83,9 @@ object Round5acOps {
         .join(broadcast(Tables(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name").as("region"), col("c_custkey"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("cents"))
-      val wOrd = Window.partitionBy("region").orderBy(col("cents").desc, col("c_custkey"))
-      val wAll = Window.partitionBy("region")
-      val rk = cust.select(col("region"), col("cents"),
-        sum("cents").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)).as("cum"),
-        sum("cents").over(wAll).as("tot"),
-        row_number().over(wOrd).as("rn"),
-        count(lit(1)).over(wAll).as("n"))
-      rk.groupBy("region")
-        .agg(min("n").as("n_customers"),
-          min(when(lit(5) * col("cum") >= lit(4) * col("tot"), col("rn"))).cast("long")
-            .as("top_n_for_80pct"),
-          (floor(min(when(lit(5) * col("cum") >= lit(4) * col("tot"), col("rn"))).cast("double")
-            / min("n") * 1000000 + 0.5) / 1000000).as("customer_share"))
+      graft.api.Pipelines.pareto(cust, "region", "c_custkey", "cents")
+        .select(col("region"), col("n_ids").as("n_customers"),
+          col("top_n").as("top_n_for_80pct"), col("id_share").as("customer_share"))
         .orderBy("region")
     },
 
@@ -127,23 +110,10 @@ object Round5acOps {
         | CAST(CASE WHEN prev <= 0 AND diff > 0 THEN 1 ELSE -1 END AS BIGINT) AS direction
         |FROM sig WHERE (prev <= 0 AND diff > 0) OR (prev > 0 AND diff <= 0)
         |ORDER BY day""".stripMargin) { (s, d) =>
-      // Complete windows only (k5 = 5, k20 = 20); the crossing test is
-      // a sign change of the exact integer 4·s5 − s20 between
-      // consecutive days — golden cross = up-crossing (+1).
       val day = Tables(s, d, "events").filter(col("event_type") === "purchase")
         .groupBy(expr("unix_micros(ts) div 86400000000").as("dday"))
         .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
-      val w5 = Window.orderBy("dday").rowsBetween(-4, 0)
-      val w20 = Window.orderBy("dday").rowsBetween(-19, 0)
-      val w = day.select(col("dday"),
-        sum("cents").over(w5).as("s5"), count(lit(1)).over(w5).as("k5"),
-        sum("cents").over(w20).as("s20"), count(lit(1)).over(w20).as("k20"))
-      val sig = w.filter(col("k5") === 5 && col("k20") === 20)
-        .select(col("dday"), (lit(4) * col("s5") - col("s20")).as("diff"))
-        .withColumn("prev", lag("diff", 1).over(Window.orderBy("dday")))
-      sig.filter((col("prev") <= 0 && col("diff") > 0) || (col("prev") > 0 && col("diff") <= 0))
-        .select(col("dday").cast("long").as("day"),
-          when(col("prev") <= 0 && col("diff") > 0, 1L).otherwise(-1L).as("direction"))
+      graft.api.Pipelines.smaCrossovers(day, "dday", "cents")
         .orderBy("day")
     },
 

@@ -29,33 +29,9 @@ object Round5agOps {
         | floor(CAST(sum(CASE WHEN EXISTS (SELECT 1 FROM ud WHERE ud.user_id = f.user_id AND ud.day = f.d0 + 1) THEN 1 ELSE 0 END) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS d1_rate,
         | floor(CAST(sum(CASE WHEN EXISTS (SELECT 1 FROM ud WHERE ud.user_id = f.user_id AND ud.day = f.d0 + 7) THEN 1 ELSE 0 END) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS d7_rate
         |FROM f""".stripMargin) { (s, d) =>
-      // The EXISTS probes decorrelate to three left_semi joins against
-      // the SAME deduped (user, day) activity table keyed on
-      // (user, d0+k) — activity dedups once, each probe is one
-      // hash-join pass; all counts exact integers.
-      val ud = Tables(s, d, "events")
-        .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
-        .distinct().localCheckpoint()
-      val f = ud.groupBy("user_id").agg(min("day").as("d0"))
-      def activeAt(offset: Int) = {
-        val probe = ud.select(col("user_id").as(s"u$offset"), col("day").as(s"day$offset"))
-        f.join(probe, col("user_id") === col(s"u$offset")
-            && col(s"day$offset") === col("d0") + offset, "left_semi")
-          .select(col("user_id").as(s"r$offset"))
-      }
-      val d1 = activeAt(1)
-      val d7 = activeAt(7)
-      val d30 = activeAt(30)
-      val base = f.agg(count(lit(1)).as("n_users"))
-      base
-        .crossJoin(d1.agg(count(lit(1)).as("d1")))
-        .crossJoin(d7.agg(count(lit(1)).as("d7")))
-        .crossJoin(d30.agg(count(lit(1)).as("d30")))
-        .select(col("n_users"), col("d1"), col("d7"), col("d30"),
-          (floor(col("d1").cast("double") / col("n_users") * 1000000 + 0.5) / 1000000)
-            .as("d1_rate"),
-          (floor(col("d7").cast("double") / col("n_users") * 1000000 + 0.5) / 1000000)
-            .as("d7_rate"))
+      graft.api.Pipelines.retentionCurve(Tables(s, d, "events")
+          .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day")),
+        "user_id", "day")
     },
 
     // Inter-event gap tail: power-of-two-binned gap histogram + the

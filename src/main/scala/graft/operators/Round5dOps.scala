@@ -44,33 +44,9 @@ object Round5dOps {
       // Last-touch attribution: each purchase is credited to the user's
       // most recent PRECEDING non-purchase event — the standard
       // marketing-attribution readout (which touchpoint "closed" the
-      // sale, and how long before). The carried touchpoint is one
-      // `last(..., ignoreNulls) ROWS UNBOUNDED PRECEDING..-1` window —
-      // the same carry-forward primitive as q_time_2_ffill, so no
-      // self-join against candidate predecessors. First-session
-      // purchases with no prior touch land in an explicit 'none' bucket.
-      // Gap sums ride as exact BIGINT microseconds; the mean is one
-      // closed-form division. Scale: one user-keyed window over the
-      // stream (users are independent partitions), then a 5-row agg.
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val e = Tables(s, d, "events")
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          last(when(col("event_type") =!= "purchase", col("event_type")), ignoreNulls = true)
-            .over(w).as("src_type"),
-          last(when(col("event_type") =!= "purchase", unix_micros(col("ts"))), ignoreNulls = true)
-            .over(w).as("src_us"))
-      val p = e.filter(col("event_type") === "purchase")
-        .select(coalesce(col("src_type"), lit("none")).as("channel"),
-          when(col("src_us").isNotNull, unix_micros(col("ts")) - col("src_us")).as("gap_us"))
-      val g = p.groupBy("channel").agg(count(lit(1)).as("n"),
-        sum("gap_us").cast("long").as("gsum"), count("gap_us").as("gn"))
-      g.withColumn("tot", sum("n").over(Window.partitionBy()))
-        .select(col("channel"), col("n"),
-          round(col("n").cast("double") / col("tot"), 6).as("share"),
-          when(col("gn") > 0,
-            round(col("gsum").cast("double") / col("gn") / 60000000L, 2))
-            .otherwise(0.0).as("mean_gap_min"))
+      // sale, and how long before).
+      graft.api.Pipelines.lastTouchAttribution(Tables(s, d, "events"), "user_id", "ts",
+          "event_type", "purchase", "event_id")
         .orderBy("channel")
     },
 

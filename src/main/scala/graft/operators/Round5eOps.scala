@@ -5,7 +5,6 @@ import graft.functions.Num.round
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Round-5 continuation (SURVEY §2.11n): volatility banding (Bollinger),
   * market-concentration (HHI), count-dispersion testing, effect sizes
@@ -44,36 +43,14 @@ object Round5eOps {
          | CAST(CASE WHEN CAST(cents AS DOUBLE) < CAST(s AS DOUBLE) / k - $bollBandSql
          |   OR CAST(cents AS DOUBLE) > CAST(s AS DOUBLE) / k + $bollBandSql THEN 1 ELSE 0 END AS BIGINT) AS outside
          |FROM w WHERE k = 7 ORDER BY day""".stripMargin) { (s, d) =>
-      // Bollinger bands on daily purchase revenue: 7-day rolling mean
-      // ± 2 rolling sample std, plus the outside-the-band flag — the
-      // volatility-aware envelope that complements q_dq_10's fixed
-      // z-score rolling anomaly (the band width ADAPTS to local
-      // volatility). The rolling moments are exact BIGINT window sums
-      // of daily cents and cents² (the corpus collapses to one row per
-      // day first); mean/band/flag are fixed IEEE expressions in cents,
-      // divided to dollars only at emission. Warm-up rows (k<7) are
-      // excluded so every emitted band is a full-window statistic.
-      // Scale: day-table windows — repartitionByRange at 100 TB.
+      // Bollinger bands on daily purchase revenue — the volatility-aware
+      // envelope that complements q_dq_10's fixed z-score rolling
+      // anomaly (the band width ADAPTS to local volatility). The corpus
+      // collapses to one row per day first.
       val day = Tables(s, d, "events").filter(col("event_type") === "purchase")
         .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
         .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
-      val win = Window.orderBy("day").rowsBetween(-6, 0)
-      val w = day.select(col("day"), col("cents"),
-        count(lit(1)).over(win).as("k"),
-        sum("cents").over(win).as("s"),
-        sum(col("cents") * col("cents")).over(win).as("ss"))
-      val mean = col("s").cast("double") / col("k")
-      val band = lit(2) * sqrt((col("k").cast("double") * col("ss")
-        - col("s").cast("double") * col("s"))
-        / (col("k").cast("double") * col("k") * (col("k") - 1)))
-      w.filter(col("k") === 7)
-        .select(col("day").cast("long").as("day"),
-          round(col("cents").cast("double") / 100, 2).as("daily_value"),
-          round(mean / 100, 2).as("mid"),
-          round((mean - band) / 100, 2).as("lower_band"),
-          round((mean + band) / 100, 2).as("upper_band"),
-          when(col("cents").cast("double") < mean - band
-            || col("cents").cast("double") > mean + band, 1L).otherwise(0L).as("outside"))
+      graft.api.Pipelines.bollingerBands(day, "day", "cents")
         .orderBy("day")
     },
 
@@ -89,32 +66,22 @@ object Round5eOps {
         | floor(CAST(mx AS DOUBLE) / tot * 1000000 + 0.5) / 1000000 AS top_share
         |FROM g JOIN nation n ON g.nk = n.n_nationkey ORDER BY nation""".stripMargin) { (s, d) =>
       // Herfindahl–Hirschman concentration of supplier revenue within
-      // each nation: HHI = Σ(sᵢ/S)² (1 = monopoly, 1/n = even split) +
-      // the top-supplier share — the market-structure readout behind
-      // "is one supplier a single point of failure", and on corpora the
-      // same statistic is per-source domination (q_text_29's caps pick
-      // the threshold; HHI scores the before/after). HHI is a pure
-      // rational: per-supplier revenue cents are exact BIGINTs, squares
-      // accumulate in HUGEINT/DECIMAL(38,0) (sᵢ² nears int64 at sf0.1
-      // already), one closed-form division per nation. Scale: supplier
-      // dim broadcasts onto the fact; the supplier-revenue table is
-      // dimension-sized — everything after the first agg is tiny.
+      // each nation — the market-structure readout behind "is one
+      // supplier a single point of failure"; on corpora the same
+      // statistic is per-source domination (q_text_29's caps pick the
+      // threshold; HHI scores the before/after). The supplier dim
+      // broadcasts onto the fact; everything after the first agg is tiny.
       val r = Tables(s, d, "lineitem")
         .select(col("l_suppkey"),
           floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
             .cast("long").as("rev"))
         .join(broadcast(Tables(s, d, "supplier").select(col("s_suppkey"), col("s_nationkey"))),
           col("l_suppkey") === col("s_suppkey"))
-      val su = r.groupBy(col("s_nationkey").as("nk"), col("l_suppkey").as("sk"))
-        .agg(sum("rev").as("s"))
-      val g = su.groupBy("nk").agg(count(lit(1)).as("n_sup"), sum("s").as("tot"),
-        sum(col("s").cast(DecimalType(38, 0)) * col("s")).as("sumsq"), max("s").as("mx"))
-      g.join(broadcast(Tables(s, d, "nation").select(col("n_nationkey"), col("n_name"))),
-          col("nk") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_sup"), col("tot").as("revenue_cents"),
-          round(col("sumsq").cast("double")
-            / (col("tot").cast("double") * col("tot").cast("double")), 6).as("hhi"),
-          round(col("mx").cast("double") / col("tot"), 6).as("top_share"))
+      graft.api.Pipelines.hhi(r, "s_nationkey", "l_suppkey", "rev")
+        .join(broadcast(Tables(s, d, "nation").select(col("n_nationkey"), col("n_name"))),
+          col("s_nationkey") === col("n_nationkey"))
+        .select(col("n_name").as("nation"), col("n_keys").as("n_sup"),
+          col("total").as("revenue_cents"), col("hhi"), col("top_share"))
         .orderBy("nation")
     },
 
@@ -171,37 +138,13 @@ object Round5eOps {
         |  / sqrt(((CAST(ss1 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n1) + (CAST(ss0 AS DOUBLE) - CAST(s0 AS DOUBLE) * s0 / n0)) / (n1 + n0 - 2))
         |  * (1 - 3.0 / (4.0 * (n1 + n0) - 9)) * 1000000 + 0.5) / 1000000 AS hedges_g
         |FROM p""".stripMargin) { (s, d) =>
-      // Effect size purchase-vs-click value: Cohen's d on the pooled
-      // std plus the small-sample-corrected Hedges' g — the magnitude
-      // readout q_stat_8's Welch t deliberately is not (t says "is
-      // there a difference", d says "does it matter"). Both groups'
-      // (n, Σcents, Σcents²) are exact BIGINTs from one scan; d and g
-      // are single IEEE closed forms, with g = d·(1 − 3/(4N−9)).
-      // Scale: map-side-combinable 2-group agg — nothing after is
-      // row-scaled.
+      // Effect size purchase-vs-click value — the magnitude readout
+      // q_stat_8's Welch t deliberately is not (t says "is there a
+      // difference", d says "does it matter").
       val e = Tables(s, d, "events")
         .filter(col("event_type").isin("purchase", "click"))
         .select(col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("x"))
-      val g = e.groupBy("event_type").agg(count(lit(1)).as("n"), sum("x").as("s"),
-        sum(col("x") * col("x")).as("ss"))
-      val p = g.agg(
-        max(when(col("event_type") === "purchase", col("n"))).as("n1"),
-        max(when(col("event_type") === "purchase", col("s"))).as("s1"),
-        max(when(col("event_type") === "purchase", col("ss"))).as("ss1"),
-        max(when(col("event_type") === "click", col("n"))).as("n0"),
-        max(when(col("event_type") === "click", col("s"))).as("s0"),
-        max(when(col("event_type") === "click", col("ss"))).as("ss0"))
-      val m1 = col("s1").cast("double") / col("n1")
-      val m0 = col("s0").cast("double") / col("n0")
-      val pooled = sqrt(((col("ss1").cast("double") - col("s1").cast("double") * col("s1") / col("n1"))
-        + (col("ss0").cast("double") - col("s0").cast("double") * col("s0") / col("n0")))
-        / (col("n1") + col("n0") - 2))
-      val dEff = (m1 - m0) / pooled
-      p.select(col("n1"), col("n0"),
-        round(m1 / 100, 2).as("mean_1"),
-        round(m0 / 100, 2).as("mean_0"),
-        round(dEff, 6).as("cohen_d"),
-        round(dEff * (lit(1) - lit(3.0) / (lit(4.0) * (col("n1") + col("n0")) - 9)), 6).as("hedges_g"))
+      graft.api.Pipelines.effectSize(e, "x", "event_type", "purchase", "click")
     },
 
     Q("q_text_37_burstiness",

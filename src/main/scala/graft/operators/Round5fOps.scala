@@ -6,7 +6,6 @@ import graft.functions.TextFunctions.tokenSet
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Round-5 continuation (SURVEY §2.11o): cross-language duplicate
   * auditing, embedding-centroid drift, DAU/WAU engagement, last-digit
@@ -76,40 +75,9 @@ object Round5fOps {
         |SELECT CAST(d.label AS BIGINT) AS label, n.na AS n_a, n.nb AS n_b,
         | floor(CAST(dot AS DOUBLE) / (sqrt(CAST(qa AS DOUBLE)) * sqrt(CAST(qb AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS centroid_cosine
         |FROM d JOIN n ON d.label = n.label ORDER BY label""".stripMargin) { (s, d) =>
-      // Embedding-centroid drift monitor: split each label's vectors
-      // into two deterministic halves (the house stable-id hash) and
-      // report the cosine between the half-centroids — the
-      // batch-over-batch drift check an embedding pipeline runs after
-      // every model refresh (cosine near 1 ⇒ stable geometry; near 0 ⇒
-      // the label's centroid is noise, as on this random fixture). The
-      // per-half mean normalizations CANCEL inside the cosine, so it is
-      // computed ENTIRELY from exact integer sums: per-(label, half,
-      // dim) sums of 1e-6-quantized components, then Σ sa·sb /
-      // √(Σ sa²·Σ sb²) with products in DECIMAL(38,0)/HUGEINT — no
-      // float ever accumulates across rows or dims. Scale: posexplode
-      // is a projection; the only shuffle is the (label, dim)-keyed agg
-      // (|labels|·dims rows), then |labels|-row arithmetic.
-      val h = Tables(s, d, "embeddings").select(col("vec_id"), col("label"), col("embedding"),
-        (col("vec_id") % 1000000007L * 2654435761L % 1000000007L % 2).as("half"))
-      val x = h.select(col("label"), col("half"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("label"), col("half"), col("dim"),
-          floor(col("v").cast("double") * 1000000L + 0.5).cast("long").as("q"))
-      val c = x.groupBy("label", "dim").agg(
-        sum(when(col("half") === 0, col("q")).otherwise(0L)).as("sa"),
-        sum(when(col("half") === 1, col("q")).otherwise(0L)).as("sb"))
-      val n = h.groupBy("label").agg(
-        sum(when(col("half") === 0, 1L).otherwise(0L)).as("na"),
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("nb"))
-      val dd = c.groupBy("label").agg(
-        sum(col("sa").cast(DecimalType(38, 0)) * col("sb")).as("dot"),
-        sum(col("sa").cast(DecimalType(38, 0)) * col("sa")).as("qa"),
-        sum(col("sb").cast(DecimalType(38, 0)) * col("sb")).as("qb"))
-      dd.join(n, "label")
-        .select(col("label").cast("long").as("label"), col("na").as("n_a"), col("nb").as("n_b"),
-          round(col("dot").cast("double")
-            / (sqrt(col("qa").cast("double")) * sqrt(col("qb").cast("double"))), 6)
-            .as("centroid_cosine"))
+      // Embedding-centroid drift monitor per label (near 0 on this
+      // random fixture: the label's centroid is noise).
+      graft.api.Pipelines.centroidShift(Tables(s, d, "embeddings"), "vec_id", "embedding", "label")
         .orderBy("label")
     },
 
@@ -124,29 +92,8 @@ object Round5fOps {
         |FROM dau JOIN wau ON dau.day = wau.day, b
         |WHERE dau.day >= b.d0 + 6 ORDER BY day""".stripMargin) { (s, d) =>
       // DAU / WAU / stickiness: daily active users, trailing-7-day
-      // active users, and their ratio (the DAU/WAU engagement metric) —
-      // per day, warm-up days excluded. WAU avoids both a windowed
-      // COUNT DISTINCT (not expressible as a window) and a days×users
-      // join: each (user, active-day) row CONTRIBUTES itself to the 7
-      // calendar days it keeps the user "weekly active" (explode of a
-      // 7-element sequence), and a plain distinct count per day
-      // finishes — the O(7·|user-days|) linear reshape that scales
-      // where a self-join over the window does not. All counts exact.
-      // Scale: two digest... two (user, day)-keyed distincts + one
-      // day-keyed agg; the day table is tiny thereafter.
-      val ud = Tables(s, d, "events")
-        .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
-        .distinct()
-      val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
-      val contrib = ud.select(col("user_id"),
-          explode(sequence(col("day"), col("day") + 6)).as("wday"))
-        .distinct()
-      val wau = contrib.groupBy(col("wday").as("day")).agg(count(lit(1)).as("wau"))
-      val d0 = ud.agg(min("day").as("d0"))
-      dau.join(wau, "day").crossJoin(broadcast(d0))
-        .filter(col("day") >= col("d0") + 6)
-        .select(col("day").cast("long").as("day"), col("dau"), col("wau"),
-          round(col("dau").cast("double") / col("wau"), 6).as("stickiness"))
+      // active users, and their ratio (the DAU/WAU engagement metric).
+      graft.api.Pipelines.dauWau(Tables(s, d, "events"), "user_id", "ts")
         .orderBy("day")
     },
 
@@ -286,33 +233,14 @@ object Round5fOps {
         | floor(CAST(dd AS DOUBLE) / peak * 1000000 + 0.5) / 1000000 AS dd_frac
         |FROM x WHERE rn = 1""".stripMargin) { (s, d) =>
       // Maximum drawdown of the cumulative purchase-minus-error daily
-      // net: running peak minus current cumulative, maximized over
-      // days, with the trough date — the worst-case-decline readout
-      // (finance's risk stat; on pipelines, the deepest sustained
-      // quality/volume slump). Daily nets, the cumulative sum, and the
-      // running peak are all exact BIGINT cents via two stacked
-      // prefix windows (sum then max — composable because both are
-      // ROWS UNBOUNDED PRECEDING); the argmax is an exact integer
-      // compare with earliest-day tiebreak. Scale: day-table windows
-      // (repartitionByRange at 100 TB), one-row result.
+      // net — the worst-case-decline readout (finance's risk stat; on
+      // pipelines, the deepest sustained quality/volume slump).
       val cents = floor(col("value") * 100 + 0.5).cast("long")
       val day = Tables(s, d, "events")
         .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
         .agg((sum(when(col("event_type") === "purchase", cents).otherwise(0L))
           - sum(when(col("event_type") === "error", cents).otherwise(0L))).as("net"))
-      val prefix = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-      val r = day
-        .withColumn("cum", sum("net").over(prefix))
-        .withColumn("peak", max("cum").over(prefix))
-      val x = r.withColumn("dd", col("peak") - col("cum"))
-        .withColumn("rn", row_number().over(Window.orderBy(col("dd").desc, col("day"))))
-        .withColumn("nd", count(lit(1)).over(Window.partitionBy()))
-      x.filter(col("rn") === 1)
-        .select(col("day").cast("long").as("trough_day"), col("nd").as("n_days"),
-          round(col("cum").cast("double") / 100, 2).as("cum_at_trough"),
-          round(col("peak").cast("double") / 100, 2).as("peak_before"),
-          round(col("dd").cast("double") / 100, 2).as("max_drawdown"),
-          round(col("dd").cast("double") / col("peak"), 6).as("dd_frac"))
+      graft.api.Pipelines.maxDrawdown(day, "day", "net")
     }
   )
 }

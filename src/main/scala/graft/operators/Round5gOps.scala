@@ -242,28 +242,13 @@ object Round5gOps {
         | floor(CAST(s AS DOUBLE) / tot * 1000000 + 0.5) / 1000000 AS share,
         | floor(CAST(cum AS DOUBLE) / tot * 1000000 + 0.5) / 1000000 AS cum_share
         |FROM c ORDER BY decile""".stripMargin) { (s, d) =>
-      // Lorenz curve of order value by decile: each decile's share and
-      // the cumulative share — the CURVE whose area deficit q_agg_29's
-      // Gini scalar summarizes (this is the view that says WHERE the
-      // inequality lives: bottom-decile starvation vs top-decile
-      // domination). Deciles are the builtin-identical ntile(10) over
-      // the totally ordered (cents, orderkey) stream, computed as
-      // Pipelines.exactGlobalRank + ntileOfRank (range-partitioned —
-      // no one-task window); shares are exact BIGINT rationals off
-      // the 10-row table, whose prefix window is decile-bounded.
+      // Lorenz curve of order value by decile — the CURVE whose area
+      // deficit q_agg_29's Gini scalar summarizes (this is the view that
+      // says WHERE the inequality lives: bottom-decile starvation vs
+      // top-decile domination).
       val e = Tables(s, d, "orders").select(col("o_orderkey"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      val (nE, ranked) = graft.api.Pipelines
-        .exactGlobalRankByN(e, Seq(col("cents"), col("o_orderkey")), "__rk")
-      val b = ranked.select(col("cents"),
-        graft.api.Pipelines.ntileOfRank(col("__rk"), nE, 10).as("decile"))
-      val g = b.groupBy("decile").agg(count(lit(1)).as("n"), sum("cents").as("s"))
-      val c = g
-        .withColumn("cum", sum("s").over(Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("tot", sum("s").over(Window.partitionBy()))
-      c.select(col("decile"), col("n"),
-          round(col("s").cast("double") / col("tot"), 6).as("share"),
-          round(col("cum").cast("double") / col("tot"), 6).as("cum_share"))
+      graft.api.Pipelines.lorenzCurve(e, "o_orderkey", "cents")
         .orderBy("decile")
     },
 

@@ -21,8 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5qOps {
 
-  private val P = 1000000007L
-
   val all: Seq[Q] = Seq(
 
     // Partial correlation r(qty, price | discount) per returnflag —
@@ -125,14 +123,9 @@ object Round5qOps {
         when(col("z6") <= 1000000L, lit(1000000L))
           .otherwise(floor(lit(1000000.0) / ((col("z6") / 1000000.0) * (col("z6") / 1000000.0)) + 0.5)
             .cast("long")).as("p6"))
-      val rk = pv.withColumn("k",
-        row_number().over(Window.orderBy(col("p6"), col("c_nationkey"))))
-      val km = rk.agg(max(when(col("p6") * 250 <= col("k") * 1000000L, col("k")).otherwise(0L))
-        .as("kmax"))
-      rk.crossJoin(broadcast(km))
+      graft.api.Pipelines.benjaminiHochberg(pv, "c_nationkey", "p6", 250L)
         .select(col("c_nationkey").cast("long").as("nationkey"), col("z"),
-          (col("p6") / 1000000.0).as("p_value"),
-          when(col("k") <= col("kmax"), 1L).otherwise(0L).as("rejected"), col("k"))
+          (col("p6") / 1000000.0).as("p_value"), col("rejected"), col("k"))
         .orderBy("k").drop("k")
     },
 
@@ -239,25 +232,9 @@ object Round5qOps {
         | floor(CAST(ms[2] AS DOUBLE) / 100 * 100 + 0.5) / 100 AS ci_lo,
         | floor(CAST(ms[31] AS DOUBLE) / 100 * 100 + 0.5) / 100 AS ci_hi
         |FROM pt, srt""".stripMargin) { (s, d) =>
-      // Membership hash = the repo's overflow-safe multiplicative hash
-      // (q_scan_13 family), salted by replicate id; each replicate mean
-      // rounds to integer cents BEFORE the sort so the 2nd/31st picks
-      // compare integers. The fact explodes ×32 but aggregates
-      // map-side to 32 groups — one 32-row shuffle at any scale.
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-        .localCheckpoint()
-      val reps = o.withColumn("b", explode(expr("sequence(1, 32)")))
-        .filter(((col("o_orderkey") + col("b") * 131) % P) * 2654435761L % P < P / 2)
-        .groupBy("b").agg(count(lit(1)).as("n"), sum("cents").as("s"))
-      val means = reps.select(
-        floor(col("s").cast("double") / col("n") + 0.5).cast("long").as("mean_c"))
-      val srt = means.agg(sort_array(collect_list("mean_c")).as("ms"))
-      val pt = o.agg(round(sum("cents").cast("double") / count(lit(1)) / 100, 2).as("mean_all"))
-      pt.crossJoin(broadcast(srt))
-        .select(col("mean_all"),
-          round(element_at(col("ms"), 2).cast("double") / 100, 2).as("ci_lo"),
-          round(element_at(col("ms"), 31).cast("double") / 100, 2).as("ci_hi"))
+      graft.api.Pipelines.bootstrapMeanCI(Tables(s, d, "orders")
+          .select(col("o_orderkey"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")),
+        "o_orderkey", "cents")
     },
 
     // Bartlett's test for variance homogeneity across the three

@@ -66,15 +66,7 @@ object Round5sOps {
       // r14: the session-cached bidirected mod-100 list (identical
       // derivation, materialized once across the nine sharing queries)
       val b = graft.sources.SampledEdges.bidir(s, d, 100)
-      def peel(edges: DataFrame): (DataFrame, DataFrame) = {
-        val keep = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("dg"))
-          .filter(col("dg") >= 3).select("node")
-        val e2 = edges
-          .join(keep, col("src") === col("node"), "left_semi")
-          .join(keep.withColumnRenamed("node", "node2"),
-            col("dst") === col("node2"), "left_semi")
-        (keep, e2)
-      }
+      def peel(edges: DataFrame) = graft.api.Pipelines.kCorePeel(edges, "src", "dst", 3)
       val (k1, e1) = peel(b)
       val e1c = e1.localCheckpoint()
       val (k2, e2) = peel(e1c)
@@ -105,38 +97,12 @@ object Round5sOps {
          | coalesce(h2n.v, 0) / 1000000.0 AS hub
          |FROM a2n LEFT JOIN h2n ON a2n.node = h2n.node
          |ORDER BY a2n.v DESC, a2n.node LIMIT 10""".stripMargin) { (s, d) =>
-      // Each half-step is one edge join + integer sum; the L1
-      // normalization is int/int quantized 1e-6, so the next half-step
-      // consumes exact integers again. The edge list checkpoints once.
-      // Score tables are |V|-sized, so the half-step joins carry NO
-      // broadcast hint (a forced broadcast of a node-scaled table is a
-      // hard failure at 10⁸⁺ nodes; AQE sizes it at runtime). Only the
-      // 1-row L1 total is hinted.
       // r14: distinct handoff edges from the session-scoped cache
-      // (mod 1 — the identical derivation, materialized once)
-      val e = graft.sources.SampledEdges.handoff(s, d, 1)
-      def l1norm(df: DataFrame): DataFrame = {
-        val tot = df.agg(sum("v").as("tot"))
-        df.crossJoin(broadcast(tot))
-          .select(col("node"),
-            floor(col("v").cast("double") / col("tot") * 1000000 + 0.5).cast("long").as("v"))
-      }
-      val h1 = l1norm(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("v")))
-      val a1 = l1norm(e.join(h1, col("src") === col("node"))
-        .groupBy(col("dst").as("node2")).agg(sum("v").as("v"))
-        .withColumnRenamed("node2", "node"))
-      val h2 = l1norm(e.join(a1, col("dst") === col("node"))
-        .groupBy(col("src").as("node2")).agg(sum("v").as("v"))
-        .withColumnRenamed("node2", "node"))
-      val a2 = l1norm(e.join(h2, col("src") === col("node"))
-        .groupBy(col("dst").as("node2")).agg(sum("v").as("v"))
-        .withColumnRenamed("node2", "node"))
-      a2.select(col("node"), col("v"))
-        .join(h2.select(col("node").as("hn"), col("v").as("hv")),
-          col("node") === col("hn"), "left_outer")
-        .select(col("node"), (col("v") / 1000000.0).as("authority"),
-          (coalesce(col("hv"), lit(0L)) / 1000000.0).as("hub"), col("v").as("a6"))
-        .orderBy(col("a6").desc, col("node")).limit(10).drop("a6")
+      // (mod 1 — the identical derivation, materialized once). The
+      // top 10 by authority; authority is the 1e-6 integer score over
+      // 1e6, so its order is the integer order.
+      graft.api.Pipelines.hits(graft.sources.SampledEdges.handoff(s, d, 1), "src", "dst")
+        .orderBy(col("authority").desc, col("node")).limit(10)
     },
 
     // Bipartite projection: supplier pairs weighted by DISTINCT shared

@@ -77,15 +77,8 @@ object Round5tOps {
         | floor(CAST(sum(w6) AS DOUBLE) / 1000000 * 10000 + 0.5) / 10000 AS effective_docs,
         | floor(CAST(sum(w6) AS DOUBLE) / count(*) / 1000000 * 10000 + 0.5) / 10000 AS retention
         |FROM w GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      // Weight = floor(1e6/k): an exact integer per row (both engines'
-      // integer division), so the per-source "effective docs" is an
-      // exact integer sum — no float accumulates. Digest groupBy is the
-      // q_dedup_1 16-byte-key shuffle; the weight join rides the same
-      // digest hash partitioning.
-      val c = Tables(s, d, "documents").select(col("source"), md5(col("text")).as("dg"))
-      val k = c.groupBy("dg").agg(count(lit(1)).as("k"))
-      val w = c.join(k, Seq("dg")).select(col("source"), (lit(1000000L) / col("k")).cast("long").as("w6"))
-      w.groupBy("source")
+      graft.api.Pipelines.softDedupWeights(Tables(s, d, "documents"), "source", "text")
+        .groupBy("source")
         .agg(count(lit(1)).as("raw_docs"),
           (floor(sum("w6").cast("double") / 1000000 * 10000 + 0.5) / 10000).as("effective_docs"),
           (floor(sum("w6").cast("double") / count(lit(1)) / 1000000 * 10000 + 0.5) / 10000)

@@ -51,34 +51,7 @@ object Round5uOps {
         | sig4 / 10000.0 AS signal,
         | floor((macd6 / 1000000.0 - sig4 / 10000.0) * 10000 + 0.5) / 10000 AS histogram
         |FROM f WHERE rn <= 30 ORDER BY day""".stripMargin) { (s, d) =>
-      // Both EMAs fold the SAME materialized prefix list in frame order
-      // (seedless DuckDB list_reduce semantics mirrored with
-      // slice+element_at); α = 2/13, 2/27, 0.2 are IEEE divisions of
-      // exact integers, bit-identical in both engines. The MACD series
-      // quantizes to 1e-6 dollars BEFORE the signal fold, so the second
-      // recursion consumes identical doubles. Day-level series: the
-      // prefix lists total O(days²/2) elements — bounded by the
-      // calendar, not the fact table.
-      val w = Window.orderBy("dday").rowsBetween(Window.unboundedPreceding, 0)
-      def ema(vals: org.apache.spark.sql.Column, alpha: org.apache.spark.sql.Column) =
-        aggregate(slice(vals, lit(2), size(vals) - 1), element_at(vals, 1),
-          (a, x) => (lit(1) - alpha) * a + alpha * x)
-      val m = daily(s, d)
-        .select(col("dday"), collect_list(col("cents").cast("double")).over(w).as("vals"))
-        .select(col("dday"),
-          floor((ema(col("vals"), lit(2.0) / 13) - ema(col("vals"), lit(2.0) / 27))
-            / 100 * 1000000 + 0.5).cast("long").as("macd6"))
-      val sig = m.select(col("dday"), col("macd6"),
-        collect_list(col("macd6").cast("double") / 1000000).over(w).as("ms"))
-      val f = sig.select(col("dday"), col("macd6"),
-          floor(aggregate(slice(col("ms"), lit(2), size(col("ms")) - 1), element_at(col("ms"), 1),
-            (a, x) => lit(0.8) * a + lit(0.2) * x) * 10000 + 0.5).cast("long").as("sig4"))
-        .withColumn("rn", row_number().over(Window.orderBy(col("dday").desc)))
-        .filter(col("rn") <= 30)
-      f.select(col("dday").cast("long").as("day"),
-          (col("macd6") / 1000000.0).as("macd"),
-          (col("sig4") / 10000.0).as("signal"),
-          round(col("macd6") / 1000000.0 - col("sig4") / 10000.0, 4).as("histogram"))
+      graft.api.Pipelines.macd(daily(s, d), "dday", "cents", 30)
         .orderBy("day")
     },
 

@@ -42,32 +42,14 @@ object Round5vOps {
         |FROM sc GROUP BY 1, 2, 3 ORDER BY r, f, m""".stripMargin) { (s, d) =>
       // All three ntiles order on exact integers (micros, counts,
       // cents) with user_id as the total-order tie-break, so segment
-      // assignment is engine-independent. Score 1 = best (most recent /
-      // most frequent / highest spend). One events pass; the ranking
+      // assignment is engine-independent. One events pass; the ranking
       // runs over the user aggregate.
       val u = Tables(s, d, "events").filter(col("event_type") === "purchase")
         .groupBy("user_id")
         .agg(max(expr("unix_micros(ts)")).as("last_us"),
           count(lit(1)).as("freq"),
           sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
-        .localCheckpoint()
-      // builtin-identical ntile(5) per axis via exactGlobalRankByN +
-      // ntileOfRank — three range shuffles of the checkpointed user
-      // table, no one-task windows even when users scale with the
-      // fact; n rides the first rank's count pass
-      val (nU, rRank) = graft.api.Pipelines
-        .exactGlobalRankByN(u, Seq(col("last_us").desc, col("user_id")), "__rk")
-      def score(ranked: org.apache.spark.sql.DataFrame, out: String) =
-        ranked.select(col("user_id"),
-          graft.api.Pipelines.ntileOfRank(col("__rk"), nU, 5).as(out))
-      val sc = score(rRank, "r")
-        .join(score(graft.api.Pipelines.exactGlobalRankBy(u,
-          Seq(col("freq").desc, col("user_id")), "__rk"), "f"), "user_id")
-        .join(score(graft.api.Pipelines.exactGlobalRankBy(u,
-          Seq(col("cents").desc, col("user_id")), "__rk"), "m"), "user_id")
-      sc.groupBy(col("r").cast("long").as("r"), col("f").cast("long").as("f"),
-          col("m").cast("long").as("m"))
-        .agg(count(lit(1)).as("n_users"))
+      graft.api.Pipelines.rfmSegments(u, "user_id", "last_us", "freq", "cents")
         .orderBy("r", "f", "m")
     },
 
@@ -106,15 +88,9 @@ object Round5vOps {
       // per pair for numbers one pass already carries.) The FK side
       // never carries payload columns into the shuffle. Containment <
       // 1 localizes WHICH relationship leaks orphans.
-      def pair(fkName: String, fact: String, fkCol: String, dim: String, dimKey: String) = {
-        Tables(s, d, fact).select(col(fkCol)).distinct()
-          .join(broadcast(Tables(s, d, dim).select(col(dimKey))),
-            col(fkCol) === col(dimKey), "left")
-          .agg(count(lit(1)).as("n_distinct"), count(col(dimKey)).as("n_contained"))
-          .select(lit(fkName).as("fk"), col("n_distinct"), col("n_contained"),
-            (floor(col("n_contained").cast("double") / col("n_distinct") * 1000000 + 0.5)
-              / 1000000).as("containment"))
-      }
+      def pair(fkName: String, fact: String, fkCol: String, dim: String, dimKey: String) =
+        graft.api.Pipelines.containment(Tables(s, d, fact), fkCol, Tables(s, d, dim), dimKey)
+          .select(lit(fkName).as("fk"), col("n_distinct"), col("n_contained"), col("containment"))
       pair("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey")
         .union(pair("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"))
         .union(pair("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"))

@@ -103,21 +103,13 @@ object Round5wOps {
         | floor(CAST(swx AS DOUBLE) / ws * 10000 + 0.5) / 10000 AS w_mean,
         | floor((CAST(swxx AS DOUBLE) / ws - (CAST(swx AS DOUBLE) / ws) * (CAST(swx AS DOUBLE) / ws)) * 10000 + 0.5) / 10000 AS w_var
         |FROM m ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-      // Three weighted power sums as exact integers (weights = cents,
-      // x integral; w·x² ≤ 1e7·2.5e3 per row — far inside int64);
-      // mean/variance are single IEEE expressions per group.
+      // Weights = cents, x integral; w·x² ≤ 1e7·2.5e3 per row — far
+      // inside int64.
       val r = Tables(s, d, "lineitem")
         .select(col("l_returnflag"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("w"),
           col("l_quantity").cast("long").as("x"))
-      val m = r.groupBy("l_returnflag")
-        .agg(sum("w").as("ws"), sum(col("w") * col("x")).as("swx"),
-          sum(col("w") * col("x") * col("x")).as("swxx"))
-      def D(c0: String) = col(c0).cast("double")
-      m.select(col("l_returnflag"),
-          round(D("swx") / col("ws"), 4).as("w_mean"),
-          round(D("swxx") / col("ws") - (D("swx") / col("ws")) * (D("swx") / col("ws")), 4)
-            .as("w_var"))
+      graft.api.Pipelines.weightedVariance(r, "l_returnflag", "x", "w")
         .orderBy("l_returnflag")
     },
 

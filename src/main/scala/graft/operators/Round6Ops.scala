@@ -52,18 +52,11 @@ object Round6Ops {
         | CAST(CASE WHEN n_bitmap = n_exact THEN 1 ELSE 0 END AS BIGINT) AS agree
         |FROM b JOIN x ON b.l_returnflag = x.l_returnflag
         |ORDER BY b.l_returnflag""".stripMargin) { (s, d) =>
-      // 63 bits per word keeps every mask positive (bit 63 would wrap
-      // the sign on both engines). Two aggregations over (flag, word):
-      // both partial-aggregate map-side; the exact branch is the
-      // cross-check that the bitmap algebra is lossless.
+      // The exact count(DISTINCT) branch is the cross-check that the
+      // bitmap algebra is lossless; both partial-aggregate map-side.
       val li = Tables(s, d, "lineitem")
-      val w = li.select(col("l_returnflag"),
-          expr("l_suppkey div 63").as("wd"),
-          expr("shiftleft(cast(1 as bigint), cast(l_suppkey % 63 as int))").as("mask"))
-        .groupBy("l_returnflag", "wd")
-        .agg(expr("bit_or(mask)").as("bits"))
-      val b = w.groupBy("l_returnflag")
-        .agg(sum(bit_count(col("bits")).cast("long")).as("n_bitmap"))
+      val b = graft.api.Pipelines.bitmapDistinct(li, "l_returnflag", "l_suppkey")
+        .withColumnRenamed("n_distinct", "n_bitmap")
       val x = li.groupBy("l_returnflag")
         .agg(countDistinct("l_suppkey").as("n_exact"))
       b.join(x, "l_returnflag")
@@ -97,36 +90,12 @@ object Round6Ops {
         | (SELECT floor(b * 1000000 + 0.5) / 1000000 FROM ab2) AS slope,
         | floor(CAST(sd AS DOUBLE) / se * 1000000 + 0.5) / 1000000 AS dw
         |FROM sums""".stripMargin) { (s, d) =>
-      // Slope/intercept are fixed IEEE expressions over five exact
-      // integer sums; residuals quantize to 1e-3 BEFORE the DW sums so
-      // both engines difference identical integers (e3 ≤ ~5e4, squares
-      // ≤ 2.5e9, ×days safely inside int64 at any fixture scale). One
-      // day-grain aggregate + one lag window over the tiny day table.
+      // e3 ≤ ~5e4, squares ≤ 2.5e9, ×days — safely inside int64 at any
+      // fixture scale.
       val dly = Tables(s, d, "orders")
         .groupBy(datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("x"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint()
-      val m = dly.agg(count(lit(1)).as("k"), sum("x").as("sx"), sum("y").as("sy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
-      def D(c0: String) = col(c0).cast("double")
-      val ab = m.select(col("k"), col("sx"), col("sy"),
-          ((D("k") * col("sxy") - D("sx") * col("sy"))
-            / (D("k") * col("sxx") - D("sx") * col("sx"))).as("b"))
-        .select(col("k"), col("b"),
-          (D("sy") / col("k") - col("b") * (D("sx") / col("k"))).as("a"))
-      val e3 = floor((D("y") - col("a") - col("b") * col("x")) * 1000 + 0.5).cast("long")
-      val w = Window.orderBy("x")
-      val e = dly.crossJoin(broadcast(ab))
-        .select(col("x"), col("k"), col("b"), e3.as("e3"))
-        .withColumn("p3", lag(col("e3"), 1).over(w))
-      e.groupBy("k", "b")
-        .agg(sum(when(col("p3").isNotNull, (col("e3") - col("p3")) * (col("e3") - col("p3")))
-            .otherwise(0L)).as("sd"),
-          sum(col("e3") * col("e3")).as("se"),
-          count(lit(1)).as("n_days"))
-        .select(col("n_days"),
-          (floor(col("b") * 1000000 + 0.5) / 1000000).as("slope"),
-          (floor(col("sd").cast("double") / col("se") * 1000000 + 0.5) / 1000000).as("dw"))
+      graft.api.Pipelines.durbinWatson(dly, "x", "y").withColumnRenamed("n", "n_days")
     },
 
     // Stochastic oscillator %K/%D on daily purchase revenue: where
@@ -156,33 +125,10 @@ object Round6Ops {
         | floor(CAST(k6 AS DOUBLE) / 10000 * 100 + 0.5) / 100 AS pct_k,
         | floor(CAST(floor(CAST(s3 AS DOUBLE) / 3 + 0.5) AS DOUBLE) / 10000 * 100 + 0.5) / 100 AS pct_d
         |FROM sm WHERE m = 3 ORDER BY day""".stripMargin) { (s, d) =>
-      // %K quantizes to 1e-6 of the [0,1] range position BEFORE the
-      // %D smoothing, so the second window averages exact integers
-      // (the q_win_19 MACD re-quantize-between-recursions rule). Flat
-      // 14-day windows pin %K to 50. Warm-up rows of BOTH windows are
-      // excluded — every emitted row is a full-window statistic. Two
-      // cascaded windows over the day-grain table; repartitionByRange
-      // at 100 TB.
       val dly = Tables(s, d, "events").filter(col("event_type") === "purchase")
         .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
         .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
-      val win = Window.orderBy("day").rowsBetween(-13, 0)
-      val w = dly.select(col("day"), col("cents"),
-        count(lit(1)).over(win).as("k"),
-        min("cents").over(win).as("ll"),
-        max("cents").over(win).as("hh"))
-      val pk = w.filter(col("k") === 14)
-        .select(col("day"),
-          when(col("hh") === col("ll"), lit(500000L))
-            .otherwise(floor((col("cents") - col("ll")).cast("double") * 1000000
-              / (col("hh") - col("ll")) + 0.5).cast("long")).as("k6"))
-      val w3 = Window.orderBy("day").rowsBetween(-2, 0)
-      pk.select(col("day"), col("k6"),
-          count(lit(1)).over(w3).as("m"), sum("k6").over(w3).as("s3"))
-        .filter(col("m") === 3)
-        .select(col("day").cast("long").as("day"),
-          (floor(col("k6").cast("double") / 10000 * 100 + 0.5) / 100).as("pct_k"),
-          (floor(floor(col("s3").cast("double") / 3 + 0.5) / 10000 * 100 + 0.5) / 100).as("pct_d"))
+      graft.api.Pipelines.stochasticOscillator(dly, "day", "cents")
         .orderBy("day")
     },
 
@@ -347,29 +293,11 @@ object Round6Ops {
         |FROM sz JOIN sz nx ON nx.mi = sz.mi + 1
         |LEFT JOIN ix ON ix.mi = sz.mi
         |ORDER BY sz.mi""".stripMargin) { (s, d) =>
-      // The (month, supplier) relation dedups once (two-key shuffle);
-      // intersections are one self-join keyed (mi+1, suppkey) — sizes
-      // and overlaps are exact integers, Jaccard is the only division.
-      // At 100 TB months are natural partitions and the self-join is
-      // partition-adjacent.
       val ms = Tables(s, d, "lineitem")
         .select((year(col("l_shipdate")) * 12 + month(col("l_shipdate"))).cast("long").as("mi"),
           col("l_suppkey"))
-        .distinct().localCheckpoint()
-      val sz = ms.groupBy("mi").agg(count(lit(1)).as("n"))
-      val ix = ms.as("a")
-        .join(ms.as("b"),
-          col("b.mi") === col("a.mi") + 1 && col("b.l_suppkey") === col("a.l_suppkey"))
-        .groupBy(col("a.mi").as("mi")).agg(count(lit(1)).as("both"))
-      sz.as("p")
-        .join(sz.as("nx"), col("nx.mi") === col("p.mi") + 1)
-        .join(ix.as("ix"), col("ix.mi") === col("p.mi"), "left_outer")
-        .select(col("p.mi").as("month_index"), col("p.n").as("n_prev"),
-          col("nx.n").as("n_next"),
-          coalesce(col("both"), lit(0L)).as("n_common"),
-          (floor(coalesce(col("both"), lit(0L)).cast("double")
-            / (col("p.n") + col("nx.n") - coalesce(col("both"), lit(0L))) * 1000000 + 0.5)
-            / 1000000).as("jaccard"))
+      graft.api.Pipelines.adjacentSetJaccard(ms, "mi", "l_suppkey")
+        .withColumnRenamed("mi", "month_index")
         .orderBy("month_index")
     }
   )

@@ -1,9 +1,7 @@
 package graft.operators
 
 import graft.Q
-import graft.functions.Num
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-6 continuation (SURVEY §2.11ar): LLM-pipeline additions —
@@ -20,9 +18,7 @@ object Round6bOps {
 
   /** 1e6-quantized DCG discounts 1/log2(r+1), r = 1..10 (the q_ret_1
     * plan-time table — no runtime transcendental). */
-  private val expoW: Seq[Long] =
-    (1 to 10).map(r => math.floor(1e6 * math.log(2) / math.log(r + 1.0) + 0.5).toLong)
-  private val expoWSql = expoW.mkString("[", ", ", "]")
+  private val expoWSql = Round4Ops.ndcgW.mkString("[", ", ", "]")
 
   val all: Seq[Q] = Seq(
 
@@ -44,19 +40,7 @@ object Round6bOps {
         | floor(CAST(sum(dg) AS DOUBLE) / sum(n) * 1000000 + 0.5) / 1000000 AS digit_ratio,
         | floor(CAST(sum(sp) AS DOUBLE) / sum(n) * 1000000 + 0.5) / 1000000 AS space_ratio
         |FROM c GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      // Length-difference counting (len − len(strip(class))) keeps the
-      // whole profile in exact integers — three codegen'd regex
-      // replaces in ONE scan, aggregated map-side to |sources| rows.
-      def cnt(cls: String) =
-        (length(col("text")) - length(regexp_replace(col("text"), cls, ""))).cast("long")
-      Tables(s, d, "documents")
-        .select(col("source"), length(col("text")).cast("long").as("n"),
-          cnt("[A-Z]").as("up"), cnt("[0-9]").as("dg"), cnt(" ").as("sp"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n").as("n_chars"),
-          Num.round(sum("up").cast("double") / sum("n"), 6).as("upper_ratio"),
-          Num.round(sum("dg").cast("double") / sum("n"), 6).as("digit_ratio"),
-          Num.round(sum("sp").cast("double") / sum("n"), 6).as("space_ratio"))
+      graft.api.Pipelines.charClassProfile(Tables(s, d, "documents"), "source", "text")
         .orderBy("source")
     },
 
@@ -78,23 +62,7 @@ object Round6bOps {
         |   / count(*) * 1000000 + 0.5) / 1000000 AS boiler_ratio
         |FROM sen JOIN freq ON sen.s = freq.s
         |GROUP BY sen.source ORDER BY sen.source""".stripMargin) { (s, d) =>
-      // One explode pass; the sentence-frequency table is
-      // sentence-vocabulary-bounded and joins back by sentence text
-      // (at 100 TB: join on xxhash64(sentence) digests instead of raw
-      // strings — same plan, 8-byte keys). All counts exact.
-      val sen = Tables(s, d, "documents")
-        .select(col("doc_id"), col("source"),
-          explode(split(col("text"), "\\. ")).as("s0"))
-        .select(col("doc_id"), col("source"), trim(col("s0")).as("s"))
-        .filter(length(col("s")) >= 20)
-        .localCheckpoint()
-      val freq = sen.groupBy("s").agg(countDistinct("doc_id").as("nd"))
-      sen.join(freq, "s")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_sentences"),
-          sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_boiler"),
-          Num.round(sum(when(col("nd") >= 2, 1L).otherwise(0L)).cast("double")
-            / count(lit(1)), 6).as("boiler_ratio"))
+      graft.api.Pipelines.boilerplateShare(Tables(s, d, "documents"), "doc_id", "source", "text")
         .orderBy("source")
     },
 
@@ -112,18 +80,7 @@ object Round6bOps {
         | floor(CAST(sum(CASE WHEN n >= 2 THEN n - 1 ELSE 0 END) AS DOUBLE)
         |   / sum(n) * 1000000 + 0.5) / 1000000 AS dup_ratio
         |FROM g""".stripMargin) { (s, d) =>
-      // The prefix IS the group key (no hash round-trip to keep the
-      // oracle engine-agnostic); at 100 TB the groupBy key becomes
-      // xxhash64(prefix) — a fixed 8-byte shuffle regardless of
-      // document size, the q_dedup_1 digest discipline.
-      Tables(s, d, "documents")
-        .groupBy(substring(col("text"), 1, 40).as("pfx"))
-        .agg(count(lit(1)).as("n"))
-        .agg(sum("n").as("n_docs"), count(lit(1)).as("n_groups"),
-          sum(when(col("n") >= 2, 1L).otherwise(0L)).as("n_multi_groups"),
-          sum(when(col("n") >= 2, col("n") - 1).otherwise(0L)).as("n_dup_docs"),
-          Num.round(sum(when(col("n") >= 2, col("n") - 1).otherwise(0L)).cast("double")
-            / sum("n"), 6).as("dup_ratio"))
+      graft.api.Pipelines.prefixClusters(Tables(s, d, "documents"), "text")
     },
 
     // Ridge shrinkage path: the q_ml_8 two-regressor OLS re-solved
@@ -156,34 +113,12 @@ object Round6bOps {
         | floor(((cxx + lam) * czy - cxz * cxy)
         |   / ((cxx + lam) * (czz + lam) - cxz * cxz) * 1000000 + 0.5) / 1000000 AS b_disc_cents
         |FROM c, lams ORDER BY lam""".stripMargin) { (s, d) =>
-      // Same nine exact power sums as q_ml_8 in ONE fact pass; the
-      // centered cross-moments and the 2×2 ridge solves per λ are
-      // fixed IEEE expressions — the λ sweep costs four 1-row
-      // projections, not four scans.
       val x = col("l_quantity").cast("long")
       val z = floor(col("l_discount") * 100 + 0.5).cast("long")
       val y = floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-      val m = Tables(s, d, "lineitem")
-        .select(x.as("x"), z.as("z"), y.as("y"))
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("z").as("sz"), sum("y").as("sy"),
-          sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("z")).as("sxz"),
-          sum(col("z") * col("z")).as("szz"), sum(col("x") * col("y")).as("sxy"),
-          sum(col("z") * col("y")).as("szy"))
-      def D(c0: String) = col(c0).cast("double")
-      val c = m.select(col("n"),
-        (D("sxx") - D("sx") * col("sx") / col("n")).as("cxx"),
-        (D("sxz") - D("sx") * col("sz") / col("n")).as("cxz"),
-        (D("szz") - D("sz") * col("sz") / col("n")).as("czz"),
-        (D("sxy") - D("sx") * col("sy") / col("n")).as("cxy"),
-        (D("szy") - D("sz") * col("sy") / col("n")).as("czy"))
-      val lams = Seq(0L, 1000000L, 10000000L, 100000000L)
-      val withLam = c.withColumn("lam", explode(array(lams.map(lit): _*)))
-      val det = (col("cxx") + col("lam")) * (col("czz") + col("lam")) - col("cxz") * col("cxz")
-      withLam.select(col("lam"),
-          (floor((col("cxy") * (col("czz") + col("lam")) - col("cxz") * col("czy"))
-            / det * 1000000 + 0.5) / 1000000).as("b_qty_cents"),
-          (floor(((col("cxx") + col("lam")) * col("czy") - col("cxz") * col("cxy"))
-            / det * 1000000 + 0.5) / 1000000).as("b_disc_cents"))
+      graft.api.Pipelines.ridgePath(Tables(s, d, "lineitem").select(x.as("x"), z.as("z"), y.as("y")),
+          "x", "z", "y", Seq(0L, 1000000L, 10000000L, 100000000L))
+        .select(col("lam"), col("b_x").as("b_qty_cents"), col("b_z").as("b_disc_cents"))
         .orderBy("lam")
     },
 
@@ -207,28 +142,9 @@ object Round6bOps {
         |   ELSE alloc1 END AS BIGINT) AS alloc_final,
         | CAST(CASE WHEN toks <= fair THEN 1 ELSE 0 END AS BIGINT) AS exhausted
         |FROM r1, slack ORDER BY source""".stripMargin) { (s, d) =>
-      // Pure integer division end to end (the only nondeterminism risk
-      // in an allocator is float shares — here there are none). Two
-      // aggregate barriers (totals, slack), both 1-row broadcasts; the
-      // per-source table never shuffles again.
-      val src = Tables(s, d, "documents")
-        .groupBy("source").agg(sum(expr("n_chars div 5")).as("toks"))
-        .localCheckpoint()
-      val tot = src.agg(expr("sum(toks) div 2").as("budget"), count(lit(1)).as("n"))
-      val r1 = src.crossJoin(broadcast(tot))
-        .select(col("source"), col("toks"), col("budget"),
-          expr("budget div n").as("fair"),
-          least(col("toks"), expr("budget div n")).as("alloc1"))
-        .localCheckpoint()
-      val slack = r1.agg((min("budget") - sum("alloc1")).as("leftover"),
-        sum(when(col("toks") > col("fair"), 1L).otherwise(0L)).as("m"))
-      r1.crossJoin(broadcast(slack))
-        .select(col("source"), col("toks").as("tokens_available"), col("alloc1"),
-          when(col("toks") > col("fair"),
-            least(col("toks"), col("fair")
-              + when(col("m") > 0, expr("leftover div m")).otherwise(lit(0L))))
-            .otherwise(col("alloc1")).cast("long").as("alloc_final"),
-          when(col("toks") <= col("fair"), 1L).otherwise(0L).as("exhausted"))
+      // Token budget: n_chars div 5 tokens per doc.
+      graft.api.Pipelines.waterfillBudget(Tables(s, d, "documents"), "source", expr("n_chars div 5"))
+        .withColumnRenamed("available", "tokens_available")
         .orderBy("source")
     },
 
@@ -251,32 +167,17 @@ object Round6bOps {
          |SELECT label, n_slots,
          | floor(CAST(w6 AS DOUBLE) / tot * 1000000 + 0.5) / 1000000 AS exposure_share
          |FROM mass, t ORDER BY label""".stripMargin) { (s, d) =>
-      // 8 probes broadcast against the corpus — one scan, per-probe
-      // top-10 via ranking windows partitioned by probe (per-partition
-      // heaps at scale); exposure weights are the q_ret_1 plan-time
-      // 1e6 integers, so the shares divide exact BIGINTs. At 100 TB
-      // the probe fan-out stays a broadcast and the candidate side
+      // 8 probes broadcast against the corpus — one scan. At 100 TB the
+      // probe fan-out stays a broadcast and the candidate side
       // pre-filters through IVF cells (q_sim_4) before ranking.
       graft.expressions.VectorExpressions.register(s)
       val e = Tables(s, d, "embeddings")
       val probes = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("pid"), col("embedding").as("pvec"))
-      val cand = e.filter(col("vec_id") >= 8)
-      val w = Window.partitionBy("pid")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val wArr = array(expoW.map(lit): _*)
-      cand.crossJoin(broadcast(probes))
-        .select(col("pid"), col("label"), col("vec_id"),
+      val cand = e.filter(col("vec_id") >= 8).crossJoin(broadcast(probes))
+        .select(col("pid"), col("label").cast("long").as("label"), col("vec_id"),
           expr("cosine_similarity(embedding, pvec)").as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .groupBy(col("label").cast("long").as("label"))
-        .agg(count(lit(1)).as("n_slots"),
-          sum(element_at(wArr, col("rn").cast("int"))).as("w6"))
-        .withColumn("tot", sum("w6").over(Window.partitionBy()))
-        .select(col("label"), col("n_slots"),
-          (floor(col("w6").cast("double") / col("tot") * 1000000 + 0.5) / 1000000)
-            .as("exposure_share"))
+      graft.api.Pipelines.exposureShare(cand, "pid", "label", "cos", "vec_id")
         .orderBy("label")
     }
   )

@@ -4,7 +4,6 @@ import graft.Q
 import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-6 continuation (SURVEY §2.11as): behavioral paths, churn
@@ -32,19 +31,7 @@ object Round6cOps {
         | CAST(count(*) AS BIGINT) AS n
         |FROM s WHERE e2 IS NOT NULL AND e3 IS NOT NULL
         |GROUP BY 1 ORDER BY n DESC, path LIMIT 10""".stripMargin) { (s, d) =>
-      // Two leads in ONE window pass (same frame), then a
-      // 125-key-bounded aggregate (|event_type|³) — the n-gram trick
-      // from q_text_41 applied to behavior streams. Count ties break
-      // on the path string.
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables(s, d, "events")
-        .select(col("user_id"), col("event_type"),
-          lead(col("event_type"), 1).over(w).as("e2"),
-          lead(col("event_type"), 2).over(w).as("e3"))
-        .filter(col("e2").isNotNull && col("e3").isNotNull)
-        .groupBy(concat_ws(">", col("event_type"), col("e2"), col("e3")).as("path"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("path")).limit(10)
+      graft.api.Pipelines.pathNgrams(Tables(s, d, "events"), "user_id", "ts", "event_type", "event_id")
     },
 
     // Churn-definition sensitivity: how many users count as "churned"
@@ -62,21 +49,8 @@ object Round6cOps {
         | floor(CAST(sum(CASE WHEN last_day <= maxd - 7 THEN 1 ELSE 0 END) AS DOUBLE)
         |   / count(*) * 1000000 + 0.5) / 1000000 AS churn_7d_rate
         |FROM u, mx""".stripMargin) { (s, d) =>
-      // One per-user max + one scalar max broadcast; the three
-      // horizons are CASE sums over the same per-user row — integer
-      // day arithmetic throughout.
-      val u = Tables(s, d, "events")
-        .groupBy("user_id")
-        .agg(max(expr("unix_micros(ts) div 86400000000")).as("last_day"))
-        .localCheckpoint()
-      val mx = u.agg(max("last_day").as("maxd"))
-      u.crossJoin(broadcast(mx))
-        .agg(count(lit(1)).as("n_users"),
-          sum(when(col("last_day") <= col("maxd") - 3, 1L).otherwise(0L)).as("churn_3d"),
-          sum(when(col("last_day") <= col("maxd") - 7, 1L).otherwise(0L)).as("churn_7d"),
-          sum(when(col("last_day") <= col("maxd") - 14, 1L).otherwise(0L)).as("churn_14d"),
-          Num.round(sum(when(col("last_day") <= col("maxd") - 7, 1L).otherwise(0L)).cast("double")
-            / count(lit(1)), 6).as("churn_7d_rate"))
+      graft.api.Pipelines.churnHorizons(Tables(s, d, "events"), "user_id",
+        expr("unix_micros(ts) div 86400000000"))
     },
 
     // k-truss peel trajectory: drop edges supported by < 2 triangles,
@@ -122,15 +96,11 @@ object Round6cOps {
       def canon(bi: DataFrame): DataFrame =
         bi.filter(col("src") < col("dst"))
           .select(col("src").as("u"), col("dst").as("v"))
-      def support(cE: DataFrame, bE: DataFrame): DataFrame =
-        cE.join(bE.select(col("src").as("u"), col("dst").as("w")), Seq("u"))
-          .join(bE.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-          .groupBy("u", "v").agg(count(lit(1)).as("sup"))
       val c0 = canon(b0).localCheckpoint()
-      val c1 = support(c0, b0).filter(col("sup") >= 2).select("u", "v").localCheckpoint()
+      val c1 = graft.api.Pipelines.kTrussPeel(c0, b0, 4).localCheckpoint()
       val b1 = c1.select(col("u").as("src"), col("v").as("dst"))
         .union(c1.select(col("v").as("src"), col("u").as("dst"))).localCheckpoint()
-      val c2 = support(c1, b1).filter(col("sup") >= 2).select("u", "v").localCheckpoint()
+      val c2 = graft.api.Pipelines.kTrussPeel(c1, b1, 4).localCheckpoint()
       def rowOf(r: Int, edges: DataFrame, nodes: DataFrame) =
         edges.agg(count(lit(1)).as("n_edges"))
           .crossJoin(nodes.distinct().agg(count(lit(1)).as("n_nodes")))
@@ -190,29 +160,8 @@ object Round6cOps {
         |   / (sqrt(CAST(sum(a.c * a.c) AS DOUBLE)) * sqrt(CAST(sum(b.c * b.c) AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS cos_ab
         |FROM cl a JOIN cl b ON a.pos = b.pos AND a.label < b.label
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      // Components quantize to 1e8 ints, centroids to rounded integer
-      // means (the q_sim_18 discipline) — the pairwise dot/norm sums
-      // are exact BIGINTs, one division per pair. |labels|² pairs over
-      // |labels|·dim centroid rows: broadcast-sized at any corpus
-      // scale (the corpus itself is touched ONCE for the sums).
-      val e = Tables(s, d, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .select(col("label"), col("pos"),
-          floor(col("v").cast("double") * 100000000L + 0.5).cast("long").as("vi"))
-      val cl = e.groupBy("label", "pos")
-        .agg(floor(sum("vi").cast("double") / count(lit(1)) + 0.5).cast("long").as("c"))
-        .localCheckpoint()
-      val a = cl.select(col("label").as("la"), col("pos"), col("c").as("ca"))
-      val b = cl.select(col("label").as("lb"), col("pos"), col("c").as("cb"))
-      a.join(b, Seq("pos")).filter(col("la") < col("lb"))
-        .groupBy(col("la").cast("long").as("label_a"), col("lb").cast("long").as("label_b"))
-        .agg(sum(col("ca") * col("cb")).as("dot"),
-          sum(col("ca") * col("ca")).as("qa"),
-          sum(col("cb") * col("cb")).as("qb"))
-        .select(col("label_a"), col("label_b"),
-          (floor(col("dot").cast("double")
-            / (sqrt(col("qa").cast("double")) * sqrt(col("qb").cast("double")))
-            * 1000000 + 0.5) / 1000000).as("cos_ab"))
+      graft.api.Pipelines.centroidMatrix(Tables(s, d, "embeddings")
+          .select(col("label").cast("long").as("label"), col("embedding")), "label", "embedding")
         .orderBy("label_a", "label_b")
     }
   )

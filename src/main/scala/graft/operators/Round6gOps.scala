@@ -3,7 +3,6 @@ package graft.operators
 import graft.Q
 import graft.sources.Tables
 import graft.expressions.VectorExpressions
-import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.Duck
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,28 +43,15 @@ object Round6gOps {
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       // Brute-force pair space on a CONSTANT-bounded eval slice (every
       // 4th vector, capped at vec_id < 2000 → ≤500 sampled vectors at
-      // any SF — the q_sim_21 eval-set pattern; the old uncapped % 4
-      // slice grew with the corpus, making the all-pairs join
-      // quadratic, the r10 lint's xjoin class). Ranking is a per-src
-      // window over the bit-exact cosine fold. At 100 TB the directed
+      // any SF — the q_sim_21 eval-set pattern). At 100 TB the directed
       // kNN graph comes from the LSH/IVF candidate generation
-      // (q_sim_4/6/8) and this becomes an O(E) in-degree aggregate —
-      // the histogram itself never materializes the quadratic space.
-      VectorExpressions.register(s)
+      // (q_sim_4/6/8) and this becomes an O(E) in-degree aggregate.
       val v = Tables(s, d, "embeddings")
         .filter(col("vec_id") % 4 === 0 && col("vec_id") < 2000)
         .select(col("vec_id"), col("embedding"))
-      val pairs = v.as("a").join(broadcast(v.as("b")),
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-          expr("cosine_similarity(a.embedding, b.embedding)").as("cos"))
-      val rk = row_number().over(
-        Window.partitionBy("src").orderBy(col("cos").desc, col("dst")))
-      val ind = pairs.withColumn("rk", rk).filter(col("rk") <= 5)
-        .groupBy(col("dst").as("vec_id")).agg(count(lit(1)).as("indeg"))
-      v.select("vec_id").join(ind, Seq("vec_id"), "left")
-        .select(coalesce(col("indeg"), lit(0L)).as("indeg"))
-        .groupBy("indeg").agg(count(lit(1)).as("n_vectors"))
+      graft.api.Pipelines.hubnessHistogram(v, "vec_id",
+          graft.api.Pipelines.knnGraph(v, "vec_id", "embedding", 5), "dst")
+        .withColumnRenamed("n_nodes", "n_vectors")
         .orderBy("indeg")
     },
 
@@ -219,36 +205,10 @@ object Round6gOps {
          |  / 1000000 AS mean_cos
          |FROM (SELECT * FROM lab UNION ALL SELECT * FROM glr)
          |ORDER BY label""".stripMargin) { (s, d) =>
-      // Unit components quantize to 1e-3 integers per row (§2.12: no
-      // float accumulation across rows); all sums are then exact BIGINT
-      // (|S_d| ≤ n·1000 → S_d² ≤ 4e12·(n/2000)², 64 dims ≈ 2.6e14 at
-      // the fixture — far inside long). Shuffle is keyed (label, d):
-      // 64·|labels| groups regardless of corpus size.
-      val e = Tables(s, d, "embeddings")
-      val u = e.withColumn("nrm", VectorFunctions.l2norm(col("embedding")))
-        .filter(col("nrm") > 0)
-      val ex = u.select(col("label"), col("nrm"), posexplode(col("embedding")).as(Seq("d", "x")))
-        .select(col("label"), col("d"),
-          floor(col("x").cast("double") / col("nrm") * 1000 + 0.5).cast("long").as("uq"))
-      val grp = ex.groupBy("label", "d")
-        .agg(sum("uq").as("sd"), sum(col("uq") * col("uq")).as("ssq"),
-          count(lit(1)).as("n"))
-        .localCheckpoint()
-      val lab = grp.groupBy("label")
-        .agg(sum(col("sd") * col("sd")).as("num"), sum("ssq").as("selfsum"),
-          max("n").as("n"))
-      val gl = grp.groupBy("d")
-        .agg(sum("sd").as("sd"), sum("ssq").as("ssq"))
-      val nAll = u.agg(count(lit(1)).as("n"))
-      val glr = gl.agg(sum(col("sd") * col("sd")).as("num"), sum("ssq").as("selfsum"))
-        .crossJoin(nAll)
-        .select(lit(-1).as("label"), col("num"), col("selfsum"), col("n"))
-      lab.select(col("label"), col("num"), col("selfsum"), col("n")).union(glr)
-        .select(col("label"), col("n"),
-          (floor(
-            (col("num") - col("selfsum")).cast("double")
-              / (lit(1000000.0) * col("n") * (col("n") - 1)) * 1000000 + 0.5) / 1000000)
-            .as("mean_cos"))
+      // |S_d| ≤ n·1000 → S_d² ≤ 4e12·(n/2000)², 64 dims ≈ 2.6e14 at the
+      // fixture — far inside long. Shuffle is keyed (label, d): 64·|labels|
+      // groups regardless of corpus size.
+      graft.api.Pipelines.anisotropy(Tables(s, d, "embeddings"), "label", "embedding")
         .orderBy("label")
     }
   )

@@ -54,22 +54,7 @@ object Round6hOps {
          | community, sz AS size
          |FROM (SELECT lab AS community, CAST(count(*) AS BIGINT) AS sz FROM r3 GROUP BY 1)
          |ORDER BY rank LIMIT 20""".stripMargin) { (s, d) =>
-      // Each round is one (edges ⋈ labels) shuffle + a per-node window —
-      // the Pregel superstep as declarative joins. Labels checkpoint per
-      // round (lineage stays O(1)); the label table is node-sized, so at
-      // 1000 executors the join broadcasts while the edge list never
-      // moves. Synchronous + deterministic tie-break ⇒ the fixpoint
-      // trajectory is reproducible across any partitioning.
-      val b = sampledBidir(s, d)
-      var labels = b.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")).localCheckpoint()
-      for (_ <- 1 to 3) {
-        val cnt = b.join(labels.withColumnRenamed("node", "nbr"), col("dst") === col("nbr"))
-          .groupBy(col("src").as("node"), col("lab")).agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy("node").orderBy(col("c").desc, col("lab"))
-        labels = cnt.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-          .select("node", "lab").localCheckpoint()
-      }
+      val labels = graft.api.Pipelines.labelPropagation(sampledBidir(s, d), "src", "dst", 3)
       val sizes = labels.groupBy(col("lab").as("community"))
         .agg(count(lit(1)).as("size"))
       // TakeOrdered top-20, then the rank window over just 20 rows
@@ -99,35 +84,13 @@ object Round6hOps {
          |SELECT CAST(row_number() OVER (ORDER BY score6 DESC, a, bb) AS BIGINT) AS rank,
          | a, bb AS b, n_common, CAST(score6 AS DOUBLE) / 1000000 AS score
          |FROM cand ORDER BY rank LIMIT 20""".stripMargin) { (s, d) =>
-      // Candidate pairs come from the wedge join (per shared neighbor —
-      // O(Σ deg²), the triangle-counting shape, never all-pairs); the
-      // 1/ln(deg) weight quantizes to a 1e-6 integer PER NEIGHBOR so the
-      // per-pair sum is exact whatever the shuffle order. deg(z) ≥ 2 for
-      // every common neighbor (z touches both a and b), but the weight
-      // table computes eagerly for ALL nodes — the dg >= 2 guard keeps
-      // ln(1) = 0 out of the divisor (ANSI mode would throw before the
-      // join ever filtered it). Adjacent pairs drop via an anti join.
-      val b = sampledBidir(s, d)
-      val w = b.groupBy(col("src").as("node")).agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= 2)
-        .select(col("node"),
-          floor(lit(1000000) / log(col("dg").cast("double")) + 0.5).cast("long").as("wz"))
-      val cand = b.as("x").join(b.as("y"),
-          col("x.dst") === col("y.dst") && col("x.src") < col("y.src"))
-        .select(col("x.src").as("a"), col("y.src").as("bb"), col("x.dst").as("z"))
-        .join(b.select(col("src").as("ea"), col("dst").as("eb")),
-          col("a") === col("ea") && col("bb") === col("eb"), "left_anti")
-        // w is node-scaled — no broadcast hint (forced broadcast fails
-        // at 10⁸⁺ nodes; AQE picks broadcast vs shuffle from its size)
-        .join(w, col("z") === col("node"))
-        .groupBy("a", "bb")
-        .agg(count(lit(1)).as("n_common"), sum("wz").as("score6"))
+      val cand = graft.api.Pipelines.adamicAdar(sampledBidir(s, d), "src", "dst")
       // TakeOrdered top-20 over the candidate-pair table (which scales
       // with wedge count), then the rank window over just 20 rows
-      cand.orderBy(col("score6").desc, col("a"), col("bb")).limit(20)
+      cand.orderBy(col("score6").desc, col("a"), col("b")).limit(20)
         .withColumn("rank",
-          row_number().over(Window.orderBy(col("score6").desc, col("a"), col("bb"))).cast("long"))
-        .select(col("rank"), col("a"), col("bb").as("b"), col("n_common"),
+          row_number().over(Window.orderBy(col("score6").desc, col("a"), col("b"))).cast("long"))
+        .select(col("rank"), col("a"), col("b"), col("n_common"),
           (col("score6").cast("double") / 1000000).as("score"))
         .orderBy("rank")
     },
@@ -154,37 +117,14 @@ object Round6hOps {
          |FROM degsum ds LEFT JOIN within w ON ds.c = w.c
          | JOIN nation n ON ds.c = n.n_nationkey CROSS JOIN m2t
          |ORDER BY community""".stripMargin) { (s, d) =>
-      // Exact BIGINT end-to-end: dir_within and deg_sum are counts, the
-      // numerator m2·dir_c − d_c² stays under 2⁶³ for any graph whose
-      // directed edge count fits an int (m2² ≤ 8e18 at m2 ≈ 2.8e9 —
-      // far above any sampled fixture), and the single int/int double
-      // division is correctly rounded on both engines. Shuffles are
-      // keyed by community — |nations| groups regardless of edges.
-      val b = sampledBidir(s, d)
       val com = Tables(s, d, "supplier")
         .select(col("s_suppkey").as("node"), col("s_nationkey").as("c"))
-      val m2 = b.agg(count(lit(1)).as("m2"))
-      // com is one row per node — never force-broadcast a node-scaled
-      // table (hard failure at 10⁸⁺ nodes); AQE sizes these joins.
-      val within = b
-        .join(com.select(col("node").as("na"), col("c").as("ca")), col("src") === col("na"))
-        .join(com.select(col("node").as("nb"), col("c").as("cb")), col("dst") === col("nb"))
-        .filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("c")).agg(count(lit(1)).as("dir_within"))
-      val degsum = b.join(com, col("src") === col("node"))
-        .groupBy("c").agg(count(lit(1)).as("deg_sum"))
       val nation = Tables(s, d, "nation")
         .select(col("n_nationkey"), col("n_name"))
-      degsum.join(within, Seq("c"), "left")
-        .join(broadcast(nation), col("c") === col("n_nationkey"))
-        .crossJoin(broadcast(m2))
-        .select(col("c").as("community"), col("n_name"),
-          coalesce(col("dir_within"), lit(0L)).as("dir_within"), col("deg_sum"),
-          (floor(
-            (col("m2") * coalesce(col("dir_within"), lit(0L))
-              - col("deg_sum") * col("deg_sum")).cast("double")
-              / (col("m2") * col("m2")).cast("double") * 1000000000 + 0.5) / 1000000000)
-            .as("contribution"))
+      graft.api.Pipelines.modularity(sampledBidir(s, d), "src", "dst", com)
+        .join(broadcast(nation), col("community") === col("n_nationkey"))
+        .select(col("community"), col("n_name"), col("dir_within"), col("deg_sum"),
+          col("contribution"))
         .orderBy("community")
     }
   )

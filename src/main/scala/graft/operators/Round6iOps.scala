@@ -90,27 +90,9 @@ object Round6iOps {
         |FROM keyed k LEFT JOIN tr ON k.set_key = tr.set_key
         |WHERE k.split = 'test'
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      // Membership is computable from the id alone (no lookup table);
-      // the leak test is test ⋉ train on the near-dup key — at 100 TB
-      // that's a key-partitioned semi join where only 8-byte digests
-      // shuffle, never text.
-      val bucket = (pmod(col("doc_id"), lit(1000000007L)) * 2654435761L) % 1000000007L % 100
-      val keyed = Tables(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          md5(concat_ws(" ", sort_array(array_distinct(split(col("text"), " ")))))
-            .as("set_key"),
-          when(bucket < 90, "train").otherwise("test").as("split"))
-        .localCheckpoint()
-      val tr = keyed.filter(col("split") === "train").select("set_key").distinct()
-        .withColumnRenamed("set_key", "tr_key")
-      keyed.filter(col("split") === "test")
-        .join(tr, col("set_key") === col("tr_key"), "left")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_test"),
-          sum(when(col("tr_key").isNotNull, 1).otherwise(0)).cast("long").as("n_leaked"))
-        .select(col("lang"), col("n_test"), col("n_leaked"),
-          (floor(col("n_leaked").cast("double") / col("n_test") * 1000000 + 0.5) / 1000000)
-            .as("leak_share"))
+      // The near-dup key is the distinct-token SET digest (q_dedup_2).
+      graft.api.Pipelines.splitLeakage(Tables(s, d, "documents"), "doc_id",
+          md5(concat_ws(" ", sort_array(array_distinct(split(col("text"), " "))))), "lang")
         .orderBy("lang")
     },
 
@@ -133,30 +115,9 @@ object Round6iOps {
         | floor(CAST(sum(crossed) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS split_share,
         | CAST(((max(c) + ctx - 1) // ctx) * ctx - max(c) AS BIGINT) AS tail_pad
         |FROM x GROUP BY ctx ORDER BY ctx""".stripMargin) { (s, d) =>
-      // One cumulative token sum feeds all three context sizes (the
-      // 3-row VALUES join is a broadcast); a doc is split iff its first
-      // and last token land in different blocks — pure integer floor
-      // division off the cumsum, no per-token explosion. The running
-      // sum is Pipelines.prefixSum: contiguous doc_id ranges per
-      // partition + per-partition integer offsets — bit-identical to
-      // the global window, with no one-task stage.
       val toks = Tables(s, d, "documents")
         .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("tok"))
-      val cum = graft.api.Pipelines.prefixSum(toks, Seq("doc_id"), "tok", "c")
-      import s.implicits._
-      val ctxs = Seq(128L, 256L, 512L).toDF("ctx")
-      val x = cum.crossJoin(broadcast(ctxs))
-        .select(col("ctx"), col("tok"), col("c"),
-          when(expr("(c - 1) div ctx") > expr("(c - tok) div ctx"), 1).otherwise(0).as("crossed"))
-      x.groupBy("ctx")
-        .agg(max("c").as("total"), sum("crossed").cast("long").as("n_docs_split"),
-          count(lit(1)).as("n_docs"))
-        .select(col("ctx"),
-          expr("(total + ctx - 1) div ctx").as("n_seqs"),
-          col("n_docs_split"),
-          (floor(col("n_docs_split").cast("double") / col("n_docs") * 1000000 + 0.5) / 1000000)
-            .as("split_share"),
-          (expr("(total + ctx - 1) div ctx") * col("ctx") - col("total")).as("tail_pad"))
+      graft.api.Pipelines.ctxBoundarySweep(toks, "doc_id", "tok", Seq(128L, 256L, 512L))
         .orderBy("ctx")
     }
   )

@@ -33,21 +33,9 @@ object Round6jOps {
         | CAST(sum(CASE WHEN tok > cap THEN 1 ELSE 0 END) AS BIGINT) AS docs_truncated,
         | floor(CAST(sum(lost) AS DOUBLE) / sum(tok) * 1000000 + 0.5) / 1000000 AS loss_share
         |FROM x GROUP BY cap ORDER BY cap""".stripMargin) { (s, d) =>
-      // Map-only token count + a 3-row broadcast of caps; one aggregate.
-      // No data moves beyond the partial-agg combiners at any scale.
-      import s.implicits._
       val toks = Tables(s, d, "documents")
         .select(size(split(col("text"), " ")).cast("long").as("tok"))
-      val caps = Seq(16L, 32L, 64L).toDF("cap")
-      toks.crossJoin(broadcast(caps))
-        .select(col("cap"), col("tok"),
-          when(col("tok") > col("cap"), col("tok") - col("cap")).otherwise(0L).as("lost"))
-        .groupBy("cap")
-        .agg(sum("tok").as("total_tokens"), sum("lost").as("tokens_lost"),
-          sum(when(col("tok") > col("cap"), 1).otherwise(0)).cast("long").as("docs_truncated"))
-        .select(col("cap"), col("total_tokens"), col("tokens_lost"), col("docs_truncated"),
-          (floor(col("tokens_lost").cast("double") / col("total_tokens") * 1000000 + 0.5) / 1000000)
-            .as("loss_share"))
+      graft.api.Pipelines.truncationLoss(toks, "tok", Seq(16L, 32L, 64L))
         .orderBy("cap")
     },
 

@@ -43,15 +43,8 @@ object Round7Ops {
         | floor(CAST(sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS DOUBLE)
         |   / sum(n) * 1000000 + 0.5) / 1000000 AS risk_share
         |FROM g""".stripMargin) { (s, d) =>
-      // One |nations|x|segments|-bounded groupBy (map-side combine does
-      // almost all the work), then a 1-row fold — no scale hazard.
-      Tables(s, d, "customer")
-        .groupBy("c_nationkey", "c_mktsegment").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("n_groups"), min("n").as("k_anonymity"),
-          max("n").as("max_group"), sum("n").as("n_customers"),
-          sum(when(col("n") < 5, col("n")).otherwise(0L)).as("n_at_risk"),
-          Num.round(sum(when(col("n") < 5, col("n")).otherwise(0L)).cast("double")
-            / sum("n"), 6).as("risk_share"))
+      graft.api.Pipelines.kAnonymity(Tables(s, d, "customer"), Seq("c_nationkey", "c_mktsegment"))
+        .withColumnRenamed("n_rows", "n_customers")
     },
 
     // l-diversity of the same QI groups against the sensitive
@@ -69,17 +62,11 @@ object Round7Ops {
         | CAST(sum(CASE WHEN l < 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_low_div_groups,
         | CAST(sum(CASE WHEN l < 3 THEN n ELSE 0 END) AS BIGINT) AS n_exposed
         |FROM g""".stripMargin) { (s, d) =>
-      // count + countDistinct in one grouped pass; the sensitive-value
-      // band uses floor(x/1000) on the raw double (NOT integer div —
-      // acctbal goes negative and the engines' div semantics differ).
-      Tables(s, d, "customer")
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("n"),
-          countDistinct(floor(col("c_acctbal") / 1000).cast("long")).as("l"))
-        .agg(count(lit(1)).as("n_groups"), min("l").as("min_l"),
-          Num.round(sum("l").cast("double") / count(lit(1)), 6).as("mean_l"),
-          sum(when(col("l") < 3, 1L).otherwise(0L)).as("n_low_div_groups"),
-          sum(when(col("l") < 3, col("n")).otherwise(0L)).as("n_exposed"))
+      // The sensitive-value band uses floor(x/1000) on the raw double
+      // (NOT integer div — acctbal goes negative and the engines' div
+      // semantics differ).
+      graft.api.Pipelines.lDiversity(Tables(s, d, "customer"), Seq("c_nationkey", "c_mktsegment"),
+        floor(col("c_acctbal") / 1000).cast("long"))
     },
 
     // Generalization ladder: k-anonymity re-measured at three QI

@@ -69,22 +69,7 @@ object Round7bOps {
         | floor(CAST(sum(n5 - nd) AS DOUBLE)
         |   / greatest(sum(n5), 1) * 1000000 + 0.5) / 1000000 AS dup_share
         |FROM p GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      // Shingle set via the guarded slice transform (TextFunctions
-      // discipline); everything after the per-row sizes is a
-      // |sources|-row aggregate. At 100 TB this stays one scan with
-      // zero joins — the cheapest repetition signal there is.
-      val tk = split(col("text"), " ")
-      val n5 = greatest(size(tk) - 4, lit(0)).cast("long")
-      val nd = size(when(size(tk) < 5, array().cast("array<string>"))
-        .otherwise(array_distinct(transform(sequence(lit(1), size(tk) - 4),
-          i => concat_ws(" ", slice(tk, i, lit(5))))))).cast("long")
-      Tables(s, d, "documents")
-        .select(col("source"), n5.as("n5"), nd.as("nd"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n5").as("n_5grams"),
-          sum(col("n5") - col("nd")).as("n_dup_5grams"),
-          Num.round(sum(col("n5") - col("nd")).cast("double")
-            / greatest(sum("n5"), lit(1L)), 6).as("dup_share"))
+      graft.api.Pipelines.dupNgramShare(Tables(s, d, "documents"), "source", "text", 5)
         .orderBy("source")
     },
 
@@ -157,31 +142,7 @@ object Round7bOps {
         | floor(CAST(sum(CASE WHEN r_short + r_wordlen + r_digit + r_repeat = 0 THEN 1 ELSE 0 END) AS DOUBLE)
         |   / count(*) * 1000000 + 0.5) / 1000000 AS clean_share
         |FROM f GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      // Mean word length never divides: sum of token lengths is
-      // nc - (nt - 1) (single-space joined), so "mean in [3,10]" is the
-      // cross-multiplied integer band test. All four rules are integer
-      // comparisons — zero float in the flags.
-      val tk = split(col("text"), " ")
-      val m = Tables(s, d, "documents").select(col("source"),
-        size(tk).cast("long").as("nt"),
-        size(array_distinct(tk)).cast("long").as("nu"),
-        length(col("text")).cast("long").as("nc"),
-        (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-          .cast("long").as("dg"))
-      val f = m.select(col("source"),
-        when(col("nt") < 15, 1L).otherwise(0L).as("r_short"),
-        when(col("nc") - col("nt") + 1 < col("nt") * 3
-          || col("nc") - col("nt") + 1 > col("nt") * 10, 1L).otherwise(0L).as("r_wordlen"),
-        when(col("dg") * 5 > col("nc"), 1L).otherwise(0L).as("r_digit"),
-        when(col("nu") * 5 < col("nt") * 2, 1L).otherwise(0L).as("r_repeat"))
-      val fails = col("r_short") + col("r_wordlen") + col("r_digit") + col("r_repeat")
-      f.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("r_short").as("n_short"), sum("r_wordlen").as("n_wordlen"),
-          sum("r_digit").as("n_digit"), sum("r_repeat").as("n_repeat"),
-          sum(when(fails >= 2, 1L).otherwise(0L)).as("n_multi_fail"),
-          Num.round(sum(when(fails === 0, 1L).otherwise(0L)).cast("double")
-            / count(lit(1)), 6).as("clean_share"))
+      graft.api.Pipelines.qualityRuleMatrix(Tables(s, d, "documents"), "source", "text")
         .orderBy("source")
     },
 

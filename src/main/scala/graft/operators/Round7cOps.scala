@@ -154,24 +154,11 @@ object Round7cOps {
         |  / (1 - (CAST(n11 + n10 AS DOUBLE) * (n11 + n01) + CAST(n01 + n00 AS DOUBLE) * (n10 + n00)) / n / n))
         |  * 1000000 + 0.5) / 1000000 AS kappa
         |FROM m""".stripMargin) { (s, d) =>
-      // One scan to the 2x2 table (four exact counts); kappa is a fixed
-      // IEEE expression of those BIGINTs — nothing to drift.
       val tk = split(col("text"), " ")
       val f = Tables(s, d, "documents").select(
         when(size(tk) < 40, 1L).otherwise(0L).as("a"),
         when(size(array_distinct(tk)) < 22, 1L).otherwise(0L).as("b"))
-      val m = f.agg(count(lit(1)).as("n"),
-        sum(when(col("a") === 1 && col("b") === 1, 1L).otherwise(0L)).as("n11"),
-        sum(when(col("a") === 1 && col("b") === 0, 1L).otherwise(0L)).as("n10"),
-        sum(when(col("a") === 0 && col("b") === 1, 1L).otherwise(0L)).as("n01"),
-        sum(when(col("a") === 0 && col("b") === 0, 1L).otherwise(0L)).as("n00"))
-      def D(c: org.apache.spark.sql.Column) = c.cast("double")
-      val pe = (D(col("n11") + col("n10")) * (col("n11") + col("n01"))
-        + D(col("n01") + col("n00")) * (col("n10") + col("n00"))) / col("n") / col("n")
-      val po = D(col("n11") + col("n00")) / col("n")
-      m.select(col("n"), col("n11"), col("n10"), col("n01"), col("n00"),
-        Num.round(po, 6).as("p_observed"),
-        Num.round((po - pe) / (lit(1) - pe), 6).as("kappa"))
+      graft.api.Pipelines.cohenKappa(f, "a", "b")
     },
 
     // Hash-permutation test for the urgent-vs-other mean order value:

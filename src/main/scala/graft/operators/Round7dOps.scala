@@ -42,29 +42,9 @@ object Round7dOps {
          | CAST(sum(ln6) AS BIGINT) AS sum_ln_mu6,
          | floor(CAST(count(*) AS DOUBLE) * 1000000 / sum(ln6) * 10000 + 0.5) / 10000 AS dim_est
          |FROM lm""".stripMargin) { (s, d) =>
-      // 200-point sample → 40k pairs, one ranking window. Per-point
-      // ln μ quantizes 1e-6 BEFORE the global sum (order-independent);
-      // at corpus scale the 2-NN search runs through the IVF/LSH
-      // candidate path (q_sim_4/6) instead of the all-pairs join.
-      val e = Tables(s, d, "embeddings").filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      val a = e.select(col("vec_id").as("i"), col("embedding").as("ea"))
-      val b = e.select(col("vec_id").as("j"), col("embedding").as("eb"))
-      val w = Window.partitionBy("i").orderBy(col("d2"), col("j"))
-      a.join(broadcast(b), col("i") =!= col("j"))
-        .select(col("i"), col("j"), VF.sqDist(col("ea"), col("eb")).as("d2"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .groupBy("i")
-        .agg(max(when(col("rn") === 1, col("d2"))).as("d1sq"),
-          max(when(col("rn") === 2, col("d2"))).as("d2sq"))
-        .filter(col("d1sq") > 0)
-        .select(floor(log(col("d2sq") / col("d1sq")) * 0.5 * 1000000 + 0.5)
-          .cast("long").as("ln6"))
-        .agg(count(lit(1)).as("n_points"), sum("ln6").as("sum_ln_mu6"))
-        .select(col("n_points"), col("sum_ln_mu6"),
-          Num.round(col("n_points").cast("double") * 1000000 / col("sum_ln_mu6"), 4)
-            .as("dim_est"))
+      // 200-point sample → 40k pairs.
+      graft.api.Pipelines.twoNNDimension(
+        Tables(s, d, "embeddings").filter(col("vec_id") < 200), "vec_id", "embedding")
     },
 
     // Quantization bit-width sweep: RMSE and worst-case error of
@@ -90,32 +70,7 @@ object Round7dOps {
         | floor(sqrt(CAST(sum(row_sq9) AS DOUBLE) / 1000000000 / sum(dim)) * 1000000 + 0.5) / 1000000 AS rmse,
         | floor(CAST(max(row_max6) AS DOUBLE) / 1000000 * 1000000 + 0.5) / 1000000 AS max_abs_err
         |FROM pr GROUP BY bits ORDER BY bits""".stripMargin) { (s, d) =>
-      // Dequantized error is floor-based round — IEEE-identical on both
-      // engines; each ROW's squared-error fold quantizes to a 1e-9
-      // BIGINT before the cross-row sum (fixed order within the row,
-      // exact ints across rows). 3 widths ride one scan via a 3-row
-      // broadcast fan-out.
-      val bitsArr = array(Seq(2L, 4L, 8L).map(lit): _*)
-      val e = Tables(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          explode(bitsArr).as("bits"))
-        .withColumn("s", (pow(lit(2.0), col("bits") - 1) - 1).cast("double"))
-      def err(x: org.apache.spark.sql.Column, sc: org.apache.spark.sql.Column) = {
-        val xd = x.cast("double")
-        xd - floor(xd * sc + 0.5) / sc
-      }
-      e.select(col("bits"),
-          floor(aggregate(transform(col("embedding"), x => {
-            val ev = err(x, col("s")); ev * ev
-          }), lit(0.0), (acc, v) => acc + v) * 1000000000L + 0.5)
-            .cast("long").as("row_sq9"),
-          floor(array_max(transform(col("embedding"), x => abs(err(x, col("s")))))
-            * 1000000 + 0.5).cast("long").as("row_max6"),
-          size(col("embedding")).cast("long").as("dim"))
-        .groupBy("bits")
-        .agg(sum("dim").as("n_values"),
-          Num.round(sqrt(sum("row_sq9").cast("double") / 1e9 / sum("dim")), 6).as("rmse"),
-          Num.round(max("row_max6").cast("double") / 1000000, 6).as("max_abs_err"))
+      graft.api.Pipelines.bitwidthSweep(Tables(s, d, "embeddings"), "embedding")
         .orderBy("bits")
     },
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Q
-import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -59,35 +58,9 @@ object Round7eOps {
          | floor((CAST(eh.e2 AS DOUBLE) / (nh.nh * (nh.nh - 1)))
          |   / (CAST(ea.e2 AS DOUBLE) / (n.n * (n.n - 1))) * 10000 + 0.5) / 10000 AS rich_club_ratio
          |FROM n, nh, eh, ea""".stripMargin) { (s, d) =>
-      // Degree table once, hub set as a broadcast semi-join on BOTH
-      // endpoints; densities divide exact directed-edge counts. The
-      // hub pick is the range-partitioned exactGlobalRankBy — the
-      // degree table is entity-scaled, so a global rank window would
-      // plan Exchange SinglePartition over it (the r10-verdict shape).
       // r14: the session-cached bidirected mod-20 list (identical
       // derivation, materialized once per session)
-      val b = graft.sources.SampledEdges.bidir(s, d, 20)
-      val deg = b.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val n = deg.count()
-      val nHubs = math.max(n / 10, 2L)
-      val hubs = graft.api.Pipelines.exactGlobalRankBy(
-          deg, Seq(col("deg").desc, col("node")), "rn")
-        .filter(col("rn") <= nHubs).select("node").localCheckpoint()
-      val e2 = b.count()
-      val eh2 = b.join(broadcast(hubs), b("src") === hubs("node"), "left_semi")
-        .join(broadcast(hubs.withColumnRenamed("node", "node2")),
-          col("dst") === col("node2"), "left_semi")
-        .count()
-      val hubDen = eh2.toDouble / (nHubs * (nHubs - 1))
-      val den = e2.toDouble / (n * (n - 1))
-      import s.implicits._
-      Seq((n, nHubs, e2 / 2, eh2 / 2,
-        math.floor(hubDen * 1000000 + 0.5) / 1000000,
-        math.floor(den * 1000000 + 0.5) / 1000000,
-        math.floor(hubDen / den * 10000 + 0.5) / 10000))
-        .toDF("n_nodes", "n_hubs", "n_edges", "n_hub_edges",
-          "hub_density", "density", "rich_club_ratio")
+      graft.api.Pipelines.richClub(graft.sources.SampledEdges.bidir(s, d, 20), "src", "dst")
     },
 
     // Hub-knockout robustness: component structure before and after
@@ -196,25 +169,11 @@ object Round7eOps {
          | floor((2.0 * sid - CAST(n + 1 AS DOUBLE) * sd)
          |   / (CAST(n AS DOUBLE) * sd) * 1000000 + 0.5) / 1000000 AS gini
          |FROM m""".stripMargin) { (s, d) =>
-      // Gini from the exact rank-weighted sum (no sorting of floats):
-      // G = (2·Σi·dᵢ − (n+1)·Σd) / (n·Σd) over degrees ranked
-      // ascending with node tie-break. The degree table is node-scaled,
-      // so the rank is the range-partitioned exactGlobalRankBy, not a
-      // single-partition window; then one fold.
       // r14: distinct handoff edges from the session-scoped cache
       // (mod 1 — the identical derivation, materialized once)
       val e = graft.sources.SampledEdges.handoff(s, d, 1)
-      val b = e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      val deg = b.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val r = graft.api.Pipelines.exactGlobalRankBy(
-        deg.select(col("deg"), col("node")),
-        Seq(col("deg"), col("node")), "i")
-      r.agg(count(lit(1)).as("n"), sum("deg").as("sd"),
-          sum(col("i") * col("deg")).as("sid"), max("deg").as("maxd"))
-        .select(col("n").as("n_nodes"), col("sd").as("total_degree"),
-          col("maxd").as("max_degree"),
-          Num.round((col("sid").cast("double") * 2 - (col("n") + 1).cast("double") * col("sd"))
-            / (col("n").cast("double") * col("sd")), 6).as("gini"))
+      graft.api.Pipelines.degreeGini(
+        e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(), "src")
     }
   )
 }

@@ -73,20 +73,11 @@ object Round7fOps {
         | floor((CAST(m AS DOUBLE) * scc - CAST(sc AS DOUBLE) * sc)
         |   / (CAST(m AS DOUBLE) * sc) * 1000000 + 0.5) / 1000000 AS fano
         |FROM m ORDER BY event_type""".stripMargin) { (s, d) =>
-      // fano = var_pop/mean = (m·Σc² − (Σc)²)/(m·Σc): three exact sums
-      // per type, one double division at emission. Hours with zero
-      // events are excluded on both engines (declared semantics).
-      Tables(s, d, "events")
-        .groupBy(col("event_type"),
+      // Hourly buckets; hours with zero events are excluded on both
+      // engines (declared semantics).
+      graft.api.Pipelines.fanoFactor(Tables(s, d, "events"), "event_type",
           expr("unix_micros(ts) div 3600000000").as("hour_id"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("m"), sum("c").as("sc"),
-          sum(col("c") * col("c")).as("scc"))
-        .select(col("event_type"), col("m").as("n_hours"), col("sc").as("n_events"),
-          Num.round((col("m").cast("double") * col("scc")
-            - col("sc").cast("double") * col("sc"))
-            / (col("m").cast("double") * col("sc")), 6).as("fano"))
+        .withColumnRenamed("n_buckets", "n_hours")
         .orderBy("event_type")
     },
 
@@ -145,21 +136,11 @@ object Round7fOps {
         | floor((CAST(a.cents AS DOUBLE) - b.cents) / b.cents * 1000000 + 0.5) / 1000000 AS yoy_growth
         |FROM m a JOIN m b ON a.ym = b.ym + 100
         |ORDER BY a.ym""".stripMargin) { (s, d) =>
-      // |months|-bounded aggregate, then a self-join on ym−100 — the
-      // calendar equi-join Catalyst plans as a tiny hash join; no
-      // window gap-sensitivity.
       val m = Tables(s, d, "orders")
         .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
           .cast("long").as("ym"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("cents"))
-        .localCheckpoint()
-      val b = m.select((col("ym") + 100).as("ym2"), col("cents").as("pcents"))
-      m.join(b, col("ym") === col("ym2"))
-        .select(col("ym"),
-          Num.round(col("cents").cast("double") / 100, 2).as("revenue"),
-          Num.round(col("pcents").cast("double") / 100, 2).as("prev_revenue"),
-          Num.round((col("cents").cast("double") - col("pcents")) / col("pcents"), 6)
-            .as("yoy_growth"))
+      graft.api.Pipelines.yoyGrowth(m, "ym", "cents")
         .orderBy("ym")
     },
 
@@ -183,25 +164,13 @@ object Round7fOps {
         |   * 10000 + 0.5) / 10000 AS ulcer_pct,
         | floor(CAST(max(d8) AS DOUBLE) / 100000000 * 100 * 10000 + 0.5) / 10000 AS max_dd_pct
         |FROM dd GROUP BY 1 ORDER BY y""".stripMargin) { (s, d) =>
-      // Daily cents → per-year running peak (one ordered window inside
-      // the year partition) → integer-quantized relative depths whose
-      // squared sums stay inside BIGINT (d8 ≤ 1e8, d8² ≤ 1e16, ≤366
-      // days/year) — the cross-row RMS is order-independent.
+      // Daily cents, per-year running peak.
       val dly = Tables(s, d, "orders")
-        .groupBy(year(col("o_orderdate")).as("y"),
+        .groupBy(year(col("o_orderdate")).cast("long").as("y"),
           datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("day"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("cents"))
-      val w = Window.partitionBy("y").orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      dly.withColumn("peak", max("cents").over(w))
-        .select(col("y"),
-          floor((col("peak") - col("cents")).cast("double") / col("peak")
-            * 100000000L + 0.5).cast("long").as("d8"))
-        .groupBy(col("y").cast("long").as("y"))
-        .agg(count(lit(1)).as("n_days"),
-          Num.round(sqrt(sum(col("d8") * col("d8")).cast("double")
-            / 1e16 / count(lit(1))) * 100, 4).as("ulcer_pct"),
-          Num.round(max("d8").cast("double") / 1e8 * 100, 4).as("max_dd_pct"))
+      graft.api.Pipelines.ulcerIndex(dly, "y", "day", "cents")
+        .withColumnRenamed("n_rows", "n_days")
         .orderBy("y")
     },
 

@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Round7gOps {
 
-  private val P = 1000000007L
-
   /** Typed Aggregator with an EXACT integer buffer (n, Σv, Σv²): the
     * merge is BIGINT addition — associative, commutative, and
     * overflow-safe for whole-dollar order values — so the result is
@@ -59,19 +57,7 @@ object Round7gOps {
         | floor((CAST(max(toks) AS DOUBLE) - min(toks))
         |   / (CAST(sum(toks) AS DOUBLE) / count(*)) * 1000000 + 0.5) / 1000000 AS imbalance
         |FROM g""".stripMargin) { (s, d) =>
-      // The hash IS the shard assignment a real pipeline would ship
-      // (reproducible years later, unlike engine RNG); one scan to a
-      // 16-row table, then a 1-row fold.
-      Tables(s, d, "documents")
-        .select((((col("doc_id") % P) * 2654435761L % P) % 16).as("shard"),
-          expr("n_chars div 5").as("toks"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum("toks").as("toks"))
-        .agg(count(lit(1)).as("n_shards"), sum("n_docs").as("n_docs"),
-          min("toks").as("min_tokens"), max("toks").as("max_tokens"),
-          Num.round(sum("toks").cast("double") / count(lit(1)), 2).as("mean_tokens"),
-          Num.round((max("toks").cast("double") - min("toks"))
-            / (sum("toks").cast("double") / count(lit(1))), 6).as("imbalance"))
+      graft.api.Pipelines.shardBalance(Tables(s, d, "documents"), "doc_id", expr("n_chars div 5"))
     },
 
     // One Newton step of logistic regression P(returnflag='R' | qty)
@@ -95,22 +81,9 @@ object Round7gOps {
         |   - CAST(sx AS DOUBLE) * (CAST(sy AS DOUBLE) - CAST(n AS DOUBLE) / 2))
         |   / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) * 1000000 + 0.5) / 1000000 AS beta1
         |FROM m""".stripMargin) { (s, d) =>
-      // Five exact sums in one scan; the 2x2 solve is a fixed IEEE
-      // expression. At 100 TB this is the same single map-side-combined
-      // aggregate — the cheapest possible "does this feature matter".
-      val x = col("l_quantity").cast("long")
-      val y = when(col("l_returnflag") === "R", 1L).otherwise(0L)
-      val m = Tables(s, d, "lineitem")
-        .agg(count(lit(1)).as("n"), sum(x).as("sx"), sum(x * x).as("sxx"),
-          sum(y).as("sy"), sum(when(col("l_returnflag") === "R", x).otherwise(0L)).as("sxy"))
-      def D(c: org.apache.spark.sql.Column) = c.cast("double")
-      val den = D(col("n")) * col("sxx") - D(col("sx")) * col("sx")
-      val gy = D(col("sy")) - D(col("n")) / 2
-      val gxy = D(col("sxy")) - D(col("sx")) / 2
-      m.select(col("n"), col("sy").as("n_returned"),
-        Num.round(D(col("sy")) / col("n"), 6).as("base_rate"),
-        Num.round(lit(4.0) * (D(col("sxx")) * gy - D(col("sx")) * gxy) / den, 6).as("beta0"),
-        Num.round(lit(4.0) * (D(col("n")) * gxy - D(col("sx")) * gy) / den, 6).as("beta1"))
+      graft.api.Pipelines.logitStep(Tables(s, d, "lineitem"), col("l_quantity").cast("long"),
+          col("l_returnflag") === "R")
+        .withColumnRenamed("n_positive", "n_returned")
     },
 
     // Expected Reciprocal Rank @10 per source: cascade model over the

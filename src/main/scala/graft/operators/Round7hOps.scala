@@ -34,19 +34,7 @@ object Round7hOps {
         | floor(CAST(sum(CASE WHEN g.n < k.k THEN g.n ELSE 0 END) AS DOUBLE)
         |   / sum(g.n) * 1000000 + 0.5) / 1000000 AS suppression_cost
         |FROM g, k GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      // The group-size table computes ONCE; the four thresholds ride a
-      // 4-row broadcast fan-out over it (QI-bounded, not row-bounded).
-      val g = Tables(s, d, "customer")
-        .groupBy("c_nationkey", "c_mktsegment").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-      val ks = Seq(2L, 5L, 10L, 20L)
-      g.withColumn("k", explode(array(ks.map(lit): _*)))
-        .groupBy("k")
-        .agg(sum(when(col("n") >= col("k"), col("n")).otherwise(0L)).as("n_published"),
-          sum(when(col("n") < col("k"), col("n")).otherwise(0L)).as("n_suppressed"),
-          sum(when(col("n") < col("k"), 1L).otherwise(0L)).as("groups_suppressed"),
-          Num.round(sum(when(col("n") < col("k"), col("n")).otherwise(0L)).cast("double")
-            / sum("n"), 6).as("suppression_cost"))
+      graft.api.Pipelines.suppressionCost(Tables(s, d, "customer"), Seq("c_nationkey", "c_mktsegment"))
         .orderBy("k")
     },
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Q
-import graft.functions.{Num, TextFunctions}
+import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,33 +46,11 @@ object Round7iOps {
         |FROM documents d JOIN fl ON d.doc_id = fl.doc_id
         |WHERE d.doc_id >= 5
         |GROUP BY d.source ORDER BY d.source""".stripMargin) { (s, d) =>
-      // Same broadcast benchmark-shingle probe as q_text_12 (the
-      // benchmark set is eval-suite-sized at any corpus scale), then a
-      // doc_id-keyed join back to source/token metadata — the flag
-      // computation is unchanged, only the billing aggregate is new.
+      // Same broadcast benchmark-shingle probe as q_text_12 (doc_id < 5
+      // stands in for the eval suite).
       val docs = Tables(s, d, "documents").localCheckpoint()
-      val shing = (t: org.apache.spark.sql.Column) =>
-        TextFunctions.tokenShingles(t, 3)
-      val bench = docs.filter(col("doc_id") < 5)
-        .select(explode(shing(col("text"))).as("sh")).distinct()
-      val docsh = docs.filter(col("doc_id") >= 5)
-        .select(col("doc_id"), explode(shing(col("text"))).as("sh"))
-      val tot = docsh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val hit = docsh.join(broadcast(bench), "sh")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-      val fl = tot.join(hit, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          when(coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_sh") > 0.05, 1L)
-            .otherwise(0L).as("bad"))
-      docs.filter(col("doc_id") >= 5)
-        .select(col("doc_id"), col("source"), expr("n_chars div 5").as("toks"))
-        .join(fl, "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("bad").as("n_flagged"),
-          sum("toks").as("tokens_total"),
-          sum(when(col("bad") === 1, col("toks")).otherwise(0L)).as("tokens_lost"),
-          Num.round(sum(when(col("bad") === 1, col("toks")).otherwise(0L)).cast("double")
-            / sum("toks"), 6).as("loss_share"))
+      graft.api.Pipelines.decontaminationCost(docs.filter(col("doc_id") >= 5), "doc_id", "source",
+          "text", expr("n_chars div 5"), docs.filter(col("doc_id") < 5))
         .orderBy("source")
     },
 

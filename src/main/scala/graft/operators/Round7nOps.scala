@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Q
-import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
@@ -26,11 +25,6 @@ object Round7nOps {
 
   /** floor(x*100+0.5) as BIGINT — the 2-dp fixture columns are exact. */
   private def cents(c: Column) = floor(c * 100 + 0.5).cast("long")
-
-  /** The cross-engine multiplicative hash (q_scan_13/deterministicSplit
-    * precedent): overflow-safe for keys < ~9e18 / 2.7e9. */
-  private def mhash(c: Column): Column =
-    (pmod(c, lit(1000000007L)) * 2654435761L) % 1000000007L
 
   /** Bounded bottom-k-by-hash per group: the deterministic distributed
     * "reservoir". The buffer holds at most K keys — the K smallest by
@@ -207,37 +201,11 @@ object Round7nOps {
         |   / 1000 / count(*) * 1000000 + 0.5) / 1000000 AS pinball90
         |FROM te JOIN qq ON te.seg = qq.seg
         |GROUP BY te.seg, q50, q90 ORDER BY te.seg""".stripMargin) { (s, d) =>
-      // Loss terms stay exact BIGINT deci-cents (τ pre-scaled ×10:
-      // 5|e| for τ=.5, max(9e, −e) for τ=.9) until the ONE division at
-      // emission — partial-aggregation order cannot move a bit. The
-      // quantile itself is a per-segment rank pick, not percentile():
-      // type-1 (no interpolation) is the cross-engine-stable choice.
-      val o2 = Tables(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          cents(col("o_totalprice")).as("t2"),
-          (mhash(col("o_orderkey")) % 4).as("h"))
-      val j = o2.join(Tables(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("t2"), col("h"), col("c_mktsegment").as("seg"))
-      val wOrd = Window.partitionBy(col("seg")).orderBy(col("t2"), col("o_orderkey"))
-      val wAll = Window.partitionBy(col("seg"))
-      val tr = j.filter(col("h") < 3)
-        .select(col("seg"), col("t2"),
-          row_number().over(wOrd).as("rn"), count(lit(1)).over(wAll).as("n"))
-      val qq = tr.groupBy("seg")
-        .agg(max(when(col("rn") === expr("(n + 1) div 2"), col("t2"))).as("q50"),
-          max(when(col("rn") === expr("(9 * n + 9) div 10"), col("t2"))).as("q90"))
-      val te = j.filter(col("h") === 3).select(col("seg").as("tseg"), col("t2"))
-      te.join(qq, col("tseg") === col("seg"))
-        .groupBy(col("seg"), col("q50"), col("q90"))
-        .agg(count(lit(1)).as("n_test"),
-          sum(greatest(lit(5) * (col("t2") - col("q50")),
-            lit(-5) * (col("t2") - col("q50")))).as("l50"),
-          sum(greatest(lit(9) * (col("t2") - col("q90")),
-            -(col("t2") - col("q90")))).as("l90"))
-        .select(col("seg"), col("n_test"),
-          (D(col("q50")) / 100).as("q50"), (D(col("q90")) / 100).as("q90"),
-          Num.round(D(col("l50")) / 1000 / col("n_test"), 6).as("pinball50"),
-          Num.round(D(col("l90")) / 1000 / col("n_test"), 6).as("pinball90"))
+      val j = Tables(s, d, "orders")
+        .select(col("o_orderkey"), col("o_custkey"), cents(col("o_totalprice")).as("t2"))
+        .join(Tables(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+        .select(col("o_orderkey"), col("t2"), col("c_mktsegment").as("seg"))
+      graft.api.Pipelines.pinballEval(j, "seg", "t2", "o_orderkey")
         .orderBy("seg")
     },
 
@@ -271,33 +239,7 @@ object Round7nOps {
         |FROM s0 LEFT JOIN s1 ON s0.source = s1.source
         |LEFT JOIN s2 ON s0.source = s2.source
         |ORDER BY s0.source""".stripMargin) { (s, d) =>
-      // At 100 TB the digest (16-byte md5) is the only wide-shuffle key;
-      // each stage is a filter + re-aggregation of the SAME scanned
-      // columns — Spark reuses the scan via the shared `t` subplan.
-      val t = Tables(s, d, "documents")
-        .select(col("doc_id"), col("source"),
-          size(split(col("text"), " ")).cast("long").as("ntok"),
-          md5(concat_ws(" ", sort_array(split(col("text"), " ")))).as("dg"))
-      val s0 = t.groupBy("source")
-        .agg(count(lit(1)).as("docs_raw"), sum("ntok").as("toks_raw"))
-      val q = t.filter(col("ntok") >= 20)
-      val s1 = q.groupBy("source")
-        .agg(count(lit(1)).as("docs_quality"), sum("ntok").as("toks_quality"))
-        .withColumnRenamed("source", "src1")
-      val k = q.withColumn("rk",
-        row_number().over(Window.partitionBy(col("dg")).orderBy(col("doc_id"))))
-      val s2 = k.filter(col("rk") === 1).groupBy("source")
-        .agg(count(lit(1)).as("docs_dedup"), sum("ntok").as("toks_dedup"),
-          sum(least(col("ntok"), lit(96L))).as("toks_packed"))
-        .withColumnRenamed("source", "src2")
-      s0.join(s1, col("source") === col("src1"), "left")
-        .join(s2, col("source") === col("src2"), "left")
-        .select(col("source"), col("docs_raw"), col("toks_raw"),
-          coalesce(col("docs_quality"), lit(0L)).as("docs_quality"),
-          coalesce(col("toks_quality"), lit(0L)).as("toks_quality"),
-          coalesce(col("docs_dedup"), lit(0L)).as("docs_dedup"),
-          coalesce(col("toks_dedup"), lit(0L)).as("toks_dedup"),
-          coalesce(col("toks_packed"), lit(0L)).as("toks_packed"))
+      graft.api.Pipelines.tokenLedger(Tables(s, d, "documents"), "doc_id", "text", "source")
         .orderBy("source")
     },
 
@@ -313,12 +255,7 @@ object Round7nOps {
         |   ORDER BY (c_custkey % 1000000007) * 2654435761 % 1000000007, c_custkey) AS rn
         | FROM customer) WHERE rn <= 5
         |ORDER BY c_mktsegment, rn""".stripMargin) { (s, d) =>
-      val bk = udaf(BottomK)
-      Tables(s, d, "customer")
-        .groupBy("c_mktsegment")
-        .agg(bk(col("c_custkey")).as("bk"))
-        .select(col("c_mktsegment"), posexplode(col("bk.ks")).as(Seq("pos", "c_custkey")))
-        .select(col("c_mktsegment"), (col("pos") + 1).cast("long").as("rn"), col("c_custkey"))
+      graft.api.Pipelines.bottomKSample(Tables(s, d, "customer"), "c_mktsegment", "c_custkey", 5)
         .orderBy("c_mktsegment", "rn")
     },
 

@@ -4,7 +4,6 @@ import graft.Q
 import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-7 continuation (SURVEY §2.11bo): semantic-surface wave three —
@@ -25,7 +24,7 @@ object Round7oOps {
   /** RBP(p=0.8) discount weights for ranks 1..20, quantized to 1e8 at
     * plan time so both engines fold exact BIGINTs (q_ret_1's ndcgW
     * pattern): w_r = (1-p)·p^(r-1). */
-  private val rbpW: Seq[Long] =
+  private[graft] val rbpW: Seq[Long] =
     (1 to 20).map(r => math.floor(1e8 * 0.2 * math.pow(0.8, r - 1) + 0.5).toLong)
   private val rbpWSql = rbpW.mkString("[", ", ", "]")
 
@@ -107,13 +106,10 @@ object Round7oOps {
         |FROM b GROUP BY ym ORDER BY ym""".stripMargin) { (s, d) =>
       val fs = Tables(s, d, "lineitem")
         .groupBy(col("l_orderkey")).agg(min(col("l_shipdate")).as("ship0"))
-      def wk(e: String) = expr(s"5 * (($e + 3) div 7) + least(($e + 3) % 7, 5)")
       Tables(s, d, "orders")
         .join(fs, col("o_orderkey") === col("l_orderkey"))
         .select(date_format(col("o_orderdate"), "yyyy-MM").as("ym"),
-          datediff(col("o_orderdate"), lit("1970-01-01")).cast("long").as("e1"),
-          datediff(col("ship0"), lit("1970-01-01")).cast("long").as("e2"))
-        .select(col("ym"), (wk("e2") - wk("e1")).as("biz"))
+          graft.api.Pipelines.weekdaysBetween(col("o_orderdate"), col("ship0")).as("biz"))
         .groupBy("ym")
         .agg(count(lit(1)).as("n_orders"),
           Num.round(D(sum(col("biz"))) / count(lit(1)), 6).as("avg_biz_days"),
@@ -137,17 +133,9 @@ object Round7oOps {
         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       // The QI aggregate is catalog-bounded (25 nations × 5 segments);
       // at 100 TB the single shuffle is the group count itself.
-      Tables(s, d, "customer")
-        .groupBy(col("c_nationkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("k"))
-        .groupBy(col("c_nationkey").cast("long").as("nationkey"))
-        .agg(count(lit(1)).as("n_groups"),
-          sum(when(col("k") === 1, 1L).otherwise(0L)).as("n_singletons"),
-          (floor(D(sum(expr("1000000000 div k"))) / 1000 + 0.5) / 1000000)
-            .as("__tmp"),
-          (D(expr("1000000 div min(k)")) / 1000000).as("max_risk"))
-        .select(col("nationkey"), col("n_groups"), col("n_singletons"),
-          col("__tmp").as("exp_reid"), col("max_risk"))
+      graft.api.Pipelines.reidRisk(Tables(s, d, "customer"), Seq("c_nationkey", "c_mktsegment"),
+          "c_nationkey")
+        .withColumnRenamed("c_nationkey", "nationkey")
         .orderBy("nationkey")
     },
 
@@ -166,17 +154,8 @@ object Round7oOps {
          |    THEN ($rbpWSql)[CAST(rn AS INT)] ELSE 0 END) AS DOUBLE)
          |   / 100 + 0.5) / 1000000 AS rbp
          |FROM r GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val wArr = array(rbpW.map(lit): _*)
-      val byRank = Window.partitionBy("source").orderBy(col("n_chars").desc, col("doc_id"))
-      Tables(s, d, "documents")
-        .select(col("source"), when(col("lang") === "en", 1).otherwise(0).as("rel"),
-          row_number().over(byRank).cast("long").as("rn"))
-        .groupBy("source")
-        .agg(sum(when(col("rel") === 1 && col("rn") <= 20, 1L).otherwise(0L)).as("n_rel_top20"),
-          sum(when(col("rel") === 1 && col("rn") <= 20,
-            element_at(wArr, col("rn").cast("int"))).otherwise(0L)).as("wsum"))
-        .select(col("source"), col("n_rel_top20"),
-          (floor(D(col("wsum")) / 100 + 0.5) / 1000000).as("rbp"))
+      graft.api.Pipelines.rbp(Tables(s, d, "documents"), "source", "n_chars", "doc_id",
+          col("lang") === "en")
         .orderBy("source")
     },
 
@@ -226,26 +205,7 @@ object Round7oOps {
         | CAST(sum(CASE WHEN a.t IS NOT NULL AND b.t IS NOT NULL
         |   THEN abs(a.n - b.n) ELSE 0 END) AS BIGINT) AS l1_shared
         |FROM a FULL JOIN b ON a.t = b.t""".stripMargin) { (s, d) =>
-      // Vocabulary is corpus-bounded (small token domain), so each map
-      // is one aggregation; the 1×1 crossJoin is two broadcast rows.
-      // Every lambda is single-level — stays inside codegen.
-      def vmap(src: String, out: String) =
-        Tables(s, d, "documents")
-          .filter(col("source") === src)
-          .select(explode(split(col("text"), " ")).as("t"))
-          .groupBy("t").agg(count(lit(1)).as("n"))
-          .agg(map_from_entries(sort_array(collect_list(struct(col("t"), col("n")))))
-            .as(out))
-      val m = vmap("src0", "m0").crossJoin(vmap("src1", "m1"))
-      val shared0 = map_filter(col("m0"), (k, _) => map_contains_key(col("m1"), k))
-      val zip = map_zip_with(shared0, col("m1"), (_, x, y) =>
-        when(x.isNotNull && y.isNotNull, abs(x - y)).otherwise(0L))
-      m.select(
-        size(shared0).cast("long").as("n_shared"),
-        (size(col("m0")) - size(shared0)).cast("long").as("n_only_a"),
-        (size(col("m1")) - size(map_filter(col("m1"),
-          (k, _) => map_contains_key(col("m0"), k)))).cast("long").as("n_only_b"),
-        aggregate(map_values(zip), lit(0L), (acc, x) => acc + x).as("l1_shared"))
+      graft.api.Pipelines.vocabDrift(Tables(s, d, "documents"), "source", "text", "src0", "src1")
     }
   )
 }

@@ -3,7 +3,6 @@ package graft.operators
 import graft.Q
 import graft.sources.Tables
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-7 continuation (SURVEY §2.11bp): edge-semantics wave —
@@ -160,28 +159,12 @@ object Round7pOps {
         | CAST(max(nw) AS BIGINT) AS n_walsh
         |FROM r GROUP BY pr ORDER BY pr""".stripMargin) { (s, d) =>
       // The pair space is months², ~80² per priority — bounded by the
-      // CALENDAR, not the fact table, so the self-join is a dimension
-      // product at any data scale. An EVEN Walsh count averages the two
-      // middle Walsh sums (standard HL pseudo-median — the r7 ADVICE
-      // fix); odd counts pick the same row twice, so nothing changes.
+      // CALENDAR, not the fact table.
       val mc = Tables(s, d, "orders")
         .groupBy(col("o_orderpriority").as("pr"),
           date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
         .agg(count(lit(1)).as("x"))
-      val a = mc.select(col("pr"), col("ym").as("y1"), col("x").as("x1"))
-      val b = mc.select(col("pr").as("pr2"), col("ym").as("y2"), col("x").as("x2"))
-      val w = a.join(b, col("pr") === col("pr2") && col("y1") <= col("y2"))
-        .select(col("pr"), col("y1"), col("y2"), (col("x1") + col("x2")).as("s"))
-      val wRn = Window.partitionBy(col("pr")).orderBy(col("s"), col("y1"), col("y2"))
-      val wAll = Window.partitionBy(col("pr"))
-      w.select(col("pr"), col("s"),
-          row_number().over(wRn).as("rn"), count(lit(1)).over(wAll).as("nw"))
-        .groupBy("pr")
-        .agg(((max(when(col("rn") === expr("(nw + 1) div 2"), col("s")))
-            + max(when(col("rn") === expr("(nw + 2) div 2"), col("s"))))
-            .cast("double") / 4)
-            .as("hl_estimate"),
-          max(col("nw")).cast("long").as("n_walsh"))
+      graft.api.Pipelines.hodgesLehmann(mc, "pr", "ym", "x")
         .select(col("pr").as("o_orderpriority"), col("hl_estimate"), col("n_walsh"))
         .orderBy("o_orderpriority")
     },

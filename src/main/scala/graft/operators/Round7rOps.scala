@@ -95,30 +95,13 @@ object Round7rOps {
         |   / sqrt(CAST((n0 - tx) AS DOUBLE) * (n0 - ty)) * 1000000 + 0.5) / 1000000 AS tau_b
         |FROM c""".stripMargin) { (s, d) =>
       // y = integer-division mean cents (exact BIGINT) so tie detection
-      // is integer equality on both engines, never a float comparison.
-      // Tie counts use the canonical (scipy/R) convention: tx = ALL
-      // x-tied pairs, ty = ALL y-tied pairs (both-tied pairs count in
-      // both), so τ-b matches the standard statistic under duplicate
-      // (x, y) pairs — the r7 ADVICE fix.
+      // is integer equality on both engines.
       val m = Tables(s, d, "orders")
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
         .agg(count(lit(1)).as("x"),
           (sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
             / count(lit(1))).cast("long").as("y"))
-      val a = m.select(col("ym").as("ym1"), col("x").as("x1"), col("y").as("y1"))
-      val b = m.select(col("ym").as("ym2"), col("x").as("x2"), col("y").as("y2"))
-      val p = a.join(b, col("ym1") < col("ym2"))
-      val cdf = p.agg(
-        sum(when((col("x1") < col("x2") && col("y1") < col("y2")) ||
-          (col("x1") > col("x2") && col("y1") > col("y2")), 1L).otherwise(0L)).as("nc"),
-        sum(when((col("x1") < col("x2") && col("y1") > col("y2")) ||
-          (col("x1") > col("x2") && col("y1") < col("y2")), 1L).otherwise(0L)).as("nd"),
-        sum(when(col("x1") === col("x2"), 1L).otherwise(0L)).as("tx"),
-        sum(when(col("y1") === col("y2"), 1L).otherwise(0L)).as("ty"),
-        count(lit(1)).as("n0"))
-      cdf.select(col("nc"), col("nd"), col("tx"), col("ty"), col("n0"),
-        Num.round(D(col("nc") - col("nd"))
-          / sqrt(D(col("n0") - col("tx")) * (col("n0") - col("ty"))), 6).as("tau_b"))
+      graft.api.Pipelines.kendallTauB(m, "ym", "x", "y")
     },
 
     // MASE — mean absolute scaled error — of a 3-month moving-average
@@ -144,17 +127,7 @@ object Round7rOps {
       val m = Tables(s, d, "orders")
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
         .agg(count(lit(1)).as("x"))
-      val w = Window.orderBy(col("ym"))
-      val l = m.select(col("x"),
-        lag(col("x"), 1).over(w).as("x1"), lag(col("x"), 2).over(w).as("x2"),
-        lag(col("x"), 3).over(w).as("x3"))
-      l.filter(col("x3").isNotNull)
-        .select(abs(lit(3) * col("x") - (col("x1") + col("x2") + col("x3"))).as("e3"),
-          abs(lit(3) * col("x") - lit(3) * col("x1")).as("e1"))
-        .agg(count(lit(1)).as("n_scored"),
-          sum("e3").as("sum_err3x"), sum("e1").as("sum_naive3x"))
-        .select(col("n_scored"), col("sum_err3x"), col("sum_naive3x"),
-          Num.round(D(col("sum_err3x")) / col("sum_naive3x"), 6).as("mase"))
+      graft.api.Pipelines.mase(m, "ym", "x")
     },
 
     // PERCENTILE_DISC vs PERCENTILE_CONT divergence, pinned per

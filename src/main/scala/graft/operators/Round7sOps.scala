@@ -51,9 +51,8 @@ object Round7sOps {
         | CAST(count(DISTINCT canon) AS BIGINT) AS n_canonical,
         | min(canon) AS canonical_url
         |FROM c GROUP BY pid ORDER BY pid""".stripMargin) { (s, d) =>
-      // split_part(url,'/',3) = the authority; everything after it is
-      // the path+query. Canonicalization is a pure projection — the
-      // only shuffle is the 50-page aggregate.
+      // Canonicalization (Pipelines.canonicalizeUrl) is a pure
+      // projection — the only shuffle is the 50-page aggregate.
       val pid = (col("doc_id") % 50).cast("long")
       val base = concat(lit("https://www.example.com/p/"), pid.cast("string"))
       val url = when(col("doc_id") % 4 === 0, base)
@@ -62,12 +61,7 @@ object Round7sOps {
         .when(col("doc_id") % 4 === 2, concat(base, lit("?utm_source=feed")))
         .otherwise(concat(base, lit("/")))
       val u = Tables(s, d, "documents").select(pid.as("pid"), url.as("url"))
-      val host = split_part(col("url"), lit("/"), lit(3))
-      val rest = substring(col("url"), lit(9) + length(host), lit(100000))
-      val canon = concat(lit("https://"),
-        regexp_replace(lower(host), "^www\\.", ""),
-        rtrim(regexp_replace(rest, "\\?utm_source=feed", ""), "/"))
-      u.select(col("pid"), col("url"), canon.as("canon"))
+      u.select(col("pid"), col("url"), graft.api.Pipelines.canonicalizeUrl(col("url")).as("canon"))
         .groupBy("pid")
         .agg(count(lit(1)).as("n_urls"),
           countDistinct(col("url")).as("n_raw_distinct"),
@@ -96,20 +90,7 @@ object Round7sOps {
         |SELECT lang, n AS n_docs, w6 AS weight6,
         | CAST(q0 + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS quota
         |FROM r ORDER BY lang""".stripMargin) { (s, d) =>
-      val l = Tables(s, d, "documents").groupBy("lang").agg(count(lit(1)).as("n"))
-      val w = l.select(col("lang"), col("n"),
-        floor(sqrt(D(col("n"))) * 1000000).cast("long").as("w6"))
-      val wAll = Window.partitionBy()
-      val t = w.select(col("lang"), col("n"), col("w6"),
-        expr("100 * w6").as("p"), sum(col("w6")).over(wAll).as("tw"))
-        .select(col("lang"), col("n"), col("w6"),
-          expr("p div tw").as("q0"), (col("p") % col("tw")).as("rem"))
-      val r = t.select(col("lang"), col("n"), col("w6"), col("q0"), col("rem"),
-        row_number().over(Window.orderBy(col("rem").desc, col("lang"))).as("rk"),
-        (lit(100) - sum(col("q0")).over(wAll)).as("leftover"))
-      r.select(col("lang"), col("n").as("n_docs"), col("w6").as("weight6"),
-          (col("q0") + when(col("rk") <= col("leftover"), 1L).otherwise(0L))
-            .cast("long").as("quota"))
+      graft.api.Pipelines.sqrtQuota(Tables(s, d, "documents"), "lang")
         .orderBy("lang")
     },
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Q
-import graft.functions.Num
 import graft.sources.Tables
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -101,27 +100,7 @@ object Round7uOps {
       val f = Tables(s, d, "orders")
         .select((floor(col("o_totalprice") * 100 + 0.5).cast("long") % 1000).as("pm"),
           when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("y"))
-      val b = f.groupBy(expr("pm div 100").as("bin"))
-        .agg(count(lit(1)).as("n"), sum("pm").as("sp"), sum("y").as("sy"))
-      val t = f.agg(count(lit(1)).as("nn"), sum("y").as("syy"),
-        sum((col("pm") - lit(1000L) * col("y")) * (col("pm") - lit(1000L) * col("y")))
-          .as("bq"))
-      val pbar = D(col("sp")) / col("n") / 1000
-      val ybar = D(col("sy")) / col("n")
-      val gbar = D(col("syy")) / col("nn")
-      val terms = b.crossJoin(broadcast(t))
-        .agg(
-          (sum(D(col("n")) * (pbar - ybar) * (pbar - ybar)) / max(col("nn"))).as("rel"),
-          (sum(D(col("n")) * (ybar - gbar) * (ybar - gbar)) / max(col("nn"))).as("res"),
-          max(gbar * (lit(1) - gbar)).as("unc"),
-          max(D(col("bq")) / 1000000 / col("nn")).as("bt"),
-          max(col("nn")).as("nn"))
-      terms.select(col("nn").as("n_scored"),
-        Num.round(col("rel"), 6).as("reliability"),
-        Num.round(col("res"), 6).as("resolution"),
-        Num.round(col("unc"), 6).as("uncertainty"),
-        Num.round(col("bt"), 6).as("brier"),
-        Num.round(col("bt") - (col("rel") - col("res") + col("unc")), 6).as("resid"))
+      graft.api.Pipelines.brierDecomposition(f, "pm", "y")
     },
 
     // listagg — the ordered string aggregate (Spark 4 surface): each
@@ -162,7 +141,7 @@ object Round7uOps {
         | CAST(CASE WHEN n_join_raw = n_join_tok AND n_keys = n_tokens
         |   THEN 1 ELSE 0 END AS BIGINT) AS intact
         |FROM raw, tk, u, v""".stripMargin) { (s, d) =>
-      def tok(c: Column) = sha2(concat(lit("graft2026|"), c.cast("string")), 256)
+      def tok(c: Column) = graft.api.Pipelines.pseudonymize(c, "graft2026")
       val c = Tables(s, d, "customer")
       val o = Tables(s, d, "orders")
       val ct = c.select(tok(col("c_custkey")).as("ctok"))

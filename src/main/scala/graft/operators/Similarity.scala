@@ -56,14 +56,8 @@ object Similarity {
          |ORDER BY cos DESC, vec_id LIMIT 5""".stripMargin) { (s, d) =>
       // Brute-force cosine top-k: probe row broadcast against the corpus,
       // TakeOrderedAndProject for the top-5 (per-partition heaps).
-      val e = Tables(s, d, "embeddings")
-      val probe = e.filter(col("vec_id") === 0)
-        .select(col("embedding").as("pvec"), col("label").as("plabel"))
-      VectorExpressions.register(s)
-      e.join(broadcast(probe), col("label") === col("plabel") && col("vec_id") =!= 0)
-        .select(col("vec_id"), expr("cosine_similarity(embedding, pvec)").as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(5)
+      graft.api.Pipelines.cosineKnn(Tables(s, d, "embeddings"), "vec_id", "embedding",
+          "label", 0L, 5)
         .select(row_number().over(Window.orderBy(col("cos").desc, col("vec_id"))).cast("long").as("rank"),
           col("vec_id"), round(col("cos"), 6).as("cosine"))
     },
@@ -109,21 +103,9 @@ object Similarity {
          |ORDER BY cos DESC, vec_id LIMIT 5""".stripMargin) { (s, d) =>
       // IVF-style ANN: coarse quantization to 8 fixed centroids (vec_id<8
       // as deterministic "trained" centroids), then exact search inside
-      // the probe's cell only. The 8 centroids are packed cid-sorted into
-      // ONE broadcast row and each vector's cell id is a single native
-      // argmin_sqdist projection — the corpus is never shuffled, never
-      // windowed, never joined on itself (the round-1 crossJoin+window
-      // formulation shuffled n×k wide vector rows; this shuffles nothing).
-      VectorExpressions.register(s)
+      // the probe's cell only.
       val e = Tables(s, d, "embeddings")
-      val packed = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-        .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cs"))
-        .select(transform(col("cs"), _.getField("cid")).as("cids"),
-          transform(col("cs"), _.getField("cvec")).as("cvecs"))
-      val withCell = e.crossJoin(broadcast(packed))
-        .withColumn("cid", element_at(col("cids"), expr("argmin_sqdist(embedding, cvecs)") + 1))
-        .select(col("vec_id"), col("embedding"), col("cid"))
+      val withCell = graft.api.Pipelines.ivfIndex(e, "vec_id", "embedding", e.filter(col("vec_id") < 8))
       val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("pvec"))
       val pcell = withCell.filter(col("vec_id") === 0).select(col("cid").as("pcid"))
       withCell.join(broadcast(pcell), col("cid") === col("pcid"))
@@ -316,13 +298,17 @@ object Similarity {
         |         SELECT vec_id, ss, cid, row_number() OVER (PARTITION BY vec_id, ss ORDER BY d2, cid) AS rn FROM dist)
         |         WHERE rn = 1),
         |padc AS (SELECT ss, cid, d2 FROM dist WHERE vec_id = 0)
-        |SELECT CAST(row_number() OVER (ORDER BY adc2, vec_id) AS BIGINT) AS rank,
+        |SELECT CAST(row_number() OVER (ORDER BY q6, vec_id) AS BIGINT) AS rank,
         | vec_id, floor(sqrt(adc2) * 1000000 + 0.5) / 1000000 AS adc_dist
         |FROM (
-        | SELECT c.vec_id, sum(p.d2) AS adc2
+        | SELECT c.vec_id, sum(p.d2) AS adc2, floor(sqrt(sum(p.d2)) * 1000000 + 0.5) AS q6
         | FROM code c JOIN padc p ON c.ss = p.ss AND c.cid = p.cid
         | WHERE c.vec_id <> 0 GROUP BY c.vec_id)
-        |ORDER BY adc2, vec_id LIMIT 5""".stripMargin) { (s, d) =>
+        |ORDER BY q6, vec_id LIMIT 5""".stripMargin) { (s, d) =>
+      // Ranking is on the distance quantized the way it is emitted
+      // (1e-6), vec_id breaking ties: exact replicas of one vector (as
+      // in a ScaleGen copy) then tie instead of ordering by the
+      // summation-order noise in the unrounded float sum adc2.
       // Product quantization + asymmetric distance (PQ-ADC, the memory-
       // compressed ANN sketch): split 64 dims into 8 subspaces of 8,
       // quantize each subvector to the nearest of 4 deterministic
@@ -359,8 +345,9 @@ object Similarity {
       code.join(broadcast(padc), col("ss") === col("p_ss") && col("cid") === col("p_cid"))
         .filter(col("vec_id") =!= 0)
         .groupBy("vec_id").agg(sum("pd2").as("adc2"))
-        .orderBy(col("adc2"), col("vec_id")).limit(5)
-        .select(row_number().over(Window.orderBy(col("adc2"), col("vec_id"))).cast("long").as("rank"),
+        .withColumn("q6", floor(sqrt(col("adc2")) * 1000000 + 0.5))
+        .orderBy(col("q6"), col("vec_id")).limit(5)
+        .select(row_number().over(Window.orderBy(col("q6"), col("vec_id"))).cast("long").as("rank"),
           col("vec_id"), round(sqrt(col("adc2")), 6).as("adc_dist"))
     },
 
@@ -387,13 +374,13 @@ object Similarity {
         |        SELECT vec_id, ss, cid, row_number() OVER (PARTITION BY vec_id, ss ORDER BY d2, cid) AS rn FROM d1)
         |        WHERE rn = 1),
         |padc AS (SELECT ss, cid, d2 FROM d1 WHERE vec_id = 0)
-        |SELECT CAST(row_number() OVER (ORDER BY adc2, vec_id) AS BIGINT) AS rank,
+        |SELECT CAST(row_number() OVER (ORDER BY q6, vec_id) AS BIGINT) AS rank,
         | vec_id, floor(sqrt(adc2) * 1000000 + 0.5) / 1000000 AS adc_dist
         |FROM (
-        | SELECT c.vec_id, sum(p.d2) AS adc2
+        | SELECT c.vec_id, sum(p.d2) AS adc2, floor(sqrt(sum(p.d2)) * 1000000 + 0.5) AS q6
         | FROM code c JOIN padc p ON c.ss = p.ss AND c.cid = p.cid
         | WHERE c.vec_id <> 0 GROUP BY c.vec_id)
-        |ORDER BY adc2, vec_id LIMIT 5""".stripMargin) { (s, d) =>
+        |ORDER BY q6, vec_id LIMIT 5""".stripMargin) { (s, d) =>
       // PQ with TRAINED sub-codebooks: one Lloyd round of k-means run
       // independently in each of the 8 subspaces (init = vectors 0..3's
       // subvectors, argmin ties → lowest cid), then encode + ADC search
@@ -429,8 +416,9 @@ object Similarity {
       code.join(broadcast(padc), col("ss") === col("p_ss") && col("cid") === col("p_cid"))
         .filter(col("vec_id") =!= 0)
         .groupBy("vec_id").agg(sum("pd2").as("adc2"))
-        .orderBy(col("adc2"), col("vec_id")).limit(5)
-        .select(row_number().over(Window.orderBy(col("adc2"), col("vec_id"))).cast("long").as("rank"),
+        .withColumn("q6", floor(sqrt(col("adc2")) * 1000000 + 0.5))
+        .orderBy(col("q6"), col("vec_id")).limit(5)
+        .select(row_number().over(Window.orderBy(col("q6"), col("vec_id"))).cast("long").as("rank"),
           col("vec_id"), round(sqrt(col("adc2")), 6).as("adc_dist"))
     }
   )

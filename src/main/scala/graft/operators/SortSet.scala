@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Q
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Num.round
 
@@ -42,10 +41,8 @@ object SortSet {
         | SELECT o_custkey, o_orderkey, o_totalprice,
         |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
         | FROM orders) WHERE rn <= 3 ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables(s, d, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      graft.api.Pipelines.capPerGroup(Tables(s, d, "orders"), "o_custkey", "o_totalprice",
+          "o_orderkey", 3)
         .select(col("o_custkey"), col("o_orderkey"), round(col("o_totalprice"), 2).as("price"))
         .orderBy("o_custkey", "o_orderkey")
     },

@@ -54,10 +54,11 @@ object TextOps {
     * are near-dup candidates. Per-row computation (no shuffle) — the
     * band-key groupBy/join that consumers do is the only shuffle.
     */
-  private[graft] def lshBandKeys(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), minhashSignature(col("text"), 16).as("sig"))
-      .select(col("doc_id"), explode(sequence(lit(0L), lit(3L))).as("j"), col("sig"))
-      .select(col("doc_id"), col("j"),
+  private[graft] def lshBandKeys(docs: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    docs.select(col(idCol), minhashSignature(col(textCol), 16).as("sig"))
+      .select(col(idCol), explode(sequence(lit(0L), lit(3L))).as("j"), col("sig"))
+      .select(col(idCol), col("j"),
         md5(concat_ws("-", transform(slice(col("sig"), (col("j") * 4 + 1).cast("int"), lit(4)), _.cast("string")))).as("band_key"))
 
   val all: Seq[Q] = Seq(
@@ -226,9 +227,7 @@ object TextOps {
       """SELECT md5(lower(trim(text))) AS text_key, min(doc_id) AS keep_id, count(*) AS n_copies
         |FROM documents GROUP BY 1 ORDER BY text_key""".stripMargin) { (s, d) =>
       // Exact dedup: digest-keyed groupBy; survivor = min doc_id.
-      Tables(s, d, "documents")
-        .groupBy(md5(lower(trim(col("text")))).as("text_key"))
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
+      graft.api.Pipelines.dedupExact(Tables(s, d, "documents"), "doc_id", "text")
         .orderBy("text_key")
     },
 
@@ -254,11 +253,9 @@ object TextOps {
       // pairs agreeing on ≥1 band. Bounded to doc_id<100 here; at scale
       // the band join is the whole point — shuffle keys are (band, hash),
       // never pairs.
-      val bands = lshBandKeys(Tables(s, d, "documents").filter(col("doc_id") < 100))
-      val a = bands.select(col("doc_id").as("doc_a"), col("j"), col("band_key"))
-      val b = bands.select(col("doc_id").as("doc_b"), col("j").as("j2"), col("band_key").as("band_key2"))
-      a.join(b, col("j") === col("j2") && col("band_key") === col("band_key2") && col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared_bands"))
+      graft.api.Pipelines.minhashCandidates(
+          Tables(s, d, "documents").filter(col("doc_id") < 100), "doc_id", "text")
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("n_shared_bands"))
         .orderBy("doc_a", "doc_b")
     },
 
@@ -352,21 +349,9 @@ object TextOps {
       // set is tiny → broadcast semi-probe; each doc is scored in one
       // pass — the standard n-gram-overlap contamination screen run
       // before training, at any corpus size.
-      // single pass over the exploded shingles: LEFT-join the broadcast
-      // benchmark set with a hit marker, count total + hits in one
-      // aggregate (two separate branches would re-explode the corpus)
       val docs = Tables(s, d, "documents")
-      val bench = docs.filter(col("doc_id") < 5)
-        .select(explode(tokenShingles(col("text"), 3)).as("sh")).distinct()
-        .withColumn("is_hit", lit(1))
-      val docsh = docs.filter(col("doc_id") >= 5)
-        .select(col("doc_id"), explode(tokenShingles(col("text"), 3)).as("sh"))
-      docsh.join(broadcast(bench), Seq("sh"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_sh"), count(col("is_hit")).as("n_hit"))
-        .select(col("doc_id"), col("n_sh"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_sh"), 6).as("overlap"),
-          (col("n_hit").cast("double") / col("n_sh") > 0.5).as("contaminated"))
+      graft.api.Pipelines.contaminationScreen(docs.filter(col("doc_id") >= 5), "doc_id", "text",
+          docs.filter(col("doc_id") < 5))
         .orderBy("doc_id")
     },
 
@@ -377,18 +362,8 @@ object TextOps {
         | FROM documents)
         |GROUP BY split, lang ORDER BY split, lang""".stripMargin) { (s, d) =>
       // Deterministic train/valid/test split (80/10/10) by multiplicative
-      // hash of the stable id — reproducible across runs, engines, and
-      // partitionings (unlike rand()-based splits), and membership is
-      // computable from the id alone so the split never needs a lookup
-      // table. Exact integer arithmetic end to end; mod-P around the
-      // multiply prevents Long wrap at any id magnitude AND keeps the
-      // bucket sensitive to the whole product (see Pipelines
-      // .deterministicSplit — a bare `· A mod 100` collapses id strides
-      // divisible by 100 into one split).
-      val bucket = (pmod(col("doc_id"), lit(1000000007L)) * 2654435761L) % 1000000007L % 100
-      Tables(s, d, "documents")
-        .select(col("lang"),
-          when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test").as("split"))
+      // hash of the stable id; no lookup table ever needed.
+      graft.api.Pipelines.deterministicSplit(Tables(s, d, "documents"), "doc_id")
         .groupBy("split", "lang").agg(count(lit(1)).as("n_docs"))
         .orderBy("split", "lang")
     },
@@ -397,17 +372,9 @@ object TextOps {
       """SELECT label, count(*) AS n,
         | floor((CAST((SELECT count(*) FROM embeddings) AS DOUBLE) / (CAST((SELECT count(DISTINCT label) FROM embeddings) AS DOUBLE) * count(*))) * 1000000 + 0.5) / 1000000 AS weight
         |FROM embeddings GROUP BY label ORDER BY label""".stripMargin) { (s, d) =>
-      // Inverse-frequency class weights (sklearn's "balanced" formula:
-      // total / (k · class_count)) for loss reweighting on an imbalanced
-      // label column. Two tiny scalar aggregates broadcast back over the
-      // per-class counts — one pass at any scale.
-      val e = Tables(s, d, "embeddings")
-      val totals = e.agg(count(lit(1)).cast("double").as("total"),
-        countDistinct("label").cast("double").as("k"))
-      e.groupBy("label").agg(count(lit(1)).as("n"))
-        .crossJoin(broadcast(totals))
-        .select(col("label"), col("n"),
-          round(col("total") / (col("k") * col("n")), 6).as("weight"))
+      // Inverse-frequency class weights for loss reweighting on an
+      // imbalanced label column.
+      graft.api.Pipelines.classWeights(Tables(s, d, "embeddings"), "label")
         .orderBy("label")
     },
 
@@ -463,30 +430,11 @@ object TextOps {
          |FROM comp ORDER BY doc_id""".stripMargin) { (s, d) =>
       // Near-dup CLUSTERING: connected components over the LSH candidate
       // graph — the step after candidate generation in a production dedup
-      // pipeline (keep min doc_id per component, drop the rest). Pregel-
-      // style iterative min-label propagation: each pass a node takes the
-      // min label among itself and its neighbors; fixpoint in O(component
-      // diameter) passes (near-dup components are tiny). Each pass is one
-      // shuffle join; localCheckpoint truncates the otherwise-exponential
-      // iterative lineage. At 100 TB the identical loop gets the
-      // alternating large-star/small-star optimization (O(log n) rounds,
-      // Kiveris et al.) — unnecessary at near-dup diameters.
-      // candidate pairs from the shared band keys, then the one canonical
-      // propagation loop in graft.api.Pipelines (converge-or-throw) —
-      // keeping a second copy of iterative logic here invited silent
-      // drift between the API and the oracle-pinned query
-      val docs = Tables(s, d, "documents").filter(col("doc_id") < 100)
-      val bands = lshBandKeys(docs)
-      val ba = bands.select(col("doc_id").as("doc_a"), col("j"), col("band_key"))
-      val bb = bands.select(col("doc_id").as("doc_b"), col("j").as("j2"), col("band_key").as("band_key2"))
-      val pairs = ba.join(bb,
-        col("j") === col("j2") && col("band_key") === col("band_key2") && col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-      val labels = graft.api.Pipelines.connectedComponents(
-        docs, "doc_id", pairs, "doc_a", "doc_b")
-      val sizes = labels.groupBy("component").agg(count(lit(1)).as("csize"))
-      labels.join(sizes, Seq("component"))
-        .select(col("doc_id"), col("component"), col("csize"))
+      // pipeline (keep min doc_id per component, drop the rest). The
+      // propagation loop is the one canonical converge-or-throw loop in
+      // graft.api.Pipelines.connectedComponents.
+      graft.api.Pipelines.nearDupComponents(
+          Tables(s, d, "documents").filter(col("doc_id") < 100), "doc_id", "text")
         .orderBy("doc_id")
     },
 

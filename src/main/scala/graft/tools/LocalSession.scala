@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Shared local-mode session builder for the dev tools (Smoke, Explain,
-  * Microbench, StreamDemo, GoldenGen). Verify/Bench keep their own
+  * StreamDemo, GoldenGen). Verify/Bench keep their own
   * builders — they are driver-contract files and stay self-contained.
   */
 object LocalSession {

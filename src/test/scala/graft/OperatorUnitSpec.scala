@@ -107,7 +107,7 @@ class OperatorUnitSpec extends SparkSpec {
         "café latte", "日本語 テスト", "a😀b emoji", "é combining").toDF("text"))
     val diff = docs.select(
         TextFunctions.simhash32(col("text")).as("nat"),
-        TextFunctions.simhash32Declarative(col("text")).as("dec"))
+        graft.functions.TextTwins.simhash32Declarative(col("text")).as("dec"))
       .filter(col("nat") =!= col("dec")).count()
     assert(diff == 0L)
   }
@@ -122,13 +122,13 @@ class OperatorUnitSpec extends SparkSpec {
         "café latte", "日本語 テスト", "a😀b emoji", "é combining").toDF("text"))
     val diff = docs.select(
         TextFunctions.minhashSignature(col("text"), 16).as("nat"),
-        TextFunctions.minhashSignatureDeclarative(col("text"), 16).as("dec"))
+        graft.functions.TextTwins.minhashSignatureDeclarative(col("text"), 16).as("dec"))
       .filter(col("nat") =!= col("dec")).count()
     assert(diff == 0L)
     // and at a non-default width
     val diff4 = docs.select(
         TextFunctions.minhashSignature(col("text"), 4).as("nat"),
-        TextFunctions.minhashSignatureDeclarative(col("text"), 4).as("dec"))
+        graft.functions.TextTwins.minhashSignatureDeclarative(col("text"), 4).as("dec"))
       .filter(col("nat") =!= col("dec")).count()
     assert(diff4 == 0L)
     // shingle form, incl. the <n-token rows whose signature is k NULLs
@@ -136,7 +136,7 @@ class OperatorUnitSpec extends SparkSpec {
     // null-safe equality negation)
     val diffSh = docs.select(
         TextFunctions.shingleMinhashSignature(col("text"), 3, 8).as("nat"),
-        TextFunctions.shingleMinhashSignatureDeclarative(col("text"), 3, 8).as("dec"))
+        graft.functions.TextTwins.shingleMinhashSignatureDeclarative(col("text"), 3, 8).as("dec"))
       .filter(!(col("nat") <=> col("dec"))).count()
     assert(diffSh == 0L)
   }
@@ -153,7 +153,7 @@ class OperatorUnitSpec extends SparkSpec {
     for (n <- Seq(2, 3)) {
       val diff = docs.select(
           TextFunctions.tokenShingles(col("text"), n).as("nat"),
-          TextFunctions.tokenShinglesDeclarative(col("text"), n).as("dec"))
+          graft.functions.TextTwins.tokenShinglesDeclarative(col("text"), n).as("dec"))
         .filter(!(col("nat") <=> col("dec"))).count()
       assert(diff == 0L, s"n=$n")
     }
@@ -258,7 +258,7 @@ class OperatorUnitSpec extends SparkSpec {
       .toDF("a", "b")
     val rows = df.select(
       expr("cosine_similarity(a, b)").as("native"),
-      graft.functions.VectorFunctions.cosineHof($"a", $"b").as("hof")).collect()
+      graft.functions.VectorTwins.cosineHof($"a", $"b").as("hof")).collect()
     assert(java.lang.Double.doubleToLongBits(rows(0).getDouble(0)) ==
       java.lang.Double.doubleToLongBits(rows(0).getDouble(1)))
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
@@ -268,7 +268,7 @@ class OperatorUnitSpec extends SparkSpec {
     graft.expressions.VectorExpressions.register(spark)
     val r = Seq((Array(1f, 2f, 3f), Array(1f, 2f))).toDF("a", "b")
       .select(expr("cosine_similarity(a, b)").as("native"),
-        graft.functions.VectorFunctions.cosineHof($"a", $"b").as("hof"))
+        graft.functions.VectorTwins.cosineHof($"a", $"b").as("hof"))
       .collect().head
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
@@ -277,13 +277,13 @@ class OperatorUnitSpec extends SparkSpec {
     graft.expressions.VectorExpressions.register(spark)
     val f = Seq((Array(1f, 2f, 3f), Array(-1f, 0.5f, 2f))).toDF("a", "b")
       .select(expr("sq_dist(a, b)").as("native"),
-        graft.functions.VectorFunctions.sqDistHof($"a", $"b").as("hof"))
+        graft.functions.VectorTwins.sqDistHof($"a", $"b").as("hof"))
       .collect().head
     assert(java.lang.Double.doubleToLongBits(f.getDouble(0)) ==
       java.lang.Double.doubleToLongBits(f.getDouble(1)))
     val dd = Seq((Array(1.25, -2.5, 3.75), Array(0.5, 2.0, -1.25))).toDF("a", "b")
       .select(expr("sq_dist(a, b)").as("native"),
-        graft.functions.VectorFunctions.sqDistHof($"a", $"b").as("hof"))
+        graft.functions.VectorTwins.sqDistHof($"a", $"b").as("hof"))
       .collect().head
     assert(java.lang.Double.doubleToLongBits(dd.getDouble(0)) ==
       java.lang.Double.doubleToLongBits(dd.getDouble(1)))
@@ -293,7 +293,7 @@ class OperatorUnitSpec extends SparkSpec {
     graft.expressions.VectorExpressions.register(spark)
     val r = Seq((Array(1f, 2f, 3f), Array(1f, 2f))).toDF("a", "b")
       .select(expr("sq_dist(a, b)").as("native"),
-        graft.functions.VectorFunctions.sqDistHof($"a", $"b").as("hof"))
+        graft.functions.VectorTwins.sqDistHof($"a", $"b").as("hof"))
       .collect().head
     assert(r.isNullAt(0) && r.isNullAt(1))
     val n = Seq((Option(Array(1f, 2f)), Option.empty[Array[Float]])).toDF("a", "b")
@@ -305,13 +305,13 @@ class OperatorUnitSpec extends SparkSpec {
     graft.expressions.VectorExpressions.register(spark)
     val r = Seq((Array(1f, 2f, 3f), Array(-1f, 0.5f, 2f))).toDF("a", "b")
       .select(expr("dot_product(a, b)").as("native"),
-        graft.functions.VectorFunctions.dotHof($"a", $"b").as("hof"))
+        graft.functions.VectorTwins.dotHof($"a", $"b").as("hof"))
       .collect().head
     assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
       java.lang.Double.doubleToLongBits(r.getDouble(1)))
     val ragged = Seq((Array(1f, 2f, 3f), Array(1f, 2f))).toDF("a", "b")
       .select(expr("dot_product(a, b)").as("native"),
-        graft.functions.VectorFunctions.dotHof($"a", $"b").as("hof"))
+        graft.functions.VectorTwins.dotHof($"a", $"b").as("hof"))
       .collect().head
     assert(ragged.isNullAt(0) && ragged.isNullAt(1))
   }

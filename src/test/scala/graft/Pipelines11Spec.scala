@@ -66,7 +66,7 @@ class Pipelines11Spec extends SparkSpec {
   }
 
   test("sqrtQuota == q_pipe_12_sqrt_quota") {
-    val api = Pipelines.sqrtQuota(documents, "lang", 100L)
+    val api = Pipelines.sqrtQuota(documents, "lang")
       .orderBy("lang").collect().map(_.toSeq).toSeq
     val pinned = Registry.byName("q_pipe_12_sqrt_quota").fn(spark, sf)
       .collect().map(_.toSeq).toSeq

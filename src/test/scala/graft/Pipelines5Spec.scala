@@ -15,9 +15,11 @@ class Pipelines5Spec extends SparkSpec {
   test("rfmSegments == q_stream_27_rfm") {
     val api = Pipelines.rfmSegments(
       events.filter(col("event_type") === "purchase")
-        .select(col("user_id"), expr("unix_micros(ts)").as("us"),
-          floor(col("value") * 100 + 0.5).cast("long").as("cents")),
-      "user_id", "us", "cents")
+        .groupBy("user_id")
+        .agg(max(expr("unix_micros(ts)")).as("us"), count(lit(1)).as("n"),
+          sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents")),
+      "user_id", "us", "n", "cents")
+      .orderBy("r", "f", "m")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val pinned = Registry.byName("q_stream_27_rfm").fn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -31,7 +33,7 @@ class Pipelines5Spec extends SparkSpec {
           col("a.l_linenumber") + 1 === col("b.l_linenumber") &&
           col("a.l_suppkey") =!= col("b.l_suppkey"))
       .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-    val api = Pipelines.hits(e, "src", "dst", iters = 2)
+    val api = Pipelines.hits(e.distinct(), "src", "dst")
       .orderBy(col("authority").desc, col("node")).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val pinned = Registry.byName("q_graph_13_hits").fn(spark, sf)
@@ -50,7 +52,18 @@ class Pipelines5Spec extends SparkSpec {
           col("a.l_linenumber") + 1 === col("b.l_linenumber") &&
           col("a.l_suppkey") =!= col("b.l_suppkey"))
       .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-    val core = Pipelines.kCore(e, "src", "dst", k = 3)
+    // iterate the declared query's peel round to the fixpoint
+    val bidir = e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    var core = bidir.localCheckpoint()
+    var n = core.count()
+    var done = false
+    while (!done) {
+      val next = Pipelines.kCorePeel(core, "src", "dst", 3)._2.localCheckpoint()
+      val n2 = next.count()
+      done = n2 == n
+      core = next
+      n = n2
+    }
     val degs = core.groupBy("src").agg(count(lit(1)).as("dg"))
       .collect().map(_.getLong(1))
     // fixpoint: every surviving node keeps degree >= 3
@@ -68,17 +81,14 @@ class Pipelines5Spec extends SparkSpec {
         .select(col("o_orderkey"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")),
       "o_orderkey", "cents").collect().head
     val pinned = Registry.byName("q_stat_28_bootstrap_ci").fn(spark, sf).collect().head
-    def q2(x: Double) = math.floor(x / 100 * 100 + 0.5) / 100
-    assert(q2(api.getDouble(1)) == pinned.getDouble(1))
-    assert(q2(api.getDouble(2)) == pinned.getDouble(2))
+    assert(api.toSeq == pinned.toSeq)
   }
 
   test("macd == q_win_19_macd on the daily purchase series") {
     val daily = events.filter(col("event_type") === "purchase")
       .groupBy(expr("unix_micros(ts) div 86400000000").as("dday"))
       .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
-    val api = Pipelines.macd(daily, "dday", "cents")
-      .orderBy(col("dday").desc).limit(30)
+    val api = Pipelines.macd(daily, "dday", "cents", 30)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
     val pinned = Registry.byName("q_win_19_macd").fn(spark, sf)
@@ -90,9 +100,10 @@ class Pipelines5Spec extends SparkSpec {
     val ps = spark.createDataFrame(Seq(
       (1L, 0.001), (2L, 0.008), (3L, 0.039), (4L, 0.041), (5L, 0.042),
       (6L, 0.06), (7L, 0.074), (8L, 0.205), (9L, 0.212), (10L, 0.216)
-    )).toDF("id", "p")
-    val out = Pipelines.benjaminiHochberg(ps, "id", "p", alphaNum = 1, alphaDenom = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
+    )).toDF("id", "p").select(col("id"), floor(col("p") * 1000000 + 0.5).cast("long").as("p6"))
+    // m = 10 tests at alpha = 1/20: m/alpha = 200
+    val out = Pipelines.benjaminiHochberg(ps, "id", "p6", 200L)
+      .collect().map(r => (r.getLong(0), r.getInt(2).toLong, r.getLong(3)))
     // at alpha = 0.05: p(1)=0.001 <= 0.005 and p(2)=0.008 <= 0.010 pass,
     // p(3)=0.039 > 0.015 and every later rank fails its threshold,
     // so the step-up rejects exactly the first two
@@ -126,7 +137,7 @@ class Pipelines5Spec extends SparkSpec {
 
   test("softDedupWeights: effective size matches q_dedup_20 per source") {
     val w = Pipelines.softDedupWeights(
-      graft.sources.Tables(spark, sf, "documents"), "text")
+      graft.sources.Tables(spark, sf, "documents"), "source", "text")
     val api = w.groupBy("source")
       .agg((floor(sum("w6").cast("double") / 1000000 * 10000 + 0.5) / 10000).as("eff"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap

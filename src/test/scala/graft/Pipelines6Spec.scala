@@ -18,7 +18,8 @@ class Pipelines6Spec extends SparkSpec {
         col("c_custkey"), floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
 
   test("pareto == q_win_25_pareto at 4/5") {
-    val api = Pipelines.pareto(orderCents, "region", "c_custkey", "cents")
+    val perCustomer = orderCents.groupBy("region", "c_custkey").agg(sum("cents").as("cents"))
+    val api = Pipelines.pareto(perCustomer, "region", "c_custkey", "cents")
       .orderBy("region")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val pinned = Registry.byName("q_win_25_pareto").fn(spark, sf)
@@ -27,7 +28,8 @@ class Pipelines6Spec extends SparkSpec {
   }
 
   test("shareOfParent == q_agg_40_share_of_parent") {
-    val api = Pipelines.shareOfParent(orderCents, "region", "nation", "cents")
+    val perNation = orderCents.groupBy("region", "nation").agg(sum("cents").as("cents"))
+    val api = Pipelines.shareOfParent(perNation, "region", "cents")
       .orderBy("region", "nation")
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(3), r.getDouble(4)))
     val pinned = Registry.byName("q_agg_40_share_of_parent").fn(spark, sf)
@@ -49,12 +51,9 @@ class Pipelines6Spec extends SparkSpec {
 
   test("retentionCurve == q_stream_32_retention_curve at offsets 1/7/30") {
     val ev = graft.sources.Tables(spark, sf, "events")
-      .select(col("user_id"), expr("unix_micros(ts)").as("us"))
-    val api = Pipelines.retentionCurve(ev, "user_id", "us")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
+    val api = Pipelines.retentionCurve(ev, "user_id", "d").collect().head
     val pinned = Registry.byName("q_stream_32_retention_curve").fn(spark, sf).collect().head
-    assert(api(1L) == ((pinned.getLong(0), pinned.getLong(1))))
-    assert(api(7L) == ((pinned.getLong(0), pinned.getLong(2))))
-    assert(api(30L) == ((pinned.getLong(0), pinned.getLong(3))))
+    assert(api.toSeq == pinned.toSeq)
   }
 }

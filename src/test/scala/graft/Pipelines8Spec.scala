@@ -15,15 +15,17 @@ class Pipelines8Spec extends SparkSpec {
       col("l_suppkey").as("src"))
     val b = li.select(col("l_orderkey").as("ok2"), col("l_linenumber").as("ln2"),
       col("l_suppkey").as("dst"))
-    a.join(b, col("ok") === col("ok2") && (col("ln") + 1) === col("ln2"))
-      .filter(col("src") =!= col("dst")).select("src", "dst")
+    val e = a.join(b, col("ok") === col("ok2") && (col("ln") + 1) === col("ln2"))
+      .filter(col("src") =!= col("dst")).select("src", "dst").distinct()
+    // the wrappers take the symmetrized distinct list
+    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
   }
 
   test("knnGraph + hubnessHistogram == q_sim_35_hubness") {
     val v = graft.sources.Tables(spark, sf, "embeddings")
       .filter(col("vec_id") % 4 === 0).select(col("vec_id"), col("embedding"))
-    val api = Pipelines.hubnessHistogram(
-        Pipelines.knnGraph(v, "vec_id", "embedding", 5), "src", "dst")
+    val api = Pipelines.hubnessHistogram(v, "vec_id",
+        Pipelines.knnGraph(v, "vec_id", "embedding", 5), "dst")
       .orderBy("indeg").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val pinned = Registry.byName("q_sim_35_hubness").fn(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -34,7 +36,7 @@ class Pipelines8Spec extends SparkSpec {
     val e = graft.sources.Tables(spark, sf, "embeddings")
     val api = Pipelines.anisotropy(e, "label", "embedding")
       .orderBy("label").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      .map(r => (r.getInt(0).toLong, r.getLong(1), r.getDouble(2))).toSeq
     val pinned = Registry.byName("q_sim_38_anisotropy").fn(spark, sf).collect()
       .map(r => (r.getInt(0).toLong, r.getLong(1), r.getDouble(2))).toSeq
     assert(api == pinned)
@@ -42,8 +44,8 @@ class Pipelines8Spec extends SparkSpec {
 
   test("labelPropagation(3) community sizes == q_graph_18_labelprop") {
     val api = Pipelines.labelPropagation(sampledEdges, "src", "dst", 3)
-      .groupBy("label").agg(count(lit(1)).as("size"))
-      .orderBy(col("size").desc, col("label")).limit(20).collect()
+      .groupBy("lab").agg(count(lit(1)).as("size"))
+      .orderBy(col("size").desc, col("lab")).limit(20).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val pinned = Registry.byName("q_graph_18_labelprop").fn(spark, sf).collect()
       .map(r => (r.getLong(1), r.getLong(2))).toSeq
@@ -52,7 +54,9 @@ class Pipelines8Spec extends SparkSpec {
 
   test("adamicAdar top-20 == q_graph_19_adamic_adar") {
     val api = Pipelines.adamicAdar(sampledEdges, "src", "dst")
-      .orderBy(col("score").desc, col("a"), col("b")).limit(20).collect()
+      .orderBy(col("score6").desc, col("a"), col("b")).limit(20)
+      .select(col("a"), col("b"), col("n_common"), (col("score6").cast("double") / 1000000).as("score"))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     val pinned = Registry.byName("q_graph_19_adamic_adar").fn(spark, sf).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSeq
@@ -61,8 +65,8 @@ class Pipelines8Spec extends SparkSpec {
 
   test("modularity == q_graph_20_modularity; contributions sum to a sane Q") {
     val com = graft.sources.Tables(spark, sf, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val api = Pipelines.modularity(sampledEdges, "src", "dst", com, "s_suppkey", "s_nationkey")
+      .select(col("s_suppkey").as("node"), col("s_nationkey").as("c"))
+    val api = Pipelines.modularity(sampledEdges, "src", "dst", com)
       .orderBy("community").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     val pinned = Registry.byName("q_graph_20_modularity").fn(spark, sf).collect()
@@ -76,7 +80,7 @@ class Pipelines8Spec extends SparkSpec {
     val keyed = graft.sources.Tables(spark, sf, "documents")
       .select(col("doc_id"), col("lang"),
         md5(concat_ws(" ", sort_array(array_distinct(split(col("text"), " "))))).as("set_key"))
-    val api = Pipelines.splitLeakage(keyed, "doc_id", "set_key", "lang")
+    val api = Pipelines.splitLeakage(keyed, "doc_id", col("set_key"), "lang")
       .orderBy("lang").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     val pinned = Registry.byName("q_pipe_7_split_leakage").fn(spark, sf).collect()

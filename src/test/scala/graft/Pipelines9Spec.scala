@@ -12,7 +12,7 @@ class Pipelines9Spec extends SparkSpec {
   private def documents = graft.sources.Tables(spark, sf, "documents")
 
   test("kAnonymity == q_priv_1_kanon") {
-    val api = Pipelines.kAnonymity(customers, Seq("c_nationkey", "c_mktsegment"), 5)
+    val api = Pipelines.kAnonymity(customers, Seq("c_nationkey", "c_mktsegment"))
       .collect().head
     val pinned = Registry.byName("q_priv_1_kanon").fn(spark, sf).collect().head
     assert(api.toSeq == pinned.toSeq)
@@ -20,7 +20,7 @@ class Pipelines9Spec extends SparkSpec {
 
   test("lDiversity == q_priv_2_ldiversity") {
     val api = Pipelines.lDiversity(customers, Seq("c_nationkey", "c_mktsegment"),
-      floor(col("c_acctbal") / 1000).cast("long"), 3).collect().head
+      floor(col("c_acctbal") / 1000).cast("long")).collect().head
     val pinned = Registry.byName("q_priv_2_ldiversity").fn(spark, sf).collect().head
     assert(api.toSeq == pinned.toSeq)
   }
@@ -54,7 +54,7 @@ class Pipelines9Spec extends SparkSpec {
   test("fanoFactor == q_stream_38_fano") {
     val ev = graft.sources.Tables(spark, sf, "events")
       .select(col("event_type"), expr("unix_micros(ts) div 3600000000").as("hour_id"))
-    val api = Pipelines.fanoFactor(ev, "event_type", "hour_id")
+    val api = Pipelines.fanoFactor(ev, "event_type", col("hour_id"))
       .orderBy("event_type").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     val pinned = Registry.byName("q_stream_38_fano").fn(spark, sf).collect()
@@ -71,7 +71,7 @@ class Pipelines9Spec extends SparkSpec {
     val e = a.join(b, col("ok") === col("ok2") && (col("ln") + 1) === col("ln2"))
       .filter(col("src") =!= col("dst")).select("src", "dst").distinct()
     val bidir = e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    val api = Pipelines.degreeGini(bidir, "src", "dst").collect().head
+    val api = Pipelines.degreeGini(bidir, "src").collect().head
     val pinned = Registry.byName("q_graph_23_degree_gini").fn(spark, sf).collect().head
     assert(api.toSeq == pinned.toSeq)
   }
@@ -79,7 +79,7 @@ class Pipelines9Spec extends SparkSpec {
   test("shardBalance == q_pipe_9_shard_balance") {
     val api = Pipelines.shardBalance(
       documents.select(col("doc_id"), expr("n_chars div 5").as("toks")),
-      "doc_id", "toks", 16).collect().head
+      "doc_id", col("toks")).collect().head
     val pinned = Registry.byName("q_pipe_9_shard_balance").fn(spark, sf).collect().head
     assert(api.toSeq == pinned.toSeq)
   }
@@ -88,7 +88,7 @@ class Pipelines9Spec extends SparkSpec {
     val li = graft.sources.Tables(spark, sf, "lineitem")
       .select(col("l_quantity").cast("long").as("x"),
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-    val api = Pipelines.logitStep(li, "x", "y").collect().head
+    val api = Pipelines.logitStep(li, col("x"), col("y") === 1).collect().head
     val pinned = Registry.byName("q_ml_12_logit_step").fn(spark, sf).collect().head
     assert(api.toSeq == pinned.toSeq)
   }
@@ -153,8 +153,8 @@ class Pipelines9Spec extends SparkSpec {
     val api = Pipelines.decontaminationCost(
       docs.filter(col("doc_id") >= 5)
         .select(col("doc_id"), col("source"), col("text"), expr("n_chars div 5").as("toks")),
-      "doc_id", "source", "text", "toks",
-      docs.filter(col("doc_id") < 5), "text", 3, 0.05)
+      "doc_id", "source", "text", col("toks"),
+      docs.filter(col("doc_id") < 5))
       .orderBy("source").collect().map(_.toSeq).toSeq
     val pinned = Registry.byName("q_pipe_10_decontam_cost").fn(spark, sf)
       .collect().map(_.toSeq).toSeq

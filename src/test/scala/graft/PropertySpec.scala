@@ -137,7 +137,7 @@ class PropertySpec extends SparkSpec {
       // scores descending by construction: rank i+1 has score -i
       val rows = rels.zipWithIndex.map { case (r, i) => (1L, -i.toDouble, i.toLong, r) }
       val got = graft.api.Pipelines.ndcgAtK(
-        rows.toDF("g", "score", "id", "rel"), "g", "score", "id", "rel")
+        rows.toDF("g", "score", "id", "rel"), "g", "score", "id", $"rel")
         .collect().head
       val ndcg = got.getDouble(3)
       assert(ndcg >= 0.0 && ndcg <= 1.0, s"sample $gi: ndcg $ndcg out of bounds")
@@ -155,11 +155,12 @@ class PropertySpec extends SparkSpec {
   test("kfold partitions every id into [0,k) and is stable under union") {
     for (ids <- samples(Gen.nonEmptyListOf(Gen.chooseNum(0L, 100000L)).map(_.distinct), 5)) {
       val df = ids.toDF("id")
-      val folds = graft.api.Pipelines.kfold(df, "id", 5)
+      val folds = df.withColumn("fold", graft.api.Pipelines.kfold("id"))
       assert(folds.filter($"fold" < 0 || $"fold" >= 5).count() == 0)
       assert(folds.count() == ids.length)
       // growing the corpus never moves an existing id's fold
-      val bigger = graft.api.Pipelines.kfold((ids ++ Seq(999999L)).distinct.toDF("id"), "id", 5)
+      val bigger = (ids ++ Seq(999999L)).distinct.toDF("id")
+        .withColumn("fold", graft.api.Pipelines.kfold("id"))
       val before = folds.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       bigger.collect().foreach(r =>
         before.get(r.getLong(0)).foreach(f => assert(f == r.getLong(1))))
