@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main. Protocol (same as BASELINE.md's binding numbers):
   * one full untimed warm pass (absorbs codegen + JIT churn — with ~130
@@ -18,8 +18,32 @@ import org.apache.spark.sql.SparkSession
   *  - stdout gets per-family subtotal lines plus ONE compact JSON line
   *    (per-query seconds rounded to 3 decimals) that stays well under
   *    any capture limit.
+  *
+  * A query that throws in either timed pass is named in the record's
+  * `failed` list; its `queries` entry is the time until it threw, not a
+  * timing of the query.
   */
 object Bench {
+
+  /** One timed pass: each query's wall seconds (`count()` after
+    * construction), and the names of the queries that threw. Each
+    * query's localCheckpoint residue is dropped outside the timer, so
+    * storage blocks cannot accumulate across the passes and squeeze
+    * later queries' execution memory (the r8 run1->run2 drift); the
+    * shared SampledEdges cache is kept.
+    */
+  private[graft] def timedPass(spark: SparkSession, sfDir: String,
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): (Map[String, Double], Set[String]) = {
+    val failed = Set.newBuilder[String]
+    val times = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).count() catch { case _: Throwable => failed += name }
+      val dt = (System.nanoTime() - t0) / 1e9
+      BlockCleanup(spark)
+      name -> dt
+    }.toMap
+    (times, failed.result())
+  }
 
   /** The default 240 MB JIT code cache is exhausted by ~300 distinct
     * generated queries (measured: late queries deoptimize to the
@@ -80,19 +104,10 @@ object Bench {
     // contaminated round-over-round comparisons; the min of two runs is
     // the steady-state signal). Both raw runs land beside the merged
     // record for the audit trail.
-    def timedPass(): Map[String, Double] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // outside the timer: drop this query's localCheckpoint residue so
-      // storage blocks cannot accumulate across 3 x 603 invocations and
-      // squeeze later queries' execution memory (the r8 run1->run2
-      // drift); the shared SampledEdges cache is kept
-      BlockCleanup(spark)
-      name -> dt
-    }
-    val run1 = timedPass()
-    val run2 = timedPass()
+    val (run1, failed1) = timedPass(spark, sfDir, selected)
+    val (run2, failed2) = timedPass(spark, sfDir, selected)
+    val failedNames = (failed1 ++ failed2).toSeq.sorted
+    val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val results = run1.map { case (name, s1) => name -> math.min(s1, run2(name)) }
     val total = if (results.nonEmpty) results.values.sum else 0.0
 
@@ -109,7 +124,7 @@ object Bench {
     val runsKey =
       f"""{"run1_total":${run1.values.sum}%.3f,"run2_total":${run2.values.sum}%.3f}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results, _.toString)},"sf":"$sfDir","runs":$runsKey,"min":$total,"over_budget":$overBudget}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results, _.toString)},"sf":"$sfDir","runs":$runsKey,"min":$total,"over_budget":$overBudget,"failed":$failed}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
@@ -125,10 +140,11 @@ object Bench {
     results.filter(_._2 > 5.0).toSeq.sortBy(-_._2).foreach { case (n, s) =>
       println(f"BENCH_WARN  $n%-34s ${s}%6.2f sec ${if (s > 10) "OVER ACCEPTANCE BOUND" else "over 5s budget"}")
     }
+    failedNames.foreach(n => println(s"BENCH_FAIL  $n threw in a timed pass"))
     println(s"BENCH_FULL_JSON written to $outPath (${results.size} queries)")
 
     val compact = json(results, v => f"$v%.3f")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$compact,"sf":"$sfDir","queries_file":"$outPath","runs":$runsKey,"min":$total,"over_budget":$overBudget}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$compact,"sf":"$sfDir","queries_file":"$outPath","runs":$runsKey,"min":$total,"over_budget":$overBudget,"failed":$failed}""")
     graft.sources.SampledEdges.clear()
     spark.stop()
   }

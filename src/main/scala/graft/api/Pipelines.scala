@@ -901,7 +901,8 @@ object Pipelines {
           .otherwise(0.0).as("mean_gap_min"))
   }
 
-  /** DAU / trailing-7-day WAU / stickiness per day. WAU avoids both a
+  /** DAU / trailing-7-day WAU / stickiness per day over (userCol,
+    * dayCol) activity rows, deduplicated here. WAU avoids both a
     * windowed COUNT DISTINCT (not expressible as a window) and a
     * days×users join: each (user, active-day) row CONTRIBUTES itself to
     * the 7 calendar days it keeps the user weekly-active (explode of a
@@ -909,9 +910,8 @@ object Pipelines {
     * O(7·|user-days|). Warm-up days (first 6) are excluded. Two
     * (user, day)-keyed distincts + one day-keyed agg; all counts exact.
     */
-  def dauWau(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
-    val ud = df.select(col(userCol), expr(s"unix_micros($tsCol) div 86400000000").as("day"))
-      .distinct()
+  def dauWau(df: DataFrame, userCol: String, dayCol: String): DataFrame = {
+    val ud = df.select(col(userCol), col(dayCol).as("day")).distinct()
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val contrib = ud.select(col(userCol),
         explode(sequence(col("day"), col("day") + 6)).as("wday"))
@@ -1630,14 +1630,19 @@ object Pipelines {
   def pathNgrams(df: DataFrame, idCol: String, tsCol: String, typeCol: String,
       tieCol: String): DataFrame = {
     val w = Window.partitionBy(idCol).orderBy(tsCol, tieCol)
-    df.select(col(idCol), col(typeCol),
+    topPathNgrams(df.select(col(idCol), col(typeCol),
         lead(col(typeCol), 1).over(w).as("e2"),
         lead(col(typeCol), 2).over(w).as("e3"))
-      .filter(col("e2").isNotNull && col("e3").isNotNull)
-      .groupBy(concat_ws(">", col(typeCol), col("e2"), col("e3")).as("path"))
+      .filter(col("e2").isNotNull && col("e3").isNotNull), typeCol)
+  }
+
+  /** The counting tail of [[pathNgrams]] over (typeCol, e2, e3) trigram
+    * rows — also what the online `Streams.pathTrigramStream` emits.
+    */
+  private[graft] def topPathNgrams(trigrams: DataFrame, typeCol: String): DataFrame =
+    trigrams.groupBy(concat_ws(">", col(typeCol), col("e2"), col("e3")).as("path"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path")).limit(10)
-  }
 
   /** Churn counts at 3/7/14-day inactivity horizons, measured against
     * the input's last observed day: one per-id max + one scalar max

@@ -29,10 +29,8 @@ object EventOps {
         |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin) { (s, d) =>
       // Tumbling 1h windows: Spark's window() aligns to the 1970 epoch,
       // as does DuckDB's time_bucket for hour buckets.
-      Tables(s, d, "events")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-        .select(col("window.start").as("win_start"), col("event_type"), col("n"), col("sum_value"))
+      graft.streaming.Streams.tumblingCounts(Tables(s, d, "events"))
+        .withColumn("sum_value", round(col("sum_value"), 2))
         .orderBy("win_start", "event_type")
     },
 

@@ -155,40 +155,10 @@ object Round10Ops {
       // q_stream_22 picks (a 1-µs spike to 400 and a steady hour at
       // 300 size a pool very differently). Boundaries collapse to
       // DISTINCT timestamps first (net delta per µs), so the sweep has
-      // no ties anywhere: the running level is the q_stream_22
-      // range-partitioned prefixSum, interval lengths come from an
-      // exactGlobalRank self-join on rank+1 (never a one-task lead
-      // window), and the level histogram is bounded by max concurrency.
-      // All integers until the final share division.
-      val sess = Tables(s, d, "events")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(unix_micros(min("ts")).as("st"), unix_micros(max("ts")).as("en"))
-        .select(col("st"), col("en"))
-        .localCheckpoint()
-      val pts = sess.select(col("st").as("t"), lit(1L).as("delta"))
-        .union(sess.select((col("en") + 1).as("t"), lit(-1L).as("delta")))
-      val net = pts.groupBy("t").agg(sum("delta").as("net"))
-      // ONE range-partitioned pass (r14): groupRankPrefix under a
-      // constant group key emits the running level (inclusive prefix
-      // sum of net) AND the global rank off the same shuffle — the
-      // previous prefixSum→exactGlobalRankByN chain range-shuffled the
-      // boundary table twice and ran two sampling jobs for the same
-      // two columns. Identical integers: t is distinct (grouped), so
-      // the order is total; rank and running sum are the same
-      // two-pass offsets either way.
-      val rk = graft.api.Pipelines.groupRankPrefix(
-        net.withColumn("__g", lit(1)), Seq("__g"), Seq(col("t")),
-        "rk", "__n", Seq(("net", "conc", "")))
-      val nxt = rk.select((col("rk") - 1).as("rk"), col("t").as("tn"))
-      val lv = rk.join(nxt, "rk")
-        .groupBy("conc").agg(sum(col("tn") - col("t")).as("total_us"))
-      val tot = lv.agg(sum("total_us").as("w"))
-      lv.crossJoin(broadcast(tot))
-        .select(col("conc").cast("long").as("concurrency"),
-          col("total_us").cast("long").as("total_us"),
-          (floor(col("total_us").cast("double") / col("w") * 1000000 + 0.5) / 1000000)
-            .as("share"))
-        .orderBy("concurrency")
+      // no ties anywhere; the tail is Streams.concProfileFinish, over
+      // the same session spans as q_stream_22.
+      graft.streaming.Streams.concProfileFinish(
+        graft.streaming.Streams.sessionSpans(Tables(s, d, "events")))
     }
   )
 }

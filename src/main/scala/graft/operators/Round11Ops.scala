@@ -3,7 +3,6 @@ package graft.operators
 import graft.Q
 import graft.functions.Num
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-11 surface additions (SURVEY §2.11cb): the round's machinery
@@ -98,21 +97,14 @@ object Round11Ops {
       // the BAR table — calendar-bounded rows per partition, catalog-
       // bounded partitions, never the event stream.
       val vc = floor(col("value") * 100 + 0.5).cast("long")
-      val bars = Tables(s, d, "events")
+      graft.streaming.Streams.barGapsFinish(Tables(s, d, "events")
         .select(col("event_type"), window(col("ts"), "6 hours").as("w"),
           col("ts"), col("event_id"), vc.as("vcents"))
         .groupBy(col("event_type"), col("w"))
         .agg(min_by(col("vcents"), struct(col("ts"), col("event_id"))).as("open_c"),
           max_by(col("vcents"), struct(col("ts"), col("event_id"))).as("close_c"))
         .select(col("event_type"), col("w.start").as("bar"),
-          col("open_c"), col("close_c"))
-      val wl = Window.partitionBy("event_type").orderBy("bar")
-      bars.withColumn("prev_close", lag("close_c", 1).over(wl))
-        .filter(col("prev_close").isNotNull)
-        .select(col("event_type"), col("bar"),
-          (col("open_c") - col("prev_close")).as("gap_cents"),
-          ((col("open_c") - col("prev_close")).cast("double") / 100).as("gap"))
-        .orderBy("event_type", "bar")
+          col("open_c"), col("close_c")))
     },
 
     // Empirical LSH S-curve: P(candidate | Jaccard bin) for the 4×4

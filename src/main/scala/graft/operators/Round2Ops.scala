@@ -158,13 +158,8 @@ object Round2Ops {
       // as WindowGroupLimit (per-partition heaps, no full sort of the
       // aggregate). Streaming twin: the same agg under readStream with
       // the rank in foreachBatch.
-      val agg = Tables(s, d, "events")
-        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-      val w = Window.partitionBy("win_start").orderBy(col("n").desc, col("event_type"))
-      agg.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 2)
+      graft.streaming.Streams.rankTopK(
+          graft.streaming.Streams.topkPerWindow(Tables(s, d, "events")), 2)
         .orderBy("win_start", "rk")
     },
 
@@ -379,17 +374,16 @@ object Round2Ops {
       val bar = window(col("ts"), "6 hours")
       val wa = Window.partitionBy(col("event_type"), col("bar")).orderBy(col("ts"), col("event_id"))
       val wd = Window.partitionBy(col("event_type"), col("bar")).orderBy(col("ts").desc, col("event_id").desc)
-      Tables(s, d, "events")
+      graft.streaming.Streams.ohlcFinish(Tables(s, d, "events")
         .withColumn("bar", bar)
         .withColumn("rn_a", row_number().over(wa))
         .withColumn("rn_d", row_number().over(wd))
         .groupBy(col("event_type"), col("bar.start").as("bar"))
-        .agg(round(max(when(col("rn_a") === 1, col("value"))), 2).as("open"),
-          round(max("value"), 2).as("high"),
-          round(min("value"), 2).as("low"),
-          round(max(when(col("rn_d") === 1, col("value"))), 2).as("close"),
-          count(lit(1)).as("n"))
-        .orderBy("event_type", "bar")
+        .agg(max(when(col("rn_a") === 1, col("value"))).as("open_raw"),
+          max("value").as("high_raw"),
+          min("value").as("low_raw"),
+          max(when(col("rn_d") === 1, col("value"))).as("close_raw"),
+          count(lit(1)).as("n")))
     },
 
     Q("q_agg_21_corr_exact",
@@ -600,7 +594,7 @@ object Round2Ops {
       // streaming anomaly shape (state = 20-row ring buffer).
       val vc = floor(col("value") * 100 + 0.5).cast("long")
       val win = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-20, -1)
-      Tables(s, d, "events")
+      graft.streaming.Streams.rollingAnomalyFinish(Tables(s, d, "events")
         .select(col("event_id"), col("user_id"), col("ts"), vc.as("vc"))
         // one projection → one Window node (separate withColumns left two)
         .select(col("event_id"), col("user_id"), col("vc"),
@@ -609,11 +603,7 @@ object Round2Ops {
           count(lit(1)).over(win).as("n"))
         .filter(col("n") >= 10 &&
           (col("n") * col("vc") - col("s")) * (col("n") * col("vc") - col("s")) * (col("n") - 1) >
-            lit(9) * col("n") * (col("n") * col("sq") - col("s") * col("s")))
-        .select(col("event_id"), col("user_id"),
-          round(col("vc").cast("double") / 100, 2).as("value"),
-          round(col("s").cast("double") / col("n") / 100, 2).as("mu"))
-        .orderBy("user_id", "event_id")
+            lit(9) * col("n") * (col("n") * col("sq") - col("s") * col("s"))))
     },
 
     Q("q_agg_19_histogram",

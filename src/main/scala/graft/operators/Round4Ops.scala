@@ -316,19 +316,8 @@ object Round4Ops {
       // has σ=0 (common at tiny sf) — its z is defined as 0.
       val ev = Tables(s, d, "events")
         .select(col("event_type"), expr("unix_micros(ts) div 60000000").as("minute_id"))
-      val byType = Window.partitionBy("event_type")
-      val c = ev.groupBy("event_type", "minute_id").agg(count(lit(1)).as("n"))
-        .withColumn("mc", count(lit(1)).over(byType))
-        .withColumn("s1", sum("n").over(byType).cast("long"))
-        .withColumn("s2", sum(col("n") * col("n")).over(byType).cast("long"))
-      val den = col("mc").cast("double") * col("s2").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double")
-      c.select(col("event_type"), col("minute_id"), col("n"),
-          when(den > 0,
-            round((col("mc").cast("double") * col("n").cast("double") - col("s1").cast("double"))
-              / sqrt(den), 6)).otherwise(0.0).as("z"))
-        .orderBy(col("z").desc, col("event_type"), col("minute_id"))
-        .limit(10)
+      graft.streaming.Streams.rateBurstFinish(
+        ev.groupBy("event_type", "minute_id").agg(count(lit(1)).as("n")))
     },
 
     Q("q_dedup_11_ensemble",

@@ -3,7 +3,6 @@ package graft.operators
 import graft.Q
 import graft.functions.VectorFunctions.Duck
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-5 continuation (SURVEY §2.11ak): training-mixture rebalancing,
@@ -167,16 +166,10 @@ object Round5abOps {
         .groupBy("user_id").agg(max(expr("unix_micros(ts)")).as("c_us"))
       val ev = Tables(s, d, "events")
         .select(col("user_id").as("eu"), col("event_type"), expr("unix_micros(ts)").as("us"))
-      val conv = lastc.join(ev, col("user_id") === col("eu"))
+      graft.streaming.Streams.abandonmentByWeekday(lastc.join(ev, col("user_id") === col("eu"))
         .groupBy("user_id", "c_us")
         .agg(max(when(col("event_type") === "purchase" && col("us") > col("c_us")
-          && col("us") <= col("c_us") + 86400000000L, 1).otherwise(0)).cast("long").as("converted"))
-      conv.groupBy(((col("c_us") / 86400000000L).cast("long") % 7).as("weekday"))
-        .agg(count(lit(1)).as("n_users"),
-          sum(lit(1L) - col("converted")).as("n_abandoned"),
-          (floor(sum(lit(1L) - col("converted")).cast("double") / count(lit(1)) * 1000000 + 0.5)
-            / 1000000).as("abandon_rate"))
-        .orderBy("weekday")
+          && col("us") <= col("c_us") + 86400000000L, 1).otherwise(0)).cast("long").as("converted")))
     }
   )
 }

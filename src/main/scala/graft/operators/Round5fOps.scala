@@ -93,7 +93,9 @@ object Round5fOps {
         |WHERE dau.day >= b.d0 + 6 ORDER BY day""".stripMargin) { (s, d) =>
       // DAU / WAU / stickiness: daily active users, trailing-7-day
       // active users, and their ratio (the DAU/WAU engagement metric).
-      graft.api.Pipelines.dauWau(Tables(s, d, "events"), "user_id", "ts")
+      graft.api.Pipelines.dauWau(Tables(s, d, "events")
+          .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day")),
+        "user_id", "day")
         .orderBy("day")
     },
 

@@ -268,18 +268,9 @@ object Round5gOps {
       // top-5 rank has a deterministic earliest-minute tiebreak.
       // Scale: minute-keyed map-side agg; the rank runs on the minute
       // table (TakeOrdered-sized top-5).
-      val m = Tables(s, d, "events")
+      graft.streaming.Streams.peakLoadFinish(Tables(s, d, "events")
         .groupBy(expr("unix_micros(ts) div 60000000").as("minute"))
-        .agg(count(lit(1)).as("n"))
-      val r = m.select(col("minute"), col("n"),
-        row_number().over(Window.orderBy(col("n").desc, col("minute"))).cast("long").as("rnk"),
-        count(lit(1)).over(Window.partitionBy()).as("nm"),
-        sum("n").over(Window.partitionBy()).as("tot"))
-      r.filter(col("rnk") <= 5)
-        .select(col("rnk"), col("minute").cast("long").as("minute"), col("n"),
-          col("nm").as("n_minutes"),
-          round(col("n").cast("double") / (col("tot").cast("double") / col("nm")), 4).as("load_factor"))
-        .orderBy("rnk")
+        .agg(count(lit(1)).as("n")))
     }
   )
 }

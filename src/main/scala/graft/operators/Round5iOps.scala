@@ -255,19 +255,8 @@ object Round5iOps {
       // range-partitioned prefixSum (per-partition totals + stitched
       // offsets), NOT a single-partition window, and the peak pick is
       // a TakeOrdered(1).
-      val sess = Tables(s, d, "events")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(unix_micros(min("ts")).as("st"), unix_micros(max("ts")).as("en"))
-        .select(col("st"), col("en"))
-        .localCheckpoint()
-      val pts = sess.select(col("st").as("t"), lit(1).as("delta"))
-        .union(sess.select((col("en") + 1).as("t"), lit(-1).as("delta")))
-      val run = graft.api.Pipelines.prefixSum(pts, Seq("t", "delta"), "delta", "conc")
-      val mx = run.orderBy(col("conc").desc, col("t")).limit(1)
-      val nSess = sess.agg(count(lit(1)).as("n_sessions"))
-      mx.crossJoin(broadcast(nSess))
-        .select(col("n_sessions"), col("conc").cast("long").as("max_concurrent"),
-          col("t").cast("long").as("at_us"))
+      graft.streaming.Streams.concurrencyFinish(
+        graft.streaming.Streams.sessionSpans(Tables(s, d, "events")))
     },
 
     Q("q_agg_37_ratio_ci",

@@ -61,29 +61,10 @@ object Round5jOps {
       // first-day table; churn is an anti-join shape on the shifted
       // day. All counts exact. Scale: the (user, day) table is the
       // corpus collapsed; windows partition per user.
-      val uw = Tables(s, d, "events").filter(col("event_type") === "purchase")
-        .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
-        .distinct()
-        .localCheckpoint()
-      val f = uw.groupBy("user_id").agg(min("day").as("first_day"))
-      val lagw = uw.withColumn("prev_active",
-        lag("day", 1).over(Window.partitionBy("user_id").orderBy("day")))
-      val cls = lagw.join(f, "user_id")
-        .select(col("day"),
-          when(col("day") === col("first_day"), "new")
-            .when(col("prev_active") === col("day") - 1, "retained")
-            .otherwise("resurrected").as("status"))
-      val act = cls.groupBy("day").agg(
-        sum(when(col("status") === "new", 1).otherwise(0)).cast("long").as("n_new"),
-        sum(when(col("status") === "retained", 1).otherwise(0)).cast("long").as("n_retained"),
-        sum(when(col("status") === "resurrected", 1).otherwise(0)).cast("long").as("n_resurrected"))
-      val next = uw.select(col("user_id"), (col("day") - 1).as("day"))
-      val churn = uw.join(next, Seq("user_id", "day"), "left_anti")
-        .groupBy((col("day") + 1).as("day")).agg(count(lit(1)).as("n_churned"))
-      act.join(churn, Seq("day"), "left")
-        .select(col("day").cast("long").as("day"), col("n_new"), col("n_retained"),
-          col("n_resurrected"), coalesce(col("n_churned"), lit(0L)).as("n_churned"))
-        .orderBy("day")
+      graft.streaming.Streams.lifecycleFinish(
+        Tables(s, d, "events").filter(col("event_type") === "purchase")
+          .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
+          .distinct())
     },
 
     Q("q_dedup_16_minhash_width",

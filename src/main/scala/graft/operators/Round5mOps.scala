@@ -151,19 +151,9 @@ object Round5mOps {
       // group; the declining flag tests the covariance sign in DOUBLE
       // identically both engines. Scale: (type, day) map-side agg then
       // a per-type 5-number reduction.
-      val dd = Tables(s, d, "events")
+      graft.streaming.Streams.volumeTrendFinish(Tables(s, d, "events")
         .groupBy(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
-      val si = dd.withColumn("x",
-        (row_number().over(Window.partitionBy("event_type").orderBy("day")) - 1).cast("long"))
-      val st = si.groupBy("event_type").agg(count(lit(1)).as("n"), sum("x").as("sx"),
-        sum("y").as("sy"), sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
-      val cov = col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy")
-      val vx = col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx")
-      st.select(col("event_type"), col("n").as("n_days"),
-          round(cov / vx, 4).as("events_per_day_trend"),
-          when(cov < 0, 1L).otherwise(0L).as("declining"))
-        .orderBy("event_type")
+        .agg(count(lit(1)).as("y")))
     },
 
     Q("q_ml_7_dim_screening",

@@ -123,17 +123,11 @@ object Round6eOps {
       // |types|²-bounded aggregate of exact integer microsecond sums;
       // the mean divides once at emission.
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      Tables(s, d, "events")
+      graft.streaming.Streams.dwellFinish(Tables(s, d, "events")
         .select(col("user_id"), col("event_type"),
           lag(col("event_type"), 1).over(w).as("prev_type"),
           (expr("unix_micros(ts)") - lag(expr("unix_micros(ts)"), 1).over(w)).as("gap"))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(concat_ws(">", col("prev_type"), col("event_type")).as("step"))
-        .agg(count(lit(1)).as("n"),
-          (floor(sum("gap").cast("double") / count(lit(1)) / 1000000 * 1000 + 0.5) / 1000)
-            .as("mean_gap_s"),
-          expr("max(gap) div 1000000").as("max_gap_s"))
-        .orderBy(col("n").desc, col("step")).limit(10)
+        .filter(col("prev_type").isNotNull))
     },
 
     // Friendship paradox on the handoff graph: "your neighbors have

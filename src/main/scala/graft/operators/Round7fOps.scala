@@ -101,25 +101,9 @@ object Round7fOps {
         | floor((CAST(n_we AS DOUBLE) / d_we) / (CAST(n_wd AS DOUBLE) / d_wd)
         |   * 1000000 + 0.5) / 1000000 AS lift
         |FROM c, days ORDER BY event_type""".stripMargin) { (s, d) =>
-      val e = Tables(s, d, "events")
-        .select(col("event_type"),
-          expr(s"unix_micros(ts) div $DAY_US").as("day"))
-        .withColumn("we",
-          when((col("day") + 4) % 7 === 0 || (col("day") + 4) % 7 === 6, 1L)
-            .otherwise(0L))
-        .localCheckpoint()
-      val days = e.agg(
-        countDistinct(when(col("we") === 1, col("day"))).as("d_we"),
-        countDistinct(when(col("we") === 0, col("day"))).as("d_wd"))
-      e.groupBy("event_type")
-        .agg(sum("we").as("n_we"), sum(lit(1L) - col("we")).as("n_wd"))
-        .crossJoin(broadcast(days))
-        .select(col("event_type"), col("n_we"), col("n_wd"),
-          Num.round(col("n_we").cast("double") / col("d_we"), 4).as("weekend_rate"),
-          Num.round(col("n_wd").cast("double") / col("d_wd"), 4).as("weekday_rate"),
-          Num.round((col("n_we").cast("double") / col("d_we"))
-            / (col("n_wd").cast("double") / col("d_wd")), 6).as("lift"))
-        .orderBy("event_type")
+      graft.streaming.Streams.weekendLiftFinish(
+        Tables(s, d, "events").select(col("event_type"), expr(s"unix_micros(ts) div $DAY_US").as("day")),
+        sum("we"), sum(lit(1L) - col("we")))
     },
 
     // Year-over-year monthly revenue growth: each month joined to the

@@ -1,10 +1,7 @@
 package graft.operators
 
 import graft.Q
-import graft.functions.Num
 import graft.sources.Tables
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-7 continuation (SURVEY §2.11bv): structure wave — double-BFS
@@ -17,8 +14,6 @@ import org.apache.spark.sql.functions._
   * arithmetic is pure integer ceiling division.
   */
 object Round7vOps {
-
-  private def D(c: Column) = c.cast("double")
 
   val all: Seq[Q] = Seq(
 
@@ -86,19 +81,9 @@ object Round7vOps {
         | floor(CAST(max(n) AS DOUBLE)
         |   / max(CASE WHEN rn = (nh + 1) // 2 THEN n END) * 1000000 + 0.5) / 1000000 AS peak_over_p50
         |FROM r""".stripMargin) { (s, d) =>
-      val h = Tables(s, d, "events")
+      graft.streaming.Streams.loadPercentilesFinish(Tables(s, d, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val r = h.select(col("n"),
-        row_number().over(Window.orderBy(col("n"), col("hr"))).as("rn"),
-        count(lit(1)).over(Window.partitionBy()).as("nh"))
-      r.agg(max(col("nh")).as("n_hours"),
-          max(when(col("rn") === expr("(nh + 1) div 2"), col("n"))).as("p50"),
-          max(when(col("rn") === expr("(9 * nh + 9) div 10"), col("n"))).as("p90"),
-          max(when(col("rn") === expr("(99 * nh + 99) div 100"), col("n"))).as("p99"),
-          max(col("n")).as("peak"))
-        .select(col("n_hours"), col("p50"), col("p90"), col("p99"), col("peak"),
-          Num.round(D(col("peak")) / col("p50"), 6).as("peak_over_p50"))
+        .agg(count(lit(1)).as("n")))
     },
 
     // Struct-typed join keys: the composite (orderkey, linenumber) key

@@ -1,17 +1,29 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.Num
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
 
-/** Structured Streaming twins of the §2.10 batch queries.
+/** Structured Streaming forms of the §2.10 queries.
   *
-  * The batch forms in graft.operators.EventOps are the oracle-checkable
-  * contract; these builders run the SAME aggregations under `readStream`,
-  * proving the operators are genuinely streaming-capable. Unit tests
-  * drive them with a file source + memory sink + processAllAvailable.
+  * Each capability has one body, a function of a `DataFrame`. A declared
+  * batch query calls it on `Tables(...)`; `StreamingSpec` calls it on
+  * what a `readStream` run settled into a memory sink and checks the two
+  * agree. Three kinds of def live here:
+  *  - stateless cores (`enrichedSegmentCounts`, `tumblingCounts`,
+  *    `topkPerWindow`, `sessionSpans`) that the declared query runs too —
+  *    on a batch frame the analyzer drops `withWatermark`, so the batch
+  *    plan is the query's own;
+  *  - the `*Finish` tails: the declared query's tail, run by the query
+  *    on its batch core and by the tests on the settled stream;
+  *  - stream-only builders: the watermarked window cores whose batch
+  *    query groups differently, and the `flatMapGroupsWithState` /
+  *    `mapGroupsWithState` state machines, whose watermark or state is
+  *    what bounds streaming memory. `tools/wrapper_lint.py` lists each
+  *    with its reason.
   *
   * Scale notes: watermarks bound state (events later than the mark are
   * dropped, closed windows are evicted); session windows merge per key —
@@ -63,7 +75,7 @@ object Streams {
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
 
   /** Tumbling 1h counts/sums per event_type with a 10min watermark —
-    * streaming twin of q_stream_1_tumbling.
+    * the core of q_stream_1_tumbling, which rounds `sum_value` on top.
     */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
@@ -82,26 +94,25 @@ object Streams {
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("session_start"), col("user_id"), col("n_events"))
 
-  /** Windowed top-k — streaming twin of q_stream_8_topk_window: the
-    * watermarked 6h window×type counts stream into foreachBatch, where
-    * the per-window rank runs on each (tiny, window×type-sized) batch.
-    * Ranking is not an incremental-state operator, so it belongs on the
-    * batch side of the sink — the standard pattern for top-k over
-    * streaming aggregates.
+  /** Windowed top-k core of q_stream_8_topk_window: the watermarked 6h
+    * window×type counts stream into foreachBatch, where [[rankTopK]]
+    * runs on each (tiny, window×type-sized) batch. Ranking is not an
+    * incremental-state operator, so it belongs on the batch side of the
+    * sink — the standard pattern for top-k over streaming aggregates.
     */
-  def topkPerWindow(events: DataFrame, k: Int): DataFrame =
+  def topkPerWindow(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("event_type"), col("n"))
 
-  /** The rank step applied per emitted batch (foreachBatch / memory-sink
-    * post-processing). Identical expression to q_stream_8's batch rank.
+  /** The per-window rank of q_stream_8, applied per emitted batch
+    * (foreachBatch / memory-sink post-processing). The rk <= k filter
+    * plans as WindowGroupLimit (per-partition heaps, no full sort).
     */
   def rankTopK(batch: DataFrame, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("win_start").orderBy(col("n").desc, col("event_type"))
+    val w = Window.partitionBy("win_start").orderBy(col("n").desc, col("event_type"))
     batch.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
   }
 
@@ -137,8 +148,7 @@ object Streams {
     * session. Uses the same inclusive-gap merge rule as session_window
     * (an event at exactly prev+gap merges) so the two agree exactly.
     */
-  def sessionize(ds: org.apache.spark.sql.Dataset[SessionEvent], gapMinutes: Int): org.apache.spark.sql.Dataset[UserSession] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def sessionize(ds: Dataset[SessionEvent], gapMinutes: Int): Dataset[UserSession] = {
     import ds.sparkSession.implicits._
     val gapUs = gapMinutes * 60000000L
     ds.groupByKey(_.user_id)
@@ -175,8 +185,7 @@ object Streams {
     * on the grouping key, same as the batch form.
     */
   def sessionizeStream(events: DataFrame, gapMinutes: Int,
-      delay: String = "10 minutes"): org.apache.spark.sql.Dataset[UserSession] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      delay: String = "10 minutes"): Dataset[UserSession] = {
     import events.sparkSession.implicits._
     val gapUs = gapMinutes * 60000000L
     // the watermarked ts column must survive into the grouped Dataset —
@@ -213,62 +222,70 @@ object Streams {
       ts_us: Long, event_id: Long, event_type: String)
   final case class Transition(user_id: Long, a: String, b: String)
 
-  /** INCREMENTAL per-user transition extraction — the streaming twin of
-    * q_stream_13_markov's lead window (count the emitted pairs to get
-    * the transition matrix). State per key = the last FINALIZED event's
-    * type plus a buffer of events still above the watermark; each
-    * micro-batch merges its events into the buffer in (ts, event_id)
-    * order and finalizes the prefix below the watermark — a future
-    * event has ts ≥ watermark, so it can never sort between two
-    * finalized events and every emitted (a → b) pair is exactly the
-    * pair the batch lead-window produces. Keys with no new events are
-    * woken by the event-time timeout so buffered tails drain as the
+  /** The watermark-ordered per-user state machine behind
+    * [[transitionsStream]], [[attributionStream]] and [[dwellStream]].
+    * State per user = a carried (event_type, ts_us) plus the buffer of
+    * events still above the watermark; each micro-batch merges its
+    * events into the buffer in (ts, event_id) order and finalizes the
+    * prefix below the watermark — a future event has ts ≥ watermark, so
+    * it can never sort between two finalized events, and `step` sees
+    * exactly the order of the batch window it replaces. `step(user,
+    * carried, (ts_us, event_id, event_type))` returns the new carried
+    * value and the row to emit, if any. Keys with no new events are
+    * woken by the event-time timeout, so buffered tails drain as the
     * watermark advances.
     *
     * Scale note: one shuffle on the key; buffered state is O(events
-    * inside the watermark delay per key), evicted monotonically. A
-    * key's remembered last-event type is evicted after `idleTtlMinutes`
-    * of event-time inactivity (otherwise churning key spaces grow the
-    * state store one entry per key forever); a transition spanning an
-    * idle gap longer than the TTL is dropped — size the TTL to the
-    * longest session gap that should still count as a transition.
+    * inside the watermark delay per key), evicted monotonically. The
+    * carried value is evicted after `idleTtlMinutes` of event-time
+    * inactivity (otherwise churning key spaces grow the state store one
+    * entry per key forever); a pair spanning an idle gap longer than the
+    * TTL is dropped — size the TTL to the longest gap that should still
+    * count.
     */
-  def transitionsStream(events: DataFrame,
-      delay: String = "10 minutes",
-      idleTtlMinutes: Long = 60): org.apache.spark.sql.Dataset[Transition] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  private def finalizeInEventOrder[O: Encoder](events: DataFrame,
+      delay: String, idleTtlMinutes: Long)(
+      step: (Long, Option[(String, Long)], (Long, Long, String)) => (Option[(String, Long)], Option[O])
+  ): Dataset[O] = {
     import events.sparkSession.implicits._
+    // the watermarked ts column must survive into the grouped Dataset —
+    // projecting it away makes the EventTimeTimeout checker reject the plan
     val ds = events.withWatermark("ts", delay)
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .as[TransitionEvent]
     ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Option[String], Seq[(Long, Long, String)]), Transition](
+      .flatMapGroupsWithState[(Option[(String, Long)], Seq[(Long, Long, String)]), O](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, events: Iterator[TransitionEvent],
-         state: GroupState[(Option[String], Seq[(Long, Long, String)])]) =>
-          val (lastOpt0, buf0) = state.getOption.getOrElse((None, Seq.empty))
+         state: GroupState[(Option[(String, Long)], Seq[(Long, Long, String)])]) =>
+          val (carried0, buf0) = state.getOption.getOrElse((None, Seq.empty))
           val incoming = events.map(e => (e.ts_us, e.event_id, e.event_type)).toList
           val buf = (buf0 ++ incoming).sortBy(e => (e._1, e._2))
           val wmUs = state.getCurrentWatermarkMs() * 1000L
           val (done, open) = buf.partition(_._1 < wmUs)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-          var last = lastOpt0
+          val out = scala.collection.mutable.ArrayBuffer.empty[O]
+          var carried = carried0
           done.foreach { e =>
-            last.foreach(a => out += Transition(user, a, e._3))
-            last = Some(e._3)
+            val (next, row) = step(user, carried, e)
+            carried = next
+            row.foreach(out += _)
           }
-          val idleExpired = state.hasTimedOut && incoming.isEmpty && open.isEmpty
-          if (open.isEmpty && (last.isEmpty || idleExpired)) state.remove()
+          // idle ⟺ the FIRING timeout was the idle one: nothing was
+          // buffered at entry. A finalization timeout (armed to
+          // open.head+1 to flush buffered events) also arrives with no
+          // incoming data, but it must finalize and re-arm the idle TTL,
+          // not evict the carried value.
+          val idleExpired = state.hasTimedOut && incoming.isEmpty && buf0.isEmpty
+          if (open.isEmpty && (carried.isEmpty || idleExpired)) state.remove()
           else {
-            state.update((last, open))
+            state.update((carried, open))
             if (open.nonEmpty)
               // wake when the earliest buffered event can finalize
               state.setTimeoutTimestamp(
                 math.max(state.getCurrentWatermarkMs() + 1L, open.head._1 / 1000L + 1L))
             else
-              // nothing buffered: keep `last` only through the idle TTL,
-              // then evict so churning key spaces don't grow state forever
+              // nothing buffered: keep the carried value only through the idle TTL
               state.setTimeoutTimestamp(
                 state.getCurrentWatermarkMs() + idleTtlMinutes * 60000L)
           }
@@ -276,68 +293,42 @@ object Streams {
       }
   }
 
+  /** INCREMENTAL per-user transition extraction — the streaming form of
+    * q_stream_13_markov's lead window (count the emitted pairs to get
+    * the transition matrix): every emitted (a → b) pair is exactly the
+    * pair the batch lead window produces ([[finalizeInEventOrder]]).
+    */
+  def transitionsStream(events: DataFrame,
+      delay: String = "10 minutes",
+      idleTtlMinutes: Long = 60): Dataset[Transition] = {
+    import events.sparkSession.implicits._
+    finalizeInEventOrder[Transition](events, delay, idleTtlMinutes) {
+      case (user, last, (us, _, typ)) => (Some((typ, us)), last.map(a => Transition(user, a._1, typ)))
+    }
+  }
+
   final case class Attribution(user_id: Long, channel: String, gap_us: Long)
 
-  /** ONLINE last-touch attribution — the streaming twin of
-    * q_stream_17_attribution / `Pipelines.lastTouchAttribution`. State
-    * per user = the last FINALIZED non-conversion touch (type + ts_us)
-    * plus the buffer of events still above the watermark; each
-    * micro-batch merges and finalizes the below-watermark prefix in
-    * (ts, event_id) order — the same total order as the batch
-    * carry-forward window, so a conversion is credited to exactly the
-    * touch the batch query credits (a future event has ts ≥ watermark
-    * and can never sort between two finalized events). Conversions with
-    * no prior touch emit channel 'none' with gap −1 (µs gaps are
-    * nonnegative, so the sentinel is unambiguous).
-    *
-    * Scale note: one shuffle on user_id; buffered state is O(events
-    * inside the watermark delay per key); the remembered touch is
-    * evicted after `idleTtlMinutes` of event-time inactivity (same TTL
-    * discipline as [[transitionsStream]]) — an attribution window
-    * longer than the TTL should raise it.
+  /** ONLINE last-touch attribution — the streaming form of
+    * q_stream_17_attribution / `Pipelines.lastTouchAttribution`. The
+    * carried value is the last FINALIZED non-conversion touch, and
+    * finalization follows the (ts, event_id) order of the batch
+    * carry-forward window ([[finalizeInEventOrder]]), so a conversion is
+    * credited to exactly the touch the batch query credits. Conversions
+    * with no prior touch emit channel 'none' with gap −1 (µs gaps are
+    * nonnegative, so the sentinel is unambiguous). An attribution window
+    * longer than the idle TTL should raise the TTL.
     */
   def attributionStream(events: DataFrame, convType: String = "purchase",
       delay: String = "10 minutes",
-      idleTtlMinutes: Long = 60): org.apache.spark.sql.Dataset[Attribution] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      idleTtlMinutes: Long = 60): Dataset[Attribution] = {
     import events.sparkSession.implicits._
-    val ds = events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[TransitionEvent]
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Option[(String, Long)], Seq[(Long, Long, String)]), Attribution](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[TransitionEvent],
-         state: GroupState[(Option[(String, Long)], Seq[(Long, Long, String)])]) =>
-          val (touch0, buf0) = state.getOption.getOrElse((None, Seq.empty))
-          val incoming = events.map(e => (e.ts_us, e.event_id, e.event_type)).toList
-          val buf = (buf0 ++ incoming).sortBy(e => (e._1, e._2))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (done, open) = buf.partition(_._1 < wmUs)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Attribution]
-          var touch = touch0
-          done.foreach { e =>
-            if (e._3 == convType)
-              out += (touch match {
-                case Some((tp, us)) => Attribution(user, tp, e._1 - us)
-                case None           => Attribution(user, "none", -1L)
-              })
-            else touch = Some((e._3, e._1))
-          }
-          val idleExpired = state.hasTimedOut && incoming.isEmpty && open.isEmpty
-          if (open.isEmpty && (touch.isEmpty || idleExpired)) state.remove()
-          else {
-            state.update((touch, open))
-            if (open.nonEmpty)
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs() + 1L, open.head._1 / 1000L + 1L))
-            else
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + idleTtlMinutes * 60000L)
-          }
-          out.iterator
-      }
+    finalizeInEventOrder[Attribution](events, delay, idleTtlMinutes) {
+      case (user, touch, (us, _, typ)) =>
+        if (typ == convType)
+          (touch, Some(touch.fold(Attribution(user, "none", -1L))(t => Attribution(user, t._1, us - t._2))))
+        else (Some((typ, us)), None)
+    }
   }
 
   final case class RateEvent(event_type: String, ts: java.sql.Timestamp, ts_us: Long)
@@ -362,8 +353,7 @@ object Streams {
     * longs — the state store stays |event_type|-bounded forever.
     */
   def rateAnomalyStream(events: DataFrame,
-      delay: String = "10 minutes"): org.apache.spark.sql.Dataset[MinuteRate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      delay: String = "10 minutes"): Dataset[MinuteRate] = {
     import events.sparkSession.implicits._
     val ds = events.withWatermark("ts", delay)
       .select(col("event_type"), col("ts"), unix_micros(col("ts")).as("ts_us"))
@@ -426,23 +416,7 @@ object Streams {
     * interval arithmetic must never sit in the join residual (PERF.md
     * finding 1).
     */
-  def clickPurchaseJoin(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withColumn("click_end", col("click_ts") + expr("INTERVAL 1 HOUR"))
-      .withWatermark("click_ts", "2 hours")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "2 hours")
-    purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") < col("click_end"))
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"),
-        col("purchase_ts"), col("click_ts"))
-  }
+  def clickPurchaseJoin(events: DataFrame): DataFrame = clickPurchase(events, "inner")
 
   /** Stream-stream LEFT OUTER join: every purchase, matched to preceding-
     * hour clicks when they exist, emitted with NULL click columns
@@ -450,11 +424,11 @@ object Streams {
     * passes the purchase's join window (before that a matching click
     * could still arrive) — so unmatched results trail the inner results
     * by up to the watermark delay; state for both sides is evicted on
-    * the same boundary. Identical join condition discipline as the inner
-    * form: endpoint precomputed per row, nothing but column comparisons
-    * in the condition.
+    * the same boundary.
     */
-  def clickPurchaseLeftJoin(events: DataFrame): DataFrame = {
+  def clickPurchaseLeftJoin(events: DataFrame): DataFrame = clickPurchase(events, "left_outer")
+
+  private def clickPurchase(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -468,7 +442,7 @@ object Streams {
       col("p_user") === col("c_user") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") < col("click_end"),
-      "left_outer")
+      joinType)
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"),
         col("purchase_ts"), col("click_ts"))
   }
@@ -497,8 +471,7 @@ object Streams {
     * buffers events. No watermark needed — counts are monotone and the
     * emitted rows are progressive refinements (Update mode).
     */
-  def entropyStream(events: DataFrame): org.apache.spark.sql.Dataset[UserEntropy] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def entropyStream(events: DataFrame): Dataset[UserEntropy] = {
     import events.sparkSession.implicits._
     events.select(col("user_id"), col("event_type")).as[EntropyEvent]
       .groupByKey(_.user_id)
@@ -531,8 +504,7 @@ object Streams {
     * minute map ages out via a timeout (a bot screen only needs a
     * trailing window); the fixture month needs no eviction.
     */
-  def botScreenStream(events: DataFrame): org.apache.spark.sql.Dataset[BotFlags] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+  def botScreenStream(events: DataFrame): Dataset[BotFlags] = {
     import events.sparkSession.implicits._
     events.select(col("user_id"),
         expr("unix_micros(ts) div 60000000").as("minute_id"),
@@ -559,15 +531,15 @@ object Streams {
       }
   }
 
-  // ---- round-8 twins: DAU/WAU, retention, abandonment, dwell, load ----
-
-  /** First-seen (user_id, day) activity rows — the shared streaming
-    * core behind the DAU/WAU (q_stream_20) and retention-curve
-    * (q_stream_32) twins. One stateful dedupe keyed on
-    * (user_id, day-as-event-time): the watermark on the day timestamp
-    * evicts state for days older than the lateness bound, so state is
-    * O(active users × days inside the watermark), not O(history).
-    * Append mode — each activity pair is emitted exactly once.
+  /** First-seen (user_id, day) activity rows — the streaming core
+    * behind q_stream_20 (`Pipelines.dauWau`), q_stream_32
+    * (`Pipelines.retentionCurve`) and, over the purchase-filtered
+    * stream, q_stream_23 ([[lifecycleFinish]]). One stateful dedupe
+    * keyed on (user_id, day-as-event-time): the watermark on the day
+    * timestamp evicts state for days older than the lateness bound, so
+    * state is O(active users × days inside the watermark), not
+    * O(history). Append mode — each activity pair is emitted exactly
+    * once.
     */
   def activityStream(events: DataFrame): DataFrame =
     events
@@ -577,50 +549,6 @@ object Streams {
       .withWatermark("dts", "1 day")
       .dropDuplicates("user_id", "dts")
       .select("user_id", "day")
-
-  /** Stateless batch finisher over the streamed activity pairs —
-    * EXACTLY the q_stream_20_dau_wau tail (each activity row
-    * contributes itself to the 7 calendar days it keeps the user
-    * weekly-active; warm-up days excluded).
-    */
-  def dauWauFinish(ud: DataFrame): DataFrame = {
-    val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
-    val contrib = ud.select(col("user_id"),
-        explode(sequence(col("day"), col("day") + 6)).as("wday"))
-      .distinct()
-    val wau = contrib.groupBy(col("wday").as("day")).agg(count(lit(1)).as("wau"))
-    val d0 = ud.agg(min("day").as("d0"))
-    dau.join(wau, "day").crossJoin(broadcast(d0))
-      .filter(col("day") >= col("d0") + 6)
-      .select(col("day").cast("long").as("day"), col("dau"), col("wau"),
-        round(col("dau").cast("double") / col("wau"), 6).as("stickiness"))
-      .orderBy("day")
-  }
-
-  /** Stateless batch finisher over the streamed activity pairs —
-    * EXACTLY the q_stream_32_retention_curve tail (cohort day-0 per
-    * user, then d+1/d+7/d+30 semi-join probes).
-    */
-  def retentionFinish(ud0: DataFrame): DataFrame = {
-    val ud = ud0.localCheckpoint()
-    val f = ud.groupBy("user_id").agg(min("day").as("d0"))
-    def activeAt(offset: Int) = {
-      val probe = ud.select(col("user_id").as(s"u$offset"), col("day").as(s"day$offset"))
-      f.join(probe, col("user_id") === col(s"u$offset")
-          && col(s"day$offset") === col("d0") + offset, "left_semi")
-        .select(col("user_id").as(s"r$offset"))
-    }
-    val base = f.agg(count(lit(1)).as("n_users"))
-    base
-      .crossJoin(activeAt(1).agg(count(lit(1)).as("d1")))
-      .crossJoin(activeAt(7).agg(count(lit(1)).as("d7")))
-      .crossJoin(activeAt(30).agg(count(lit(1)).as("d30")))
-      .select(col("n_users"), col("d1"), col("d7"), col("d30"),
-        (floor(col("d1").cast("double") / col("n_users") * 1000000 + 0.5) / 1000000)
-          .as("d1_rate"),
-        (floor(col("d7").cast("double") / col("n_users") * 1000000 + 0.5) / 1000000)
-          .as("d7_rate"))
-  }
 
   final case class AbandonEvent(user_id: Long, ts_us: Long, event_type: String)
   final case class AbandonVerdict(user_id: Long, c_us: Long, converted: Long, rev: Long)
@@ -636,8 +564,7 @@ object Streams {
     * (c, c+24h] — regardless of arrival order, because max-click and
     * the purchases-after-it set are order-insensitive merges.
     */
-  def abandonmentStream(events: DataFrame): org.apache.spark.sql.Dataset[AbandonVerdict] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+  def abandonmentStream(events: DataFrame): Dataset[AbandonVerdict] = {
     import events.sparkSession.implicits._
     events
       .filter(col("event_type").isin("click", "purchase"))
@@ -645,7 +572,7 @@ object Streams {
       .as[AbandonEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Seq[Long], Long), AbandonVerdict](
-        org.apache.spark.sql.streaming.OutputMode.Append,
+        OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
         (user: Long, batch: Iterator[AbandonEvent],
          state: GroupState[(Long, Seq[Long], Long)]) =>
@@ -665,82 +592,51 @@ object Streams {
       }
   }
 
-  /** Batch finisher: latest verdict per user → weekday abandonment
-    * table, exactly the q_stream_31 tail.
+  /** The q_stream_31_abandonment tail: per weekday of each user's last
+    * click, the users and the share that did not purchase within 24h.
+    * Input: (c_us, converted) per user.
     */
-  def abandonmentFinish(verdicts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val last = verdicts
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("user_id").orderBy(col("rev").desc)))
-      .filter(col("__rk") === 1)
-    last.groupBy(((col("c_us") / 86400000000L).cast("long") % 7).as("weekday"))
+  def abandonmentByWeekday(conv: DataFrame): DataFrame =
+    conv.groupBy(((col("c_us") / 86400000000L).cast("long") % 7).as("weekday"))
       .agg(count(lit(1)).as("n_users"),
         sum(lit(1L) - col("converted")).as("n_abandoned"),
         (floor(sum(lit(1L) - col("converted")).cast("double") / count(lit(1)) * 1000000 + 0.5)
           / 1000000).as("abandon_rate"))
       .orderBy("weekday")
-  }
 
-  final case class DwellStep(user_id: Long, step: String, gap_us: Long)
+  /** [[abandonmentStream]]'s verdicts reduced to the latest per user,
+    * then the q_stream_31 tail.
+    */
+  def abandonmentFinish(verdicts: DataFrame): DataFrame =
+    abandonmentByWeekday(latestPerUser(verdicts))
 
-  /** ONLINE transition dwell times — the streaming twin of
-    * q_stream_36_dwell: the [[transitionsStream]] state machine, but
-    * each finalized consecutive pair also carries its event-time gap.
-    * Same watermark-ordered finalization, so every (step, gap) equals
-    * the batch lag-window row; same idle-TTL state eviction.
+  final case class DwellStep(user_id: Long, prev_type: String, event_type: String, gap: Long)
+
+  /** ONLINE transition dwell times — the streaming core of
+    * q_stream_36_dwell: the [[transitionsStream]] pairs, each carrying
+    * its event-time gap, so every (prev_type, event_type, gap) equals
+    * the batch lag-window row ([[finalizeInEventOrder]]).
     */
   def dwellStream(events: DataFrame,
       delay: String = "10 minutes",
-      idleTtlMinutes: Long = 60): org.apache.spark.sql.Dataset[DwellStep] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      idleTtlMinutes: Long = 60): Dataset[DwellStep] = {
     import events.sparkSession.implicits._
-    val ds = events.withWatermark("ts", delay)
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[TransitionEvent]
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Option[(String, Long)], Seq[(Long, Long, String)]), DwellStep](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[TransitionEvent],
-         state: GroupState[(Option[(String, Long)], Seq[(Long, Long, String)])]) =>
-          val (lastOpt0, buf0) = state.getOption.getOrElse((None, Seq.empty))
-          val incoming = events.map(e => (e.ts_us, e.event_id, e.event_type)).toList
-          val buf = (buf0 ++ incoming).sortBy(e => (e._1, e._2))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (done, open) = buf.partition(_._1 < wmUs)
-          val out = scala.collection.mutable.ArrayBuffer.empty[DwellStep]
-          var last = lastOpt0
-          done.foreach { e =>
-            last.foreach { case (a, aUs) =>
-              out += DwellStep(user, a + ">" + e._3, e._1 - aUs)
-            }
-            last = Some((e._3, e._1))
-          }
-          val idleExpired = state.hasTimedOut && incoming.isEmpty && open.isEmpty
-          if (open.isEmpty && (last.isEmpty || idleExpired)) state.remove()
-          else {
-            state.update((last, open))
-            if (open.nonEmpty)
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs() + 1L, open.head._1 / 1000L + 1L))
-            else
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + idleTtlMinutes * 60000L)
-          }
-          out.iterator
-      }
+    finalizeInEventOrder[DwellStep](events, delay, idleTtlMinutes) {
+      case (user, last, (us, _, typ)) =>
+        (Some((typ, us)), last.map { case (a, aUs) => DwellStep(user, a, typ, us - aUs) })
+    }
   }
 
-  /** Batch finisher over the streamed dwell steps — the q_stream_36
-    * tail: top-10 steps by count with mean/max gaps.
+  /** The q_stream_36_dwell tail: top-10 (prev_type > event_type) steps
+    * by count with mean/max gaps, off (prev_type, event_type, gap µs)
+    * rows — the batch lag window or [[dwellStream]].
     */
   def dwellFinish(steps: DataFrame): DataFrame =
-    steps.groupBy("step")
+    steps.groupBy(concat_ws(">", col("prev_type"), col("event_type")).as("step"))
       .agg(count(lit(1)).as("n"),
-        (floor(sum("gap_us").cast("double") / count(lit(1)) / 1000000 * 1000 + 0.5) / 1000)
+        (floor(sum("gap").cast("double") / count(lit(1)) / 1000000 * 1000 + 0.5) / 1000)
           .as("mean_gap_s"),
-        expr("max(gap_us) div 1000000").as("max_gap_s"))
+        expr("max(gap) div 1000000").as("max_gap_s"))
       .orderBy(col("n").desc, col("step")).limit(10)
 
   /** Streaming hourly load counts (tumbling 1h windows) — the stateful
@@ -754,13 +650,12 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("hr"), col("n"))
 
-  /** Batch finisher: exact type-1 rank percentiles over the streamed
-    * hour table — the q_stream_42 tail (hours are calendar-bounded, so
-    * the rank window is dimension-sized).
+  /** The q_stream_42_load_percentiles tail: exact type-1 rank
+    * percentiles over the (hr, n) hour table (hours are
+    * calendar-bounded, so the rank window is dimension-sized).
     */
   def loadPercentilesFinish(h: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def D(c: org.apache.spark.sql.Column) = c.cast("double")
+    def D(c: Column) = c.cast("double")
     val r = h.select(col("n"),
       row_number().over(Window.orderBy(col("n"), col("hr"))).as("rn"),
       count(lit(1)).over(Window.partitionBy()).as("nh"))
@@ -770,11 +665,8 @@ object Streams {
         max(when(col("rn") === expr("(99 * nh + 99) div 100"), col("n"))).as("p99"),
         max(col("n")).as("peak"))
       .select(col("n_hours"), col("p50"), col("p90"), col("p99"), col("peak"),
-        graft.functions.Num.round(D(col("peak")) / col("p50"), 6).as("peak_over_p50"))
+        Num.round(D(col("peak")) / col("p50"), 6).as("peak_over_p50"))
   }
-
-  // ---- round-9 twins: rate burst, Markov transitions, attribution ----
-  // (q_stream_8's top-k twin already exists above: topkPerWindow/rankTopK)
 
   /** Watermarked per-(minute, type) counts — the streaming core of
     * q_stream_15_rate_burst. The z-scoring needs the type's FULL
@@ -788,12 +680,12 @@ object Streams {
       .select(expr("unix_micros(window.start) div 60000000").as("minute_id"),
         col("event_type"), col("n"))
 
-  /** Batch finisher over the streamed minute table — EXACTLY the
-    * q_stream_15_rate_burst tail (per-type z over observed minutes,
-    * zero-variance guard, top-10), the identical IEEE expression.
+  /** The q_stream_15_rate_burst tail over the (event_type, minute_id,
+    * n) table: per-type z over observed minutes as one IEEE expression
+    * of exact BIGINT window statistics, zero-variance guard (z = 0),
+    * top-10.
     */
   def rateBurstFinish(c0: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byType = Window.partitionBy("event_type")
     val c = c0
       .withColumn("mc", count(lit(1)).over(byType))
@@ -803,7 +695,7 @@ object Streams {
       col("s1").cast("double") * col("s1").cast("double")
     c.select(col("event_type"), col("minute_id"), col("n"),
         when(den > 0,
-          graft.functions.Num.round(
+          Num.round(
             (col("mc").cast("double") * col("n").cast("double") - col("s1").cast("double"))
               / sqrt(den), 6)).otherwise(0.0).as("z"))
       .orderBy(col("z").desc, col("event_type"), col("minute_id"))
@@ -811,22 +703,23 @@ object Streams {
   }
 
   final case class SeqEvent(user_id: Long, ts_us: Long, event_id: Long, event_type: String)
-  final case class PathTrigram(user_id: Long, ts_us: Long, event_id: Long, path: String)
+  final case class PathTrigram(user_id: Long, ts_us: Long, event_id: Long,
+      event_type: String, e2: String, e3: String)
 
   /** ONLINE per-user path trigrams — the streaming twin core of
     * q_stream_34_path_trigrams (the Markov/attribution twins above
     * already cover the pair shapes; this is the depth-2 sequence
     * state). State per user = the last TWO events' types, O(1); each
     * micro-batch sorts its OWN events for the user by (ts, event_id)
-    * and stitches them onto the carried pair, emitting one "a>b>c"
-    * path per settled event — exactly the batch double-lead rows,
+    * and stitches them onto the carried pair, emitting one
+    * (event_type, e2, e3) trigram per settled event — exactly the batch
+    * double-lead rows that `Pipelines.pathNgrams` counts,
     * whenever arrival order ACROSS micro-batches respects event time
     * (any order within a micro-batch is fine — the per-batch sort
     * restores it; a cross-batch straggler is the source's watermark
     * discipline, as with every sequence operator).
     */
-  def pathTrigramStream(events: DataFrame): org.apache.spark.sql.Dataset[PathTrigram] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+  def pathTrigramStream(events: DataFrame): Dataset[PathTrigram] = {
     import events.sparkSession.implicits._
     events
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -834,7 +727,7 @@ object Streams {
       .as[SeqEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[Seq[String], PathTrigram](
-        org.apache.spark.sql.streaming.OutputMode.Append,
+        OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
         (user: Long, batch: Iterator[SeqEvent], state: GroupState[Seq[String]]) =>
           val sorted = batch.toSeq.sortBy(e => (e.ts_us, e.event_id))
@@ -842,8 +735,7 @@ object Streams {
           val out = Seq.newBuilder[PathTrigram]
           sorted.foreach { e =>
             if (lastTwo.size == 2)
-              out += PathTrigram(user, e.ts_us, e.event_id,
-                s"${lastTwo.head}>${lastTwo(1)}>${e.event_type}")
+              out += PathTrigram(user, e.ts_us, e.event_id, lastTwo.head, lastTwo(1), e.event_type)
             lastTwo = (lastTwo :+ e.event_type).takeRight(2)
           }
           if (sorted.nonEmpty) state.update(lastTwo)
@@ -851,17 +743,10 @@ object Streams {
       }
   }
 
-  /** Batch finisher — EXACTLY the q_stream_34_path_trigrams tail
-    * (|types|³-bounded counts, top-10 by count then path).
-    */
-  def pathTrigramFinish(paths: DataFrame): DataFrame =
-    paths.groupBy("path").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("path")).limit(10)
-
   /** Watermarked per-(day, type) counts — the shared streaming core of
     * the q_stream_26_volume_trend and q_stream_39_weekend_lift twins
-    * (both batch tails are pure functions of the (type, day, count)
-    * table). Day windows are epoch-aligned, so `day` matches the batch
+    * (their tails, [[volumeTrendFinish]] and [[weekendLiftFinish]], take
+    * the (type, day, count) table). Day windows are epoch-aligned, so `day` matches the batch
     * `unix_micros(ts) div 86400000000` exactly. State is O(open days ×
     * |types|); closed days emit once.
     */
@@ -872,11 +757,11 @@ object Streams {
       .select(expr("unix_micros(window.start) div 86400000000").as("day"),
         col("event_type"), col("y"))
 
-  /** Batch finisher — EXACTLY the q_stream_26_volume_trend tail (per
-    * type: OLS slope of daily count on day index + declining flag).
+  /** The q_stream_26_volume_trend tail over the (event_type, day, y)
+    * daily-count table: per type, the OLS slope of y on the day index
+    * plus a declining flag.
     */
   def volumeTrendFinish(dd: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val si = dd.withColumn("x",
       (row_number().over(Window.partitionBy("event_type").orderBy("day")) - 1).cast("long"))
     val st = si.groupBy("event_type").agg(count(lit(1)).as("n"), sum("x").as("sx"),
@@ -884,34 +769,35 @@ object Streams {
     val cov = col("n").cast("double") * col("sxy") - col("sx").cast("double") * col("sy")
     val vx = col("n").cast("double") * col("sxx") - col("sx").cast("double") * col("sx")
     st.select(col("event_type"), col("n").as("n_days"),
-        graft.functions.Num.round(cov / vx, 4).as("events_per_day_trend"),
+        Num.round(cov / vx, 4).as("events_per_day_trend"),
         when(cov < 0, 1L).otherwise(0L).as("declining"))
       .orderBy("event_type")
   }
 
-  /** Batch finisher — EXACTLY the q_stream_39_weekend_lift tail off the
-    * streamed (day, type, count) table: weekend/weekday per-day rates
-    * and their ratio (day+4 mod 7 ∈ {0,6} ⇔ Sat/Sun, the batch rule).
+  /** The q_stream_39_weekend_lift tail: weekend/weekday per-day event
+    * rates per type and their ratio (day+4 mod 7 ∈ {0,6} ⇔ Sat/Sun).
+    * `e0` holds (event_type, day) rows; `nWe`/`nWd` are the per-type
+    * weekend/weekday event counts as aggregates over those rows and the
+    * `we` flag added here — `sum("we")` over raw events, `sum(we · y)`
+    * over the streamed (event_type, day, y) table.
     */
-  def weekendLiftFinish(dd: DataFrame): DataFrame = {
-    val e = dd.withColumn("we",
-      when((col("day") + 4) % 7 === 0 || (col("day") + 4) % 7 === 6, 1L).otherwise(0L))
+  def weekendLiftFinish(e0: DataFrame, nWe: Column, nWd: Column): DataFrame = {
+    val e = e0.withColumn("we",
+        when((col("day") + 4) % 7 === 0 || (col("day") + 4) % 7 === 6, 1L).otherwise(0L))
+      .localCheckpoint()
     val days = e.agg(
       countDistinct(when(col("we") === 1, col("day"))).as("d_we"),
       countDistinct(when(col("we") === 0, col("day"))).as("d_wd"))
     e.groupBy("event_type")
-      .agg(sum(col("we") * col("y")).as("n_we"),
-        sum((lit(1L) - col("we")) * col("y")).as("n_wd"))
+      .agg(nWe.as("n_we"), nWd.as("n_wd"))
       .crossJoin(broadcast(days))
       .select(col("event_type"), col("n_we"), col("n_wd"),
-        graft.functions.Num.round(col("n_we").cast("double") / col("d_we"), 4).as("weekend_rate"),
-        graft.functions.Num.round(col("n_wd").cast("double") / col("d_wd"), 4).as("weekday_rate"),
-        graft.functions.Num.round((col("n_we").cast("double") / col("d_we"))
+        Num.round(col("n_we").cast("double") / col("d_we"), 4).as("weekend_rate"),
+        Num.round(col("n_wd").cast("double") / col("d_wd"), 4).as("weekday_rate"),
+        Num.round((col("n_we").cast("double") / col("d_we"))
           / (col("n_wd").cast("double") / col("d_wd")), 6).as("lift"))
       .orderBy("event_type")
   }
-
-  // ---- round-10 twins: peak load, session concurrency, lifecycle ----
 
   /** Watermarked per-minute counts — the streaming core of the
     * q_stream_21_peak_load twin (q_stream_15's minuteTypeCounts
@@ -925,13 +811,12 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(expr("unix_micros(window.start) div 60000000").as("minute"), col("n"))
 
-  /** Batch finisher — EXACTLY the q_stream_21_peak_load tail off the
-    * streamed minute table (top-5 minutes by count with the
-    * earliest-minute tiebreak, load factor vs the mean ACTIVE-minute
-    * rate; the rank runs over the minute table, calendar-bounded).
+  /** The q_stream_21_peak_load tail over the (minute, n) table: top-5
+    * minutes by count with the earliest-minute tiebreak, load factor vs
+    * the mean ACTIVE-minute rate (the rank runs over the minute table,
+    * calendar-bounded).
     */
   def peakLoadFinish(m: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val r = m.select(col("minute"), col("n"),
       row_number().over(Window.orderBy(col("n").desc, col("minute"))).cast("long").as("rnk"),
       count(lit(1)).over(Window.partitionBy()).as("nm"),
@@ -939,16 +824,16 @@ object Streams {
     r.filter(col("rnk") <= 5)
       .select(col("rnk"), col("minute").cast("long").as("minute"), col("n"),
         col("nm").as("n_minutes"),
-        graft.functions.Num.round(
+        Num.round(
           col("n").cast("double") / (col("tot").cast("double") / col("nm")), 4).as("load_factor"))
       .orderBy("rnk")
   }
 
-  /** Per-user session SPANS (30min gap) — the streaming core of the
-    * q_stream_22_concurrency twin: the same watermarked
-    * `session_window` aggregate as [[sessionCounts]], emitting each
-    * session's [min, max] event-time micros instead of its count
-    * (the sweep-line's interval endpoints).
+  /** Per-user session SPANS (30min gap) — the core of
+    * q_stream_22_concurrency and q_stream_43_conc_profile: the same
+    * watermarked `session_window` aggregate as [[sessionCounts]],
+    * emitting each session's [min, max] event-time micros instead of
+    * its count (the sweep-line's interval endpoints).
     */
   def sessionSpans(events: DataFrame): DataFrame =
     events
@@ -957,10 +842,11 @@ object Streams {
       .agg(unix_micros(min("ts")).as("st"), unix_micros(max("ts")).as("en"))
       .select(col("st"), col("en"))
 
-  /** Batch finisher — EXACTLY the q_stream_22_concurrency tail off the
-    * streamed session spans: +1/−1 boundary points (closings sort
-    * before openings at the same µs), range-partitioned prefix sum,
-    * TakeOrdered(1) peak — never a single-partition window.
+  /** The q_stream_22_concurrency tail over the (st, en) session spans:
+    * +1/−1 boundary points (closings sort before openings at the same
+    * µs), range-partitioned prefix sum (the session table scales with
+    * the event stream), TakeOrdered(1) earliest peak — never a
+    * single-partition window.
     */
   def concurrencyFinish(sess0: DataFrame): DataFrame = {
     val sess = sess0.localCheckpoint()
@@ -974,16 +860,13 @@ object Streams {
         col("t").cast("long").as("at_us"))
   }
 
-  /** Batch finisher — EXACTLY the q_stream_23_lifecycle tail off the
-    * streamed first-seen (user, day) purchase-activity pairs (feed it
-    * [[activityStream]] over the purchase-filtered stream): per day,
-    * every active buyer classified new / retained / resurrected by a
-    * per-user lag window + broadcast first-day table, churn as the
-    * shifted-day anti-join. The streaming core carries the dedupe
-    * state; this tail is a pure function of the settled pair table.
+  /** The q_stream_23_lifecycle tail over the distinct (user_id, day)
+    * purchase-activity pairs ([[activityStream]] over the
+    * purchase-filtered stream): per day, every active buyer classified
+    * new / retained / resurrected by a per-user lag window + first-day
+    * table, churn as the shifted-day anti-join. All counts exact.
     */
   def lifecycleFinish(uw0: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val uw = uw0.localCheckpoint()
     val f = uw.groupBy("user_id").agg(min("day").as("first_day"))
     val lagw = uw.withColumn("prev_active",
@@ -1006,49 +889,33 @@ object Streams {
       .orderBy("day")
   }
 
-  /** Running per-user last-active day — the streaming core of the
-    * q_stream_35_churn_horizons twin: a complete-mode max aggregate
-    * keyed on user (state is one long per user — exactly the
-    * at-scale churn tracker's working set).
+  /** Running per-user last-active day — the streaming core behind
+    * q_stream_35_churn_horizons (`Pipelines.churnHorizons`): a
+    * complete-mode max aggregate keyed on user (state is one long per
+    * user — exactly the at-scale churn tracker's working set).
     */
   def userLastDay(events: DataFrame): DataFrame =
     events
       .groupBy("user_id")
       .agg(max(expr("unix_micros(ts) div 86400000000")).as("last_day"))
 
-  /** Batch finisher — EXACTLY the q_stream_35_churn_horizons tail
-    * (3/7/14-day inactivity counts vs the corpus max day).
-    */
-  def churnHorizonsFinish(u: DataFrame): DataFrame = {
-    val mx = u.agg(max("last_day").as("maxd"))
-    u.crossJoin(broadcast(mx))
-      .agg(count(lit(1)).as("n_users"),
-        sum(when(col("last_day") <= col("maxd") - 3, 1L).otherwise(0L)).as("churn_3d"),
-        sum(when(col("last_day") <= col("maxd") - 7, 1L).otherwise(0L)).as("churn_7d"),
-        sum(when(col("last_day") <= col("maxd") - 14, 1L).otherwise(0L)).as("churn_14d"),
-        graft.functions.Num.round(
-          sum(when(col("last_day") <= col("maxd") - 7, 1L).otherwise(0L)).cast("double")
-            / count(lit(1)), 6).as("churn_7d_rate"))
-  }
-
-  // ── streaming twins, tranche 4 (round 11) ───────────────────────────
-
-  /** Batch finisher — EXACTLY the q_stream_43_conc_profile tail off the
-    * streamed session spans ([[sessionSpans]], the same core as the
-    * q_stream_22 twin): boundaries collapse to DISTINCT timestamps (net
-    * delta per µs), the running level is the range-partitioned
-    * prefixSum, interval lengths come from the exactGlobalRank rank+1
-    * self-join (never a one-task lead window), and the level histogram
-    * is bounded by max concurrency. The streaming core carries the
-    * session state; this tail is a pure function of the settled spans.
+  /** The q_stream_43_conc_profile tail over the (st, en) session spans:
+    * boundaries collapse to DISTINCT timestamps (net delta per µs), so
+    * the sweep has no ties; ONE range-partitioned `groupRankPrefix`
+    * pass under a constant group key emits the running level and the
+    * global rank off the same shuffle; interval lengths come from the
+    * rank+1 self-join (never a one-task lead window), and the level
+    * histogram is bounded by max concurrency. All integers until the
+    * final share division.
     */
   def concProfileFinish(sess0: DataFrame): DataFrame = {
     val sess = sess0.localCheckpoint()
     val pts = sess.select(col("st").as("t"), lit(1L).as("delta"))
       .union(sess.select((col("en") + 1).as("t"), lit(-1L).as("delta")))
     val net = pts.groupBy("t").agg(sum("delta").as("net"))
-    val run = graft.api.Pipelines.prefixSum(net, Seq("t"), "net", "conc")
-    val (_, rk) = graft.api.Pipelines.exactGlobalRankByN(run, Seq(col("t")), "rk")
+    val rk = graft.api.Pipelines.groupRankPrefix(
+      net.withColumn("__g", lit(1)), Seq("__g"), Seq(col("t")),
+      "rk", "__n", Seq(("net", "conc", "")))
     val nxt = rk.select((col("rk") - 1).as("rk"), col("t").as("tn"))
     val lv = rk.join(nxt, "rk")
       .groupBy("conc").agg(sum(col("tn") - col("t")).as("total_us"))
@@ -1061,7 +928,7 @@ object Streams {
       .orderBy("concurrency")
   }
 
-  /** Streaming OHLC resampling — twin of q_time_3_ohlc: 6h tumbling
+  /** Streaming OHLC resampling — the stream core of q_time_3_ohlc: 6h tumbling
     * bars per event type with open/close as `min_by`/`max_by` over the
     * (ts, event_id) total order. min_by/max_by are DECLARATIVE
     * aggregates (mergeable (value, key) state), so they combine across
@@ -1081,32 +948,25 @@ object Streams {
       .select(col("event_type"), col("window.start").as("bar"),
         col("open_raw"), col("high_raw"), col("low_raw"), col("close_raw"), col("n"))
 
-  /** Batch finisher — EXACTLY the q_time_30_bar_gaps tail off the
-    * streamed [[ohlcBars]] output: per-row cents off the raw
-    * open/close picks, then the previous-close → next-open lag over
-    * the calendar-bounded bar table. One streaming core, two batch
-    * readouts (OHLC bars and the gap series) — the twin pattern's
-    * fan-out case.
+  /** The q_time_30_bar_gaps tail over (event_type, bar, open_c,
+    * close_c) cent bars: the previous-close → next-open lag per event
+    * type over the calendar-bounded bar table, never the event stream.
     */
-  def barGapsFinish(bars: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wl = Window.partitionBy("event_type").orderBy("bar")
-    bars.select(col("event_type"), col("bar"),
-        floor(col("open_raw") * 100 + 0.5).cast("long").as("open_c"),
-        floor(col("close_raw") * 100 + 0.5).cast("long").as("close_c"))
-      .withColumn("prev_close", lag("close_c", 1).over(wl))
+  def barGapsFinish(bars: DataFrame): DataFrame =
+    bars.withColumn("prev_close", lag("close_c", 1).over(Window.partitionBy("event_type").orderBy("bar")))
       .filter(col("prev_close").isNotNull)
       .select(col("event_type"), col("bar"),
         (col("open_c") - col("prev_close")).as("gap_cents"),
         ((col("open_c") - col("prev_close")).cast("double") / 100).as("gap"))
       .orderBy("event_type", "bar")
-  }
 
-  /** Presentation tail for [[ohlcBars]] — q_time_3's rounding + order. */
+  /** The q_time_3_ohlc tail over raw (open/high/low/close) bar picks:
+    * cents rounding and bar order.
+    */
   def ohlcFinish(bars: DataFrame): DataFrame =
     bars.select(col("event_type"), col("bar"),
-        round(col("open_raw"), 2).as("open"), round(col("high_raw"), 2).as("high"),
-        round(col("low_raw"), 2).as("low"), round(col("close_raw"), 2).as("close"),
+        Num.round(col("open_raw"), 2).as("open"), Num.round(col("high_raw"), 2).as("high"),
+        Num.round(col("low_raw"), 2).as("low"), Num.round(col("close_raw"), 2).as("close"),
         col("n"))
       .orderBy("event_type", "bar")
 
@@ -1128,13 +988,12 @@ object Streams {
     * Scale note: one shuffle on user_id; state is a bounded 20-long
     * ring + the watermark-delay buffer per key, evicted after
     * `idleTtlMinutes` of event-time inactivity (the
-    * [[transitionsStream]] TTL discipline — an evicted key restarts
+    * [[finalizeInEventOrder]] TTL discipline — an evicted key restarts
     * its history cold, trading a warm-up window for bounded state).
     */
   def rollingAnomalyStream(events: DataFrame,
       delay: String = "10 minutes",
-      idleTtlMinutes: Long = 60): org.apache.spark.sql.Dataset[AnomFlag] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      idleTtlMinutes: Long = 60): Dataset[AnomFlag] = {
     import events.sparkSession.implicits._
     val ds = events.withWatermark("ts", delay)
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
@@ -1186,16 +1045,14 @@ object Streams {
       }
   }
 
-  /** Presentation tail for [[rollingAnomalyStream]] — q_dq_10's
-    * derived columns and total order off the raw (vc, s, n) flags.
+  /** The q_dq_10_rolling_anomaly tail: derived columns and total order
+    * off the flagged (event_id, user_id, vc, s, n) rows.
     */
   def rollingAnomalyFinish(flags: DataFrame): DataFrame =
     flags.select(col("event_id"), col("user_id"),
-        round(col("vc").cast("double") / 100, 2).as("value"),
-        round(col("s").cast("double") / col("n") / 100, 2).as("mu"))
+        Num.round(col("vc").cast("double") / 100, 2).as("value"),
+        Num.round(col("s").cast("double") / col("n") / 100, 2).as("mu"))
       .orderBy("user_id", "event_id")
-
-  // ── streaming twins, tranche 5 (round 12) ───────────────────────────
 
   final case class PurchaseEvent(user_id: Long, ts_us: Long, cents: Long)
   final case class RfmState(user_id: Long, last_us: Long, freq: Long,
@@ -1209,10 +1066,9 @@ object Streams {
     * aggregate under ANY arrival order. The quintile CUT itself is a
     * corpus-wide ranking and cannot be finalized online (one more
     * purchase anywhere can move every ntile boundary), so it lives in
-    * the stateless [[rfmFinish]] — the same split as dauWauFinish.
+    * the stateless [[rfmFinish]].
     */
-  def rfmStream(events: DataFrame): org.apache.spark.sql.Dataset[RfmState] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+  def rfmStream(events: DataFrame): Dataset[RfmState] = {
     import events.sparkSession.implicits._
     events
       .filter(col("event_type") === "purchase")
@@ -1221,7 +1077,7 @@ object Streams {
       .as[PurchaseEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Long, Long, Long), RfmState](
-        org.apache.spark.sql.streaming.OutputMode.Append,
+        OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
         (user: Long, batch: Iterator[PurchaseEvent],
          state: GroupState[(Long, Long, Long, Long)]) =>
@@ -1238,34 +1094,12 @@ object Streams {
       }
   }
 
-  /** Stateless batch finisher over the latest per-user RFM statistics —
-    * EXACTLY the q_stream_27_rfm tail: three exact global rankings
-    * (micros desc / count desc / cents desc, user_id tie-break) cut
-    * into quintiles, then the composite-segment population.
+  /** [[rfmStream]]'s refinements reduced to the latest per user, then
+    * the q_stream_27_rfm tail (`Pipelines.rfmSegments`).
     */
-  def rfmFinish(states: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val u = states
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("user_id").orderBy(col("rev").desc)))
-      .filter(col("__rk") === 1)
-      .select("user_id", "last_us", "freq", "cents")
-      .localCheckpoint()
-    val (nU, rRank) = graft.api.Pipelines
-      .exactGlobalRankByN(u, Seq(col("last_us").desc, col("user_id")), "__rk")
-    def score(ranked: DataFrame, out: String) =
-      ranked.select(col("user_id"),
-        graft.api.Pipelines.ntileOfRank(col("__rk"), nU, 5).as(out))
-    val sc = score(rRank, "r")
-      .join(score(graft.api.Pipelines.exactGlobalRankBy(u,
-        Seq(col("freq").desc, col("user_id")), "__rk"), "f"), "user_id")
-      .join(score(graft.api.Pipelines.exactGlobalRankBy(u,
-        Seq(col("cents").desc, col("user_id")), "__rk"), "m"), "user_id")
-    sc.groupBy(col("r").cast("long").as("r"), col("f").cast("long").as("f"),
-        col("m").cast("long").as("m"))
-      .agg(count(lit(1)).as("n_users"))
+  def rfmFinish(states: DataFrame): DataFrame =
+    graft.api.Pipelines.rfmSegments(latestPerUser(states), "user_id", "last_us", "freq", "cents")
       .orderBy("r", "f", "m")
-  }
 
   final case class TouchEvent(user_id: Long, ts_us: Long, event_type: String)
   final case class FunnelTouch(user_id: Long, t_view: Long, t_click: Long,
@@ -1279,8 +1113,7 @@ object Streams {
     * The hop percentiles are corpus-wide order statistics and finalize
     * in the stateless [[funnelTimeFinish]].
     */
-  def funnelTouchStream(events: DataFrame): org.apache.spark.sql.Dataset[FunnelTouch] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+  def funnelTouchStream(events: DataFrame): Dataset[FunnelTouch] = {
     import events.sparkSession.implicits._
     events
       .filter(col("event_type").isin("view", "click", "purchase"))
@@ -1288,7 +1121,7 @@ object Streams {
       .as[TouchEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Long, Long, Long), FunnelTouch](
-        org.apache.spark.sql.streaming.OutputMode.Append,
+        OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
         (user: Long, batch: Iterator[TouchEvent],
          state: GroupState[(Long, Long, Long, Long)]) =>
@@ -1307,26 +1140,12 @@ object Streams {
       }
   }
 
-  /** Stateless batch finisher over the latest per-user first-touch
-    * times — EXACTLY the q_stream_30_funnel_time tail: per-hop gaps
-    * where both touches exist and are ordered, then the exact
-    * order-statistic median/p90 picks truncated to minutes. The tail
-    * itself is [[graft.api.Pipelines.funnelGapStats]], the SAME code
-    * the batch query runs (r12 verdict item 3 — the previous inlined
-    * copy could drift), which ranks via exactGroupRankCount instead of
-    * a 2-task window sort.
+  /** The q_stream_30_funnel_time tail over per-user first-touch micros
+    * (t_view, t_click, t_buy; NULL until seen): per-hop gaps where both
+    * touches exist and are ordered, then `Pipelines.funnelGapStats`'
+    * exact order-statistic median/p90 picks truncated to minutes.
     */
-  def funnelTimeFinish(touches: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val never = Long.MaxValue
-    val f = touches
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("user_id").orderBy(col("rev").desc)))
-      .filter(col("__rk") === 1)
-      .select(col("user_id"),
-        when(col("t_view") =!= never, col("t_view")).as("t_view"),
-        when(col("t_click") =!= never, col("t_click")).as("t_click"),
-        when(col("t_buy") =!= never, col("t_buy")).as("t_buy"))
+  def funnelHopStats(f: DataFrame): DataFrame = {
     val hops = f.filter(col("t_view").isNotNull && col("t_click").isNotNull
         && col("t_click") >= col("t_view"))
       .select(lit("view_to_click").as("hop"), (col("t_click") - col("t_view")).as("gap_us"))
@@ -1335,4 +1154,24 @@ object Streams {
         .select(lit("click_to_purchase").as("hop"), (col("t_buy") - col("t_click")).as("gap_us")))
     graft.api.Pipelines.funnelGapStats(hops)
   }
+
+  /** [[funnelTouchStream]]'s refinements reduced to the latest per user
+    * (Long.MaxValue "not seen" back to NULL), then the q_stream_30 tail.
+    */
+  def funnelTimeFinish(touches: DataFrame): DataFrame = {
+    val never = Long.MaxValue
+    funnelHopStats(latestPerUser(touches).select(col("user_id"),
+      when(col("t_view") =!= never, col("t_view")).as("t_view"),
+      when(col("t_click") =!= never, col("t_click")).as("t_click"),
+      when(col("t_buy") =!= never, col("t_buy")).as("t_buy")))
+  }
+
+  /** The latest refinement per user of an online state stream: the row
+    * with the highest `rev`, without `rev`.
+    */
+  private def latestPerUser(refinements: DataFrame): DataFrame =
+    refinements
+      .withColumn("__rk", row_number().over(Window.partitionBy("user_id").orderBy(col("rev").desc)))
+      .filter(col("__rk") === 1)
+      .drop("__rk", "rev")
 }

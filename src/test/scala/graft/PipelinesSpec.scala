@@ -351,8 +351,10 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("dauWau == q_stream_20_dau_wau") {
+    // renamed columns and one row per event: dauWau dedups (uid, d) itself
     val ev = graft.sources.Tables(spark, sf, "events")
-    val api = Pipelines.dauWau(ev, "user_id", "ts").orderBy("day").collect().toSeq
+      .select(col("user_id").as("uid"), expr("unix_micros(ts) div 86400000000").as("d"))
+    val api = Pipelines.dauWau(ev, "uid", "d").orderBy("day").collect().toSeq
     val pinned = Registry.byName("q_stream_20_dau_wau").fn(spark, sf).collect().toSeq
     assert(api == pinned)
   }

@@ -3,10 +3,13 @@ package graft
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
-/** Live Structured Streaming runs of the §2.10 twins: file source →
-  * windowed/session aggregation → memory sink, driven synchronously and
-  * cross-checked against the batch forms (SURVEY §2.10: the batch queries
-  * are the oracle; the stream must agree).
+/** Live Structured Streaming runs of the §2.10 capabilities: file source
+  * → windowed/session/stateful core → memory sink, driven synchronously
+  * and cross-checked against the declared batch queries (SURVEY §2.10:
+  * the batch queries are the oracle; the stream must agree). Where a
+  * query's tail is a shared body, the test runs that same body on what
+  * the stream settled, so each test checks that the streamed core
+  * settles to the batch core.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -45,7 +48,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming windowed top-k (agg stream + per-batch rank) matches q_stream_8") {
     val q = Streams.toMemorySink(
-      Streams.topkPerWindow(Streams.eventStream(spark, inputDir), 2),
+      Streams.topkPerWindow(Streams.eventStream(spark, inputDir)),
       "stream_topk", complete = true).start()
     try q.processAllAvailable() finally q.stop()
     val streamed = Streams.rankTopK(spark.table("stream_topk"), 2)
@@ -151,8 +154,8 @@ class StreamingSpec extends SparkSpec {
       Streams.activityStream(Streams.eventStream(spark, inputDir)),
       "stream_activity_dau", complete = false).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.dauWauFinish(spark.table("stream_activity_dau"))
-      .collect().map(_.toSeq).toSeq
+    val streamed = graft.api.Pipelines.dauWau(spark.table("stream_activity_dau"), "user_id", "day")
+      .orderBy("day").collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_20_dau_wau").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(streamed.nonEmpty && streamed == batch)
@@ -163,7 +166,7 @@ class StreamingSpec extends SparkSpec {
       Streams.activityStream(Streams.eventStream(spark, inputDir)),
       "stream_activity_ret", complete = false).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.retentionFinish(spark.table("stream_activity_ret"))
+    val streamed = graft.api.Pipelines.retentionCurve(spark.table("stream_activity_ret"), "user_id", "day")
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_32_retention_curve").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -525,7 +528,7 @@ class StreamingSpec extends SparkSpec {
       Streams.pathTrigramStream(Streams.eventStream(spark, inputDir)).toDF(),
       "stream_trigram", complete = false).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.pathTrigramFinish(spark.table("stream_trigram"))
+    val streamed = graft.api.Pipelines.topPathNgrams(spark.table("stream_trigram"), "event_type")
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_34_path_trigrams").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -562,7 +565,9 @@ class StreamingSpec extends SparkSpec {
     val trendB = Registry.byName("q_stream_26_volume_trend").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(trendS.nonEmpty && trendS == trendB)
-    val liftS = Streams.weekendLiftFinish(dd).collect().map(_.toSeq).toSeq
+    val liftS = Streams.weekendLiftFinish(dd, sum(col("we") * col("y")),
+        sum((lit(1L) - col("we")) * col("y")))
+      .collect().map(_.toSeq).toSeq
     val liftB = Registry.byName("q_stream_39_weekend_lift").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(liftS.nonEmpty && liftS == liftB)
@@ -573,7 +578,8 @@ class StreamingSpec extends SparkSpec {
       Streams.userLastDay(Streams.eventStream(spark, inputDir)),
       "stream_lastday", complete = true).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.churnHorizonsFinish(spark.table("stream_lastday"))
+    val streamed = graft.api.Pipelines.churnHorizons(spark.table("stream_lastday"), "user_id",
+        col("last_day"))
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_35_churn_horizons").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -633,7 +639,11 @@ class StreamingSpec extends SparkSpec {
       Streams.ohlcBars(Streams.eventStream(spark, inputDir)),
       "stream_ohlc_gaps", complete = true).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.barGapsFinish(spark.table("stream_ohlc_gaps"))
+    // the bars carry raw picks; the q_time_30 tail takes their cents
+    def cents(c: String) = floor(col(c) * 100 + 0.5).cast("long")
+    val streamed = Streams.barGapsFinish(spark.table("stream_ohlc_gaps")
+        .select(col("event_type"), col("bar"), cents("open_raw").as("open_c"),
+          cents("close_raw").as("close_c")))
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_time_30_bar_gaps").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -741,6 +751,40 @@ class StreamingSpec extends SparkSpec {
       s"user 7's post-eviction outlier must NOT flag (cold restart); got $flags")
     assert(flags.count(_._1 == 8L) == 1,
       s"user 8's warm outlier must flag exactly once (control); got $flags")
+  }
+
+  test("transition stream: a finalization timeout keeps the last type for the next event") {
+    import org.apache.spark.sql.Row
+    // User 7's first two events are flushed by a finalization timeout
+    // (no new data for the key); its next event, 74 event-time minutes
+    // later, must still pair with the last flushed type, as the batch
+    // lead window pairs it. Minute-grained times from a 1000-minute base
+    // (an event at epoch 0 equals the initial watermark).
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_trans_ttl").toString
+    var nextId = 1L
+    def write(rows: (Long, Long, String)*): Unit = { // (user, minute, type)
+      val data = rows.map { case (u, m, t) =>
+        val id = nextId; nextId += 1
+        Row(id, new java.sql.Timestamp((1000 + m) * 60000L), u, t, 0.0)
+      }
+      spark.createDataFrame(java.util.Arrays.asList(data: _*), Streams.eventSchema)
+        .write.mode("append").parquet(dir)
+    }
+    write((7L, 0L, "view"), (7L, 1L, "click"))
+    val q = Streams.transitionsStream(Streams.eventStream(spark, dir)).toDF()
+      .writeStream.format("memory").queryName("stream_trans_ttl")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()                        // wm 0: both buffered
+      write((-1L, 60L, "sentinel")); q.processAllAvailable()
+      write((-1L, 70L, "sentinel")); q.processAllAvailable() // wm m50: timeout flushes m0, m1
+      write((7L, 75L, "purchase"), (-1L, 100L, "sentinel")); q.processAllAvailable()
+      write((-1L, 150L, "sentinel")); q.processAllAvailable() // wm m90: m75 finalizes
+      write((-1L, 160L, "sentinel")); q.processAllAvailable()
+    } finally q.stop()
+    val pairs = spark.table("stream_trans_ttl").filter(col("user_id") === 7L)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSet
+    assert(pairs == Set(("view", "click"), ("click", "purchase")), s"got $pairs")
   }
 
   // ── tranche 5 (round 12) ─────────────────────────────────────────────

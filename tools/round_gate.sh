@@ -31,8 +31,10 @@ java $ADD_OPENS -Xmx8g -cp "$CP" graft.tools.PlanLint /root/testdata/sf0.001 too
 # a constant bound (tools/broadcast_waivers.txt)
 python3 tools/broadcast_lint.py
 # wrapper lint: every public graft.api.Pipelines def is called by some
-# other src/main file (a declared query), so the oracle gate and PlanLint
-# cover it — no second, unchecked copy of a capability
+# other src/main file (a declared query), and every public
+# graft.streaming.Streams def by a declared query or listed stream-only
+# with its reason, so the oracle gate and PlanLint cover it — no second,
+# unchecked copy of a capability
 python3 tools/wrapper_lint.py
 # INDEX.md: REGENERATE and stage, then check — regenerating here (not
 # just checking) closes the r11 gate-ordering hole where a post-gate
