@@ -102,8 +102,7 @@ object Round7fOps {
         |   * 1000000 + 0.5) / 1000000 AS lift
         |FROM c, days ORDER BY event_type""".stripMargin) { (s, d) =>
       graft.streaming.Streams.weekendLiftFinish(
-        Tables(s, d, "events").select(col("event_type"), expr(s"unix_micros(ts) div $DAY_US").as("day")),
-        sum("we"), sum(lit(1L) - col("we")))
+        Tables(s, d, "events").select(col("event_type"), expr(s"unix_micros(ts) div $DAY_US").as("day")))
     },
 
     // Year-over-year monthly revenue growth: each month joined to the

@@ -604,12 +604,6 @@ object Streams {
           / 1000000).as("abandon_rate"))
       .orderBy("weekday")
 
-  /** [[abandonmentStream]]'s verdicts reduced to the latest per user,
-    * then the q_stream_31 tail.
-    */
-  def abandonmentFinish(verdicts: DataFrame): DataFrame =
-    abandonmentByWeekday(latestPerUser(verdicts))
-
   final case class DwellStep(user_id: Long, prev_type: String, event_type: String, gap: Long)
 
   /** ONLINE transition dwell times — the streaming core of
@@ -774,14 +768,11 @@ object Streams {
       .orderBy("event_type")
   }
 
-  /** The q_stream_39_weekend_lift tail: weekend/weekday per-day event
-    * rates per type and their ratio (day+4 mod 7 ∈ {0,6} ⇔ Sat/Sun).
-    * `e0` holds (event_type, day) rows; `nWe`/`nWd` are the per-type
-    * weekend/weekday event counts as aggregates over those rows and the
-    * `we` flag added here — `sum("we")` over raw events, `sum(we · y)`
-    * over the streamed (event_type, day, y) table.
+  /** The q_stream_39_weekend_lift tail over one (event_type, day) row
+    * per event: weekend/weekday per-day event rates per type and their
+    * ratio (day+4 mod 7 ∈ {0,6} ⇔ Sat/Sun).
     */
-  def weekendLiftFinish(e0: DataFrame, nWe: Column, nWd: Column): DataFrame = {
+  def weekendLiftFinish(e0: DataFrame): DataFrame = {
     val e = e0.withColumn("we",
         when((col("day") + 4) % 7 === 0 || (col("day") + 4) % 7 === 6, 1L).otherwise(0L))
       .localCheckpoint()
@@ -789,7 +780,7 @@ object Streams {
       countDistinct(when(col("we") === 1, col("day"))).as("d_we"),
       countDistinct(when(col("we") === 0, col("day"))).as("d_wd"))
     e.groupBy("event_type")
-      .agg(nWe.as("n_we"), nWd.as("n_wd"))
+      .agg(sum("we").as("n_we"), sum(lit(1L) - col("we")).as("n_wd"))
       .crossJoin(broadcast(days))
       .select(col("event_type"), col("n_we"), col("n_wd"),
         Num.round(col("n_we").cast("double") / col("d_we"), 4).as("weekend_rate"),
@@ -1066,7 +1057,7 @@ object Streams {
     * aggregate under ANY arrival order. The quintile CUT itself is a
     * corpus-wide ranking and cannot be finalized online (one more
     * purchase anywhere can move every ntile boundary), so it lives in
-    * the stateless [[rfmFinish]].
+    * `Pipelines.rfmSegments` over [[latestPerUser]] of this stream.
     */
   def rfmStream(events: DataFrame): Dataset[RfmState] = {
     import events.sparkSession.implicits._
@@ -1094,13 +1085,6 @@ object Streams {
       }
   }
 
-  /** [[rfmStream]]'s refinements reduced to the latest per user, then
-    * the q_stream_27_rfm tail (`Pipelines.rfmSegments`).
-    */
-  def rfmFinish(states: DataFrame): DataFrame =
-    graft.api.Pipelines.rfmSegments(latestPerUser(states), "user_id", "last_us", "freq", "cents")
-      .orderBy("r", "f", "m")
-
   final case class TouchEvent(user_id: Long, ts_us: Long, event_type: String)
   final case class FunnelTouch(user_id: Long, t_view: Long, t_click: Long,
       t_buy: Long, rev: Long)
@@ -1111,7 +1095,8 @@ object Streams {
     * Long.MaxValue until seen — O(1) per user, order-insensitive, so
     * the last refinement per user equals the batch first-touch row.
     * The hop percentiles are corpus-wide order statistics and finalize
-    * in the stateless [[funnelTimeFinish]].
+    * in the stateless [[funnelHopStats]] over [[latestPerUser]] of this
+    * stream (Long.MaxValue read back as NULL).
     */
   def funnelTouchStream(events: DataFrame): Dataset[FunnelTouch] = {
     import events.sparkSession.implicits._
@@ -1155,21 +1140,11 @@ object Streams {
     graft.api.Pipelines.funnelGapStats(hops)
   }
 
-  /** [[funnelTouchStream]]'s refinements reduced to the latest per user
-    * (Long.MaxValue "not seen" back to NULL), then the q_stream_30 tail.
-    */
-  def funnelTimeFinish(touches: DataFrame): DataFrame = {
-    val never = Long.MaxValue
-    funnelHopStats(latestPerUser(touches).select(col("user_id"),
-      when(col("t_view") =!= never, col("t_view")).as("t_view"),
-      when(col("t_click") =!= never, col("t_click")).as("t_click"),
-      when(col("t_buy") =!= never, col("t_buy")).as("t_buy")))
-  }
-
   /** The latest refinement per user of an online state stream: the row
-    * with the highest `rev`, without `rev`.
+    * with the highest `rev`, without `rev`. A state stream's last
+    * refinement per user is what its declared query's tail reads.
     */
-  private def latestPerUser(refinements: DataFrame): DataFrame =
+  private[graft] def latestPerUser(refinements: DataFrame): DataFrame =
     refinements
       .withColumn("__rk", row_number().over(Window.partitionBy("user_id").orderBy(col("rev").desc)))
       .filter(col("__rk") === 1)

@@ -178,7 +178,7 @@ class StreamingSpec extends SparkSpec {
       Streams.abandonmentStream(Streams.eventStream(spark, inputDir)).toDF(),
       "stream_abandon", complete = false).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.abandonmentFinish(spark.table("stream_abandon"))
+    val streamed = Streams.abandonmentByWeekday(Streams.latestPerUser(spark.table("stream_abandon")))
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_31_abandonment").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -565,8 +565,10 @@ class StreamingSpec extends SparkSpec {
     val trendB = Registry.byName("q_stream_26_volume_trend").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(trendS.nonEmpty && trendS == trendB)
-    val liftS = Streams.weekendLiftFinish(dd, sum(col("we") * col("y")),
-        sum((lit(1L) - col("we")) * col("y")))
+    // back to one (event_type, day) row per event: every streamed y is
+    // at least 1, so the day sets and per-type counts are the batch ones
+    val liftS = Streams.weekendLiftFinish(dd.select(col("event_type"), col("day"),
+        explode(array_repeat(lit(1), col("y").cast("int")))).drop("col"))
       .collect().map(_.toSeq).toSeq
     val liftB = Registry.byName("q_stream_39_weekend_lift").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -794,7 +796,8 @@ class StreamingSpec extends SparkSpec {
       Streams.rfmStream(Streams.eventStream(spark, inputDir)).toDF(),
       "stream_rfm", complete = false).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.rfmFinish(spark.table("stream_rfm"))
+    val streamed = graft.api.Pipelines.rfmSegments(Streams.latestPerUser(spark.table("stream_rfm")),
+        "user_id", "last_us", "freq", "cents").orderBy("r", "f", "m")
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_27_rfm").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -806,7 +809,10 @@ class StreamingSpec extends SparkSpec {
       Streams.funnelTouchStream(Streams.eventStream(spark, inputDir)).toDF(),
       "stream_funnel_touch", complete = false).start()
     try q.processAllAvailable() finally q.stop()
-    val streamed = Streams.funnelTimeFinish(spark.table("stream_funnel_touch"))
+    // Long.MaxValue marks a touch not seen yet; the batch tail reads NULL
+    def seen(c: String) = when(col(c) =!= Long.MaxValue, col(c)).as(c)
+    val streamed = Streams.funnelHopStats(Streams.latestPerUser(spark.table("stream_funnel_touch"))
+        .select(col("user_id"), seen("t_view"), seen("t_click"), seen("t_buy")))
       .collect().map(_.toSeq).toSeq
     val batch = Registry.byName("q_stream_30_funnel_time").fn(spark, sf)
       .collect().map(_.toSeq).toSeq

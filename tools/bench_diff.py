@@ -29,8 +29,10 @@ Properties (proven by --selftest):
   * bounded: a uniform 2.5x slowdown (past MAX_DRIFT) still fails.
 
 Exits 2 with usage on bad invocation; exits 1 when --gate is passed
-and any query regressed past the threshold (the round exit gate), else
-0 (informational). Prints queries whose steady time changed by >1.5x
+and any query regressed past the threshold or the new record lists a
+query under "failed" (it threw in a timed pass, so its time is only the
+time until it threw; the round exit gate), else 0 (informational). A
+query a committed record lists as failed never enters the floor. Prints queries whose steady time changed by >1.5x
 AND >0.5s absolute (filters JIT/VM noise on the sub-second majority),
 plus added/removed queries and the total delta.
 The per-round discipline: run after any operator rework, BEFORE
@@ -130,13 +132,17 @@ def min_merge(records, rebaselines=None, is_ancestor=_is_ancestor):
     Rebaselined queries (see REBASELINE_PATH) exclude records at or
     before their cutoff sha; with no surviving record the query is
     omitted from the floor (gates like an ADDED query until a
-    post-change record is committed)."""
+    post-change record is committed). A query a record lists under
+    "failed" contributes nothing from that record: its time is only the
+    time until it threw."""
     suite = [r for r in records if not r.get("__solo__")]
     if not suite:
         raise SystemExit("bench_diff: no committed bench_out.json to diff against")
     newest = suite[0]
 
     def valid(r, name):
+        if name in r.get("failed", ()):
+            return False
         cut = (rebaselines or {}).get(name)
         if cut is None or r.get("__solo__") or "__sha__" not in r:
             return True
@@ -208,8 +214,12 @@ def diff(old: dict, new: dict, quiet: bool = False):
 
 
 def main(old_ref: str, new_ref: str, gate: bool = False) -> int:
-    flagged = diff(load(old_ref), load(new_ref))
-    return 1 if (flagged and gate) else 0
+    new = load(new_ref)
+    flagged = diff(load(old_ref), new)
+    failed = new.get("failed", [])
+    for name in failed:
+        print(f"  FAILED  {name:34s} threw in a timed pass")
+    return 1 if (gate and (flagged or failed)) else 0
 
 
 def selftest() -> int:
@@ -258,8 +268,14 @@ def selftest() -> int:
     floor5 = min_merge([old1], {"q_c": "A"}, is_ancestor=anc)
     assert "q_c" not in floor5["queries"], floor5        # no valid record -> omitted
     assert diff(floor5, new1, quiet=True) == [], "rebaselined query must gate as ADDED"
+    # 8. a query that threw (fast) in a committed record does not lower
+    #    its floor; the other records still set it
+    threw = {"value": 9.0, "queries": {"q_a": 0.01, "q_d": 2.0}, "failed": ["q_a"]}
+    floor6 = min_merge([threw, newer])
+    assert floor6["queries"]["q_a"] == 1.1, floor6
+    assert floor6["queries"]["q_d"] == 2.0, floor6
     print("bench_diff selftest: floor is monotone, noise-immune, sensitive, bounded, "
-          "rebaseline-scoped — OK")
+          "rebaseline-scoped, failure-blind — OK")
     return 0
 
 

@@ -58,6 +58,11 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 java $ADD_OPENS -XX:ReservedCodeCacheSiz
 python3 tools/bench_diff.py --gate HEAD bench_out.json > /tmp/gate_bench_diff.txt 2>&1 \
   && GATE_OK=1 || GATE_OK=0
 cat /tmp/gate_bench_diff.txt
+# a query that threw has no timing to recheck: no solo run can clear it
+if grep -q '^  FAILED ' /tmp/gate_bench_diff.txt; then
+  echo "GATE: queries threw in a timed pass"
+  exit 1
+fi
 if [ "$GATE_OK" = "0" ]; then
   FLAGGED=$(grep '^FLAGGED ' /tmp/gate_bench_diff.txt | cut -d' ' -f2)
   # bench_diff can exit non-zero WITHOUT flags (uncaught exception, no

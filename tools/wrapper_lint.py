@@ -66,9 +66,6 @@ STREAM_ONLY = {
     "rollingAnomalyStream": "stateful: watermark-finalized per-user 20-value ring",
     "rfmStream": "stateful: per-user RFM sufficient statistics",
     "funnelTouchStream": "stateful: per-user first-touch times",
-    "abandonmentFinish": "latest refinement of abandonmentStream, then q_stream_31's abandonmentByWeekday",
-    "rfmFinish": "latest refinement of rfmStream, then q_stream_27's Pipelines.rfmSegments",
-    "funnelTimeFinish": "latest refinement of funnelTouchStream, then q_stream_30's funnelHopStats",
 }
 
 
