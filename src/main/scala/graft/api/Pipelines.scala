@@ -456,7 +456,7 @@ object Pipelines {
     groupRankPrefix(
         df.select(col(idCol), col(groupCol),
           size(TextFunctions.tokens(col(textCol))).cast("long").as("n_tok")),
-        Seq(groupCol), Seq(col(idCol)), "__rk", "__ng", Seq(("n_tok", "cum", "")))
+        Seq(groupCol), Seq(col(idCol)), sums = Seq(("n_tok", "cum", "")))
       .select(col(groupCol), floor((col("cum") - col("n_tok")) / lit(512)).as("pack_id"), col("n_tok"))
 
   /** Exact heavy hitters: tokens above 0.5% of the total token stream.
@@ -568,7 +568,7 @@ object Pipelines {
     * avoids cross-group normalization: sqrt is IEEE-correctly-rounded
     * and ×8 is a power of two, so engines agree bit for bit. Returns the
     * kept rows as (idCol, groupCol, rn, quota). One tiny aggregate plus
-    * one range-partitioned per-group rank ([[exactGroupRankCount]]: a
+    * one range-partitioned per-group rank ([[groupRankPrefix]]: a
     * group-keyed window would be a |groups|-task corpus sort, and the
     * per-group quota defeats WindowGroupLimit); the quotas broadcast.
     */
@@ -578,8 +578,8 @@ object Pipelines {
         least(col("n_docs"),
           ceil(sqrt(col("n_docs").cast("double")) * 8).cast("long")).as("quota"))
     val prio = idHash(col(idCol))
-    exactGroupRankCount(df.select(col(idCol), col(groupCol)),
-        Seq(groupCol), Seq(prio, col(idCol)), "rn", "__n")
+    groupRankPrefix(df.select(col(idCol), col(groupCol)),
+        Seq(groupCol), Seq(prio, col(idCol)), "rn")
       .join(broadcast(quotas), groupCol)
       .filter(col("rn") <= col("quota"))
       .select(col(idCol), col(groupCol), col("rn"), col("quota"))
@@ -648,7 +648,7 @@ object Pipelines {
     * between the `valueCol` distributions of rows where `groupCol` ==
     * groupA vs groupB. The supremum is reached at a data point, so both
     * ECDFs are evaluated on the merged DISTINCT-value grid; their two
-    * prefix sums share ONE range shuffle ([[prefixSumN]], no one-task
+    * prefix sums share ONE range shuffle ([[groupRankPrefix]], no one-task
     * window at any grid size) and the totals are the max of each
     * monotone cumsum. Returns one row (n1, n2, d_num, d_stat): the
     * integer core D·n1·n2 stays exact in BIGINT, d_stat rounds 1e-6.
@@ -660,7 +660,8 @@ object Pipelines {
         when(col(groupCol) === groupA, 1L).otherwise(0L).as("ia"))
     val pts = src.groupBy("v")
       .agg(sum("ia").as("c1"), (count(lit(1)) - sum("ia")).as("c2"))
-    val cum0 = prefixSumN(pts, Seq("v"), Seq("c1" -> "cum1", "c2" -> "cum2"))
+    val cum0 = groupRankPrefix(pts, Nil, Seq(col("v")),
+        sums = Seq(("c1", "cum1", ""), ("c2", "cum2", "")))
       .select(col("cum1"), col("cum2"))
     val tot = cum0.agg(max("cum1").as("n1"), max("cum2").as("n2"))
     cum0.crossJoin(broadcast(tot))
@@ -997,14 +998,14 @@ object Pipelines {
     * cumulative share — the curve whose area deficit is the Gini
     * coefficient. Deciles are the builtin-identical ntile(10) over the
     * totally ordered (value, id) stream, computed as
-    * [[exactGlobalRankByN]] + [[ntileOfRank]] (range-partitioned — no
+    * [[exactGlobalRank]] + [[ntileOfRank]] (range-partitioned — no
     * one-task window; the row count comes off the rank helper's
     * histogram pass); shares are exact BIGINT rationals off the 10-row
     * table. `df` holds exactly (valueCol, idCol).
     */
   def lorenzCurve(df: DataFrame, idCol: String, valueCol: String): DataFrame = {
-    val (nE, ranked) = exactGlobalRankByN(df, Seq(col(valueCol), col(idCol)), "__rk")
-    val b = ranked.select(col(valueCol), ntileOfRank(col("__rk"), nE, 10).as("decile"))
+    val (nE, ranked) = exactGlobalRank(df, Seq(col(valueCol), col(idCol)), "__rk")
+    val b = ranked.select(col(valueCol), ntileOfRank(col("__rk"), lit(nE), 10).as("decile"))
     val g = b.groupBy("decile").agg(count(lit(1)).as("n"), sum(valueCol).as("s"))
     g.withColumn("cum", sum("s").over(Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("tot", sum("s").over(Window.partitionBy()))
@@ -1110,7 +1111,7 @@ object Pipelines {
     * micros, counts, cents): builtin-identical ntile(5) per axis, DESC
     * with the id as total-order tie-break (score 1 = best), then the
     * population of each (r, f, m) segment. Each ntile is
-    * [[exactGlobalRankByN]]/[[exactGlobalRankBy]] + [[ntileOfRank]] —
+    * [[exactGlobalRank]] + [[ntileOfRank]] —
     * three range shuffles of the checkpointed table, no one-task window
     * even when ids scale with the fact; n rides the first rank's count
     * pass. Returns (r, f, m, n_users).
@@ -1118,12 +1119,12 @@ object Pipelines {
   def rfmSegments(df: DataFrame, idCol: String, recencyCol: String, freqCol: String,
       monetaryCol: String): DataFrame = {
     val u = df.localCheckpoint()
-    val (nU, rRank) = exactGlobalRankByN(u, Seq(col(recencyCol).desc, col(idCol)), "__rk")
+    val (nU, rRank) = exactGlobalRank(u, Seq(col(recencyCol).desc, col(idCol)), "__rk")
     def score(ranked: DataFrame, out: String) =
-      ranked.select(col(idCol), ntileOfRank(col("__rk"), nU, 5).as(out))
+      ranked.select(col(idCol), ntileOfRank(col("__rk"), lit(nU), 5).as(out))
     score(rRank, "r")
-      .join(score(exactGlobalRankBy(u, Seq(col(freqCol).desc, col(idCol)), "__rk"), "f"), idCol)
-      .join(score(exactGlobalRankBy(u, Seq(col(monetaryCol).desc, col(idCol)), "__rk"), "m"), idCol)
+      .join(score(exactGlobalRank(u, Seq(col(freqCol).desc, col(idCol)), "__rk")._2, "f"), idCol)
+      .join(score(exactGlobalRank(u, Seq(col(monetaryCol).desc, col(idCol)), "__rk")._2, "m"), idCol)
       .groupBy(col("r").cast("long").as("r"), col("f").cast("long").as("f"),
         col("m").cast("long").as("m"))
       .agg(count(lit(1)).as("n_users"))
@@ -1861,7 +1862,7 @@ object Pipelines {
     * layout), and per context size report sequences, rows straddling a
     * cut, their share, and the single tail pad — the shred-rate vs
     * padding tradeoff that picks ctx. One cumulative token sum
-    * ([[prefixSum]]: contiguous order ranges per partition +
+    * ([[groupRankPrefix]]: contiguous order ranges per partition +
     * per-partition integer offsets, no one-task window) feeds every
     * size; a row is split iff its first and last token land in
     * different blocks — pure integer floor division, no per-token
@@ -1871,7 +1872,7 @@ object Pipelines {
       ctxs: Seq[Long]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cum = prefixSum(df, Seq(orderCol), tokCol, "c")
+    val cum = groupRankPrefix(df, Nil, Seq(col(orderCol)), sums = Seq((tokCol, "c", "")))
     cum.crossJoin(broadcast(ctxs.toDF("ctx")))
       .select(col("ctx"), col(tokCol), col("c"),
         when(expr("(c - 1) div ctx") > expr(s"(c - $tokCol) div ctx"), 1).otherwise(0).as("crossed"))
@@ -2033,14 +2034,14 @@ object Pipelines {
     * exact rank-weighted sum G = (2·Σi·dᵢ − (n+1)·Σd) / (n·Σd) over
     * degrees ranked ascending with node tie-break (no sorting of
     * floats). The degree table is node-scaled, so the rank is the
-    * range-partitioned [[exactGlobalRankBy]], not a single-partition
+    * range-partitioned [[exactGlobalRank]], not a single-partition
     * window; then one fold. Returns (n_nodes, total_degree, max_degree,
     * gini).
     */
   def degreeGini(bidirEdges: DataFrame, srcCol: String): DataFrame = {
     val deg = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("deg"))
-    val r = exactGlobalRankBy(deg.select(col("deg"), col("node")),
-      Seq(col("deg"), col("node")), "i")
+    val r = exactGlobalRank(deg.select(col("deg"), col("node")),
+      Seq(col("deg"), col("node")), "i")._2
     r.agg(count(lit(1)).as("n"), sum("deg").as("sd"),
         sum(col("i") * col("deg")).as("sid"), max("deg").as("maxd"))
       .select(col("n").as("n_nodes"), col("sd").as("total_degree"),
@@ -2187,7 +2188,7 @@ object Pipelines {
     * density among the top-decile-degree nodes (min 2) vs the whole
     * graph's density — φ ≫ 1 means the hubs form a tightly-wired elite.
     * The degree table is built once; the hub pick is the
-    * range-partitioned [[exactGlobalRankBy]] (a global rank window over
+    * range-partitioned [[exactGlobalRank]] (a global rank window over
     * the entity-scaled degree table would plan Exchange
     * SinglePartition); the hub set is a broadcast semi-join on BOTH
     * endpoints and the densities divide exact directed-edge counts.
@@ -2200,7 +2201,7 @@ object Pipelines {
       .localCheckpoint()
     val n = deg.count()
     val nHubs = math.max(n / 10, 2L)
-    val hubs = exactGlobalRankBy(deg, Seq(col("deg").desc, col("node")), "rn")
+    val hubs = exactGlobalRank(deg, Seq(col("deg").desc, col("node")), "rn")._2
       .filter(col("rn") <= nHubs).select("node").localCheckpoint()
     val e2 = bidirEdges.count()
     val eh2 = bidirEdges.join(broadcast(hubs), bidirEdges(srcCol) === hubs("node"), "left_semi")
@@ -2646,368 +2647,223 @@ object Pipelines {
       .select(col(groupCol), (col("pos") + 1).cast("long").as("rn"), col(keyCol))
   }
 
-  /** Exact order statistics of a LONG column WITHOUT a single-partition
-    * global sort — the scale form that replaces the
-    * `row_number().over(Window.orderBy(v))` rank-pick pattern on
-    * fact-sized input (where the no-partition window funnels the whole
-    * table through one task).
+  /** The one ordered scan behind every exact rank, running-sum and lead
+    * form below: the scale replacement for a `Window.orderBy` with no or
+    * few partition keys, which funnels each key's rows through one task.
     *
-    * Shape: range-partition + per-partition sort on the value (ONE
-    * shuffle; each partition owns a contiguous, locally-sorted value
-    * range), count rows per partition (a P-row driver exchange),
-    * prefix-sum the histogram, then scan only the partitions that own
-    * a requested rank for their local indices — each task ~N/P rows,
-    * bounded by cluster parallelism, not data size. Both jobs share
-    * one RDD lineage, so the shuffle map output is computed once and
-    * reused — no cache or checkpoint, nothing pinned in the block
-    * manager. The value at global rank r does not depend on where
-    * Spark draws the range boundaries: equal values always land in the
-    * same range partition, so the histogram offsets identify the
-    * owning partition and local index deterministically, and the
-    * picked VALUE is unique even when ranks tie.
+    * Range-partition + per-partition sort on (groupCols, orderCols): one
+    * shuffle, every task ~N/P rows whatever the group cardinality; empty
+    * groupCols make one global group. Pass 1 collects, per (partition,
+    * group), the row count and the sums of the `sums` value columns, plus
+    * the lead value of each partition's first row — P×G rows, bounded
+    * when G is constant-cardinality. Pass 2 reads the SAME shuffle output
+    * (both jobs share one RDD lineage: no cache, nothing pinned) and adds
+    * each partition's per-group offsets to its local row numbers and
+    * running sums; a partition's last lead comes from the next non-empty
+    * partition's first row. Only the range boundaries are sampled; every
+    * output is exact.
     *
-    * `ranksOf` receives the total row count n and returns the 1-based
-    * ranks wanted (ascending value order). Returns (n, rank -> value).
-    * The collect is O(P + #ranks) — the same bounded-driver-action
-    * class as a 1-row aggregate. `valueCol` must be non-null.
+    * Emits the input columns plus, for each non-empty name, in this
+    * order: `rankCol` (1-based rank in the group), `nCol` (the group's
+    * row count), per `sums` entry (value, runningOut, totalOut) the
+    * inclusive running sum and the group total, and for `lead` =
+    * (value, out) the next row's value in the group (null on the group's
+    * last row). Value columns may be any integral type. Integer sums are
+    * order-insensitive, so running sums and totals are bit-identical to
+    * the window forms under any tie order; ranks and leads need a total
+    * order, or value-only picks (a tied value is the same value whichever
+    * tie holds the rank). Also returns pass 1's row count per partition.
     */
-  def exactRankPick(df: DataFrame, valueCol: String,
-      ranksOf: Long => Seq[Long], partitions: Int = 0): (Long, Map[Long, Long]) = {
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // range-partition + local sort ONCE; the count job and the pick job
-    // share the same RDD lineage, so the shuffle map output is computed
-    // once and reused — no cache, no checkpoint, nothing to evict
-    val sorted = df.select(col(valueCol).cast("long").as("__v"))
-      .repartitionByRange(parts, col("__v"))
-      .sortWithinPartitions("__v")
-      .rdd.map(_.getLong(0))
-    val hist = sorted
-      .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.size.toLong)))
-      .collect().sortBy(_._1)
-    val n = hist.map(_._2).sum
-    // empty input: no order statistics exist — return (0, empty) and
-    // let callers decide (the window form this replaces yielded a
-    // null-valued row; throwing here would be a behavior change)
-    if (n == 0L) return (0L, Map.empty)
-    val ranks = ranksOf(n).distinct
-    require(ranks.nonEmpty && ranks.forall(r => r >= 1 && r <= n),
-      s"exactRankPick: ranks $ranks outside [1, $n]")
-    var off = 0L
-    val spans = hist.map { case (pid, cnt) => val lo = off; off += cnt; (pid, lo, off) }
-    // global rank r lives in the partition whose span (lo, hi] contains
-    // it, at local 0-based index r - lo - 1
-    val wanted: Map[Int, Seq[(Long, Long)]] = ranks
-      .map { r =>
-        val (pid, lo, _) = spans.find { case (_, lo2, hi) => r > lo2 && r <= hi }.get
-        (pid, r, r - lo - 1)
-      }
-      .groupBy(_._1).map { case (p, xs) => p -> xs.map(x => (x._2, x._3)) }
-    val picked = sorted
-      .mapPartitionsWithIndex { (pid, it) =>
-        wanted.get(pid) match {
-          case None => Iterator.empty
-          case Some(rs) =>
-            val want = rs.map(_._2).toSet
-            // manual Long counter, NOT zipWithIndex: its Int index
-            // wraps negative past 2^31 rows per partition — exactly
-            // the at-scale regime this helper exists for
-            var idx = -1L
-            it.flatMap { v =>
-              idx += 1
-              if (want(idx)) Iterator.single((pid, idx, v)) else Iterator.empty
-            }
-        }
-      }
-      .collect().map { case (pid, i, v) => (pid, i) -> v }.toMap
-    (n, wanted.toSeq.flatMap { case (pid, rs) =>
-      rs.map { case (g, l) => g -> picked((pid, l)) }
-    }.toMap)
-  }
-
-  /** Exact global 1-based rank over a TOTAL order (the `orderCols`
-    * must be a unique key, so ties cannot reorder across engines)
-    * WITHOUT a single-partition sort: range-partition on the order
-    * key, count rows per partition, broadcast the P-row prefix-sum
-    * offsets back, and add each partition's local `row_number` to its
-    * offset. Two fact shuffles (range + the pid-keyed window) replace
-    * the one-task global sort; every stage is ~N/P per task.
-    *
-    * Returns the input columns plus `rankCol`. The driver action is
-    * the P-row histogram collect — bounded by parallelism.
-    */
-  def exactGlobalRank(df: DataFrame, orderCols: Seq[String],
-      rankCol: String, partitions: Int = 0): DataFrame =
-    exactGlobalRankBy(df, orderCols.map(col), rankCol, partitions)
-
-  /** Column-expression form of [[exactGlobalRank]] — use for mixed
-    * asc/desc orders, e.g. `Seq(col("cnt").desc, col("token"))`. The
-    * order must still be a total (unique) one.
-    */
-  def exactGlobalRankBy(df: DataFrame, orderCols: Seq[org.apache.spark.sql.Column],
-      rankCol: String, partitions: Int = 0): DataFrame =
-    exactGlobalRankByN(df, orderCols, rankCol, partitions)._2
-
-  /** [[exactGlobalRankBy]] that ALSO returns the total row count n —
-    * free off the per-partition count pass, so ntile-style callers
-    * need no separate `df.count()` scan. The machinery is the
-    * rfmSegments shape (range-partition + local sort + per-partition
-    * offsets): the count job and the rank job share one RDD lineage,
-    * so the range shuffle is computed once and its map output reused —
-    * no cache/checkpoint, nothing pinned in the block manager.
-    */
-  def exactGlobalRankByN(df: DataFrame, orderCols: Seq[org.apache.spark.sql.Column],
-      rankCol: String, partitions: Int = 0): (Long, DataFrame) = {
+  private[graft] def orderedScan(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[org.apache.spark.sql.Column], rankCol: String = "",
+      nCol: String = "", sums: Seq[(String, String, String)] = Nil,
+      lead: (String, String) = ("", "")): (Array[Long], DataFrame) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .repartitionByRange(parts, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val rdd = sorted.rdd
-    val hist = rdd
-      .mapPartitionsWithIndex((pid, it) => Iterator((pid, it.size.toLong)))
-      .collect().sortBy(_._1)
-    var off = 0L
-    val offsets = hist.map { case (pid, cnt) => val lo = off; off += cnt; (pid, lo) }.toMap
-    val n = off
-    val ranked = df.sparkSession.createDataFrame(
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        // manual Long counter, NOT zipWithIndex (Int index wraps past
-        // 2^31 rows per partition — the at-scale regime this is for)
-        var rank = offsets(pid)
-        it.map { r => rank += 1; Row.fromSeq(r.toSeq :+ rank) }
-      },
-      StructType(sorted.schema.fields :+ StructField(rankCol, LongType, nullable = false)))
-    (n, ranked)
-  }
-
-  /** Per-GROUP exact 1-based rank + per-group row count WITHOUT a
-    * constant-width window sort — the grouped sibling of
-    * [[exactGlobalRankByN]] (r12 verdict item 1). The window form
-    * `row_number().over(Window.partitionBy(g).orderBy(o))` creates ONE
-    * task per distinct g; when g has 2-25 values over a row-scaled
-    * input that is a straggler pair each sorting a corpus-sized slice.
-    * Here the data is range-partitioned by (groupCols, orderCols) —
-    * every task ~N/P rows regardless of the group cardinality — then a
-    * per-(partition, group) histogram (P×G rows, driver-bounded: G is
-    * constant-cardinality by the caller's contract) supplies each
-    * partition's starting rank within its groups, and a second pass
-    * over the SAME shuffle output adds local row numbers to those
-    * offsets. The count/rank jobs share one RDD lineage, so the range
-    * shuffle computes once — no cache, nothing pinned.
-    *
-    * Returns the input columns plus `rankCol` (1-based rank within the
-    * group, ordered by orderCols) and `nCol` (the group's row count) —
-    * the exact pair the window form produced. Ties in (groupCols,
-    * orderCols) land in one range partition and take consecutive
-    * arbitrary ranks, so either make the order total (unique key) or
-    * pick only VALUES at ranks (a rank-pick of a tied value is the
-    * same value whichever tie holds the rank — exactRankPick's
-    * argument).
-    */
-  def exactGroupRankCount(df: DataFrame, groupCols: Seq[String],
-      orderCols: Seq[org.apache.spark.sql.Column], rankCol: String,
-      nCol: String, partitions: Int = 0): DataFrame =
-    groupRankPrefix(df, groupCols, orderCols, rankCol, nCol, Nil, partitions)
-
-  /** The general per-group order machinery behind
-    * [[exactGroupRankCount]]: one range shuffle on (groupCols,
-    * orderCols) carries the per-group 1-based rank (`rankCol`), the
-    * group's row count (`nCol`), and — per `valueOutCols` entry
-    * (value, runningOut, totalOut) — the inclusive per-group running
-    * sum of an integral column plus (when totalOut is non-empty) the
-    * group's total. This is the grouped sibling of both
-    * [[exactGlobalRankByN]] and [[prefixSumN]] in a single pass: the
-    * per-(partition, group) histogram (counts AND sums — P×G rows,
-    * driver-bounded when G is constant-cardinality) supplies each
-    * partition's starting rank/sums within its groups, and the second
-    * pass over the SAME shuffle output adds local row numbers and
-    * running sums to those offsets. Integer sums are order-insensitive,
-    * so running sums are bit-identical to the window form under any
-    * tie order (the ranks need a total order, or value-only picks —
-    * see exactGroupRankCount's doc).
-    */
-  def groupRankPrefix(df: DataFrame, groupCols: Seq[String],
-      orderCols: Seq[org.apache.spark.sql.Column], rankCol: String,
-      nCol: String, valueOutCols: Seq[(String, String, String)],
-      partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    require(groupCols.nonEmpty, "groupRankPrefix needs group columns")
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val sortCols = groupCols.map(col) ++ orderCols
     val sorted = df
       .repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
     val gIdx = groupCols.map(sorted.schema.fieldIndex).toList
-    val vIdx = valueOutCols.map { case (v, _, _) => sorted.schema.fieldIndex(v) }
-    val nV = vIdx.size
-    def longAt(r: Row, i: Int): Long = r.get(i) match {
-      case l: Long => l
-      case x: Int => x.toLong
-      case x: Short => x.toLong
-      case x: Byte => x.toLong
-      case other => throw new IllegalArgumentException(
-        s"groupRankPrefix: non-integral value $other")
-    }
-    val rdd = sorted.rdd
-    // pass 1: per-(partition, group) count + value sums. Groups are
-    // contiguous within a partition (sorted by group first), so this is
-    // a streaming run-length fold, and the collect is P×G rows —
-    // bounded by parallelism times the (constant) group cardinality,
-    // the same driver-action class as exactGlobalRankByN's histogram.
-    val hist: Array[(Int, Seq[(List[Any], Array[Long])])] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
+    val vIdx = sums.map { case (v, _, _) => sorted.schema.fieldIndex(v) }.toArray
+    val nV = vIdx.length
+    val lIdx = if (lead._2.nonEmpty) sorted.schema.fieldIndex(lead._1) else -1
+    val rows = sorted.rdd
+    // pass 1: the partition's (group, [count, sum_0, ...]) runs in order —
+    // groups are contiguous in a partition sorted group-first — and its
+    // first row's lead value
+    val hist: Array[(Seq[(List[Any], Array[Long])], Any)] =
+      rows.mapPartitionsWithIndex { (pid, it) =>
         val runs = scala.collection.mutable.ArrayBuffer.empty[(List[Any], Array[Long])]
-        var cur: List[Any] = null
-        var agg: Array[Long] = null // [count, sum_0, ..., sum_{nV-1}]
+        var first: Any = null
         it.foreach { r =>
           val g = gIdx.map(r.get)
-          if (cur == null || g != cur) {
-            if (cur != null) runs += ((cur, agg))
-            cur = g; agg = new Array[Long](1 + nV)
+          if (runs.isEmpty || runs.last._1 != g) {
+            if (runs.isEmpty && lIdx >= 0) first = longAt(r, lIdx)
+            runs += ((g, new Array[Long](1 + nV)))
           }
+          val agg = runs.last._2
           agg(0) += 1
           var i = 0
           while (i < nV) { agg(1 + i) += longAt(r, vIdx(i)); i += 1 }
         }
-        if (cur != null) runs += ((cur, agg))
-        Iterator.single((pid, runs.toSeq))
-      }.collect().sortBy(_._1)
-    // each (partition, group)'s starting rank/sums = that group's
-    // totals over earlier partitions; group totals fall out of the fold
+        Iterator.single((pid, (runs.toSeq, first)))
+      }.collect().sortBy(_._1).map(_._2)
+    // each (partition, group)'s start = the group's totals over earlier
+    // partitions; the fold leaves the group totals
     val acc = scala.collection.mutable.Map.empty[List[Any], Array[Long]]
-    val starts: Map[Int, Map[List[Any], Array[Long]]] = hist.map { case (pid, gs) =>
-      pid -> gs.map { case (g, a) =>
-        val lo = acc.getOrElseUpdate(g, new Array[Long](1 + nV)).clone()
-        val cum = acc(g)
+    val starts: Array[Map[List[Any], Array[Long]]] = hist.map { case (runs, _) =>
+      runs.map { case (g, a) =>
+        val cum = acc.getOrElseUpdate(g, new Array[Long](1 + nV))
+        val lo = cum.clone()
         var i = 0
         while (i <= nV) { cum(i) += a(i); i += 1 }
-        (g, lo)
+        g -> lo
       }.toMap
-    }.toMap
+    }
     val totals: Map[List[Any], Array[Long]] = acc.toMap
-    // pass 2: local row number + running sums on top of the group's
-    // partition offsets; group totals ride along as constants per run
-    val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val offs = starts.getOrElse(pid, Map.empty)
+    // partition p's successor: (group, lead value) of the first row of
+    // the next non-empty partition
+    val next = new Array[Option[(List[Any], Any)]](hist.length)
+    var succ: Option[(List[Any], Any)] = None
+    for (p <- hist.indices.reverse) {
+      next(p) = succ
+      val (runs, first) = hist(p)
+      if (runs.nonEmpty) succ = Some((runs.head._1, first))
+    }
+    // pass 2: local row numbers, running sums and leads on top of the
+    // partition's offsets; group totals ride along as constants per run
+    val out = rows.mapPartitionsWithIndex { (pid, rowIt) =>
+      val it = rowIt.buffered
+      val offs = starts(pid)
       var cur: List[Any] = null
       var run: Array[Long] = null
       var tot: Array[Long] = null
       it.map { r =>
         val g = gIdx.map(r.get)
-        if (cur == null || g != cur) {
-          cur = g; run = offs(g).clone(); tot = totals(g)
-        }
+        if (cur == null || g != cur) { cur = g; run = offs(g).clone(); tot = totals(g) }
         run(0) += 1
         var i = 0
         while (i < nV) { run(1 + i) += longAt(r, vIdx(i)); i += 1 }
-        val extra = scala.collection.mutable.ArrayBuffer[Any](run(0), tot(0))
+        val extra = scala.collection.mutable.ArrayBuffer.empty[Any]
+        if (rankCol.nonEmpty) extra += run(0)
+        if (nCol.nonEmpty) extra += tot(0)
         i = 0
         while (i < nV) {
-          extra += run(1 + i)
-          if (valueOutCols(i)._3.nonEmpty) extra += tot(1 + i)
+          if (sums(i)._2.nonEmpty) extra += run(1 + i)
+          if (sums(i)._3.nonEmpty) extra += tot(1 + i)
           i += 1
+        }
+        if (lIdx >= 0) extra += {
+          if (it.hasNext) { if (gIdx.map(it.head.get) == g) longAt(it.head, lIdx) else null }
+          else next(pid).collect { case (hg, hv) if hg == g => hv }.orNull
         }
         Row.fromSeq(r.toSeq ++ extra)
       }
     }
-    val extraFields = Seq(StructField(rankCol, LongType, nullable = false),
-      StructField(nCol, LongType, nullable = false)) ++
-      valueOutCols.flatMap { case (_, runOut, totOut) =>
-        Seq(StructField(runOut, LongType, nullable = false)) ++
-          (if (totOut.nonEmpty) Seq(StructField(totOut, LongType, nullable = false)) else Nil)
-      }
-    df.sparkSession.createDataFrame(ranked,
-      StructType(sorted.schema.fields ++ extraFields))
+    def long(name: String) = StructField(name, LongType, nullable = false)
+    val outFields = Seq(rankCol, nCol).filter(_.nonEmpty).map(long) ++
+      sums.flatMap { case (_, r, t) => Seq(r, t).filter(_.nonEmpty).map(long) } ++
+      Seq(lead._2).filter(_.nonEmpty).map(StructField(_, LongType, nullable = true))
+    (hist.map(_._1.map(_._2(0)).sum),
+      df.sparkSession.createDataFrame(out, StructType(sorted.schema.fields ++ outFields)))
   }
 
-  /** Per-group `lead` of an integral column WITHOUT a constant-width
-    * window sort — the grouped sibling of [[adjacentPairs]]: range-
-    * partition on (groupCols, orderCols), per-partition lookahead for
-    * intra-partition leads, and a P-row driver exchange of each
-    * partition's FIRST (group, value) to stitch partition boundaries
-    * (a partition's last row leads into the next non-empty partition's
-    * first row iff the group matches). Returns the input plus `outCol`
-    * (nullable: the last row of each group has no lead — exactly the
-    * window form's null).
+  private def longAt(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
+    case l: Long => l
+    case x: Int => x.toLong
+    case x: Short => x.toLong
+    case x: Byte => x.toLong
+    case other => throw new IllegalArgumentException(
+      s"orderedScan: non-integral value $other")
+  }
+
+  /** Exact order statistics of a LONG column WITHOUT a single-partition
+    * global sort: the value column's [[orderedScan]] rank, read back only
+    * from the partitions that own a requested rank. Replaces the
+    * `row_number().over(Window.orderBy(v))` rank-pick pattern. The value
+    * at global rank r does not depend on where Spark draws the range
+    * boundaries: equal values always land in the same range partition,
+    * so the picked VALUE is unique even when ranks tie.
+    *
+    * `ranksOf` receives the total row count n and returns the 1-based
+    * ranks wanted (ascending value order). Returns (n, rank -> value),
+    * and (0, empty) on empty input. The collects are O(P + #ranks) — the
+    * same bounded-driver-action class as a 1-row aggregate. `valueCol`
+    * must be non-null.
+    */
+  def exactRankPick(df: DataFrame, valueCol: String,
+      ranksOf: Long => Seq[Long]): (Long, Map[Long, Long]) = {
+    val (counts, ranked) = orderedScan(df.select(col(valueCol).cast("long").as("__v")),
+      Nil, Seq(col("__v")), rankCol = "__r")
+    val n = counts.sum
+    if (n == 0L) return (0L, Map.empty)
+    val ranks = ranksOf(n).distinct
+    require(ranks.nonEmpty && ranks.forall(r => r >= 1 && r <= n),
+      s"exactRankPick: ranks $ranks outside [1, $n]")
+    // partition p owns the ranks (his(p), his(p + 1)]; the others are
+    // never read
+    val his = counts.scanLeft(0L)(_ + _)
+    val wanted: Map[Int, Set[Long]] =
+      ranks.groupBy(r => his.indexWhere(_ >= r) - 1).map { case (p, rs) => p -> rs.toSet }
+    val picked = ranked.rdd.mapPartitionsWithIndex { (pid, it) =>
+      val want = wanted.getOrElse(pid, Set.empty[Long])
+      if (want.isEmpty) Iterator.empty
+      else it.map(r => (r.getLong(1), r.getLong(0))).filter(p => want(p._1))
+    }.collect().toMap
+    (n, picked)
+  }
+
+  /** Exact global 1-based rank over a TOTAL order (`orderCols` must be a
+    * unique key, so ties cannot reorder across engines) WITHOUT a
+    * single-partition sort: the [[orderedScan]] with one global group.
+    * `orderCols` may mix asc/desc, e.g. `Seq(col("cnt").desc, col("token"))`.
+    * Returns the total row count n — free off pass 1, so ntile callers
+    * need no separate `count()` — and the input columns plus `rankCol`.
+    */
+  def exactGlobalRank(df: DataFrame, orderCols: Seq[org.apache.spark.sql.Column],
+      rankCol: String): (Long, DataFrame) = {
+    val (counts, ranked) = orderedScan(df, Nil, orderCols, rankCol = rankCol)
+    (counts.sum, ranked)
+  }
+
+  /** Per-group exact rank, group row count and running sums WITHOUT a
+    * constant-width window sort: the [[orderedScan]] without a lead. The
+    * window form `row_number().over(Window.partitionBy(g).orderBy(o))`
+    * creates ONE task per distinct g; when g has 2-25 values over a
+    * row-scaled input that is a straggler pair each sorting a
+    * corpus-sized slice. Empty `groupCols` give the global prefix sum of
+    * `sum(v).over(Window.orderBy(o))`. Emits the input plus each
+    * non-empty `rankCol`, `nCol` and (value, runningOut, totalOut).
+    */
+  def groupRankPrefix(df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[org.apache.spark.sql.Column], rankCol: String = "",
+      nCol: String = "", sums: Seq[(String, String, String)] = Nil): DataFrame =
+    orderedScan(df, groupCols, orderCols, rankCol, nCol, sums)._2
+
+  /** Per-group `lead` of an integral column WITHOUT a constant-width or
+    * single-partition window sort: the [[orderedScan]] lead. Returns the
+    * input plus `outCol` (null on the last row of each group — exactly
+    * the window form's null). Empty `groupCols` give the global lead;
+    * its non-null rows are every adjacent pair of the order.
     */
   def groupLeadLong(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[org.apache.spark.sql.Column], valueCol: String,
-      outCol: String, partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    require(groupCols.nonEmpty, "groupLeadLong needs group columns")
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sortCols = groupCols.map(col) ++ orderCols
-    val sorted = df
-      .repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val gIdx = groupCols.map(sorted.schema.fieldIndex).toList
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    def longAt(r: Row): Long = r.get(vIdx) match {
-      case l: Long => l
-      case x: Int => x.toLong
-      case other => throw new IllegalArgumentException(
-        s"groupLeadLong: non-integral value $other")
-    }
-    val rdd = sorted.rdd
-    // pass 1: each non-empty partition's first (group, value) — the
-    // P-row boundary exchange (shuffle map output reused by pass 2)
-    val heads: Array[(Int, List[Any], Long)] = rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.hasNext) {
-        val r = it.next()
-        Iterator.single((pid, gIdx.map(r.get), longAt(r)))
-      } else Iterator.empty
-    }.collect().sortBy(_._1)
-    // partition p's successor head = the first head with pid > p
-    val nextHead: Map[Int, (List[Any], Long)] = {
-      val pids = heads.map(_._1)
-      (0 until parts).flatMap { p =>
-        pids.find(_ > p).map { np =>
-          val h = heads.find(_._1 == np).get
-          p -> (h._2, h._3)
-        }
-      }.toMap
-    }
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val succ = nextHead.get(pid)
-      new Iterator[Row] {
-        private var prev: Row = if (it.hasNext) it.next() else null
-        def hasNext: Boolean = prev != null
-        def next(): Row = {
-          val r = prev
-          val g = gIdx.map(r.get)
-          val lead: Any =
-            if (it.hasNext) {
-              prev = it.next()
-              if (gIdx.map(prev.get) == g) longAt(prev) else null
-            } else {
-              prev = null
-              succ match {
-                case Some((hg, hv)) if hg == g => hv
-                case _ => null
-              }
-            }
-          Row.fromSeq(r.toSeq :+ lead)
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(out,
-      StructType(sorted.schema.fields :+ StructField(outCol, LongType, nullable = true)))
-  }
+      outCol: String): DataFrame =
+    orderedScan(df, groupCols, orderCols, lead = (valueCol, outCol))._2
 
-  /** Column-count form of [[ntileOfRank]] for PER-GROUP ntile: `nCol`
-    * is the group's row count (e.g. exactGroupRankCount's nCol) instead
-    * of a driver-side constant. Same exact builtin semantics: the first
-    * n%k buckets take ⌈n/k⌉ rows, the rest ⌊n/k⌋.
+  /** Spark/DuckDB `ntile(k)` bucket for a row at 1-based rank `rankCol`
+    * out of `nCol` rows (`lit(n)` for a global rank, the group count of
+    * [[groupRankPrefix]] per group): the first n%k buckets take ⌈n/k⌉
+    * rows, the rest ⌊n/k⌋ — the exact builtin semantics, expressed on a
+    * distributed rank so no single-partition window is needed.
     */
-  def ntileOfRankN(rankCol: org.apache.spark.sql.Column,
+  def ntileOfRank(rankCol: org.apache.spark.sql.Column,
       nCol: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column = {
+    // exact integer division (Spark's `/` is double division; the
+    // subtract-mod form keeps the quotient an exactly-representable
+    // integer for any rank < 2^53)
     def idiv(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       ((a - pmod(a, b)) / b).cast("long")
     val base = idiv(nCol, lit(k.toLong))
@@ -3022,12 +2878,12 @@ object Pipelines {
     * (r12 verdict item 3 — the two copies could drift): per-hop user
     * count plus exact order-statistic median/p90 of the integer gaps,
     * truncated to minutes. Input: (hop, gap_us). The ranks come from
-    * [[exactGroupRankCount]] — scale-safe under the 2-value hop key
+    * [[groupRankPrefix]] — scale-safe under the 2-value hop key
     * (the window form was a 2-task corpus sort) — and the picks are
     * value-only, so gap_us ties cannot move the answer.
     */
   def funnelGapStats(hops: DataFrame): DataFrame = {
-    val r = exactGroupRankCount(hops, Seq("hop"), Seq(col("gap_us")), "rn", "n")
+    val r = groupRankPrefix(hops, Seq("hop"), Seq(col("gap_us")), "rn", "n")
     r.groupBy("hop")
       .agg(max("n").as("n_users"),
         (max(when(col("rn") === floor((col("n") + 1) / lit(2.0)).cast("long"), col("gap_us")))
@@ -3035,130 +2891,6 @@ object Pipelines {
         (max(when(col("rn") === floor((lit(9) * col("n") + 9) / lit(10.0)).cast("long"),
           col("gap_us"))) / 60000000L).cast("long").as("p90_minutes"))
       .orderBy("hop")
-  }
-
-  /** Exact running sum of a LONG column over a TOTAL order WITHOUT a
-    * single-partition window: range-partition on the order key, sum
-    * each partition (P-row aggregate), prefix-sum the per-partition
-    * totals on the driver, and add each partition's offset to its
-    * local cumulative sum. Integer sums are order-insensitive, so the
-    * result is bit-identical to the one-task
-    * `sum(v).over(Window.orderBy(...))` form it replaces. Returns the
-    * input plus `outCol` (the inclusive running sum).
-    */
-  def prefixSum(df: DataFrame, orderCols: Seq[String], valueCol: String,
-      outCol: String, partitions: Int = 0): DataFrame =
-    prefixSumN(df, orderCols, Seq(valueCol -> outCol), partitions)
-
-  /** Multi-column form of [[prefixSum]]: all running sums share ONE
-    * range shuffle and one P-row offset exchange.
-    */
-  private[graft] def prefixSumN(df: DataFrame, orderCols: Seq[String],
-      valueOutCols: Seq[(String, String)], partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    require(valueOutCols.nonEmpty, "prefixSumN needs at least one value column")
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .repartitionByRange(parts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    val vIdx = valueOutCols.map { case (v, _) => sorted.schema.fieldIndex(v) }
-    def longAt(r: Row, i: Int): Long = r.get(i) match {
-      case l: Long => l
-      case x: Int => x.toLong
-      case x: Short => x.toLong
-      case x: Byte => x.toLong
-      case other => throw new IllegalArgumentException(
-        s"prefixSumN: non-integral value $other")
-    }
-    val rdd = sorted.rdd
-    // pass 1: per-partition totals (the count/sum job and the cumsum
-    // job share one RDD lineage → the range shuffle computes once)
-    val hist = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val sums = Array.fill(vIdx.size)(0L)
-      it.foreach(r => vIdx.indices.foreach(i => sums(i) += longAt(r, vIdx(i))))
-      Iterator((pid, sums.toSeq))
-    }.collect().sortBy(_._1)
-    val offs = Array.fill(vIdx.size)(0L)
-    val offsets: Map[Int, Seq[Long]] = hist.map { case (pid, sums) =>
-      val lo = offs.toSeq
-      sums.indices.foreach(i => offs(i) += sums(i))
-      pid -> lo
-    }.toMap
-    // pass 2: local running sums + the exact integer partition offsets
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val run = offsets(pid).toArray
-      it.map { r =>
-        vIdx.indices.foreach(i => run(i) += longAt(r, vIdx(i)))
-        Row.fromSeq(r.toSeq ++ run.toSeq)
-      }
-    }
-    df.sparkSession.createDataFrame(out,
-      StructType(sorted.schema.fields ++
-        valueOutCols.map { case (_, o) => StructField(o, LongType, nullable = false) }))
-  }
-
-  /** Every adjacent pair of a totally-ordered LONG id column WITHOUT a
-    * single-partition `lead` window: range-partition on the id,
-    * per-partition `lead` (intra-partition pairs), then stitch each
-    * partition's last id to the next non-empty partition's first id —
-    * a P-row driver-side boundary exchange. Returns (idCol, `nxtCol`)
-    * for every consecutive pair, exactly the rows the global
-    * `lead(id, 1).over(Window.orderBy(id))` form emits (minus the
-    * final null-next row).
-    */
-  def adjacentPairs(df: DataFrame, idCol: String, nxtCol: String,
-      partitions: Int = 0): DataFrame = {
-    val parts = if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.select(col(idCol).cast("long").as(idCol))
-      .repartitionByRange(parts, col(idCol))
-      .sortWithinPartitions(idCol)
-      .rdd.map(_.getLong(0))
-    // pass 1: non-empty partitions' (first, last); the boundary pairs
-    // stitch partition p's last id to the next non-empty partition's
-    // first id — a P-row driver exchange (shuffle reused by pass 2)
-    val bounds = sorted.mapPartitionsWithIndex { (pid, it) =>
-      if (it.hasNext) {
-        val first = it.next(); var last = first
-        it.foreach(last = _)
-        Iterator((pid, first, last))
-      } else Iterator.empty
-    }.collect().sortBy(_._1)
-    val cross = bounds.sliding(2).collect {
-      case Array((_, _, last), (_, first, _)) => (last, first)
-    }.toSeq
-    import df.sparkSession.implicits._
-    val intra = sorted.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var prev = it.next()
-        it.map { v => val p = (prev, v); prev = v; p }
-      }
-    }.toDF(idCol, nxtCol)
-    if (cross.isEmpty) intra
-    else intra.union(df.sparkSession.createDataFrame(cross).toDF(idCol, nxtCol))
-  }
-
-  /** Spark/DuckDB `ntile(k)` bucket for a row at global 1-based rank
-    * `rankCol` out of `n` total: the first n%k buckets take ⌈n/k⌉
-    * rows, the rest ⌊n/k⌋ — the exact builtin semantics, expressed on
-    * a distributed rank so no single-partition window is needed.
-    */
-  def ntileOfRank(rankCol: org.apache.spark.sql.Column, n: Long,
-      k: Int): org.apache.spark.sql.Column = {
-    // exact integer division (Spark's `/` is double division; the
-    // subtract-mod form keeps the quotient an exactly-representable
-    // integer for any rank < 2^53)
-    def idiv(a: org.apache.spark.sql.Column, b: Long) =
-      ((a - pmod(a, lit(b))) / b).cast("long")
-    val base = n / k
-    val rem = n % k
-    val cut = rem * (base + 1)
-    when(rankCol <= cut, idiv(rankCol - 1, base + 1) + 1)
-      .otherwise(lit(rem) + idiv(rankCol - cut - 1, math.max(base, 1L)) + 1)
-      .cast("long")
   }
 }
 

@@ -103,16 +103,16 @@ object Round11bOps {
         | floor(CAST(sum(typs) AS DOUBLE) / sum(toks) * 1000000 + 0.5) / 1000000 AS ttr
         |FROM b GROUP BY 1 ORDER BY decile""".stripMargin) { (s, d) =>
       // Deciles over the (toks, doc_id) total order via the
-      // range-partitioned exactGlobalRankByN + ntileOfRank (builtin-
+      // range-partitioned exactGlobalRank + ntileOfRank (builtin-
       // ntile-identical — the q_ret_6 machinery), never a one-task
       // window; per-decile sums are exact BIGINTs.
       val sdf = Tables(s, d, "documents").select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("toks"),
         size(array_distinct(split(col("text"), " "))).cast("long").as("typs"))
       val (n, ranked) = graft.api.Pipelines
-        .exactGlobalRankByN(sdf, Seq(col("toks"), col("doc_id")), "__rk")
+        .exactGlobalRank(sdf, Seq(col("toks"), col("doc_id")), "__rk")
       ranked.select(col("toks"), col("typs"),
-          graft.api.Pipelines.ntileOfRank(col("__rk"), n, 10).as("decile"))
+          graft.api.Pipelines.ntileOfRank(col("__rk"), lit(n), 10).as("decile"))
         .groupBy("decile")
         .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"),
           sum("typs").as("n_types"))

@@ -39,19 +39,19 @@ object Round3cOps {
       // Quantile (equal-frequency) bucketing: ntile(4) within each order
       // priority, then per-bucket stats — the discretization step before
       // stratified analyses. The bucket assignment is builtin-identical
-      // ntile semantics on Pipelines.exactGroupRankCount's per-group
+      // ntile semantics on Pipelines.groupRankPrefix's per-group
       // rank (r13 — the 5-value priority window was a 5-task corpus
       // sort; the range-partitioned rank keeps every task ~N/P, and
-      // ntileOfRankN reproduces the ⌈n/k⌉/⌊n/k⌋ split exactly). The
+      // ntileOfRank reproduces the ⌈n/k⌉/⌊n/k⌋ split exactly). The
       // tiebreak (o_totalprice, o_orderkey) is total, so bucket
       // assignment is engine-exact; avg goes through exact-integer
       // cents (double-sum order never hits a .xx5 edge).
-      val ranked = graft.api.Pipelines.exactGroupRankCount(
+      val ranked = graft.api.Pipelines.groupRankPrefix(
         Tables(s, d, "orders").select(col("o_orderpriority"), col("o_totalprice"), col("o_orderkey")),
         Seq("o_orderpriority"), Seq(col("o_totalprice"), col("o_orderkey")), "__rk", "__n")
       ranked
         .select(col("o_orderpriority"), col("o_totalprice"),
-          graft.api.Pipelines.ntileOfRankN(col("__rk"), col("__n"), 4).as("quartile"))
+          graft.api.Pipelines.ntileOfRank(col("__rk"), col("__n"), 4).as("quartile"))
         .groupBy("o_orderpriority", "quartile")
         .agg(count(lit(1)).as("n"),
           round(min(col("o_totalprice")), 2).as("lo"),
@@ -471,10 +471,10 @@ object Round3cOps {
       val c = Tables(s, d, "orders")
         .select(col("o_orderpriority"), col("o_orderkey"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("v"))
-      // boundary ranks via Pipelines.exactGroupRankCount (r13): the
+      // boundary ranks via Pipelines.groupRankPrefix (r13): the
       // 5-value priority window was a 5-task corpus sort; the range-
       // partitioned rank keeps every task ~N/P
-      val bounds = graft.api.Pipelines.exactGroupRankCount(
+      val bounds = graft.api.Pipelines.groupRankPrefix(
           c.select(col("o_orderpriority"), col("v"), col("o_orderkey")),
           Seq("o_orderpriority"), Seq(col("v"), col("o_orderkey")), "rn", "n")
         .groupBy("o_orderpriority")
@@ -594,7 +594,7 @@ object Round3cOps {
         floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("v"),
         col("l_quantity").cast("long").as("wt"))
       graft.api.Pipelines.groupRankPrefix(c, Seq("l_returnflag"), Seq(col("v")),
-          "__rk", "__n", Seq(("wt", "cw", "tw")))
+          sums = Seq(("wt", "cw", "tw")))
         .groupBy("l_returnflag")
         .agg(round(min(when(col("cw") * 2 >= col("tw"), col("v"))).cast("double") / 100, 2)
           .as("wmedian"))
@@ -653,18 +653,19 @@ object Round3cOps {
       // the incident stream scales with the fact (fixed error rate), so
       // its gap-island derivation is fully distributed too: global rank
       // via Pipelines.exactGlobalRank, the lag via a rank-shifted self
-      // join, and the island ids via Pipelines.prefixSum — three keyed
+      // join, and the island ids via Pipelines.groupRankPrefix — three keyed
       // shuffles of the error slice, never a one-task window
       val er = Tables(s, d, "events").filter(col("event_type") === "error")
         .select(col("event_id"), unix_micros(col("ts")).as("tus"))
-      val r = graft.api.Pipelines.exactGlobalRank(er, Seq("tus", "event_id"), "__rk")
-        .localCheckpoint()
+      val r = graft.api.Pipelines.exactGlobalRank(er, Seq(col("tus"), col("event_id")), "__rk")
+        ._2.localCheckpoint()
       val prevR = r.select((col("__rk") + 1).as("__rk2"), col("tus").as("__ptus"))
       val brkDf = r.join(prevR, col("__rk") === col("__rk2"), "left")
         .select(col("tus"), col("__rk"),
           when(col("__ptus").isNull
             || col("tus") - col("__ptus") > 1800000000L, 1).otherwise(0).as("brk"))
-      val inc = graft.api.Pipelines.prefixSum(brkDf, Seq("__rk"), "brk", "iid")
+      val inc = graft.api.Pipelines.groupRankPrefix(brkDf, Nil, Seq(col("__rk")),
+          sums = Seq(("brk", "iid", "")))
         .groupBy("iid")
         .agg(min("tus").as("i2s"), (max("tus") + 300000000L).as("i2e"))
         .drop("iid")
@@ -791,7 +792,7 @@ object Round3cOps {
       // groupRankPrefix stays (a window keyed by 3-value f over a
       // row-scaled table is the straggler class r13 removed)
       val pr = graft.api.Pipelines.groupRankPrefix(
-          joint, Seq("f"), Seq(col("p")), "__rk", "__ng", Seq(("cnt", "cum", "")))
+          joint, Seq("f"), Seq(col("p")), sums = Seq(("cnt", "cum", "")))
         .select(col("f"), col("cnt"), col("srx"),
           (lit(2) * col("cum") - col("cnt") + 1).as("ry"))
       val dyc = col("ry") - col("n") - 1
@@ -931,8 +932,7 @@ object Round3cOps {
       val prio = (pmod(col("doc_id"), lit(1000000007L)) * 2654435761L) % 1000000007L
       graft.api.Pipelines.groupRankPrefix(
           docs.select(col("doc_id"), col("lang"), col("n_chars")),
-          Seq("lang"), Seq(prio, col("doc_id")), "__rk", "__ng",
-          Seq(("n_chars", "cum", "")))
+          Seq("lang"), Seq(prio, col("doc_id")), sums = Seq(("n_chars", "cum", "")))
         .join(broadcast(budgets), "lang")
         .filter(col("cum") <= col("budget"))
         .select(col("doc_id"), col("lang"), col("cum").cast("long").as("cum_chars"),

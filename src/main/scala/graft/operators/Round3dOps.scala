@@ -69,9 +69,10 @@ object Round3dOps {
         .select(col("value").as("v"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("ia"))
       val pts = src.groupBy("v").agg(sum("ia").as("c1"), count(lit(1)).as("c"))
-      // range-partitioned integer cumsum (Pipelines.prefixSum) — no
+      // range-partitioned integer cumsum (Pipelines.groupRankPrefix) — no
       // one-task window over the distinct-value grid
-      val cum = graft.api.Pipelines.prefixSum(pts, Seq("v"), "c", "__cums")
+      val cum = graft.api.Pipelines.groupRankPrefix(pts, Nil, Seq(col("v")),
+          sums = Seq(("c", "__cums", "")))
         .select(col("c1"), col("c"), (col("__cums") - col("c")).as("prior"))
       val agg = cum.agg(
         sum("c1").as("n1"),
@@ -234,17 +235,17 @@ object Round3dOps {
             .cast("long").as("l6"))
       val doc = sc.groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"), sum("l6").as("sum_l6"))
-      // builtin-identical ntile(3) via exactGlobalRankByN + ntileOfRank
+      // builtin-identical ntile(3) via exactGlobalRank + ntileOfRank
       // — range-partitioned on the (mean-l6 DESC, doc_id) total order,
       // no one-task window over the doc-scale table; n rides the same
       // per-partition count pass as the rank
-      val (nDoc, ranked) = graft.api.Pipelines.exactGlobalRankByN(doc,
+      val (nDoc, ranked) = graft.api.Pipelines.exactGlobalRank(doc,
         Seq((col("sum_l6").cast("double") / col("n_bigrams").cast("double")).desc,
           col("doc_id")), "__rk")
       ranked
         .select(col("doc_id"), col("n_bigrams"), col("sum_l6"),
           round(exp(-(col("sum_l6").cast("double") / (col("n_bigrams").cast("double") * 1000000.0))), 4).as("ppl"),
-          graft.api.Pipelines.ntileOfRank(col("__rk"), nDoc, 3).as("bucket"))
+          graft.api.Pipelines.ntileOfRank(col("__rk"), lit(nDoc), 3).as("bucket"))
         .orderBy("doc_id")
     },
 
@@ -323,7 +324,7 @@ object Round3dOps {
       // (n+1)·Σxᵢ)/(n·Σxᵢ) over ascending exact cents: every sum is
       // BIGINT (ties contribute identically under any permutation — x
       // constant within a tie — and (cents, orderkey) is total anyway);
-      // the rank index comes from Pipelines.exactGroupRankCount (r13 —
+      // the rank index comes from Pipelines.groupRankPrefix (r13 —
       // the 5-value prio window was a 5-task corpus sort; the
       // range-partitioned rank keeps every task ~N/P), then one
       // aggregate. Σi·x ~ n²·x̄ overflows BIGINT around n≈1e8 per
@@ -333,8 +334,8 @@ object Round3dOps {
         .select(col("o_orderpriority").as("prio"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
           col("o_orderkey"))
-      graft.api.Pipelines.exactGroupRankCount(c,
-          Seq("prio"), Seq(col("cents"), col("o_orderkey")), "i", "__ng")
+      graft.api.Pipelines.groupRankPrefix(c,
+          Seq("prio"), Seq(col("cents"), col("o_orderkey")), "i")
         .groupBy("prio")
         .agg(count(lit(1)).as("n"), sum("cents").as("s"), sum(col("i") * col("cents")).as("w2"))
         .select(col("prio"), col("n"),

@@ -395,30 +395,30 @@ object Round3eOps {
       // Scale: RRF needs the FULL-list rank of every doc (a top-K
       // truncation changes fused scores for any doc outside one list's
       // K), so both corpus-sized ranks use the range-partitioned
-      // exactGlobalRankBy — no single-partition sort; the fusion join
+      // exactGlobalRank — no single-partition sort; the fusion join
       // is id-partitioned and the final top-10 window is
       // WindowGroupLimit-bounded (per-partition top-10 runs before the
       // 1-partition exchange, so it sees ≤10·P rows, not the corpus).
       graft.expressions.VectorExpressions.register(s)
-      import graft.api.Pipelines.exactGlobalRankBy
+      import graft.api.Pipelines.exactGlobalRank
       val emb = Tables(s, d, "embeddings")
       val probeV = emb.filter(col("vec_id") === 0).select(col("embedding").as("pvec"))
-      val vr = exactGlobalRankBy(
+      val vr = exactGlobalRank(
           emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(probeV))
             .select(col("vec_id").as("id"),
               expr("cosine_similarity(embedding, pvec)").as("cos")),
-          Seq(col("cos").desc, col("id")), "rv")
+          Seq(col("cos").desc, col("id")), "rv")._2
         .select(col("id"), col("rv")) // stays LONG through fusion (r10
       // ADVICE fix: an int cast here silently overflows past 2^31 rows,
       // contradicting the full-corpus-rank rationale; emission casts)
       val docs = Tables(s, d, "documents")
       val probeT = docs.filter(col("doc_id") === 0)
         .select(array_distinct(tokens(col("text"))).as("ptok"))
-      val lr = exactGlobalRankBy(
+      val lr = exactGlobalRank(
           docs.filter(col("doc_id") =!= 0).crossJoin(broadcast(probeT))
             .select(col("doc_id").as("id"),
               size(array_intersect(array_distinct(tokens(col("text"))), col("ptok"))).as("ov")),
-          Seq(col("ov").desc, col("id")), "rl")
+          Seq(col("ov").desc, col("id")), "rl")._2
         .select(col("id"), col("rl")) // long, same as rv
       val fused = vr.join(lr, Seq("id"))
         .select(col("id"), col("rv"), col("rl"),

@@ -281,14 +281,15 @@ object Round5Ops {
       // checks like q_dq_2 cannot see it). event_id is a global sequence
       // the fixture interleaves across types, so the purchase slice has
       // holes by construction — exactly the shape of a per-topic
-      // continuity audit. Adjacent pairs come from
-      // Pipelines.adjacentPairs: repartitionByRange(id) +
-      // per-partition lead, with one boundary row stitched per
-      // partition off a P-row driver exchange — never a
-      // single-partition lead window; the report stays top-20.
+      // continuity audit. Adjacent pairs are the non-null rows of the
+      // global Pipelines.groupLeadLong: repartitionByRange(id) +
+      // per-partition lead, with each partition's last row stitched to
+      // the next non-empty partition's first off a P-row driver
+      // exchange — never a single-partition lead window (the gap filter
+      // drops the null lead); the report stays top-20.
       val k = Tables(s, d, "events").filter(col("event_type") === "purchase")
         .select(col("event_id").as("id")).distinct()
-      graft.api.Pipelines.adjacentPairs(k, "id", "nxt")
+      graft.api.Pipelines.groupLeadLong(k, Nil, Seq(col("id")), "id", "nxt")
         .filter(col("nxt") - col("id") > 1)
         .select((col("id") + 1).as("gap_start"), (col("nxt") - 1).as("gap_end"),
           (col("nxt") - col("id") - 1).cast("long").as("gap_len"))

@@ -44,7 +44,7 @@ object Round5aaOps {
       // median/p90 are exact order-statistic PICKS (rank (n+1)/2 and
       // ceil(0.9 n) over the integer gaps) — no interpolation, no float.
       // Minutes truncate by integer division on both engines. The ranks
-      // come from Pipelines.exactGroupRankCount (r13): the 2-value hop
+      // come from Pipelines.groupRankPrefix (r13): the 2-value hop
       // key made the window form a 2-task corpus sort at scale; the
       // range-partitioned form keeps every task ~N/P. The tail is
       // Streams.funnelHopStats, which the online first-touch stream

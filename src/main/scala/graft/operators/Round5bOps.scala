@@ -39,7 +39,7 @@ object Round5bOps {
       // classifier-evaluation metric). Ties get average ranks, carried
       // as DOUBLED integers (2·minrank + tiecount − 1) so every
       // sufficient statistic stays exact BIGINT; gini = 2·AUC − 1.
-      // Ranks come from per-distinct-value counts + Pipelines.prefixSum
+      // Ranks come from per-distinct-value counts + Pipelines.groupRankPrefix
       // (range-partitioned integer cumsum): r2(v) = 2·cumc − cnt + 1,
       // so no per-row rank window and no one-task sort — the corpus
       // collapses to the distinct-value grid in one keyed aggregate.
@@ -48,7 +48,8 @@ object Round5bOps {
         when(col("event_type") === "purchase", 1).otherwise(0).as("pos"))
       val pts = e.groupBy("cents")
         .agg(count(lit(1)).as("cnt"), sum("pos").cast("long").as("np"))
-      val cum = graft.api.Pipelines.prefixSum(pts, Seq("cents"), "cnt", "cumc")
+      val cum = graft.api.Pipelines.groupRankPrefix(pts, Nil, Seq(col("cents")),
+        sums = Seq(("cnt", "cumc", "")))
       val r2 = col("cumc") * 2 - col("cnt") + 1
       val a = cum.agg(sum("np").cast("long").as("n1"),
         sum(col("cnt") - col("np")).cast("long").as("n0"),
@@ -112,14 +113,15 @@ object Round5bOps {
       // floor-quantized to an integer BEFORE the 5-term window sum
       // (q_stat_11's between-term discipline); the tie-correction mass
       // Σ(t³−t) is an exact BIGINT off the per-value counts. Ranks come
-      // from the distinct-value grid + Pipelines.prefixSum (r2(v) =
+      // from the distinct-value grid + Pipelines.groupRankPrefix (r2(v) =
       // 2·cumc − cnt + 1, q_ret_5's device) joined back onto the
       // (prio, cents) counts — no per-row rank window, no one-task
       // sort; then everything is 5-row arithmetic.
       val c = Tables(s, d, "orders").select(col("o_orderpriority").as("prio"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
       val pts = c.groupBy("cents").agg(count(lit(1)).as("cnt"))
-      val cum = graft.api.Pipelines.prefixSum(pts, Seq("cents"), "cnt", "cumc")
+      val cum = graft.api.Pipelines.groupRankPrefix(pts, Nil, Seq(col("cents")),
+          sums = Seq(("cnt", "cumc", "")))
         .select(col("cents").as("c2c"), (col("cumc") * 2 - col("cnt") + 1).as("r2"),
           col("cnt"))
       val pc = c.groupBy("prio", "cents").agg(count(lit(1)).as("npc"))

@@ -60,13 +60,13 @@ object Round5cOps {
       // machinery applied to the integer deviations |x−med|: per-group
       // (n, Σdev BIGINT, Σdev² DECIMAL(38,0)), between-terms
       // floor-quantized to dollars² before the 5-term window sum. Scale:
-      // the median rank comes from Pipelines.exactGroupRankCount (r13 —
+      // the median rank comes from Pipelines.groupRankPrefix (r13 —
       // the 5-value prio window was a 5-task corpus sort), then one
       // map-side agg.
       val c = Tables(s, d, "orders").select(col("o_orderpriority").as("prio"),
         col("o_orderkey"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      val r = graft.api.Pipelines.exactGroupRankCount(c,
+      val r = graft.api.Pipelines.groupRankPrefix(c,
         Seq("prio"), Seq(col("cents"), col("o_orderkey")), "rn", "ng")
       val m = r.groupBy("prio")
         .agg(min(when(col("rn") === expr("(ng + 1) div 2"), col("cents"))).as("med"))
@@ -366,9 +366,9 @@ object Round5cOps {
         floor(col("value") * 100 + 0.5).cast("long").as("cents"),
         when(col("event_type") === "purchase", 1).otherwise(0).as("pos"))
       val (nE, ranked) = graft.api.Pipelines
-        .exactGlobalRankByN(e, Seq(col("cents"), col("event_id")), "__rk")
+        .exactGlobalRank(e, Seq(col("cents"), col("event_id")), "__rk")
       val b = ranked.select(col("cents"), col("pos"),
-        graft.api.Pipelines.ntileOfRank(col("__rk"), nE, 10).as("decile"))
+        graft.api.Pipelines.ntileOfRank(col("__rk"), lit(nE), 10).as("decile"))
       b.groupBy("decile").agg(count(lit(1)).as("n"), sum("pos").cast("long").as("k"),
           sum("cents").cast("long").as("sc"))
         .select(col("decile"), col("n"), col("k"),

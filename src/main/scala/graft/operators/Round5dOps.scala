@@ -203,7 +203,7 @@ object Round5dOps {
       // the ratio is quantized to a 1e-6 integer per row, so the
       // per-label mean/median/extremes are exact-integer statistics.
       // Scale: pure per-row projection + one label-keyed agg; the
-      // median ranks come from Pipelines.exactGroupRankCount (r13 —
+      // median ranks come from Pipelines.groupRankPrefix (r13 —
       // the constant-cardinality label window was a few-task corpus
       // sort; range-partitioned ranks keep every task ~N/P).
       val pr = Tables(s, d, "embeddings").select(col("vec_id"), col("label"),
@@ -211,7 +211,7 @@ object Round5dOps {
           / VectorFunctions.pow4(col("embedding"))).as("ed"))
       val q = pr.select(col("vec_id"), col("label"),
         floor(col("ed") * 1000000L + 0.5).cast("long").as("eq"))
-      val r = graft.api.Pipelines.exactGroupRankCount(q,
+      val r = graft.api.Pipelines.groupRankPrefix(q,
         Seq("label"), Seq(col("eq"), col("vec_id")), "rn", "cnt")
       r.groupBy(col("label").cast("long").as("label")).agg(
           max("cnt").as("n"), sum("eq").cast("long").as("sq"),
@@ -291,11 +291,11 @@ object Round5dOps {
       // q_dq_15's key-skew profile. All counts exact BIGINTs; the share
       // is one closed-form division. Scale: the corpus collapses to one
       // row per user first; the user table scales with the stream, so
-      // the global rank is the range-partitioned exactGlobalRankByN
+      // the global rank is the range-partitioned exactGlobalRank
       // (which also yields n_users off its histogram pass — no extra
       // count), and the grand total is a 1-row map-side-combinable agg.
       val u = Tables(s, d, "events").groupBy("user_id").agg(count(lit(1)).as("cnt"))
-      val (nu, ranked) = graft.api.Pipelines.exactGlobalRankByN(
+      val (nu, ranked) = graft.api.Pipelines.exactGlobalRank(
         u, Seq(col("cnt").desc, col("user_id")), "rn")
       val tot = u.agg(sum("cnt").cast("long")).first.getLong(0)
       val k = (nu + 99L) / 100L

@@ -252,7 +252,7 @@ object Round5iOps {
       // sessions never double-count (stated). All integers; earliest-
       // peak tiebreak. Scale: the session table scales with the event
       // stream (user x 30-min window), so the sweep is the
-      // range-partitioned prefixSum (per-partition totals + stitched
+      // range-partitioned groupRankPrefix sum (per-partition totals + stitched
       // offsets), NOT a single-partition window, and the peak pick is
       // a TakeOrdered(1).
       graft.streaming.Streams.concurrencyFinish(

@@ -167,9 +167,9 @@ object Round5kOps {
       // builtin-identical ntile via exactGlobalRank + ntileOfRank —
       // range-partitioned, no one-task window over the events fact
       val (nE, ranked) = graft.api.Pipelines
-        .exactGlobalRankByN(e, Seq(col("cents"), col("event_id")), "__rk")
+        .exactGlobalRank(e, Seq(col("cents"), col("event_id")), "__rk")
       val b = ranked.select(col("cents"), col("pos"),
-        graft.api.Pipelines.ntileOfRank(col("__rk"), nE, 10).as("decile"))
+        graft.api.Pipelines.ntileOfRank(col("__rk"), lit(nE), 10).as("decile"))
       val g = b.groupBy("decile").agg(count(lit(1)).as("n"), sum("pos").cast("long").as("k"))
         .localCheckpoint()
       val tot = g.agg(sum("k").cast("long").as("kk"))
@@ -260,7 +260,7 @@ object Round5kOps {
       // exact BIGINT 1e-9-nat differences, the median an exact order
       // statistic. Scale: score table is docs×|langs|; the per-doc rank
       // window partitions by doc_id (row-scaled key — fine); the
-      // per-LANG ranks come from Pipelines.exactGroupRankCount (r13 —
+      // per-LANG ranks come from Pipelines.groupRankPrefix (r13 —
       // the ~langs-valued window was a few-task corpus sort, the
       // 3rd-slowest bench query at r12; range-partitioned ranks keep
       // every task ~N/P).
@@ -273,14 +273,14 @@ object Round5kOps {
       val mg = top.join(second, "doc_id")
         .select(col("doc_id"), col("pred"), (col("s1") - col("s2")).as("margin9"))
       // materialize the NB-scored margins ONCE before the rank helper
-      // (r14, measured −0.4 s solo): exactGroupRankCount's range
+      // (r14, measured −0.4 s solo): groupRankPrefix's range
       // sampling and shuffle-map jobs would otherwise each re-run the
       // per-doc scoring tail; the snapshot is doc-sized and swept per
       // query by BlockCleanup
       val j = Tables(s, d, "documents").select(col("doc_id"), col("lang").as("actual"))
         .join(mg, "doc_id")
         .localCheckpoint()
-      val r = graft.api.Pipelines.exactGroupRankCount(j,
+      val r = graft.api.Pipelines.groupRankPrefix(j,
           Seq("actual"), Seq(col("margin9"), col("doc_id")), "rn", "n")
         .withColumn("ok", when(col("pred") === col("actual"), 1).otherwise(0))
       r.groupBy(col("actual").as("lang")).agg(

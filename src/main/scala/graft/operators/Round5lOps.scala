@@ -82,7 +82,7 @@ object Round5lOps {
       // (metric DESC, user_id); rank-sum squares are exact BIGINTs; W
       // is one IEEE closed form. Scale: the user table scales with the
       // event stream, so each ranking is the range-partitioned
-      // exactGlobalRankBy (P-row histogram + local row numbers), NOT a
+      // exactGlobalRank (P-row histogram + local row numbers), NOT a
       // single-partition window — three chained rank passes, then a
       // 2-number reduction.
       val u = Tables(s, d, "events").groupBy("user_id")
@@ -94,7 +94,7 @@ object Round5lOps {
         (Seq(col("cnt").desc, col("user_id")), "r2"),
         (Seq(col("np").desc, col("user_id")), "r3"))
         .foldLeft(u) { case (df0, (ord, rc)) =>
-          graft.api.Pipelines.exactGlobalRankBy(df0, ord, rc)
+          graft.api.Pipelines.exactGlobalRank(df0, ord, rc)._2
         }
         .select(col("user_id"), col("r1"), col("r2"), col("r3"))
       val rs = col("r1") + col("r2") + col("r3")
@@ -221,16 +221,16 @@ object Round5lOps {
       // deterministic ntile over (cents DESC, event_id); capture and
       // lift come from exact BIGINT prefix sums over the 10-row bucket
       // table. Scale: the decile assignment is ntileOfRank over the
-      // range-partitioned exactGlobalRankByN (events-scaled input; a
+      // range-partitioned exactGlobalRank (events-scaled input; a
       // builtin ntile would funnel the fact through one task), then
       // 10-row windows.
       val e = Tables(s, d, "events").select(col("event_id"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"),
         when(col("event_type") === "purchase", 1).otherwise(0).as("pos"))
-      val (nE, rkd) = graft.api.Pipelines.exactGlobalRankByN(
+      val (nE, rkd) = graft.api.Pipelines.exactGlobalRank(
         e, Seq(col("cents").desc, col("event_id")), "__rk")
       val b = rkd.select(col("cents"), col("pos"),
-        graft.api.Pipelines.ntileOfRank(col("__rk"), nE, 10).cast("long").as("bucket"))
+        graft.api.Pipelines.ntileOfRank(col("__rk"), lit(nE), 10).cast("long").as("bucket"))
       val g = b.groupBy("bucket").agg(count(lit(1)).as("n"), sum("pos").cast("long").as("k"))
       val prefix = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
       val all = Window.partitionBy()

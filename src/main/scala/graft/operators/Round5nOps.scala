@@ -278,15 +278,15 @@ object Round5nOps {
       // aligned with the stride) is exactly what the bias readout
       // checks. Deterministic: rank over the unique key; all sums
       // exact cents. Scale: the rank IS repartitionByRange —
-      // exactGlobalRankBy, not a one-task global window (r11 fix: the
+      // exactGlobalRank, not a one-task global window (r11 fix: the
       // checkpoint-capture lint caught the window form this comment
       // had only promised away); at 100 TB a date-partitioned layout
       // samples within partitions with per-partition offsets.
-      val o = graft.api.Pipelines.exactGlobalRankBy(
+      val o = graft.api.Pipelines.exactGlobalRank(
           Tables(s, d, "orders").select(col("o_orderkey"),
             floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents")),
           Seq(col("o_orderkey")), "rn")
-        .localCheckpoint()
+        ._2.localCheckpoint()
       val sam = o.filter(col("rn") % 20 === 1)
         .agg(count(lit(1)).as("n"), sum("cents").as("sc"))
       val pop = o.agg(count(lit(1)).as("n"), sum("cents").as("sc"))

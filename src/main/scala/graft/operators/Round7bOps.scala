@@ -97,11 +97,11 @@ object Round7bOps {
       val toks = Tables(s, d, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("token"))
       val tf = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
-      // full Zipf rank of the vocabulary via exactGlobalRankBy (range-
+      // full Zipf rank of the vocabulary via exactGlobalRank (range-
       // partitioned on (cnt DESC, token)) — the vocab grows with the
       // corpus, so no one-task rank window
       val rnk = graft.api.Pipelines
-        .exactGlobalRankBy(tf, Seq(col("cnt").desc, col("token")), "rnk")
+        .exactGlobalRank(tf, Seq(col("cnt").desc, col("token")), "rnk")._2
         .select(col("token"), col("rnk"))
       val st = toks.groupBy("source", "token").agg(count(lit(1)).as("cnt"))
       st.join(broadcast(rnk), "token")

@@ -48,9 +48,9 @@ object Round7cOps {
       val docs = Tables(s, d, "documents")
         .select(col("text"), col("n_chars"), col("doc_id"))
       val (nD, ranked) = graft.api.Pipelines
-        .exactGlobalRankByN(docs, Seq(col("n_chars"), col("doc_id")), "__rk")
+        .exactGlobalRank(docs, Seq(col("n_chars"), col("doc_id")), "__rk")
       ranked.select(col("text"), col("n_chars"),
-        graft.api.Pipelines.ntileOfRank(col("__rk"), nD, 4).as("quartile"))
+        graft.api.Pipelines.ntileOfRank(col("__rk"), lit(nD), 4).as("quartile"))
         .groupBy("quartile")
         .agg(count(lit(1)).as("n_docs"), countDistinct("text").as("n_distinct"),
           min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))

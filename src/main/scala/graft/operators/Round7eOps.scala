@@ -112,7 +112,7 @@ object Round7eOps {
       // actions, ~6 stages/round) is paid ONCE over ~2× tiny data
       // instead of twice. The hub list is tiny and broadcast into
       // anti joins; the hub pick is the range-partitioned
-      // exactGlobalRankBy.
+      // exactGlobalRank.
       val OFF = 1000000000000L // suppkeys are far below 1e12
       // r14: the session-cached bidirected mod-200 list (identical
       // derivation, materialized once; q_graph_27 shares it)
@@ -120,10 +120,10 @@ object Round7eOps {
       val nodes = b.select(col("src").as("node")).distinct().localCheckpoint()
       val n = nodes.count()
       val nHubs = math.max(n / 100, 1L)
-      val hubs = graft.api.Pipelines.exactGlobalRankBy(
+      val hubs = graft.api.Pipelines.exactGlobalRank(
           b.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
           Seq(col("deg").desc, col("node")), "rn")
-        .filter(col("rn") <= nHubs).select("node").localCheckpoint()
+        ._2.filter(col("rn") <= nHubs).select("node").localCheckpoint()
       val hubs2 = hubs.withColumnRenamed("node", "node2")
       val b1 = b.join(broadcast(hubs), b("src") === hubs("node"), "left_anti")
         .join(broadcast(hubs2), col("dst") === col("node2"), "left_anti")

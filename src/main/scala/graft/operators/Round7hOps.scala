@@ -78,7 +78,7 @@ object Round7hOps {
       def layout(tag: String, order: Seq[org.apache.spark.sql.Column]) = {
         // orders-scaled input: block ids come off the range-partitioned
         // exact rank, not a single-partition row_number window
-        graft.api.Pipelines.exactGlobalRankBy(o, order, "rn")
+        graft.api.Pipelines.exactGlobalRank(o, order, "rn")._2
           .select(col("cents"), expr("(rn - 1) div 512").as("blk"))
           .groupBy("blk").agg(max("cents").as("mx"))
           .agg(count(lit(1)).as("n_blocks"),

@@ -208,7 +208,7 @@ object Round7pOps {
       // not a single-partition lead() window
       val rk = graft.api.Pipelines.exactGlobalRank(
         Tables(s, d, "supplier").select(col("s_suppkey"), col("s_name")),
-        Seq("s_suppkey"), "rk")
+        Seq(col("s_suppkey")), "rk")._2
       rk.join(rk.select((col("rk") - 1).as("rk"), col("s_name").as("nxt")), "rk")
         .select(col("s_suppkey"),
           levUdf(col("s_name"), col("nxt")).cast("long").as("lev_udf"),

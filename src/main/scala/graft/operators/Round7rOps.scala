@@ -55,9 +55,8 @@ object Round7rOps {
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("t2"),
           col("o_orderkey"))
         .localCheckpoint()
-      val nTot = p.count()
-      val r = graft.api.Pipelines.exactGlobalRank(p, Seq("t2", "o_orderkey"), "rn")
-        .select(col("g"), col("rn"), lit(nTot).as("nn"))
+      val (nTot, rk) = graft.api.Pipelines.exactGlobalRank(p, Seq(col("t2"), col("o_orderkey")), "rn")
+      val r = rk.select(col("g"), col("rn"), lit(nTot).as("nn"))
       val sc = r.select(col("g"), col("nn"),
         least(col("rn"), col("nn") + 1 - col("rn")).as("sc"))
       sc.agg(

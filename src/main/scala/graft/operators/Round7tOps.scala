@@ -46,11 +46,11 @@ object Round7tOps {
         .when(col("s_suppkey") % 3 === 1, lower(col("s_name")))
         .otherwise(col("s_name"))
       // supplier scales with SF: the collation rank is the
-      // range-partitioned exactGlobalRankBy over the (ci, cs, key)
+      // range-partitioned exactGlobalRank over the (ci, cs, key)
       // expression order, not a single-partition window
-      graft.api.Pipelines.exactGlobalRankBy(
+      graft.api.Pipelines.exactGlobalRank(
           Tables(s, d, "supplier").select(col("s_suppkey"), name2.as("name2")),
-          Seq(lower(col("name2")), col("name2"), col("s_suppkey")), "rn")
+          Seq(lower(col("name2")), col("name2"), col("s_suppkey")), "rn")._2
         .select(col("rn"), col("s_suppkey"), col("name2"))
         .orderBy("rn")
     },

@@ -6,8 +6,8 @@ import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** Round-8 additions: the range-partitioned exact-order-statistic
-  * machinery (Pipelines.exactRankPick / exactGlobalRankByN /
-  * prefixSum) exposed as first-class oracle-checked queries — the
+  * machinery (Pipelines.exactRankPick / exactGlobalRank /
+  * groupRankPrefix) exposed as first-class oracle-checked queries — the
   * user-facing "exact percentiles / revenue concentration / ECDF at
   * scale" capability, not just internal plumbing. Each oracle uses a
   * DIFFERENT computational shape than the engine (rank windows or
@@ -56,7 +56,7 @@ object Round8Ops {
     // Revenue concentration: the share of total order value held by
     // the top 1% / 5% / 10% of customers by spend — the Pareto readout
     // every mixing/curation budget starts from. Customer spend ranks
-    // come from Pipelines.exactGlobalRankByN (range-partitioned, n
+    // come from Pipelines.exactGlobalRank (range-partitioned, n
     // free off the count pass); the shares are exact-cent ratios. The
     // oracle ranks with a window; same integers, one division each.
     Q("q_agg_48_top_share",
@@ -77,7 +77,7 @@ object Round8Ops {
         .groupBy(col("o_custkey").as("c"))
         .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long")).as("s"))
       val (n, ranked) = graft.api.Pipelines
-        .exactGlobalRankByN(spend, Seq(col("s").desc, col("c")), "rk")
+        .exactGlobalRank(spend, Seq(col("s").desc, col("c")), "rk")
       val (k1, k5, k10) = ((n + 99) / 100, (n + 19) / 20, (n + 9) / 10)
       ranked.agg(
           sum(when(col("rk") <= k1, col("s")).otherwise(0L)).as("s1"),
@@ -91,7 +91,7 @@ object Round8Ops {
     },
 
     // ECDF of order value at fixed probe prices, computed from the
-    // distinct-value grid + Pipelines.prefixSum (the scale form: the
+    // distinct-value grid + Pipelines.groupRankPrefix (the scale form: the
     // corpus collapses to per-value counts, the cumsum never runs in
     // one task). The oracle deliberately uses a DIFFERENT shape —
     // plain conditional counts over the raw rows — so a prefix-sum
@@ -110,7 +110,8 @@ object Round8Ops {
       val pts = Tables(s, d, "orders")
         .select(floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
         .groupBy("cents").agg(count(lit(1)).as("cnt"))
-      val cum = graft.api.Pipelines.prefixSum(pts, Seq("cents"), "cnt", "cum")
+      val cum = graft.api.Pipelines.groupRankPrefix(pts, Nil, Seq(col("cents")),
+        sums = Seq(("cnt", "cum", "")))
       def fAt(probeCents: Long) =
         coalesce(max(when(col("cents") <= probeCents, col("cum"))), lit(0L))
       cum.agg(max("cum").as("n"),

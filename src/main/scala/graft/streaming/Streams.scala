@@ -843,7 +843,8 @@ object Streams {
     val sess = sess0.localCheckpoint()
     val pts = sess.select(col("st").as("t"), lit(1).as("delta"))
       .union(sess.select((col("en") + 1).as("t"), lit(-1).as("delta")))
-    val run = graft.api.Pipelines.prefixSum(pts, Seq("t", "delta"), "delta", "conc")
+    val run = graft.api.Pipelines.groupRankPrefix(pts, Nil, Seq(col("t"), col("delta")),
+      sums = Seq(("delta", "conc", "")))
     val mx = run.orderBy(col("conc").desc, col("t")).limit(1)
     val nSess = sess.agg(count(lit(1)).as("n_sessions"))
     mx.crossJoin(broadcast(nSess))
@@ -892,9 +893,9 @@ object Streams {
 
   /** The q_stream_43_conc_profile tail over the (st, en) session spans:
     * boundaries collapse to DISTINCT timestamps (net delta per µs), so
-    * the sweep has no ties; ONE range-partitioned `groupRankPrefix`
-    * pass under a constant group key emits the running level and the
-    * global rank off the same shuffle; interval lengths come from the
+    * the sweep has no ties; ONE range-partitioned global
+    * `groupRankPrefix` pass emits the running level and the global rank
+    * off the same shuffle; interval lengths come from the
     * rank+1 self-join (never a one-task lead window), and the level
     * histogram is bounded by max concurrency. All integers until the
     * final share division.
@@ -904,9 +905,8 @@ object Streams {
     val pts = sess.select(col("st").as("t"), lit(1L).as("delta"))
       .union(sess.select((col("en") + 1).as("t"), lit(-1L).as("delta")))
     val net = pts.groupBy("t").agg(sum("delta").as("net"))
-    val rk = graft.api.Pipelines.groupRankPrefix(
-      net.withColumn("__g", lit(1)), Seq("__g"), Seq(col("t")),
-      "rk", "__n", Seq(("net", "conc", "")))
+    val rk = graft.api.Pipelines.groupRankPrefix(net, Nil, Seq(col("t")), "rk",
+      sums = Seq(("net", "conc", "")))
     val nxt = rk.select((col("rk") - 1).as("rk"), col("t").as("tn"))
     val lv = rk.join(nxt, "rk")
       .groupBy("conc").agg(sum(col("tn") - col("t")).as("total_us"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   *
   * The declared LSH queries (q_dedup_3/7/33) pin ORACLE slices
   * (doc_id < 100 — DuckDB must recompute the same minhashes), so their
-  * ScaleBench exponents say nothing about the band join at corpus
+  * ScaleBench3 exponents say nothing about the band join at corpus
   * scale. This harness runs the production shape — `lshBandKeys` over
   * the WHOLE documents table, then the banded self-join to distinct
   * candidate pairs — at each dir:factor point and fits the LSQ slope

@@ -34,7 +34,7 @@ import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
   *     total order) whose result feeds FURTHER computation with no
   *     limit above it — the next shuffle destroys the order, so the
   *     sort is pure wasted cost at scale; rank-by-sort patterns belong
-  *     on `exactGlobalRankBy`. A final presentation sort (only
+  *     on `Pipelines.exactGlobalRank`. A final presentation sort (only
   *     pass-through nodes above it) is fine and expected: every
   *     declared query ends in a total ORDER BY for the oracle compare.
   *

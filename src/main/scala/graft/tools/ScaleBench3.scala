@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   * pairwise step; n² ⇒ the 10×→30× step alone shows slope → 2.
   *
   * Prints per-query wall times at each point, the pairwise exponents
-  * e(1→10) and e(10→30), and the 3-point LSQ slope. Timings are
-  * min-of-two after one untimed warm pass per dataset (the ScaleBench
-  * protocol); BlockCleanup runs between queries so checkpoint residue
-  * from one point can't squeeze the next (the r9 drift lesson).
+  * e(1→10) and e(10→30), and the LSQ slope; two points give the
+  * plain two-point exponent log(t₁/t₀)/log(f₁/f₀). Timings are
+  * min-of-two after one untimed warm pass per dataset; BlockCleanup
+  * runs between queries so checkpoint residue from one point can't
+  * squeeze the next (the r9 drift lesson).
   *
   * Usage:
   *   graft.tools.ScaleBench3 [--solo] <q1,q2,...> <dir0:f0> <dir1:f1> [dir2:f2 ...]
@@ -56,8 +57,8 @@ object ScaleBench3 {
 
     // Queries whose OUTPUT is quadratic in ScaleGen's density scaling
     // (10x denser data over the SAME calendar window — a time-band
-    // join's true pair count grows f² BY DEFINITION; the ScaleBench
-    // r9 adjudication): exponents for these fit log t against log
+    // join's true pair count grows f² BY DEFINITION; the r9
+    // adjudication): exponents for these fit log t against log
     // WORK (the named column's sum), not log input factor.
     val outputBound = Map(
       "q_join_8_theta_range" -> "n_pairs",

@@ -4,14 +4,25 @@ import graft.api.Pipelines
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Pipelines.exactRankPick / exactGlobalRank / ntileOfRank — the
-  * range-partitioned replacements for the single-partition
-  * `Window.orderBy` global-sort pattern (VERDICT r7 item 1). Parity is
-  * pinned EXACTLY against the single-partition reference forms on the
-  * sf0.001 orders fixture, and the plan is pinned to contain a
-  * RangePartitioning exchange (not a one-task global sort).
+/** Pipelines.orderedScan and its forms (exactRankPick, exactGlobalRank,
+  * groupRankPrefix, groupLeadLong, ntileOfRank) — the range-partitioned
+  * replacements for the single-partition `Window.orderBy` global-sort
+  * pattern (VERDICT r7 item 1). Parity is pinned EXACTLY against the
+  * window reference forms on the sf0.001 fixtures, and the plan is
+  * pinned to contain a RangePartitioning exchange (not a one-task
+  * global sort).
   */
 class ExactRankSpec extends SparkSpec {
+
+  /** Runs `body` at `n` shuffle partitions — the range partition count
+    * of every ordered scan built inside it — and restores the setting.
+    */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
+  }
 
   private lazy val o = graft.sources.Tables(spark, sf, "orders")
     .select(floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
@@ -39,7 +50,7 @@ class ExactRankSpec extends SparkSpec {
     val ref = o.select(col("o_orderkey"),
         row_number().over(Window.orderBy("cents", "o_orderkey")).cast("long").as("rk"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = Pipelines.exactGlobalRank(o, Seq("cents", "o_orderkey"), "rk")
+    val got = Pipelines.exactGlobalRank(o, Seq(col("cents"), col("o_orderkey")), "rk")._2
       .select("o_orderkey", "rk")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == ref)
@@ -56,7 +67,7 @@ class ExactRankSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(rangedPlan.toLowerCase.contains("rangepartitioning"), rangedPlan.take(2000))
     assert(!rangedPlan.contains("SinglePartition"), rangedPlan.take(2000))
-    val plan = Pipelines.exactGlobalRank(o, Seq("cents", "o_orderkey"), "rk")
+    val plan = Pipelines.exactGlobalRank(o, Seq(col("cents"), col("o_orderkey")), "rk")._2
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"), plan.take(2000))
   }
@@ -67,8 +78,8 @@ class ExactRankSpec extends SparkSpec {
           ntile(k).over(Window.orderBy("cents", "o_orderkey")).cast("long").as("b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val n = ref.size.toLong
-      val got = Pipelines.exactGlobalRank(o, Seq("cents", "o_orderkey"), "rk")
-        .select(col("o_orderkey"), Pipelines.ntileOfRank(col("rk"), n, k).as("b"))
+      val got = Pipelines.exactGlobalRank(o, Seq(col("cents"), col("o_orderkey")), "rk")._2
+        .select(col("o_orderkey"), Pipelines.ntileOfRank(col("rk"), lit(n), k).as("b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == ref, s"k=$k")
     }
@@ -81,7 +92,8 @@ class ExactRankSpec extends SparkSpec {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ref = toks.withColumn("c", sum("tok").over(w))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = Pipelines.prefixSum(toks, Seq("doc_id"), "tok", "c")
+    val got = Pipelines.groupRankPrefix(toks, Nil, Seq(col("doc_id")),
+        sums = Seq(("tok", "c", "")))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == ref)
   }
@@ -93,7 +105,8 @@ class ExactRankSpec extends SparkSpec {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ref = df.select(col("k"), sum("a").over(w).as("ca"), sum("b").over(w).as("cb"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val got = Pipelines.prefixSumN(df, Seq("k"), Seq("a" -> "ca", "b" -> "cb"))
+    val got = Pipelines.groupRankPrefix(df, Nil, Seq(col("k")),
+        sums = Seq(("a", "ca", ""), ("b", "cb", "")))
       .select("k", "ca", "cb")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == ref)
@@ -106,7 +119,8 @@ class ExactRankSpec extends SparkSpec {
     val ref = ids.withColumn("nxt", lead("id", 1).over(Window.orderBy("id")))
       .filter(col("nxt").isNotNull)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Pipelines.adjacentPairs(ids, "id", "nxt")
+    val got = Pipelines.groupLeadLong(ids, Nil, Seq(col("id")), "id", "nxt")
+      .filter(col("nxt").isNotNull)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == ref && got.nonEmpty)
   }
@@ -121,11 +135,13 @@ class ExactRankSpec extends SparkSpec {
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("ng", count(lit(1)).over(Window.partitionBy("prio")))
       .collect().map(r => r.getLong(2) -> (r.getLong(3), r.getLong(4))).toMap
-    // partitions=7 forces groups to SPAN range partitions, exercising
+    // 7 partitions force groups to SPAN range partitions, exercising
     // the cross-partition offset stitching
-    val got = Pipelines.exactGroupRankCount(c, Seq("prio"),
-        Seq(col("cents"), col("o_orderkey")), "rn", "ng", partitions = 7)
-      .collect().map(r => r.getLong(2) -> (r.getLong(3), r.getLong(4))).toMap
+    val got = withShufflePartitions(7) {
+      Pipelines.groupRankPrefix(c, Seq("prio"),
+          Seq(col("cents"), col("o_orderkey")), "rn", "ng")
+        .collect().map(r => r.getLong(2) -> (r.getLong(3), r.getLong(4))).toMap
+    }
     assert(got == ref && got.nonEmpty)
   }
 
@@ -133,14 +149,15 @@ class ExactRankSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("a", 1L, 10L), ("a", 1L, 5L), ("a", 2L, 7L), ("b", 1L, 3L))
       .toDF("g1", "g2", "v")
-    val got = Pipelines.exactGroupRankCount(df, Seq("g1", "g2"),
-        Seq(col("v")), "rn", "n", partitions = 3)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
-        (r.getLong(3), r.getLong(4))).toMap
+    val got = withShufflePartitions(3) {
+      Pipelines.groupRankPrefix(df, Seq("g1", "g2"), Seq(col("v")), "rn", "n")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
+          (r.getLong(3), r.getLong(4))).toMap
+    }
     assert(got == Map(
       ("a", 1L, 5L) -> (1L, 2L), ("a", 1L, 10L) -> (2L, 2L),
       ("a", 2L, 7L) -> (1L, 1L), ("b", 1L, 3L) -> (1L, 1L)))
-    val empty = Pipelines.exactGroupRankCount(df.filter(col("v") < 0),
+    val empty = Pipelines.groupRankPrefix(df.filter(col("v") < 0),
       Seq("g1"), Seq(col("v")), "rn", "n")
     assert(empty.count() == 0L)
   }
@@ -150,7 +167,7 @@ class ExactRankSpec extends SparkSpec {
       .select(col("o_orderpriority").as("prio"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
         col("o_orderkey"))
-    val plan = Pipelines.exactGroupRankCount(c, Seq("prio"),
+    val plan = Pipelines.groupRankPrefix(c, Seq("prio"),
         Seq(col("cents"), col("o_orderkey")), "rn", "ng")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SinglePartition"), plan.take(2000))
@@ -173,12 +190,14 @@ class ExactRankSpec extends SparkSpec {
         sum("wt").over(wc).as("cw"), sum("wt").over(wa).as("tw"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2, t._3))
-    val got = Pipelines.groupRankPrefix(c, Seq("f"),
-        Seq(col("v"), col("l_orderkey"), col("l_linenumber"), col("wt")), "rk", "n",
-        Seq(("wt", "cw", "tw")), partitions = 7)
-      .select("l_orderkey", "l_linenumber", "cw", "tw")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-      .sortBy(t => (t._1, t._2, t._3))
+    val got = withShufflePartitions(7) {
+      Pipelines.groupRankPrefix(c, Seq("f"),
+          Seq(col("v"), col("l_orderkey"), col("l_linenumber"), col("wt")), "rk", "n",
+          Seq(("wt", "cw", "tw")))
+        .select("l_orderkey", "l_linenumber", "cw", "tw")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+        .sortBy(t => (t._1, t._2, t._3))
+    }
     assert(got.toSeq == ref.toSeq && got.nonEmpty)
   }
 
@@ -189,11 +208,13 @@ class ExactRankSpec extends SparkSpec {
     val ref = e.withColumn("nxt", lead("us", 1).over(w))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
         (if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
-    // partitions=5 forces event-type groups to span range partitions
-    val got = Pipelines.groupLeadLong(e, Seq("event_type"),
-        Seq(col("us"), col("event_id")), "us", "nxt", partitions = 5)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
-        (if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
+    // 5 partitions force event-type groups to span range partitions
+    val got = withShufflePartitions(5) {
+      Pipelines.groupLeadLong(e, Seq("event_type"),
+          Seq(col("us"), col("event_id")), "us", "nxt")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
+          (if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
+    }
     assert(got == ref && got.nonEmpty)
   }
 
@@ -224,9 +245,51 @@ class ExactRankSpec extends SparkSpec {
     val ref = tiny.select(col("v"),
         ntile(10).over(Window.orderBy("v")).cast("long").as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Pipelines.exactGlobalRank(tiny, Seq("v"), "rk")
-      .select(col("v"), Pipelines.ntileOfRank(col("rk"), 3L, 10).as("b"))
+    val got = Pipelines.exactGlobalRank(tiny, Seq(col("v")), "rk")._2
+      .select(col("v"), Pipelines.ntileOfRank(col("rk"), lit(3L), 10).as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == ref)
   }
+
+  test("one orderedScan emits rank, group count, running sum and a Short lead across an empty partition") {
+    val in = spark.range(1, 13, 1, 2).select(col("id"),
+      when(col("id") <= 8, "a").otherwise("b").as("g"),
+      (col("id") * 7 % 5).cast("int").as("v"), (col("id") * 3).cast("short").as("w"))
+    // group a's rows 3..8 sort at 3..8 while the range boundaries are
+    // sampled and at 103..108 when the rows are shuffled, so the range
+    // partitions between a's first two rows and its last six are empty:
+    // the offsets and the lead must skip them
+    val o = udf { (id: Long) =>
+      val stage = org.apache.spark.TaskContext.get().stageId()
+      ExactRankSpec.samplingStage.compareAndSet(-1, stage)
+      if (stage == ExactRankSpec.samplingStage.get || id <= 2 || id > 8) id else id + 100
+    }.asNondeterministic()
+    val w = Window.partitionBy("g").orderBy("o")
+    val ref = in.withColumn("o", when(col("id").between(3, 8), col("id") + 100).otherwise(col("id")))
+      .select(col("id"), row_number().over(w).cast("long"),
+        count(lit(1)).over(Window.partitionBy("g")),
+        sum("v").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        lead("w", 1).over(w).cast("long"))
+      .collect().map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), Option(r.get(4)))).toMap
+    for (parts <- Seq(1, 3, 7)) {
+      val (counts, got) = withShufflePartitions(parts) {
+        ExactRankSpec.samplingStage.set(-1)
+        val (counts, df) = Pipelines.orderedScan(in.withColumn("o", o(col("id"))),
+          Seq("g"), Seq(col("o")), "rk", "n", Seq(("v", "cv", "")), ("w", "nw"))
+        (counts, df.select("id", "rk", "n", "cv", "nw").collect().map(r => r.getLong(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3), Option(r.get(4)))).toMap)
+      }
+      assert(got == ref, s"$parts partitions")
+      val used = counts.indices.filter(counts(_) > 0)
+      assert(parts == 1 || used.last - used.head >= used.size,
+        s"$parts partitions: no empty partition between rows (${counts.mkString(",")})")
+    }
+  }
+}
+
+object ExactRankSpec {
+  /** Stage id of the first task that evaluated the shifting key: the
+    * range-boundary sampling job of the scan under test. */
+  val samplingStage = new java.util.concurrent.atomic.AtomicInteger(-1)
 }

@@ -41,7 +41,7 @@ class Pipelines12Spec extends SparkSpec {
 
   test("q_graph_21/22 hub picks are lint-clean INCLUDING checkpointed action plans") {
     // the r10 verdict shape: a single-partition rank window hidden
-    // behind localCheckpoint. After the exactGlobalRankBy conversion,
+    // behind localCheckpoint. After the exactGlobalRank conversion,
     // the action-capturing lint must see zero window1p hits anywhere.
     for (name <- Seq("q_graph_21_rich_club", "q_graph_22_hub_knockout")) {
       val hits = graft.tools.PlanLint

@@ -48,8 +48,8 @@ class PlanLintSpec extends SparkSpec {
 
   test("the fixed hub-pick shape (exactGlobalRankBy + checkpoint) is clean") {
     def build = {
-      val hubs = graft.api.Pipelines.exactGlobalRankBy(
-          nodes, Seq(col("id").desc), "rn")
+      val hubs = graft.api.Pipelines.exactGlobalRank(
+          nodes, Seq(col("id").desc), "rn")._2
         .filter(col("rn") <= 5).localCheckpoint()
       hubs.groupBy(lit(1).as("g")).agg(count(lit(1)).as("n"))
     }

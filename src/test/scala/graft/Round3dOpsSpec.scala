@@ -260,10 +260,10 @@ class Round3dOpsSpec extends SparkSpec {
         Registry.byName(q).fn(spark, sf).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))).length
     // r8: ks/mannwhitney route their ECDF cumsums through
-    // Pipelines.prefixSum(N), which localCheckpoints the
-    // range-partitioned distinct-value grid — the single corpus scan
-    // happens inside that materialization, so the FINAL plan reads the
-    // checkpoint (0 parquet scans) and still cannot rescan the corpus
+    // Pipelines.groupRankPrefix, whose result is a DataFrame over the
+    // RDD of its second pass — the single corpus scan happens inside
+    // its range shuffle, so the FINAL plan reads that RDD (0 parquet
+    // scans) and still cannot rescan the corpus
     assert(scans("q_stat_3_ks") == 0)
     assert(scans("q_stat_4_mannwhitney") == 0)
     assert(scans("q_dq_16_benford") == 1)
