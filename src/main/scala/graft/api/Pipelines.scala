@@ -152,19 +152,18 @@ object Pipelines {
       .select(col(idCol), coalesce(col("v"), col(idCol)).as("component"))
   }
 
-  /** BFS hop distances from `source` over an undirected edge list.
-    * Returns (idCol, dist) for REACHABLE nodes only. Reachability is
-    * defined over `edges` ALONE: ids appearing in `edges` but not in
-    * `nodes` are returned if reached, and the source row (dist 0) is
-    * emitted unconditionally — `nodes` only sizes the partitioner
-    * (r10 doc fix: the earlier DataFrame version anchored the result
-    * to `nodes`; all in-tree callers derive nodes from edges, so the
-    * two contracts coincide — callers that need the old semantics
-    * semi-join the result with their node table). Level-synchronous:
+  /** BFS hop distances over an undirected edge list, from `source`, or
+    * from the smallest id in `edges` when `source` is None. Returns
+    * (idCol, dist) for the nodes reachable from the root, the root
+    * (dist 0) included even when it has no edge. Level-synchronous:
     * each hop expands ONLY the current frontier (nodes discovered last
     * hop) — unweighted BFS settles a node the first time it is seen,
     * so settled distances never need re-relaxing and total work is
     * O(E) across all hops, not O(E · eccentricity).
+    *
+    * No node table is needed: one pass over the edge list returns the
+    * edge count, which sizes the partitioner, and the smallest id, the
+    * default root.
     *
     * The loop runs on CO-PARTITIONED RDDs, not DataFrames (r9, the
     * q_graph_25 budget fix — measured on the 829-node sampled graph:
@@ -172,9 +171,9 @@ object Pipelines {
     * overhead — AQE replanning, broadcast builds, and fresh per-hop
     * codegen from the `dist === h` literals — regardless of hop
     * chunking or partition sizing; this form runs the same pass in
-    * well under a second). One HashPartitioner sized to the node count
-    * (~500k nodes per partition, so real tasks at any scale) keeps the
-    * adjacency, frontier, and visited sets co-located: per hop the
+    * well under a second). One HashPartitioner sized to the adjacency
+    * pairs (~500k pairs per partition, so real tasks at any scale) keeps
+    * the adjacency, frontier, and visited sets co-located: per hop the
     * adjacency⋈frontier join and the visited subtract are NARROW, and
     * the only shuffle is the reduceByKey that dedups newly reached
     * nodes — strictly fewer stages than the Catalyst plan, with none
@@ -182,38 +181,43 @@ object Pipelines {
     * (genuine per-partition iterative state), the same machinery class
     * as exactRankPick.
     *
-    * Hops run in chunks of `chunk` (default 4) between checkpoint
-    * truncations, with ONE convergence count per chunk; hops past a
-    * dead frontier are no-ops (empty frontier joins to nothing), so
-    * overshooting inside a chunk cannot alter any distance.
-    * Non-convergence within maxIters hops still throws rather than
-    * returning truncated distances.
+    * Hops run in chunks of 4 between checkpoint truncations, with ONE
+    * convergence count per chunk; hops past a dead frontier are no-ops
+    * (empty frontier joins to nothing), so overshooting inside a chunk
+    * cannot alter any distance. Non-convergence within maxIters hops
+    * still throws rather than returning truncated distances.
     */
-  def bfsDistances(nodes: DataFrame, idCol: String,
-      edges: DataFrame, srcCol: String, dstCol: String,
-      source: Long, maxIters: Int = 25, chunk: Int = 4): DataFrame = {
+  def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
+      idCol: String, source: Option[Long] = None, maxIters: Int = 25): DataFrame = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    require(chunk >= 1, "bfsDistances: chunk must be >= 1")
-    val sess = nodes.sparkSession
+    val chunk = 4
+    val sess = edges.sparkSession
     val sc = sess.sparkContext
-    val nNodes = nodes.count()
+    val pairs: RDD[(Long, Long)] = edges
+      .select(col(srcCol).cast("long"), col(dstCol).cast("long")).rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val (nEdges, minId) = pairs.aggregate((0L, Long.MaxValue))(
+      { case ((n, m), (s, d0)) => (n + 1L, math.min(m, math.min(s, d0))) },
+      { case ((n1, m1), (n2, m2)) => (n1 + n2, math.min(m1, m2)) })
+    val root = source.getOrElse {
+      require(nEdges > 0L, "bfsDistances: no source given and no edges to take one from")
+      minId
+    }
     val defaultP = sess.conf.get("spark.sql.shuffle.partitions")
-    val p = math.max(1L, math.min(defaultP.toLong, nNodes / 500000L + 1L)).toInt
+    val p = math.max(1L, math.min(defaultP.toLong, 2L * nEdges / 500000L + 1L)).toInt
     val part = new HashPartitioner(p)
     // adjacency pairs (node -> neighbor), both directions, materialized
     // once and kept partitioned for the whole walk
-    val adj: RDD[(Long, Long)] = edges
-      .select(col(srcCol).cast("long"), col(dstCol).cast("long")).rdd
-      .flatMap { r => val s = r.getLong(0); val d0 = r.getLong(1)
-        Iterator((s, d0), (d0, s)) }
+    val adj: RDD[(Long, Long)] = pairs
+      .flatMap { case (s, d0) => Iterator((s, d0), (d0, s)) }
       .partitionBy(part)
     adj.localCheckpoint()
     adj.count()
     val init: RDD[(Long, Long)] =
-      sc.parallelize(Seq((source, 0L)), 1).partitionBy(part)
+      sc.parallelize(Seq((root, 0L)), 1).partitionBy(part)
     // visited = the union of the per-chunk frontier pieces, each one a
     // checkpointed co-partitioned RDD — a flat partitioner-aware union
     // (narrow), so lineage never deepens across chunks
@@ -2187,37 +2191,35 @@ object Pipelines {
   /** Rich-club coefficient of a symmetrized distinct edge list: edge
     * density among the top-decile-degree nodes (min 2) vs the whole
     * graph's density — φ ≫ 1 means the hubs form a tightly-wired elite.
-    * The degree table is built once; the hub pick is the
-    * range-partitioned [[exactGlobalRank]] (a global rank window over
-    * the entity-scaled degree table would plan Exchange
-    * SinglePartition); the hub set is a broadcast semi-join on BOTH
-    * endpoints and the densities divide exact directed-edge counts.
-    * `bidirEdges` is read three times: pass a materialized list.
-    * Returns one row (n_nodes, n_hubs, n_edges, n_hub_edges,
-    * hub_density, density, rich_club_ratio).
+    * The hub pick is the range-partitioned [[exactGlobalRank]] over the
+    * degree table (a global rank window over the entity-scaled degree
+    * table would plan Exchange SinglePartition); its pass 1 returns the
+    * node count n, so no separate count runs. The rest is one lazy
+    * one-row plan: the directed edge count is Σ deg over the degree
+    * table, the hub-edge count is a broadcast semi-join of `bidirEdges`
+    * on BOTH endpoints against the hub set, and the densities divide
+    * those exact counts, rounded with `floor(x·10ⁿ+0.5)/10ⁿ`. Needs at
+    * least two nodes. `bidirEdges` is read three times: pass a
+    * materialized list. Returns one row (n_nodes, n_hubs, n_edges,
+    * n_hub_edges, hub_density, density, rich_club_ratio).
     */
   def richClub(bidirEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val deg = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val n = deg.count()
+    val (n, ranked) = exactGlobalRank(deg, Seq(col("deg").desc, col("node")), "rn")
     val nHubs = math.max(n / 10, 2L)
-    val hubs = exactGlobalRank(deg, Seq(col("deg").desc, col("node")), "rn")._2
-      .filter(col("rn") <= nHubs).select("node").localCheckpoint()
-    val e2 = bidirEdges.count()
-    val eh2 = bidirEdges.join(broadcast(hubs), bidirEdges(srcCol) === hubs("node"), "left_semi")
+    val hubs = ranked.filter(col("rn") <= nHubs).select("node")
+    val hubEdges = bidirEdges
+      .join(broadcast(hubs), bidirEdges(srcCol) === hubs("node"), "left_semi")
       .join(broadcast(hubs.withColumnRenamed("node", "node2")),
         col(dstCol) === col("node2"), "left_semi")
-      .count()
-    val hubDen = eh2.toDouble / (nHubs * (nHubs - 1))
-    val den = e2.toDouble / (n * (n - 1))
-    val spark = bidirEdges.sparkSession
-    import spark.implicits._
-    Seq((n, nHubs, e2 / 2, eh2 / 2,
-      math.floor(hubDen * 1000000 + 0.5) / 1000000,
-      math.floor(den * 1000000 + 0.5) / 1000000,
-      math.floor(hubDen / den * 10000 + 0.5) / 10000))
-      .toDF("n_nodes", "n_hubs", "n_edges", "n_hub_edges",
-        "hub_density", "density", "rich_club_ratio")
+      .agg(count(lit(1)).as("eh2"))
+    val hubDen = col("eh2").cast("double") / lit(nHubs * (nHubs - 1))
+    val den = col("e2").cast("double") / lit(n * (n - 1))
+    deg.agg(sum("deg").as("e2")).crossJoin(hubEdges)
+      .select(lit(n).as("n_nodes"), lit(nHubs).as("n_hubs"),
+        expr("e2 div 2").as("n_edges"), expr("eh2 div 2").as("n_hub_edges"),
+        round(hubDen, 6).as("hub_density"), round(den, 6).as("density"),
+        round(hubDen / den, 4).as("rich_club_ratio"))
   }
 
   /** Year-over-year growth of a (yyyymm, cents) series: each month

@@ -705,16 +705,10 @@ object Round3cOps {
       // disconnected by construction). The oracle walks the same graph
       // with a bounded recursive CTE and takes min hop per node —
       // identical fixpoint, engine-appropriate form.
-      // session-cached checkpointed edge list (SampledEdges.handoff):
-      // the root pick, bidir construction, and initial distances all
-      // reuse ONE materialization shared across the graph family
+      // session-cached checkpointed edge list (SampledEdges.handoff);
+      // bfsDistances takes the min-id root off its own pass over it
       val edges = graft.sources.SampledEdges.handoff(s, d, 200)
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct().localCheckpoint()
-      // one O(1-row) driver action to pick the root (same budget class
-      // as the BPE argmax / convergence counts)
-      val root = nodes.agg(min("node")).head().getLong(0)
-      graft.api.Pipelines.bfsDistances(nodes, "node", edges, "src", "dst", root, maxIters = 40)
+      graft.api.Pipelines.bfsDistances(edges, "src", "dst", "node", maxIters = 40)
         .orderBy("node")
     },
 

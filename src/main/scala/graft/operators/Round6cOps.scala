@@ -16,6 +16,23 @@ import org.apache.spark.sql.functions._
   */
 object Round6cOps {
 
+  /** (round, n_edges, n_nodes) of each canonical (u < v) edge list in
+    * `rounds`, rounds numbered from 1, in one aggregate over their
+    * round-tagged union: each edge contributes its two endpoints, so
+    * n_edges is rows / 2 and n_nodes the distinct endpoints. One null
+    * marker row per round keeps a round with no edges as a zero row.
+    */
+  private[graft] def trussCounts(rounds: Seq[DataFrame]): DataFrame = {
+    val tagged = rounds.zipWithIndex.map { case (c, i) =>
+      c.select(lit(i + 1L).as("round"), explode(array(col("u"), col("v"))).as("node"))
+    }
+    val markers = rounds.head.sparkSession.range(1, rounds.size + 1, 1, 1)
+      .select(col("id").as("round"), lit(null).cast("long").as("node"))
+    (tagged :+ markers).reduce(_ union _)
+      .groupBy("round")
+      .agg(expr("count(node) div 2").as("n_edges"), countDistinct("node").as("n_nodes"))
+  }
+
   val all: Seq[Q] = Seq(
 
     // Top event-type trigram paths: the most common 3-step behavioral
@@ -88,28 +105,18 @@ object Round6cOps {
       // Support = one wedge join per canonical edge (u<v orientation,
       // the q_graph_5 trick — every triangle counted exactly once per
       // edge); each peel round is support-filter → re-derive the
-      // symmetrized adjacency. Edge lists checkpoint between rounds;
-      // all counts are exact integer set sizes.
+      // symmetrized adjacency. The peeled edge lists checkpoint (each
+      // feeds the next round and the counts); all counts are exact
+      // integer set sizes.
       // r14: the session-cached bidirected mod-100 list (identical
       // derivation, materialized once across the nine sharing queries)
       val b0 = graft.sources.SampledEdges.bidir(s, d, 100)
-      def canon(bi: DataFrame): DataFrame =
-        bi.filter(col("src") < col("dst"))
-          .select(col("src").as("u"), col("dst").as("v"))
-      val c0 = canon(b0).localCheckpoint()
+      val c0 = b0.filter(col("src") < col("dst")).select(col("src").as("u"), col("dst").as("v"))
       val c1 = graft.api.Pipelines.kTrussPeel(c0, b0, 4).localCheckpoint()
       val b1 = c1.select(col("u").as("src"), col("v").as("dst"))
-        .union(c1.select(col("v").as("src"), col("u").as("dst"))).localCheckpoint()
+        .union(c1.select(col("v").as("src"), col("u").as("dst")))
       val c2 = graft.api.Pipelines.kTrussPeel(c1, b1, 4).localCheckpoint()
-      def rowOf(r: Int, edges: DataFrame, nodes: DataFrame) =
-        edges.agg(count(lit(1)).as("n_edges"))
-          .crossJoin(nodes.distinct().agg(count(lit(1)).as("n_nodes")))
-          .select(lit(r.toLong).as("round"), col("n_edges"), col("n_nodes"))
-      rowOf(1, c0, b0.select("src"))
-        .union(rowOf(2, c1, b1.select("src")))
-        .union(rowOf(3, c2,
-          c2.select(col("u").as("src")).union(c2.select(col("v").as("src")))))
-        .orderBy("round")
+      trussCounts(Seq(c0, c1, c2)).orderBy("round")
     },
 
     // Intra-order line-number consistency: dup/gap profile of

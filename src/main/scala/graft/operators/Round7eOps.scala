@@ -118,12 +118,12 @@ object Round7eOps {
       // derivation, materialized once; q_graph_27 shares it)
       val b = graft.sources.SampledEdges.bidir(s, d, 200)
       val nodes = b.select(col("src").as("node")).distinct().localCheckpoint()
-      val n = nodes.count()
+      // the degree table has one row per node: the rank's pass 1 is n
+      val (n, ranked) = graft.api.Pipelines.exactGlobalRank(
+        b.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+        Seq(col("deg").desc, col("node")), "rn")
       val nHubs = math.max(n / 100, 1L)
-      val hubs = graft.api.Pipelines.exactGlobalRank(
-          b.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
-          Seq(col("deg").desc, col("node")), "rn")
-        ._2.filter(col("rn") <= nHubs).select("node").localCheckpoint()
+      val hubs = ranked.filter(col("rn") <= nHubs).select("node").localCheckpoint()
       val hubs2 = hubs.withColumnRenamed("node", "node2")
       val b1 = b.join(broadcast(hubs), b("src") === hubs("node"), "left_anti")
         .join(broadcast(hubs2), col("dst") === col("node2"), "left_anti")

@@ -46,19 +46,17 @@ object Round7vOps {
         | CAST(max(dist) AS BIGINT) AS diameter_lb,
         | CAST(count(*) AS BIGINT) AS n_reached
         |FROM d2""".stripMargin) { (s, d) =>
-      // Two bfsDistances passes; the far-node pick between them is the
-      // same O(1-row) driver action class as q_graph_6's root pick.
+      // Two bfsDistances passes: the first from the min-id root the BFS
+      // picks itself; the far-node pick between them is one O(1-row)
+      // driver action.
       val edges = graft.sources.SampledEdges.handoff(s, d, 200)
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct().localCheckpoint()
-      val root = nodes.agg(min("node")).head().getLong(0)
       val d1 = graft.api.Pipelines
-        .bfsDistances(nodes, "node", edges, "src", "dst", root, maxIters = 40)
+        .bfsDistances(edges, "src", "dst", "node", maxIters = 40)
         .localCheckpoint()
       val far = d1.orderBy(col("dist").desc, col("node")).head()
       val (sweepRoot, ecc1) = (far.getLong(0), far.getLong(1))
       val d2 = graft.api.Pipelines
-        .bfsDistances(nodes, "node", edges, "src", "dst", sweepRoot, maxIters = 40)
+        .bfsDistances(edges, "src", "dst", "node", Some(sweepRoot), maxIters = 40)
       d2.agg(max(col("dist")).as("diameter_lb"), count(lit(1)).as("n_reached"))
         .select(lit(sweepRoot).as("sweep_root"), lit(ecc1).as("ecc_from_min"),
           col("diameter_lb"), col("n_reached"))

@@ -47,11 +47,7 @@ object Round9Ops {
         | floor(CAST(sum(n_nodes) OVER (ORDER BY dist) AS DOUBLE) / tot * 1000000 + 0.5) / 1000000 AS cum_share
         |FROM h, t ORDER BY dist""".stripMargin) { (s, d) =>
       val edges = graft.sources.SampledEdges.handoff(s, d, 200)
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct().localCheckpoint()
-      val root = nodes.agg(min("node")).head().getLong(0)
-      val h = graft.api.Pipelines
-        .bfsDistances(nodes, "node", edges, "src", "dst", root, maxIters = 40)
+      val h = graft.api.Pipelines.bfsDistances(edges, "src", "dst", "node", maxIters = 40)
         .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
       h.crossJoin(broadcast(h.agg(sum("n_nodes").as("tot"))))
         .withColumn("cum", sum("n_nodes").over(

@@ -89,4 +89,37 @@ class FixtureLayoutSpec extends SparkSpec {
       "vec_id" -> LongType, "embedding" -> ArrayType(FloatType),
       "label" -> IntegerType))
   }
+
+  test("Tables learns a schema once: a second read of a table starts no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(60000L))
+    }
+    // a table no other suite has read in this session
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
+    spark.range(5).write.parquet(s"$dir/t.parquet")
+    sources.Tables(spark, sf, "events")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def jobsOf(read: => org.apache.spark.sql.DataFrame) = {
+        drain(); val j0 = jobs.get
+        val df = read
+        drain(); (jobs.get - j0, df)
+      }
+      val (first, _) = jobsOf(sources.Tables(spark, dir, "t"))
+      val (second, t) = jobsOf(sources.Tables(spark, dir, "t"))
+      val (events, ev) = jobsOf(sources.Tables(spark, sf, "events"))
+      assert(first >= 1, "the first read infers the schema with a job")
+      assert(second == 0 && events == 0, s"later reads ran jobs: t=$second events=$events")
+      assert(t.count() == 5)
+      assert(ev.schema("ts").dataType == TimestampType)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

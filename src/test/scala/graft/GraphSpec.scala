@@ -70,4 +70,21 @@ class GraphSpec extends SparkSpec {
       "twohop must reuse one checkpointed edge list across hops:\n" + plan)
     assert(df.count() > 0)
   }
+
+  test("bfsDistances: the default root is the smallest id, a source reaches only its component") {
+    import spark.implicits._
+    // a path 10-11-12-13 (10 only ever a dst) and a triangle 20-21-22
+    val g = Seq((11L, 10L), (12L, 11L), (12L, 13L), (20L, 21L), (21L, 22L), (22L, 20L))
+      .toDF("a", "b")
+    def dists(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(dists(Pipelines.bfsDistances(g, "a", "b", "id")) ==
+      Seq((10L, 0L), (11L, 1L), (12L, 2L), (13L, 3L)))
+    assert(dists(Pipelines.bfsDistances(g, "a", "b", "id", Some(21L))) ==
+      Seq((20L, 1L), (21L, 0L), (22L, 1L)))
+    // eccentricity 3 needs a 4th, empty hop to see the frontier die
+    intercept[IllegalStateException] {
+      Pipelines.bfsDistances(g, "a", "b", "id", maxIters = 3)
+    }
+  }
 }

@@ -112,4 +112,13 @@ class Round6cOpsSpec extends SparkSpec {
       * 1000000 + 0.5) / 1000000
     assert(rows((la.toLong, lb.toLong)) == exp)
   }
+
+  test("q_graph_16_ktruss counts: a round with no edges is a zero row") {
+    import spark.implicits._
+    val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("u", "v")
+    val none = tri.filter(lit(false))
+    val got = graft.operators.Round6cOps.trussCounts(Seq(tri, none, none))
+      .orderBy("round").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((1L, 3L, 3L), (2L, 0L, 0L), (3L, 0L, 0L)))
+  }
 }
