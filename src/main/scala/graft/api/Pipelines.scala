@@ -2176,17 +2176,25 @@ object Pipelines {
 
   /** One k-truss peel round: the canonical (u < v) edges of `canon`
     * supported by ≥ k − 2 triangles of the symmetrized adjacency `bidir`
-    * (src, dst). Support is one wedge join per canonical edge (every
-    * triangle counted exactly once per edge); counts are exact integer
-    * set sizes. Iterating (re-deriving `bidir` from the survivors and
-    * checkpointing between rounds) to a fixpoint yields the k-truss.
-    * Returns the surviving (u, v).
+    * (src, dst). An edge's support is the number of common neighbours
+    * of its endpoints, `size(array_intersect(N(u), N(v)))` over one
+    * `collect_set` adjacency of `bidir` joined on both endpoints (the
+    * second join reads the first one's exchange); counts are exact
+    * integer set sizes. Needs k ≥ 3: an edge with zero support passes
+    * at k ≤ 2, where a wedge-join support count never sees it, so the
+    * two forms agree only from k = 3 up. Iterating (re-deriving `bidir`
+    * from the survivors between rounds) to a fixpoint yields the
+    * k-truss. Returns the surviving (u, v).
     */
-  def kTrussPeel(canon: DataFrame, bidir: DataFrame, k: Int): DataFrame =
-    canon.join(bidir.select(col("src").as("u"), col("dst").as("w")), Seq("u"))
-      .join(bidir.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-      .groupBy("u", "v").agg(count(lit(1)).as("sup"))
-      .filter(col("sup") >= k - 2).select("u", "v")
+  def kTrussPeel(canon: DataFrame, bidir: DataFrame, k: Int): DataFrame = {
+    require(k >= 3, s"kTrussPeel needs k >= 3 (got $k): at k <= 2 every edge, " +
+      "zero-support ones included, is in the truss")
+    val adj = bidir.groupBy("src").agg(collect_set("dst").as("nb"))
+    canon.join(adj.as("x"), col("u") === col("x.src"))
+      .join(adj.as("y"), col("v") === col("y.src"))
+      .filter(size(array_intersect(col("x.nb"), col("y.nb"))) >= k - 2)
+      .select("u", "v")
+  }
 
   /** Rich-club coefficient of a symmetrized distinct edge list: edge
     * density among the top-decile-degree nodes (min 2) vs the whole
@@ -2195,27 +2203,28 @@ object Pipelines {
     * degree table (a global rank window over the entity-scaled degree
     * table would plan Exchange SinglePartition); its pass 1 returns the
     * node count n, so no separate count runs. The rest is one lazy
-    * one-row plan: the directed edge count is Σ deg over the degree
-    * table, the hub-edge count is a broadcast semi-join of `bidirEdges`
-    * on BOTH endpoints against the hub set, and the densities divide
-    * those exact counts, rounded with `floor(x·10ⁿ+0.5)/10ⁿ`. Needs at
-    * least two nodes. `bidirEdges` is read three times: pass a
-    * materialized list. Returns one row (n_nodes, n_hubs, n_edges,
-    * n_hub_edges, hub_density, density, rich_club_ratio).
+    * one-row plan over one scan of `bidirEdges`: left joins to the
+    * broadcast hub set on each endpoint (the same set under two
+    * aliases, so the second broadcast reuses the first), then one
+    * aggregate counts every directed edge (Σ deg) and those with both
+    * endpoints hubs. The densities divide those exact counts, rounded
+    * with `floor(x·10ⁿ+0.5)/10ⁿ`. Needs at least two nodes.
+    * `bidirEdges` is read twice: pass a materialized list. Returns one
+    * row (n_nodes, n_hubs, n_edges, n_hub_edges, hub_density, density,
+    * rich_club_ratio).
     */
   def richClub(bidirEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val deg = bidirEdges.groupBy(col(srcCol).as("node")).agg(count(lit(1)).as("deg"))
     val (n, ranked) = exactGlobalRank(deg, Seq(col("deg").desc, col("node")), "rn")
     val nHubs = math.max(n / 10, 2L)
-    val hubs = ranked.filter(col("rn") <= nHubs).select("node")
-    val hubEdges = bidirEdges
-      .join(broadcast(hubs), bidirEdges(srcCol) === hubs("node"), "left_semi")
-      .join(broadcast(hubs.withColumnRenamed("node", "node2")),
-        col(dstCol) === col("node2"), "left_semi")
-      .agg(count(lit(1)).as("eh2"))
+    val hubs = broadcast(ranked.filter(col("rn") <= nHubs).select("node"))
     val hubDen = col("eh2").cast("double") / lit(nHubs * (nHubs - 1))
     val den = col("e2").cast("double") / lit(n * (n - 1))
-    deg.agg(sum("deg").as("e2")).crossJoin(hubEdges)
+    bidirEdges
+      .join(hubs.as("hs"), bidirEdges(srcCol) === col("hs.node"), "left")
+      .join(hubs.as("hd"), bidirEdges(dstCol) === col("hd.node"), "left")
+      .agg(count(lit(1)).as("e2"),
+        count(when(col("hs.node").isNotNull && col("hd.node").isNotNull, 1)).as("eh2"))
       .select(lit(n).as("n_nodes"), lit(nHubs).as("n_hubs"),
         expr("e2 div 2").as("n_edges"), expr("eh2 div 2").as("n_hub_edges"),
         round(hubDen, 6).as("hub_density"), round(den, 6).as("density"),

@@ -157,27 +157,20 @@ object Round3cOps {
       // clustering-coefficient primitive. Canonical orientation (a < b)
       // makes each triangle appear exactly once as a<b<c, so the count is
       // two equi hash joins over the edge list — no enumeration of
-      // wedges from both endpoints. Edge derivation runs ONCE
-      // (localCheckpoint; the triangle join reuses it three times — the
-      // q_graph_2 lesson), and the per-node tally is one explode over the
-      // triangle stream, not three passes. The graph is the SAMPLED
-      // handoff graph (orderkey % 10 — q_graph_4's precedent): the
-      // unsampled fixture graph approaches a COMPLETE graph as SF grows
-      // (44% dense at sf0.1 → 32M wedges for 14.5M triangles), and no
-      // triangle algorithm outruns Θ(n³) on a clique — the declared
-      // query pins the sparse-graph shape that scales. At 100 TB the
+      // wedges from both endpoints. The edge list is the u < v half of
+      // the session-cached bidirected mod-10 list (SampledEdges), read
+      // three times by the triangle join, and the per-node tally is one
+      // explode over the triangle stream, not three passes. The graph
+      // is the SAMPLED handoff graph (orderkey % 10 — q_graph_4's
+      // precedent): the unsampled fixture graph approaches a COMPLETE
+      // graph as SF grows (44% dense at sf0.1 → 32M wedges for 14.5M
+      // triangles), and no triangle algorithm outruns Θ(n³) on a
+      // clique — the declared query pins the sparse-graph shape that
+      // scales. At 100 TB the
       // standard refinement is degree-based orientation (point edges
       // from low to high degree) to bound the skew of the join keys.
-      val li = Tables(s, d, "lineitem").filter(col("l_orderkey") % 10 === 0)
-      val a = li.select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-        col("l_suppkey").as("src"))
-      val b = li.select(col("l_orderkey").as("ok2"), col("l_linenumber").as("ln2"),
-        col("l_suppkey").as("dst"))
-      val e0 = a.join(b, col("ok") === col("ok2") && (col("ln") + 1) === col("ln2"))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct().localCheckpoint()
+      val e0 = graft.sources.SampledEdges.bidir(s, d, 10)
+        .filter(col("src") < col("dst")).select(col("src").as("a"), col("dst").as("b"))
       // the edge list is |E| rows of two longs (node-bounded, tiny next
       // to the fact): broadcast the probe sides so triangle enumeration
       // never shuffles the wedge stream — at 8 threads/sf0.1 this is the

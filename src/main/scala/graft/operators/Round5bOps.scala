@@ -225,19 +225,12 @@ object Round5bOps {
       // triangle stream. Degree is the distinct-neighbor count off the
       // SAME deduplicated edge list (each undirected edge contributes
       // one endpoint row per side), so the ratio is exact-rational →
-      // one quantized IEEE division. Scale: edge list is node-bounded
-      // and checkpointed once; triangles via two broadcast hash joins
-      // (q_graph_5's shape); the deg⋈tri join is node-keyed.
-      val li = Tables(s, d, "lineitem").filter(col("l_orderkey") % 10 === 0)
-      val a = li.select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-        col("l_suppkey").as("src"))
-      val b = li.select(col("l_orderkey").as("ok2"), col("l_linenumber").as("ln2"),
-        col("l_suppkey").as("dst"))
-      val e0 = a.join(b, col("ok") === col("ok2") && (col("ln") + 1) === col("ln2"))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct().localCheckpoint()
+      // one quantized IEEE division. Scale: edge list is node-bounded,
+      // the u < v half of the session-cached mod-10 list; triangles via
+      // two broadcast hash joins (q_graph_5's shape); the deg⋈tri join
+      // is node-keyed.
+      val e0 = graft.sources.SampledEdges.bidir(s, d, 10)
+        .filter(col("src") < col("dst")).select(col("src").as("a"), col("dst").as("b"))
       val deg = e0.select(col("a").as("node"))
         .unionAll(e0.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))

@@ -113,16 +113,9 @@ object Round5gOps {
       // the graph analogue of q_dq_15's key-skew profile. Degrees are
       // exact distinct-neighbor counts; shares exact rationals. Scale:
       // degree table is node-bounded, histogram is max-degree-bounded;
-      // the prefix window runs over the tiny histogram.
-      val li = Tables(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"))
-      val e = li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_linenumber") + 1 === col("b.l_linenumber") &&
-            col("a.l_suppkey") =!= col("b.l_suppkey"))
-        .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-        .distinct()
-      val bidir = e.union(e.select(col("dst"), col("src"))).distinct()
+      // the prefix window runs over the tiny histogram. The edge list
+      // is the session-cached bidirected mod-50 list (SampledEdges).
+      val bidir = graft.sources.SampledEdges.bidir(s, d, 50)
       val deg = bidir.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
       val hist = deg.groupBy("d").agg(count(lit(1)).as("nd"))
       val c = hist

@@ -102,20 +102,20 @@ object Round6cOps {
         |  (SELECT CAST(count(DISTINCT u) AS BIGINT) FROM
         |    (SELECT u FROM c2 UNION SELECT v FROM c2)))
         |ORDER BY round""".stripMargin) { (s, d) =>
-      // Support = one wedge join per canonical edge (u<v orientation,
-      // the q_graph_5 trick — every triangle counted exactly once per
-      // edge); each peel round is support-filter → re-derive the
-      // symmetrized adjacency. The peeled edge lists checkpoint (each
-      // feeds the next round and the counts); all counts are exact
-      // integer set sizes.
+      // Support = the common-neighbour count of each canonical (u<v)
+      // edge (Pipelines.kTrussPeel); each peel round is support-filter
+      // → re-derive the symmetrized adjacency. The rounds stay lazy:
+      // the one action plans c1 once per reader and AQE reuses the
+      // repeated exchanges, so a checkpoint per round would only add
+      // eager jobs. All counts are exact integer set sizes.
       // r14: the session-cached bidirected mod-100 list (identical
       // derivation, materialized once across the nine sharing queries)
       val b0 = graft.sources.SampledEdges.bidir(s, d, 100)
       val c0 = b0.filter(col("src") < col("dst")).select(col("src").as("u"), col("dst").as("v"))
-      val c1 = graft.api.Pipelines.kTrussPeel(c0, b0, 4).localCheckpoint()
+      val c1 = graft.api.Pipelines.kTrussPeel(c0, b0, 4)
       val b1 = c1.select(col("u").as("src"), col("v").as("dst"))
         .union(c1.select(col("v").as("src"), col("u").as("dst")))
-      val c2 = graft.api.Pipelines.kTrussPeel(c1, b1, 4).localCheckpoint()
+      val c2 = graft.api.Pipelines.kTrussPeel(c1, b1, 4)
       trussCounts(Seq(c0, c1, c2)).orderBy("round")
     },
 

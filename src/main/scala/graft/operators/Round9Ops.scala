@@ -24,8 +24,9 @@ object Round9Ops {
     // memory for any multi-hop traversal (and the histogram view of
     // q_graph_6's per-node distances). Spark side is the r9
     // co-partitioned RDD bfsDistances (one shuffle per hop); the
-    // histogram windows run over <= eccentricity+1 rows (waived in the
-    // plan lint with that bound). Oracle: bounded recursive CTE, min
+    // histogram's total and running windows run over <=
+    // eccentricity+1 rows in one single-partition exchange (waived in
+    // the plan lint with that bound). Oracle: bounded recursive CTE, min
     // hop per node, then a plain GROUP BY — a different fixpoint form.
     Q("q_graph_26_hop_profile",
       """WITH RECURSIVE e AS (SELECT DISTINCT a.l_suppkey AS src, b.l_suppkey AS dst
@@ -49,7 +50,7 @@ object Round9Ops {
       val edges = graft.sources.SampledEdges.handoff(s, d, 200)
       val h = graft.api.Pipelines.bfsDistances(edges, "src", "dst", "node", maxIters = 40)
         .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-      h.crossJoin(broadcast(h.agg(sum("n_nodes").as("tot"))))
+      h.withColumn("tot", sum("n_nodes").over(Window.partitionBy()))
         .withColumn("cum", sum("n_nodes").over(
           Window.orderBy("dist").rowsBetween(Window.unboundedPreceding, 0)))
         .select(col("dist"), col("n_nodes"),

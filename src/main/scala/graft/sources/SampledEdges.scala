@@ -85,14 +85,15 @@ object SampledEdges {
     }
 
   /** The symmetrized (bidirected) form of [[handoff]]: union with the
-    * src/dst swap, dedup — the undirected graph nine q_graph queries
+    * src/dst swap, dedup — the undirected graph thirteen q_graph queries
     * share (mod 100: kcore/closeness/ktruss/neighbor-degree/labelprop/
-    * adamic-adar/modularity; mod 200: hub-knockout/comp-sizes; mod 20:
-    * rich-club). Each previously re-ran the union+distinct (and most
-    * the whole self-join) per invocation; the derivation is
-    * deterministic and row-identical, so one checkpointed copy per
-    * (session, dataset, mod) replaces them (r14 — the same
-    * adjudication as [[handoff]], in place since r5).
+    * adamic-adar/modularity; mod 200: hub-knockout/comp-sizes; mod 50:
+    * degree-dist; mod 20: rich-club; mod 10: triangles/clustcoef, which
+    * keep its src < dst half as their canonical list). Each previously
+    * re-ran the union+distinct (and most the whole self-join) per
+    * invocation; the derivation is deterministic and row-identical, so
+    * one checkpointed copy per (session, dataset, mod) replaces them
+    * (r14 — the same adjudication as [[handoff]], in place since r5).
     */
   def bidir(s: SparkSession, d: String, mod: Int): DataFrame =
     cached(s"${s.sparkContext.applicationId}|$d|bidir|$mod") {

@@ -87,4 +87,24 @@ class GraphSpec extends SparkSpec {
       Pipelines.bfsDistances(g, "a", "b", "id", maxIters = 3)
     }
   }
+
+  test("kTrussPeel: support is the common-neighbour count; zero-support edges drop at k = 3") {
+    import spark.implicits._
+    // K4 on 1..4, a triangle 4-5-6 hanging off it, and a tail 6-7-8
+    // whose two edges sit on no triangle
+    val canon = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L), (7L, 8L))
+    val adj = (canon ++ canon.map(_.swap)).groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val bidir = (canon ++ canon.map(_.swap)).toDF("src", "dst")
+    for (k <- Seq(3, 4, 5)) {
+      val want = canon.filter { case (u, v) => (adj(u) & adj(v)).size >= k - 2 }.toSet
+      val got = Pipelines.kTrussPeel(canon.toDF("u", "v"), bidir, k)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == want, s"k = $k")
+      assert(!got.contains((6L, 7L)), s"k = $k")
+    }
+    intercept[IllegalArgumentException] {
+      Pipelines.kTrussPeel(canon.toDF("u", "v"), bidir, 2)
+    }
+  }
 }

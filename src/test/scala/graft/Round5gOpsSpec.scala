@@ -68,6 +68,25 @@ class Round5gOpsSpec extends SparkSpec {
     assert(math.abs(got.last.getDouble(3) - 1.0) < 1e-6)
   }
 
+  test("q_graph_11_degree_dist: SampledEdges.bidir(50) holds the rows of the inline mod-50 derivation") {
+    import org.apache.spark.sql.functions._
+    val li = graft.sources.Tables(spark, sf, "lineitem").filter(col("l_orderkey") % 50 === 0)
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"))
+    val e = li.as("a").join(li.as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") &&
+          col("a.l_linenumber") + 1 === col("b.l_linenumber") &&
+          col("a.l_suppkey") =!= col("b.l_suppkey"))
+      .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
+      .distinct()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val inline = rows(e.union(e.select(col("dst"), col("src"))).distinct())
+    val cached = rows(graft.sources.SampledEdges.bidir(spark, sf, 50))
+    assert(inline.nonEmpty)
+    assert(cached.size == cached.distinct.size)
+    assert(cached.toSet == inline.toSet)
+  }
+
   test("q_text_39_cond_entropy: H(w2|w1) = H_b - H_first >= 0, <= H_b") {
     // replicate for one language end-to-end
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -36,6 +36,7 @@ python3 tools/broadcast_lint.py
 # with its reason, so the oracle gate and PlanLint cover it — no second,
 # unchecked copy of a capability
 python3 tools/wrapper_lint.py
+python3 tools/test_wrapper_lint.py
 # INDEX.md: REGENERATE and stage, then check — regenerating here (not
 # just checking) closes the r11 gate-ordering hole where a post-gate
 # source edit left the committed INDEX.md stale by one line. The final

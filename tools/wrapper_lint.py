@@ -9,8 +9,8 @@ copy and not the other.
 
 - `Pipelines`: the lint lists every public def of `graft/api/Pipelines.scala`
   that no other file under `src/main/scala` names as `Pipelines.<name>`
-  (a qualified call or a single import) or in an
-  `import graft.api.Pipelines.{...}` list.
+  (a qualified call, also one split across lines around the dot, or a
+  single import) or in an `import graft.api.Pipelines.{...}` list.
 - `Streams`: every public def of `graft/streaming/Streams.scala` must be
   named as `Streams.<name>` by a file under `graft/operators` (where the
   declared queries live), or be listed in STREAM_ONLY below with the
@@ -88,7 +88,7 @@ def main() -> int:
     pipelines = os.path.join(args.src, PIPELINES)
     names = sorted(set(DEF.findall(open(pipelines).read())))
     corpus = sources(args.src, lambda rel: os.path.normpath(rel) != PIPELINES)
-    reached = set(re.findall(r"\bPipelines\.(\w+)", corpus))
+    reached = set(re.findall(r"\bPipelines\s*\.\s*(\w+)", corpus))
     for group in IMPORT_LIST.findall(corpus):
         reached.update(name.strip().split(" ")[0] for name in group.split(","))
     unused = [n for n in names if n not in reached]
